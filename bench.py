@@ -203,6 +203,18 @@ EXTRA = [
     "sketch_quantile_rollup",
 ]
 
+#: The timed group tables, keyed by their BENCH_DETAIL.json field; each
+#: group's vs_prev delta field swaps ``_queries`` for ``_delta_sec``, and
+#: its budget-log tag is the key stem.
+GROUPS = {
+    "extra_queries": EXTRA,
+    "new_queries": NEW_R3,
+    "new_r4_queries": NEW_R4,
+    "new_r5_queries": NEW_R5,
+    "new_r7_queries": NEW_R7,
+    "new_r8_queries": NEW_R8,
+}
+
 
 class _Budget:
     """Wall-clock budget so the bench ALWAYS emits its JSON line inside the
@@ -277,7 +289,7 @@ def main() -> None:
     # (cold first-timed-runs are noise; a missing gate record is a failure).
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != SF_DIR:
-        for name in HEADLINE + [n for n in EXTRA + NEW_R3 + NEW_R4 + NEW_R5 + NEW_R7 + NEW_R8 if n in qs]:
+        for name in HEADLINE + [n for names in GROUPS.values() for n in names if n in qs]:
             if budget.remaining() < budget.total * 0.7:
                 budget.skipped.append(f"warmup:{name}")
                 continue
@@ -382,12 +394,11 @@ def main() -> None:
     def _tier2_first(names: list[str]) -> list[str]:
         return [n for n in names if n in TIER2] + [n for n in names if n not in TIER2]
 
-    extra = _time_group(_tier2_first(EXTRA), "extra")
-    new_r3 = _time_group(_tier2_first(NEW_R3), "r3")
-    new_r4 = _time_group(_tier2_first(NEW_R4), "r4")
-    new_r5 = _time_group(_tier2_first(NEW_R5), "r5")
-    new_r7 = _time_group(_tier2_first(NEW_R7), "r7")
-    new_r8 = _time_group(_tier2_first(NEW_R8), "r8")
+    groups = {
+        key: _time_group(_tier2_first(names), key.removesuffix("_queries"))
+        for key, names in GROUPS.items()
+    }
+    all_groups = {n: t for g in groups.values() for n, t in g.items()}
 
     sentinels["mid"] = run_sentinel(spark)
 
@@ -462,12 +473,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "scaling_probes": [n for n in SCALING_PROBES if n in timings],
-        "extra_queries": extra,
-        "new_queries": new_r3,
-        "new_r4_queries": new_r4,
-        "new_r5_queries": new_r5,
-        "new_r7_queries": new_r7,
-        "new_r8_queries": new_r8,
+        **groups,
         "sf": _sf(SF_DIR),
     }
     if secondary:
@@ -485,8 +491,8 @@ def main() -> None:
             # misleading new_r4_* keys, per the r8 ADVICE)
             "added_queries": secondary_new,
             "added_queries_scaling_ratio": {
-                n: round({**new_r4, **new_r5, **new_r7, **new_r8}[n] / secondary_new[n], 2)
-                if secondary_new[n] > 0 and n in {**new_r4, **new_r5, **new_r7, **new_r8}
+                n: round(all_groups[n] / secondary_new[n], 2)
+                if secondary_new[n] > 0 and n in all_groups
                 else None
                 for n in secondary_new
             },
@@ -538,47 +544,23 @@ def main() -> None:
             if not isinstance(prev, dict) or "queries" not in prev:
                 continue
             pq = prev.get("queries", {})
-            pe = prev.get("extra_queries", {})
-            pn = prev.get("new_queries", {})
             out["vs_prev"] = {
                 "round": os.path.basename(path),
                 "total_delta_sec": round(out["value"] - prev.get("value", 0.0), 3),
                 "queries_delta_sec": {
                     n: round(t - pq[n], 3) for n, t in timings.items() if n in pq
                 },
-                "extra_delta_sec": {
-                    n: round(t - pe[n], 3) for n, t in extra.items() if n in pe
-                },
-                "new_delta_sec": {
-                    n: round(t - pn[n], 3) for n, t in new_r3.items() if n in pn
-                },
-                "new_r4_delta_sec": {
-                    n: round(t - prev.get("new_r4_queries", {}).get(n), 3)
-                    for n, t in new_r4.items()
-                    if n in prev.get("new_r4_queries", {})
-                },
-                "new_r5_delta_sec": {
-                    n: round(t - prev.get("new_r5_queries", {}).get(n), 3)
-                    for n, t in new_r5.items()
-                    if n in prev.get("new_r5_queries", {})
-                },
-                "new_r7_delta_sec": {
-                    n: round(t - prev.get("new_r7_queries", {}).get(n), 3)
-                    for n, t in new_r7.items()
-                    if n in prev.get("new_r7_queries", {})
-                },
-                "new_r8_delta_sec": {
-                    n: round(t - prev.get("new_r8_queries", {}).get(n), 3)
-                    for n, t in new_r8.items()
-                    if n in prev.get("new_r8_queries", {})
-                },
             }
+            for key, timed in groups.items():
+                pg = prev.get(key, {})
+                out["vs_prev"][key.replace("_queries", "_delta_sec")] = {
+                    n: round(t - pg[n], 3) for n, t in timed.items() if n in pg
+                }
             break
         except (OSError, ValueError):
             continue
     # Tier-2: re-report the frozen expensive-long-tail slice from the group
     # timings already collected above (no extra executions).
-    all_groups = {**extra, **new_r3, **new_r4, **new_r5, **new_r7, **new_r8}
     tier2 = {n: all_groups[n] for n in TIER2 if n in all_groups}
     out["tier2_queries"] = tier2
     out["tier2_total"] = round(sum(tier2.values()), 3)

@@ -1,50 +1,33 @@
 """Public engine facade (SURVEY.md §3.3): the interactive surface a reference
-user lands on — ``read_runs`` → ``report`` → pandas, plus raw SQL.
+user lands on — ``read_runs`` → ``report`` → ``write_report``, plus raw SQL.
 
 Mirrors the reference's Jupyter flow (interactive_helpers.py:196-330: run
 experiment → compile CSV → ``pd.read_csv``): here the "experiment results"
 are any records table, the report is the ReportConfig-driven plan, and
-``toPandas()`` is the final hop.
+``toPandas()`` is the final hop.  Everything else (dedup, similarity,
+curation, features, streaming) is imported from ``operators/*`` directly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.report import ReportConfig, combine_sheets, report
+from .operators.report import ReportConfig, report
 from .session import apply_runtime_conf, get_spark
 from .sources import io as sio
-from .sources import star
 
 
 class Engine:
     """One-stop entry: ``Engine().read_runs(path)`` / ``.report(df, cfg)`` /
-    ``.sql(...)``."""
+    ``.write_report(sections, out)`` / ``.sql(...)``."""
 
     def __init__(self, spark: SparkSession | None = None):
         self.spark = apply_runtime_conf(spark or get_spark())
 
-    # --- sources -----------------------------------------------------------
     def read_runs(self, path: str, schema=None) -> DataFrame:
         """S6: folder of one-JSON-per-run files → records table."""
         return sio.read_runs(self.spark, path, schema)
 
-    def read_csv(self, path: str, schema=None) -> DataFrame:
-        return sio.read_csv(self.spark, path, schema)
-
-    def load_star(self, sf_dir: str) -> dict[str, DataFrame]:
-        return star.load_tables(self.spark, sf_dir)
-
-    def register_star_views(self, sf_dir: str) -> None:
-        star.register_views(self.spark, sf_dir)
-
-    def compile_results(self, run_dirs: list[str], vm_col: str = "vmID") -> DataFrame:
-        """U2 (compile_results.py:62-72): merge several experiment history
-        folders into one records table — union-of-keys schema with iteration
-        tagging and iteration-scoped vm keys."""
-        return combine_sheets([self.read_runs(d) for d in run_dirs], vm_col=vm_col)
-
-    # --- analytics ---------------------------------------------------------
     def report(self, runs: DataFrame, cfg: ReportConfig) -> dict[str, DataFrame]:
         """The FaaS-Runner report plan (raw + per-group sections)."""
         return report(runs, cfg)
@@ -55,625 +38,3 @@ class Engine:
 
     def sql(self, query: str) -> DataFrame:
         return self.spark.sql(query)
-
-    # --- corpus pipeline (SURVEY.md §2.12) ---------------------------------
-    def dedup_exact(self, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-        """X1: normalized-hash exact dedup (lowest id wins)."""
-        from .operators import dedup as dd
-
-        return dd.exact_dedup(docs, text_col, id_col)
-
-    def near_dup_clusters(
-        self,
-        docs: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        *,
-        threshold: float = 0.8,
-        num_hashes: int = 16,
-        bands: int = 4,
-    ) -> DataFrame:
-        """X2 scale path: MinHash-LSH candidates → exact verify → connected
-        components → (id, canonical_id)."""
-        from .operators import dedup as dd
-
-        pairs = dd.minhash_near_dups(
-            docs, text_col, id_col, num_hashes=num_hashes, bands=bands, threshold=threshold
-        )
-        return dd.cluster_canonical(docs, pairs, id_col)
-
-    def dedup_passages(
-        self, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", *, passage_tokens: int = 10
-    ) -> DataFrame:
-        """X15: C4-style repeated-passage removal with per-doc reassembly."""
-        from .operators import dedup as dd
-
-        return dd.passage_dedup(docs, text_col, id_col, passage_tokens=passage_tokens)
-
-    def dedup_against(
-        self,
-        incoming: DataFrame,
-        corpus: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        *,
-        containment_threshold: float = 0.8,
-    ) -> DataFrame:
-        """X16: incremental-ingest gate vs an existing corpus."""
-        from .operators import dedup as dd
-
-        return dd.dedup_against_corpus(
-            incoming, corpus, text_col, id_col, containment_threshold=containment_threshold
-        )
-
-    def search_topk(
-        self,
-        corpus: DataFrame,
-        queries: DataFrame,
-        *,
-        k: int = 3,
-        method: str = "brute",
-        **kw,
-    ) -> DataFrame:
-        """X3: cosine top-k — method in {'brute', 'lsh', 'ivf'}."""
-        from .operators import similarity as sim
-
-        fn = {"brute": sim.brute_force_topk, "lsh": sim.lsh_topk, "ivf": sim.ivf_topk}[method]
-        return fn(corpus, queries, k=k, **kw)
-
-    def chunk(
-        self,
-        docs: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        *,
-        chunk_size: int = 50,
-        overlap: int = 10,
-    ) -> DataFrame:
-        """X4: token-window chunking (posexplode, shuffle-free)."""
-        from .operators import text as tx
-
-        return tx.chunk_documents(docs, text_col, id_col, chunk_size=chunk_size, overlap=overlap)
-
-    def profile(self, df: DataFrame, cols: list[str], *, exact_distinct: bool = True) -> DataFrame:
-        """X21: single-scan column profile (rows/nulls/distinct/min/max) —
-        run FIRST; its output is where constraint thresholds come from."""
-        from .operators.quality_checks import profile_columns
-
-        return profile_columns(df, cols, exact_distinct=exact_distinct)
-
-    def constraint_gate(self, df: DataFrame, **checks) -> DataFrame:
-        """X18: Deequ-style ingest gate — one aggregate scan for all checks."""
-        from .operators.quality_checks import constraint_report
-
-        return constraint_report(df, **checks)
-
-    def export_shards(
-        self, df: DataFrame, path: str, n_shards: int, id_col: str, *, salt: str = ""
-    ) -> int:
-        """S18: reproducible training-shard export (salt = epoch re-deal)."""
-        from .sources.io import write_training_shards
-
-        return write_training_shards(df, path, n_shards, id_col, salt=salt)
-
-    def dedup_semantic(
-        self, emb: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding", **kw
-    ) -> DataFrame:
-        """X25: SemDeDup-style embedding near-dup pruning (k-means blocked by
-        default; pass block_col= for attribute blocking)."""
-        from .operators import similarity as sim
-
-        return sim.semantic_dedup(emb, id_col=id_col, vec_col=vec_col, **kw)
-
-    def ingest_gate(
-        self, incoming: DataFrame, corpus_keys: DataFrame, key: str, **kw
-    ) -> DataFrame:
-        """X24: exact anti-join vs the corpus key set with a Bloom fast path
-        (definite-new rows never shuffle)."""
-        from .operators import bloom as bl
-
-        return bl.prefiltered_anti_join(incoming, corpus_keys, key, **kw)
-
-    def split(
-        self, df: DataFrame, pairs: DataFrame, id_col: str = "doc_id", **kw
-    ) -> DataFrame:
-        """X26: leakage-safe train/val/test split — near-dup clusters (from
-        ``pairs``) are assigned to a split as one unit."""
-        from .operators import dedup as dd
-
-        return dd.leakage_safe_split(df, pairs, id_col, **kw)
-
-    def cap_sources(
-        self, df: DataFrame, source_col: str = "source", id_col: str = "doc_id", *, cap: int, quality_col: str | None = None
-    ) -> DataFrame:
-        """X27: keep at most ``cap`` docs per source, best-first
-        (WindowGroupLimit map-side pruning)."""
-        from .operators import curation as cu
-
-        return cu.per_source_cap(df, source_col, id_col, cap=cap, quality_col=quality_col)
-
-    def block_sources(self, df: DataFrame, blocked, source_col: str = "source") -> DataFrame:
-        """X27: drop blocklisted sources via broadcast anti-join."""
-        from .operators import curation as cu
-
-        return cu.blocklist_filter(df, source_col, blocked)
-
-    def source_mix(self, df: DataFrame, source_col: str = "source", *, weight_col: str | None = None) -> DataFrame:
-        """X27: per-source corpus-composition report (count, weight, share)."""
-        from .operators import curation as cu
-
-        return cu.source_mix_report(df, source_col, weight_col=weight_col)
-
-    def repetition_gate_scores(
-        self, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", *, ns: tuple = (2, 3, 4)
-    ) -> DataFrame:
-        """X28: Gopher top-n-gram char-coverage repetition scores."""
-        from .operators import text as tx
-
-        return tx.top_ngram_coverage(docs, text_col, id_col, ns=ns)
-
-    def score_with_model(self, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-        """X29: batched model-inference scoring (Arrow mapInPandas harness;
-        stub model — swap operators/inference._load_model for a checkpoint)."""
-        from .operators import inference as inf
-
-        return inf.score_documents(docs, text_col, id_col)
-
-    def quantize_embeddings(
-        self, emb: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
-    ) -> DataFrame:
-        """X30: int8 absmax quantization (id, scale, qvec, vec)."""
-        from .operators import similarity as sim
-
-        return sim.quantize_int8(emb, id_col=id_col, vec_col=vec_col)
-
-    def cluster_files_zorder(
-        self, in_path: str, out_path: str, cols: list, *, target_files: int = 8, bits: int = 16
-    ) -> int:
-        """X31: Z-order clustered compaction rewrite; returns files written."""
-        from .sources.io import compact_parquet_zorder
-
-        return compact_parquet_zorder(self.spark, in_path, out_path, cols, target_files=target_files, bits=bits)
-
-    def resample_by_temperature(
-        self, df: DataFrame, domain_col: str = "lang", id_col: str = "doc_id", *, tau: float = 0.5, salt: str = "t0"
-    ) -> DataFrame:
-        """X32: temperature-flattened domain mixture (kept counts ∝ n^tau,
-        smallest domain kept fully, deterministic md5 draw)."""
-        from .operators import curation as cu
-
-        return cu.temperature_resample(df, domain_col, id_col, tau=tau, salt=salt)
-
-    def select_to_budget(
-        self, df: DataFrame, token_col: str, id_col: str = "doc_id", *, budget: int
-    ) -> DataFrame:
-        """X33: greedy best-first selection to a token budget (two-phase
-        histogram-threshold plan; no corpus-sized single-task window)."""
-        from .operators import curation as cu
-
-        return cu.select_to_token_budget(df, token_col, id_col, budget=budget)
-
-    def quality_funnel(self, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", **kw) -> DataFrame:
-        """X35: ordered quality-rule chain with per-rule drop attribution."""
-        from .operators import text as tx
-
-        return tx.quality_funnel(docs, text_col, id_col, **kw)
-
-    def quality_funnel_report(self, funnel: DataFrame) -> DataFrame:
-        """X35: per-rule reached/dropped funnel rollup (one aggregate scan)."""
-        from .operators import text as tx
-
-        return tx.funnel_report(funnel)
-
-    def bpe_merges(self, docs: DataFrame, text_col: str = "text", *, n_merges: int = 10) -> list:
-        """X36: learn BPE merges over the corpus word histogram (one
-        pair-count aggregate + 1-row argmax per round)."""
-        from .operators import bpe
-
-        return bpe.bpe_train(docs, text_col, n_merges=n_merges)
-
-    def pq_codes(self, emb: DataFrame, *, m: int = 16, k: int = 16, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-        """X37: product-quantize embeddings to m-subvector codes (bounded
-        sample codebook training + row-local literal-baked encoding)."""
-        from .operators import similarity as s
-
-        cbs = s.pq_train(emb, id_col=id_col, vec_col=vec_col, m=m, k=k)
-        return s.pq_encode(emb, cbs, id_col=id_col, vec_col=vec_col)
-
-
-    def drift(self, old: DataFrame, new: DataFrame, col: str, *, bins: int = 10) -> DataFrame:
-        """X38: PSI + JS distribution drift between two snapshots of a
-        numeric column (bin counts shuffle, never rows)."""
-        from .operators.quality_checks import psi_drift
-
-        return psi_drift(old, new, col, bins=bins)
-
-    def drift_categorical(self, old: DataFrame, new: DataFrame, col: str) -> DataFrame:
-        """X38: per-value PSI attribution for a categorical column."""
-        from .operators.quality_checks import categorical_drift
-
-        return categorical_drift(old, new, col)
-
-
-    def shard_manifest(self, path: str) -> DataFrame:
-        """X39: delivery manifest (file, rows, bytes, sha256) per shard."""
-        from .sources.io import shard_manifest
-
-        return shard_manifest(self.spark, path)
-
-    def verify_delivery(self, path: str, manifest: DataFrame) -> DataFrame:
-        """X39: byte-level integrity re-check vs a shipped manifest
-        (discrepancy rows only; empty == intact)."""
-        from .sources.io import verify_manifest
-
-        return verify_manifest(self.spark, path, manifest)
-
-
-    def data_card(
-        self,
-        docs: DataFrame,
-        *,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        source_col: str = "source",
-        lang_col: str = "lang",
-    ) -> dict[str, DataFrame]:
-        """X40 capstone: the corpus "data card" — composition, quality
-        funnel, and length distribution in one call, shaped as the
-        ``{section: DataFrame}`` dict :meth:`write_report` publishes, so
-
-            eng.write_report(eng.data_card(docs), out_dir)
-
-        is the whole publish-a-datasheet flow.  Every section is an
-        already-verified operator; composition adds no new shuffles beyond
-        each section's own aggregate."""
-        from pyspark.sql import functions as F
-
-        from .operators import curation as cu
-        from .operators import text as tx
-        from .operators.dedup import normalized_text
-
-        funnel = tx.quality_funnel(docs, text_col, id_col)
-        toks = F.split(normalized_text(F.col(text_col)), " ")
-        length_hist = (
-            docs.select(F.floor(F.size(toks) / 10).cast("long").alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .select((F.col("bucket") * 10).alias("bucket_lo"), "n_docs")
-        )
-        lang_mix = cu.source_mix_report(docs, lang_col)
-        return {
-            "source_mix": cu.source_mix_report(docs, source_col),
-            "language_mix": lang_mix,
-            "quality_funnel": tx.funnel_report(funnel),
-            "length_histogram": length_hist,
-        }
-
-
-    def project_embeddings(self, emb: DataFrame, *, out_dim: int = 16, seed: str = "jl0", id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-        """X41: JL random projection to out_dim (hash-derived sign matrix,
-        row-local, no stored model)."""
-        from .operators import similarity as s
-
-        return s.random_projection(emb, id_col=id_col, vec_col=vec_col, out_dim=out_dim, seed=seed)
-
-
-    def perplexity(self, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", *, top_k: int | None = 50_000, method: str = "join") -> DataFrame:
-        """X42: corpus-trained bigram-LM perplexity per document (CCNet-style
-        quality signal).  Default is the broadcast-join scoring path — the
-        model never leaves the cluster, so it scales to any corpus;
-        ``method="literal"`` bakes the (top_k-bounded) model into the plan
-        for tiny vocabularies.  ``top_k=None`` is only legal for "join"."""
-        from .operators import text as tx
-
-        if method == "join":
-            uni_df, bi_df = tx.train_bigram_lm_df(docs, text_col, top_k=top_k)
-            return tx.perplexity_scores_join(docs, text_col, id_col, uni_df, bi_df)
-        if top_k is None:
-            raise ValueError("method='literal' requires a top_k bound (unbounded driver collect otherwise)")
-        model = tx.train_bigram_lm(docs, text_col, top_k=top_k)
-        return tx.perplexity_scores(docs, text_col, id_col, model)
-
-    def fingerprint_dedup(
-        self,
-        docs: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        *,
-        k: int = 5,
-        window: int = 4,
-        min_shared: int = 2,
-        min_jaccard: float = 0.2,
-        max_bucket_size: int = 200,
-    ) -> DataFrame:
-        """X43: winnowing-fingerprint near-dup clustering end to end —
-        fingerprints → capped candidate buckets → exact-Jaccard verify →
-        connected components.  Returns (id, canonical_id, cluster_size)."""
-        from .operators import dedup as dd
-        from .operators import text as tx
-        from pyspark.sql import functions as F
-
-        fps = tx.winnow_fingerprints(docs, text_col, id_col, k=k, window=window)
-        cand = tx.winnow_candidates(
-            fps, id_col, min_shared=min_shared, max_bucket_size=max_bucket_size
-        )
-        pairs = tx.winnow_verify(
-            docs, text_col, id_col, cand, k=k, min_jaccard=min_jaccard
-        )
-        canon = dd.cluster_canonical(
-            docs.select(id_col), pairs.select("id_a", "id_b"), id_col
-        )
-        sizes = canon.groupBy("canonical_id").agg(
-            F.count(F.lit(1)).cast("long").alias("cluster_size")
-        )
-        return canon.join(sizes, "canonical_id").select(
-            id_col, "canonical_id", "cluster_size"
-        )
-
-    def search_bm25(
-        self,
-        docs: DataFrame,
-        queries: list[tuple[str, list[str]]],
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        *,
-        topk: int = 10,
-    ) -> DataFrame:
-        """X44: BM25 lexical top-k retrieval for a bounded query panel."""
-        from .operators import text as tx
-
-        return tx.bm25_topk(docs, text_col, id_col, queries, topk=topk)
-
-    def normalize_embeddings(self, emb: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-        """X45: per-dimension z-score standardization of an embedding column."""
-        from .operators import similarity as s
-
-        return s.normalize_embeddings_zscore(emb, id_col=id_col, vec_col=vec_col)
-
-    def activity_features(self, events: DataFrame, *, half_life_hours: float = 24.0, **kw) -> DataFrame:
-        """X46: time-decayed per-entity activity score + recency."""
-        from .operators import features as ft
-
-        return ft.decayed_activity(events, half_life_hours=half_life_hours, **kw)
-
-    def robust_stats(self, df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-        """X48: exact median + MAD per group."""
-        from .operators import features as ft
-
-        return ft.robust_stats_by_group(df, group_col, value_col)
-
-    def flag_outliers(self, df: DataFrame, group_col: str, value_col: str, id_col: str, *, k: float = 3.0) -> DataFrame:
-        """X48b: 3-MAD modified z-score outlier rows per group."""
-        from .operators import features as ft
-
-        return ft.robust_outliers(df, group_col, value_col, id_col, k=k)
-
-    def cohort_retention(self, events: DataFrame, **kw) -> DataFrame:
-        """X49: distinct active users per (first-seen day, day offset)."""
-        from .operators import features as ft
-
-        return ft.cohort_retention(events, **kw)
-
-    def quality_bins(self, df: DataFrame, value_col: str, id_col: str, *, n_bins: int = 10) -> DataFrame:
-        """X47: curriculum quantile bin per document (histogram plan)."""
-        from .operators import curation as cu
-
-        return cu.value_deciles(df, value_col, id_col, n_bins=n_bins)
-
-    def sample_per_group(self, df: DataFrame, group_col: str, id_col: str, *, k: int, salt: str = "rs0") -> DataFrame:
-        """X50: exact k-per-group uniform sample (md5-draw rank)."""
-        from .operators import curation as cu
-
-        return cu.per_group_sample(df, group_col, id_col, k=k, salt=salt)
-
-    def resample_to_targets(self, df: DataFrame, targets: dict, domain_col: str = "lang", id_col: str = "doc_id", **kw) -> DataFrame:
-        """X51: rebalance to an explicit mixture spec (largest exact-share corpus)."""
-        from .operators import curation as cu
-
-        return cu.target_mix_resample(df, domain_col, id_col, targets, **kw)
-
-    def pack_for_training(self, df: DataFrame, token_col: str, id_col: str, *, context_len: int, n_shards: int = 32) -> DataFrame:
-        """X52: sharded concatenate-and-cut sequence packing."""
-        from .operators import curation as cu
-
-        return cu.pack_sequences_sharded(
-            df, token_col, id_col, context_len=context_len, n_shards=n_shards
-        )
-
-    def tokenize_bpe(
-        self,
-        docs: DataFrame,
-        merges: list,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-    ) -> DataFrame:
-        """X36 scale path: tokenize the corpus with a learned merge list via
-        the O(1)-plan rank-priority mapInPandas encoder."""
-        from .operators import bpe
-
-        return bpe.bpe_encode_pandas(docs, text_col, id_col, merges)
-
-    def search_hybrid(
-        self,
-        docs: DataFrame,
-        emb: DataFrame,
-        queries: list[tuple[str, list[str], int]],
-        *,
-        topk: int = 10,
-    ) -> DataFrame:
-        """X54: hybrid BM25 + cosine retrieval fused with reciprocal rank
-        fusion.  ``queries`` = [(query_id, terms, query_vec_id), ...] —
-        the vector arm uses the embedding of ``query_vec_id``."""
-        from pyspark.sql import functions as F
-
-        from .operators import similarity as s
-        from .operators import text as tx
-
-        lex = tx.bm25_topk(
-            docs, "text", "doc_id", [(q, ts) for q, ts, _ in queries], topk=topk
-        )
-        vid_to_q = {vid: q for q, _, vid in queries}
-        qvecs = emb.filter(F.col("vec_id").isin(list(vid_to_q)))
-        vec = (
-            s.brute_force_topk(emb, qvecs, k=topk)
-            .select(
-                F.col("query_id"),
-                F.col("cand_id").alias("doc_id"),
-                F.col("rnk").alias("rank"),
-            )
-        )
-        mapping = F.create_map(
-            *[x for vid, q in vid_to_q.items() for x in (F.lit(vid), F.lit(q))]
-        )
-        vec = vec.withColumn("query_id", F.element_at(mapping, F.col("query_id")))
-        return s.hybrid_rrf(lex.select("query_id", "doc_id", "rank"), vec, topk=topk)
-
-    # ---------------------------------------------------------------- r5 ops
-
-    def strip_markup(self, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-        """X67: HTML/boilerplate strip (script/style/comments/tags/entities)."""
-        from .operators import text as tx
-
-        return tx.strip_html(docs, text_col, id_col)
-
-    def importance_weights(self, docs: DataFrame, is_target, text_col: str = "text", id_col: str = "doc_id", *, n_buckets: int = 1024) -> DataFrame:
-        """X58: DSIR-style target-likeness log-ratio weights for importance
-        resampling; ``is_target`` is a boolean Column marking exemplars."""
-        from .operators import curation as cu
-
-        return cu.importance_weights(docs, text_col, id_col, is_target, n_buckets=n_buckets)
-
-    def split_stratified(self, df: DataFrame, strata_col: str, id_col: str = "doc_id", *, train: float = 0.8, val: float = 0.1, salt: str = "strat0") -> DataFrame:
-        """X59: exact per-stratum train/val/test split (md5-draw ranking)."""
-        from .operators import curation as cu
-
-        return cu.stratified_split(df, id_col, strata_col, train=train, val=val, salt=salt)
-
-    def split_temporal(self, df: DataFrame, ts_col: str, id_col: str, *, train_frac: float = 0.8, embargo_seconds: float = 3600.0) -> DataFrame:
-        """X71: purged time-series split with an embargo gap."""
-        from .operators import curation as cu
-
-        return cu.temporal_split_embargo(df, ts_col, id_col, train_frac=train_frac, embargo_seconds=embargo_seconds)
-
-    def normalize_scores(self, df: DataFrame, value_col: str, group_col: str, id_col: str = "doc_id") -> DataFrame:
-        """X60: within-group percent_rank score calibration."""
-        from .operators import curation as cu
-
-        return cu.quantile_normalize(df, value_col, group_col, id_col)
-
-    def calibrate_scores(self, new_df: DataFrame, ref_df: DataFrame, value_col: str, id_col: str, *, grid: int = 1000) -> DataFrame:
-        """X70: quantile mapping (CDF matching) of new scores onto a
-        reference distribution."""
-        from .operators import curation as cu
-
-        return cu.quantile_map(new_df, ref_df, value_col, id_col, grid=grid)
-
-    def token_stats(self, docs: DataFrame, group_col: str = "source", text_col: str = "text") -> DataFrame:
-        """X61: per-group corpus token datasheet (tokens/vocab/TTR/...)."""
-        from .operators import text as tx
-
-        return tx.token_stats_by_group(docs, text_col, group_col)
-
-    def vocabulary_overlap(self, docs: DataFrame, group_col: str = "source", text_col: str = "text") -> DataFrame:
-        """X75: pairwise vocabulary-Jaccard redundancy matrix across groups."""
-        from .operators import text as tx
-
-        return tx.vocabulary_overlap(docs, text_col, group_col)
-
-    def duplication_profile(self, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-        """X62: exact-dup cluster-size histogram with corpus share."""
-        from .operators import dedup as dd
-
-        return dd.cluster_size_histogram(docs, text_col, id_col)
-
-    def dup_rates_by(self, docs: DataFrame, group_col: str, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-        """X64: per-group duplicate rates (drops charged to the dropped copy)."""
-        from .operators import dedup as dd
-
-        return dd.dup_rate_by_group(docs, text_col, id_col, group_col)
-
-    def match_entities(self, df: DataFrame, name_col: str, id_col: str, block_col: str, *, max_distance: int = 2) -> DataFrame:
-        """X72: blocked Levenshtein fuzzy entity matching (record linkage)."""
-        from .operators import dedup as dd
-
-        return dd.fuzzy_pairs_by_block(df, name_col, id_col, block_col, max_distance=max_distance)
-
-    def find_containment(self, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", *, min_containment: float = 0.6) -> DataFrame:
-        """X80: asymmetric containment pairs (doc embedded in a longer doc)
-        via winnow fingerprint candidates."""
-        from .operators import text as tx
-
-        fps = tx.winnow_fingerprints(docs, text_col, id_col)
-        cand = tx.winnow_candidates(fps, id_col, min_shared=1, max_bucket_size=200)
-        return tx.winnow_containment(
-            docs, text_col, id_col, cand.select("id_a", "id_b"), min_containment=min_containment
-        )
-
-    def check_embeddings(self, emb: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding", expected_dim: int | None = None) -> DataFrame:
-        """X65: embedding QC gate (NULL/dim/non-finite/norm flags)."""
-        from .operators import similarity as s
-
-        return s.embedding_qc(emb, vec_col, id_col, expected_dim=expected_dim)
-
-    def sample_weighted(self, df: DataFrame, group_col: str, id_col: str, weight_col: str, *, k: int, salt: str = "ws0") -> DataFrame:
-        """X74: Efraimidis-Spirakis weighted k-per-group sample."""
-        from .operators import curation as cu
-
-        return cu.weighted_per_group_sample(df, group_col, id_col, weight_col, k=k, salt=salt)
-
-    def packing_report(self, packed: DataFrame, *, context_len: int) -> DataFrame:
-        """X68: per-shard utilization + boundary-straddle counts."""
-        from .operators import curation as cu
-
-        return cu.packing_report(packed, context_len=context_len)
-
-    def detect_bursts(self, events: DataFrame, **kw) -> DataFrame:
-        """X63: dense-axis per-type hourly z-score burst flags."""
-        from .operators import features as ft
-
-        return ft.burst_detection(events, **kw)
-
-    def detect_level_shifts(self, events: DataFrame, **kw) -> DataFrame:
-        """X79: CUSUM persistent-shift scores (the complement of bursts)."""
-        from .operators import features as ft
-
-        return ft.cusum_changepoints(events, **kw)
-
-    def bootstrap_ci(self, df: DataFrame, value_col: str, group_col: str, id_col: str, **kw) -> DataFrame:
-        """X66: deterministic bootstrap CI of the per-group mean."""
-        from .operators import features as ft
-
-        return ft.bootstrap_ci(df, value_col, group_col, id_col, **kw)
-
-    def ab_test(self, events: DataFrame, assign, **kw) -> DataFrame:
-        """X78: two-sample z-test per group (``assign`` = boolean arm Column)."""
-        from .operators import features as ft
-
-        return ft.ab_test_zscores(events, assign, **kw)
-
-    def survival(self, events: DataFrame, **kw) -> DataFrame:
-        """X77: Kaplan-Meier retention curve over user lifetimes."""
-        from .operators import features as ft
-
-        return ft.survival_curve(events, **kw)
-
-    def transitions(self, events: DataFrame, **kw) -> DataFrame:
-        """X76: first-order Markov transition matrix over user streams."""
-        from .operators import features as ft
-
-        return ft.transition_matrix(events, **kw)
-
-    def observe_stream(self, stream: DataFrame, **kw) -> DataFrame:
-        """T2: attach named ``observe()`` progress metrics to a streaming
-        DataFrame (the reference's ``.progress.txt`` watcher,
-        experiment_caller.py:103-111)."""
-        from .streaming.core import attach_progress
-
-        return attach_progress(stream, **kw)
-
-    def stream_progress(self, query, **kw) -> list[dict]:
-        """T2: per-micro-batch progress summaries (batch id, input rows,
-        observed metrics) from a StreamingQuery's ``recentProgress``."""
-        from .streaming.core import progress_records
-
-        return progress_records(query, **kw)

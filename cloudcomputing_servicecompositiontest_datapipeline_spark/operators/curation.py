@@ -103,6 +103,41 @@ def source_mix_report(
     )
 
 
+def data_card(
+    docs: DataFrame,
+    *,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    source_col: str = "source",
+    lang_col: str = "lang",
+) -> dict[str, DataFrame]:
+    """X40 capstone: the corpus "data card" — composition, quality funnel,
+    and length distribution in one call, shaped as the ``{section:
+    DataFrame}`` dict ``sources.io.write_report_csv`` publishes, so
+
+        write_report_csv(data_card(docs), out_dir)
+
+    is the whole publish-a-datasheet flow.  Every section is an
+    already-verified operator; composition adds no new shuffles beyond
+    each section's own aggregate."""
+    from .dedup import normalized_text
+    from .text import funnel_report, quality_funnel
+
+    toks = F.split(normalized_text(F.col(text_col)), " ")
+    length_hist = (
+        docs.select(F.floor(F.size(toks) / 10).cast("long").alias("bucket"))
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .select((F.col("bucket") * 10).alias("bucket_lo"), "n_docs")
+    )
+    return {
+        "source_mix": source_mix_report(docs, source_col),
+        "language_mix": source_mix_report(docs, lang_col),
+        "quality_funnel": funnel_report(quality_funnel(docs, text_col, id_col)),
+        "length_histogram": length_hist,
+    }
+
+
 def temperature_resample(
     df: DataFrame,
     domain_col: str,

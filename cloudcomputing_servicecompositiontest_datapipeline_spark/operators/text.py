@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..functions.fastlit import lit_doubles, lit_strings
 from ..sources.star import ensure_parallelism, stage_barrier
-from .dedup import normalized_text
+from .dedup import cluster_canonical, normalized_text
 
 #: Tiny per-language stopword lists for the n-gram/stopword language heuristic.
 STOPWORDS = {
@@ -1241,6 +1241,36 @@ def winnow_verify(
             F.when(union > 0, jac).otherwise(F.lit(0.0)).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= min_jaccard)
+    )
+
+
+def winnow_clusters(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    *,
+    k: int = 5,
+    window: int = 4,
+    min_shared: int = 2,
+    min_jaccard: float = 0.2,
+    max_bucket_size: int = 200,
+) -> DataFrame:
+    """X43 end to end: winnow fingerprints → bucket-capped candidates →
+    exact-Jaccard verify → connected components → (id, canonical_id,
+    cluster_size)."""
+    fps = winnow_fingerprints(df, text_col, id_col, k=k, window=window)
+    cand = winnow_candidates(
+        fps, id_col, min_shared=min_shared, max_bucket_size=max_bucket_size
+    )
+    pairs = winnow_verify(df, text_col, id_col, cand, k=k, min_jaccard=min_jaccard)
+    canon = cluster_canonical(
+        df.select(id_col), pairs.select("id_a", "id_b"), id_col
+    )
+    sizes = canon.groupBy("canonical_id").agg(
+        F.count(F.lit(1)).cast("long").alias("cluster_size")
+    )
+    return canon.join(sizes, "canonical_id").select(
+        id_col, "canonical_id", "cluster_size"
     )
 
 

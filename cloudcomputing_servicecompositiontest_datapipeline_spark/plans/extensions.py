@@ -2442,18 +2442,9 @@ def dedup_winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster_size).  The full fingerprint-dedup pipeline as one declared
     query; the oracle rebuilds the clustering with a recursive CTE
     (min-reachable-id == the min-label fixpoint of cluster_canonical)."""
-    docs = _docs(spark, sf_dir)
-    fps = tx.winnow_fingerprints(docs, "text", "doc_id", k=5, window=4)
-    cand = tx.winnow_candidates(fps, "doc_id", min_shared=2, max_bucket_size=200)
-    pairs = tx.winnow_verify(docs, "text", "doc_id", cand, k=5, min_jaccard=0.2)
-    canon = dd.cluster_canonical(
-        docs.select("doc_id"), pairs.select("id_a", "id_b"), "doc_id"
-    )
-    sizes = canon.groupBy("canonical_id").agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    return canon.join(sizes, "canonical_id").select(
-        "doc_id", "canonical_id", "cluster_size"
+    return tx.winnow_clusters(
+        _docs(spark, sf_dir), "text", "doc_id",
+        k=5, window=4, min_shared=2, min_jaccard=0.2, max_bucket_size=200,
     )
 
 

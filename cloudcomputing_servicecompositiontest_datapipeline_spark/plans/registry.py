@@ -110,62 +110,6 @@ DRIVER_WINDOW: list[str] = [
 #: docs_join_embeddings, inspector_nested_poll_agg, ... — then the r7/r8
 #: vintages, and the rows-only set last once everything oracle-backed is
 #: fresher.
-_R10_WINDOW_RETIRED: list[str] = [
-    # kept for the record: the r10 window this rotation replaced (all 50
-    # were driver-attested green in CORRECTNESS_r10)
-    # --- latest driver record r5
-    "curation_concentration",
-    "curation_importance_weights",
-    "curation_quality_quantile_norm",
-    "dedup_cluster_size_histogram",
-    "dedup_dup_rate_by_source",
-    "dedup_exact_text",
-    "dedup_fuzzy_suppliers",
-    "dedup_ngram_jaccard",
-    "dedup_winnow_containment",
-    "events_bootstrap_ci",
-    "events_session_window",
-    "events_survival_curve",
-    "events_transition_matrix",
-    "join_asof_last_click",
-    "overlap_selfjoin",
-    "pack_efficiency_report",
-    "pipeline_cumulative",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "q9_product_profit",
-    "report_multi_group",
-    "report_regression_mape",
-    "sample_weighted_per_group",
-    "similarity_bruteforce_topk",
-    "split_stratified",
-    "tenancy_annotate",
-    "text_bpe_encode_parity",
-    "text_bpe_pair_counts",
-    "text_langid_eval",
-    "text_normalize_unicode",
-    "text_novelty_scores",
-    "text_quality_score",
-    "text_strip_html",
-    "text_token_stats_by_source",
-    "text_vocabulary_overlap",
-    "text_winnow_fingerprints",
-    "topk_orders",
-    "window_rank_topk",
-    # --- latest driver record r6
-    "cube_status_priority",
-    "dedup_cluster_canonical",
-    "dedup_semantic_clusters",
-    "dedup_winnow_clusters",
-    "distinct_multi",
-    "drift_events_value",
-    "embedding_qc",
-    "events_ab_test",
-    "events_burst_zscore",
-    "events_cusum_shifts",
-    "events_mad_by_type",
-]
 
 
 def ordered_queries() -> dict[str, QueryFn]:

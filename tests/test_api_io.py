@@ -1,5 +1,6 @@
 """Engine facade + IO layer tests (reference flow: read runs → report →
-multi-section CSV, SURVEY.md §3.3)."""
+multi-section CSV, SURVEY.md §3.3).  The facade covers only that flow plus
+``sql``; the corpus-pipeline smokes below call ``operators/*`` directly."""
 
 from __future__ import annotations
 
@@ -9,7 +10,15 @@ import os
 from pyspark.sql import functions as F
 
 from cloudcomputing_servicecompositiontest_datapipeline_spark.api import Engine
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import bpe
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import curation as cu
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import dedup as dd
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import features as ft
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import similarity as sim
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import text as tx
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.report import ReportConfig
+from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
+from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
 
 
 def _write_runs(tmp_path, n=8):
@@ -53,14 +62,12 @@ def test_write_report_csv_sections(spark, tmp_path):
     cfg = ReportConfig(output_groups=["cpuType"])
     paths = eng.write_report(eng.report(runs, cfg), str(tmp_path / "report"))
     assert set(paths) == {"raw", "cpuType"}
-    back = eng.read_csv(paths["cpuType"])
+    back = sio.read_csv(spark, paths["cpuType"])
     assert back.count() == 3  # Intel, AMD, null group
     assert back.columns == sorted(back.columns)  # O2 stable layout
 
 
 def test_write_report_csv_compat_single_file(spark, tmp_path):
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
-
     eng = Engine(spark)
     runs = eng.read_runs(_write_runs(tmp_path))
     cfg = ReportConfig(output_groups=["cpuType"])
@@ -78,16 +85,42 @@ def test_write_report_csv_compat_single_file(spark, tmp_path):
         sio.write_report_csv_compat(eng.report(runs, cfg), str(tmp_path / "r2.csv"), max_rows=2)
 
 
-def test_engine_sql_over_star(spark):
+def test_report_cli_sections_and_dangling_override(spark, tmp_path):
+    """tools/report_cli.py: experiment JSON plus a typed ``--attr value``
+    override → one CSV directory per report section.  A value-less
+    ``--attr`` (trailing, or followed by another flag) is a usage error,
+    never a silently dropped or swallowed override."""
+    import pytest
+
+    from tools import report_cli
+
+    runs = _write_runs(tmp_path)
+    exp = tmp_path / "exp.json"
+    exp.write_text(json.dumps({"outputGroups": ["cpuType"]}))
+    out = tmp_path / "cli_out"
+    argv = ["-r", runs, "-e", str(exp), "-o", str(out)]
+    assert report_cli.main([*argv, "--outputGroups", '["cpuType", "uuid"]']) == 0
+    assert sorted(os.listdir(out)) == ["cpuType", "raw", "uuid"]
+    assert sio.read_csv(spark, str(out / "cpuType")).count() == 3
+    for dangling in (
+        ["--removeDuplicateContainers"],
+        ["--removeDuplicateContainers", "--warmupBuffer", "1"],
+    ):
+        bad = ["-r", runs, "-e", str(exp), "-o", str(tmp_path / "bad"), *dangling]
+        with pytest.raises(SystemExit) as exc:
+            report_cli.main(bad)
+        assert exc.value.code != 0
+    assert not (tmp_path / "bad").exists()
+
+
+def test_engine_sql_over_star(spark, sf_dir):
     eng = Engine(spark)
-    eng.register_star_views("/root/testdata/sf0.001")
+    star.register_views(spark, sf_dir)
     out = eng.sql("SELECT count(*) AS n FROM orders").collect()
     assert out[0].n == 1500
 
 
 def test_split_by_group_partitions(spark, tmp_path):
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
-
     eng = Engine(spark)
     runs = eng.read_runs(_write_runs(tmp_path))
     out = str(tmp_path / "split")
@@ -151,8 +184,6 @@ def test_write_jdbc_derby_roundtrip(spark, tmp_path):
     """S5 executed for real: batch insert into embedded Derby (the JDBC
     driver Spark bundles) and read back — LoadData.java:131-160 semantics,
     batchsize=100, append mode accumulates."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
-
     url = f"jdbc:derby:{tmp_path}/derbydb;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     df = spark.range(250).select(
@@ -257,8 +288,6 @@ def test_s3_bulk_pull_moto(spark, tmp_path):
 
 
 def test_orc_roundtrip(spark, tmp_path):
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
-
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
     path = str(tmp_path / "t.orc")
     sio.write_orc(df, path)
@@ -270,8 +299,6 @@ def test_orc_roundtrip(spark, tmp_path):
 
 
 def test_text_lines_read(spark, tmp_path):
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
-
     p = tmp_path / "corpus.txt"
     p.write_text("line one\nline two\n")
     out = sio.read_text_lines(spark, str(p))
@@ -283,7 +310,6 @@ def test_binary_file_ingestion_feeds_decode(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import multimodal as mm
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
 
     (tmp_path / "img0.bin").write_bytes(b"\x00fakeimage0")
     (tmp_path / "img1.bin").write_bytes(b"\x01fakeimage-longer-1")
@@ -312,8 +338,6 @@ def test_compact_parquet_reduces_files_and_range_sorts(spark, tmp_path):
     then skip whole files on key predicates)."""
     import pyarrow.parquet as pq
 
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
-
     src = str(tmp_path / "small_files")
     df = spark.range(0, 10000).withColumn("v", F.col("id") * 2)
     df.repartition(64).write.parquet(src)  # simulate a fragmented sink
@@ -340,8 +364,10 @@ def test_compact_parquet_reduces_files_and_range_sorts(spark, tmp_path):
 
 
 def test_engine_corpus_facade(spark):
-    """The corpus-pipeline methods compose through the Engine facade."""
-    eng = Engine(spark)
+    """The corpus-pipeline operators compose: exact dedup, MinHash-LSH
+    clusters, chunking, top-k, semantic dedup, ingest gate, split."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import bloom as bl
+
     docs = spark.createDataFrame(
         [
             (0, "the quick brown fox jumps over the lazy dog"),
@@ -350,28 +376,34 @@ def test_engine_corpus_facade(spark):
         ],
         ["doc_id", "text"],
     )
-    exact = {r.keep_id for r in eng.dedup_exact(docs).collect()}
+    exact = {r.keep_id for r in dd.exact_dedup(docs, "text", "doc_id").collect()}
     assert exact == {0, 2}
-    clusters = {r.doc_id: r.canonical_id for r in eng.near_dup_clusters(docs).collect()}
+    pairs = dd.minhash_near_dups(
+        docs, "text", "doc_id", num_hashes=16, bands=4, threshold=0.8
+    )
+    clusters = {
+        r.doc_id: r.canonical_id
+        for r in dd.cluster_canonical(docs, pairs, "doc_id").collect()
+    }
     assert clusters[1] == 0 and clusters[2] == 2
-    chunks = eng.chunk(docs, chunk_size=5, overlap=1)
+    chunks = tx.chunk_documents(docs, "text", "doc_id", chunk_size=5, overlap=1)
     assert chunks.filter("doc_id = 0").count() > 1
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0])], ["vec_id", "embedding"]
     )
-    top = eng.search_topk(emb, emb.filter(F.col("vec_id") == 0), k=1)
+    top = sim.brute_force_topk(emb, emb.filter(F.col("vec_id") == 0), k=1)
     assert [r.cand_id for r in top.collect()] == [1]
-    sem = {r.vec_id: r.canonical_id for r in eng.dedup_semantic(
+    sem = {r.vec_id: r.canonical_id for r in sim.semantic_dedup(
         emb, block_col=None, n_centroids=2, threshold=0.95
     ).collect()}
     assert sem[1] == 0 and sem[2] == 2  # near-parallel vectors collapse
     keyed = docs.select("doc_id", F.md5("text").alias("k"))
-    gate = eng.ingest_gate(
+    gate = bl.prefiltered_anti_join(
         keyed.filter("doc_id >= 1"), keyed.filter("doc_id = 0").select("k"), "k"
     )
     assert {r.doc_id for r in gate.collect()} == {2}  # doc 1 is a dup of corpus
     pairs = spark.createDataFrame([(0, 1)], ["id_a", "id_b"])
-    sp = {r.doc_id: r.split for r in eng.split(docs, pairs).collect()}
+    sp = {r.doc_id: r.split for r in dd.leakage_safe_split(docs, pairs, "doc_id").collect()}
     assert sp[0] == sp[1]  # the near-dup pair shares one split
 
 
@@ -449,19 +481,21 @@ def test_write_training_shards_deterministic_and_uniform(spark, tmp_path):
 
 
 def test_engine_profile_and_gate_facade(spark):
-    """Facade: profile → thresholds → constraint gate, the intended
+    """Profile → thresholds → constraint gate, the intended
     curation-pipeline order."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.api import Engine
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.quality_checks import (
+        constraint_report,
+        profile_columns,
+    )
 
-    eng = Engine(spark)
     df = spark.createDataFrame(
         [(1, "en"), (2, "en"), (3, None)], "id LONG, lang STRING"
     )
-    prof = {r.col_name: r for r in eng.profile(df, ["id", "lang"]).collect()}
+    prof = {r.col_name: r for r in profile_columns(df, ["id", "lang"]).collect()}
     assert prof["lang"].n_null == 1
     gate = {
         r.check_name: r.passed
-        for r in eng.constraint_gate(df, unique="id", not_null=["lang"]).collect()
+        for r in constraint_report(df, unique="id", not_null=["lang"]).collect()
     }
     assert gate["unique_id"] and not gate["not_null_lang"]
 
@@ -508,46 +542,41 @@ def test_shard_manifest_and_verify(spark, tmp_path):
 
 
 def test_engine_r4_facade_surface(spark, sf_dir):
-    """Smoke the X43-X52 facade wrappers: each returns a DataFrame with the
-    operator's documented columns (full semantics are tested at the
-    operator level; this pins the public API wiring)."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
-
-    eng = Engine(spark)
+    """Smoke the X43-X52 operators: each returns a DataFrame with its
+    documented columns (full semantics are tested per operator; this pins
+    the public call shapes)."""
     docs = star.table(spark, sf_dir, "documents")
     ev = star.table(spark, sf_dir, "events")
     emb = star.table(spark, sf_dir, "embeddings").limit(30)
 
-    fd = eng.fingerprint_dedup(docs.limit(40))
+    fd = tx.winnow_clusters(docs.limit(40), "text", "doc_id")
     assert set(fd.columns) == {"doc_id", "canonical_id", "cluster_size"}
     assert fd.count() == 40
 
-    bm = eng.search_bm25(docs.limit(50), [("q", ["table", "scan"])], topk=3)
+    bm = tx.bm25_topk(docs.limit(50), "text", "doc_id", [("q", ["table", "scan"])], topk=3)
     assert set(bm.columns) == {"query_id", "doc_id", "score", "rank"}
 
-    nz = eng.normalize_embeddings(emb)
+    nz = sim.normalize_embeddings_zscore(emb)
     assert set(nz.columns) == {"vec_id", "normalized"}
 
-    act = eng.activity_features(ev.limit(100))
+    act = ft.decayed_activity(ev.limit(100))
     assert "decayed_score" in act.columns and "hours_since_last" in act.columns
 
-    rs = eng.robust_stats(ev.limit(100), "event_type", "value")
+    rs = ft.robust_stats_by_group(ev.limit(100), "event_type", "value")
     assert {"median", "mad"} <= set(rs.columns)
 
-    qb = eng.quality_bins(docs.limit(50), "n_chars", "doc_id", n_bins=4)
+    qb = cu.value_deciles(docs.limit(50), "n_chars", "doc_id", n_bins=4)
     assert set(qb.columns) == {"doc_id", "value", "bin"}
     assert qb.agg({"bin": "max"}).first()[0] <= 3
 
-    sp = eng.sample_per_group(docs.limit(60), "lang", "doc_id", k=2)
+    sp = cu.per_group_sample(docs.limit(60), "lang", "doc_id", k=2)
     assert sp.groupBy("lang").count().agg({"count": "max"}).first()[0] <= 2
 
-    pk = eng.pack_for_training(docs.limit(40), "n_chars", "doc_id", context_len=512, n_shards=2)
+    pk = cu.pack_sequences_sharded(docs.limit(40), "n_chars", "doc_id", context_len=512, n_shards=2)
     assert {"shard", "pack_id", "offset_in_pack"} <= set(pk.columns)
 
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import bpe
-
     merges = bpe.bpe_train(docs.limit(20), "text", n_merges=5)
-    tk = eng.tokenize_bpe(docs.limit(20), merges)
+    tk = bpe.bpe_encode_pandas(docs.limit(20), "text", "doc_id", merges)
     assert {"tokens", "n_tokens"} <= set(tk.columns)
 
 
@@ -560,8 +589,6 @@ def test_read_parquet_evolved_unions_batch_schemas(spark, tmp_path):
     spark.createDataFrame(
         [(2, "b", 0.9)], "id LONG, v STRING, quality DOUBLE"
     ).write.mode("append").parquet(out)
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
-
     got = sio.read_parquet_evolved(spark, out)
     assert set(got.columns) == {"id", "v", "quality"}
     rows = {r.id: (r.v, r.quality) for r in got.collect()}
@@ -572,8 +599,6 @@ def test_read_parquet_evolved_unions_batch_schemas(spark, tmp_path):
 
 
 def test_write_jsonl_shards_reproducible_and_readable(spark, tmp_path):
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
-
     df = spark.createDataFrame(
         [(i, f"text {i}", "en") for i in range(200)], "doc_id LONG, text STRING, lang STRING"
     )
@@ -602,8 +627,6 @@ def test_write_jsonl_shards_empty_corpus(spark, tmp_path):
     """A filter chain that drops everything must still export cleanly: no
     crash, no phantom rows — the terminal step of a curation pipeline can't
     be the one that breaks on the aggressive-filter edge."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
-
     df = spark.createDataFrame([], "doc_id LONG, text STRING")
     out = str(tmp_path / "empty")
     n = sio.write_jsonl_shards(df, out, 4, "doc_id")
@@ -614,36 +637,32 @@ def test_write_jsonl_shards_empty_corpus(spark, tmp_path):
 
 
 def test_engine_facade_r5_methods_smoke(spark, sf_dir):
-    """Every r5 facade method runs end-to-end on the smoke fixtures and
-    returns a non-degenerate frame — the 'a reference user can drive the
-    whole r5 family from Engine' contract."""
-    from pyspark.sql import functions as F
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
-
-    eng = Engine(spark)
+    """Every r5 operator runs end-to-end on the smoke fixtures and returns
+    a non-degenerate frame — the 'a reference user can drive the whole r5
+    family' contract."""
     docs = star.table(spark, sf_dir, "documents")
     emb = star.table(spark, sf_dir, "embeddings")
     ev = star.table(spark, sf_dir, "events")
 
-    assert eng.strip_markup(docs).columns[:2] == ["doc_id", "clean_text"]
-    assert eng.importance_weights(docs, F.col("lang") == "en").count() == docs.count()
-    sp = eng.split_stratified(docs, "lang")
+    assert tx.strip_html(docs, "text", "doc_id").columns[:2] == ["doc_id", "clean_text"]
+    assert cu.importance_weights(docs, "text", "doc_id", F.col("lang") == "en").count() == docs.count()
+    sp = cu.stratified_split(docs, "doc_id", "lang")
     assert set(r.split for r in sp.select("split").distinct().collect()) <= {"train", "val", "test"}
-    assert eng.split_temporal(ev, "ts", "event_id").count() == ev.count()
-    assert eng.normalize_scores(docs, "n_chars", "lang").count() == docs.count()
-    assert eng.token_stats(docs).count() > 0
-    assert set(eng.vocabulary_overlap(docs).columns) >= {"group_a", "group_b", "jaccard"}
-    assert eng.duplication_profile(docs).count() >= 1
-    assert eng.dup_rates_by(docs, "source").count() > 0
-    assert eng.check_embeddings(emb, expected_dim=64).filter("ok").count() > 0
-    assert eng.sample_weighted(docs, "lang", "doc_id", "n_chars", k=3).count() > 0
-    assert {"z_score", "significant"} <= set(eng.ab_test(ev, F.col("user_id") % 2 == 1).columns)
-    assert {"cusum", "is_shift"} <= set(eng.detect_level_shifts(ev).columns)
-    assert {"z_score", "is_burst"} <= set(eng.detect_bursts(ev).columns)
-    assert eng.survival(ev).count() >= 0
-    assert eng.transitions(ev).count() > 0
-    assert eng.bootstrap_ci(ev, "value", "event_type", "event_id").count() > 0
-    cal = eng.calibrate_scores(
+    assert cu.temporal_split_embargo(ev, "ts", "event_id").count() == ev.count()
+    assert cu.quantile_normalize(docs, "n_chars", "lang", "doc_id").count() == docs.count()
+    assert tx.token_stats_by_group(docs, "text", "source").count() > 0
+    assert set(tx.vocabulary_overlap(docs, "text", "source").columns) >= {"group_a", "group_b", "jaccard"}
+    assert dd.cluster_size_histogram(docs, "text", "doc_id").count() >= 1
+    assert dd.dup_rate_by_group(docs, "text", "doc_id", "source").count() > 0
+    assert sim.embedding_qc(emb, "embedding", "vec_id", expected_dim=64).filter("ok").count() > 0
+    assert cu.weighted_per_group_sample(docs, "lang", "doc_id", "n_chars", k=3).count() > 0
+    assert {"z_score", "significant"} <= set(ft.ab_test_zscores(ev, F.col("user_id") % 2 == 1).columns)
+    assert {"cusum", "is_shift"} <= set(ft.cusum_changepoints(ev).columns)
+    assert {"z_score", "is_burst"} <= set(ft.burst_detection(ev).columns)
+    assert ft.survival_curve(ev).count() >= 0
+    assert ft.transition_matrix(ev).count() > 0
+    assert ft.bootstrap_ci(ev, "value", "event_type", "event_id").count() > 0
+    cal = cu.quantile_map(
         ev.filter("event_id % 2 = 1"), ev.filter("event_id % 2 = 0"), "value", "event_id"
     )
     assert {"quantile", "mapped_value"} <= set(cal.columns)

@@ -579,17 +579,19 @@ def test_categorical_drift_attribution(spark):
 
 
 def test_data_card_publishes_via_write_report(spark, sf_dir, tmp_path):
-    """X40: the data-card dict plugs straight into write_report — a full
-    publish-a-datasheet flow in two calls; sections carry the documented
-    invariants (shares sum to 1, funnel conserves counts)."""
+    """X40: the curation.data_card dict plugs straight into
+    Engine.write_report — a full publish-a-datasheet flow in two calls;
+    sections carry the documented invariants (shares sum to 1, funnel
+    conserves counts)."""
     import os
 
     from cloudcomputing_servicecompositiontest_datapipeline_spark.api import Engine
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.curation import data_card
     from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
 
     eng = Engine(spark)
     docs = star.table(spark, sf_dir, "documents")
-    card = eng.data_card(docs)
+    card = data_card(docs)
     assert set(card) == {"source_mix", "language_mix", "quality_funnel", "length_histogram"}
     shares = [r.share for r in card["language_mix"].collect()]
     assert abs(sum(shares) - 1.0) < 1e-9

@@ -2305,8 +2305,6 @@ def test_regression_constant_x_group_yields_nulls(spark):
     ANSI.  DuckDB's x/0 is NULL, so the oracle agrees by construction."""
     import os
 
-    from cloudcomputing_servicecompositiontest_datapipeline_spark import api
-
     # build a tiny lineitem-shaped parquet with one constant-x flag
     import tempfile
 

@@ -150,9 +150,8 @@ def test_stream_stream_overlap_join(spark, tmp_path):
 
 def test_observe_progress_metrics(spark, run_dir, tmp_path):
     """T2: progress tracking (experiment_caller.py:103-111 .progress.txt) →
-    the library's attach_progress/progress_records pair, also exposed as
-    Engine.observe_stream / Engine.stream_progress."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.api import Engine
+    the library's attach_progress/progress_records pair, with explicit
+    metrics and with the default metric (count)."""
     from cloudcomputing_servicecompositiontest_datapipeline_spark.streaming.core import (
         attach_progress,
         progress_records,
@@ -179,10 +178,9 @@ def test_observe_progress_metrics(spark, run_dir, tmp_path):
     assert with_data[0]["num_input_rows"] == 6
     assert "batch_id" in with_data[0]
 
-    # the same pair through the Engine facade, default metric (count)
-    eng = Engine(spark)
+    # the same pair, default metric (count)
     q2 = (
-        eng.observe_stream(
+        attach_progress(
             spark.readStream.schema(_parse_datatype_string(SCHEMA)).json(run_dir)
         )
         .writeStream.format("noop")
@@ -191,7 +189,7 @@ def test_observe_progress_metrics(spark, run_dir, tmp_path):
         .start()
     )
     q2.awaitTermination()
-    recs2 = [r for r in eng.stream_progress(q2) if r.get("n_records")]
+    recs2 = [r for r in progress_records(q2) if r.get("n_records")]
     assert recs2 and recs2[0]["n_records"] == 6
 
 

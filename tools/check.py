@@ -35,7 +35,7 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _args = [a for a in sys.argv[1:] if a != "--window"]
 #: --window: check exactly the DRIVER_WINDOW slice (the 50 queries the
@@ -138,9 +138,6 @@ def main() -> int:
         if not ok:
             failures.append(name)
             print(f"FAIL  {name}: spark=({sn} rows, {sc}, {sh}) oracle=({on} rows, {oc}, {oh})")
-            if sn and on and sc == oc and sn == on:
-                # show first differing row pair for debugging
-                a = sdf[sorted(sdf.columns)].map(norm_cell) if hasattr(sdf, "map") else None
         else:
             print(f"OK    {name}: {sn} rows hash={sh} [{time.time()-t0:.1f}s]")
     print(f"\n{n_checked} oracle-checked, {len(failures)} failures: {failures}")

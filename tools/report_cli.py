@@ -38,13 +38,13 @@ def main(argv: list[str] | None = None) -> int:
     args, extra = ap.parse_known_args(argv)
 
     overrides: dict[str, str] = {}
-    i = 0
-    while i < len(extra):
-        if extra[i].startswith("--") and i + 1 < len(extra):
-            overrides[extra[i][2:]] = extra[i + 1]
-            i += 2
-        else:
-            i += 1
+    for i in range(0, len(extra), 2):
+        flag, value = extra[i], extra[i + 1] if i + 1 < len(extra) else None
+        if not flag.startswith("--"):
+            ap.error(f"unexpected argument {flag!r}; overrides are --attr value")
+        if value is None or value.startswith("--"):
+            ap.error(f"override {flag} needs a value")
+        overrides[flag[2:]] = value
 
     cfg_doc = apply_overrides([load_config(args.experiment)], overrides)[0]
     cfg = to_report_config(cfg_doc)
