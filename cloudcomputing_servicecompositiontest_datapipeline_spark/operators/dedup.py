@@ -5,9 +5,11 @@ LLM-data-pipeline family: exact-hash, MinHash+LSH, SimHash, and n-gram
 Jaccard near-dup.
 
 Scale design: every path is expressible as hash-partitioned DataFrame ops —
-no driver-side pairwise loops.  MinHash/LSH candidate generation is
-band-bucket grouping (shuffle on band hash), so cost is O(docs × bands), not
-O(docs²); only candidate pairs within a bucket are verified exactly.
+no driver-side pairwise loops; the one driver-side step,
+``cluster_canonical``'s union-find, runs only on graphs that fit one
+partition.  MinHash/LSH candidate generation is band-bucket grouping
+(shuffle on band hash), so cost is O(docs × bands), not O(docs²); only
+candidate pairs within a bucket are verified exactly.
 """
 
 from __future__ import annotations
@@ -609,6 +611,42 @@ def dedup_against_corpus(
     )
 
 
+#: Edges per partition of :func:`cluster_canonical`'s label-propagation
+#: loop.  A graph with fewer (directed, distinct) edges fits one partition
+#: and is solved on the driver instead.
+_EDGES_PER_PARTITION = 500_000
+
+
+def component_minimum(edges) -> dict:
+    """Connected components of an undirected edge list by union-find:
+    ``{node: smallest node of its component}`` for every node on some edge
+    of ``edges`` (an iterable of ``(a, b)``; ids non-NULL and mutually
+    comparable).  One pass over the edges, no rounds.  Unions hang the
+    larger root under the smaller, so every root is its component's
+    minimum; finds compress their path.  The one connected-components
+    kernel: :func:`cluster_canonical` runs it on the driver,
+    ``similarity._blocked_components`` once per block in a Python worker."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for x, y in edges:
+        parent.setdefault(x, x)
+        parent.setdefault(y, y)
+        rx, ry = find(x), find(y)
+        if rx < ry:
+            parent[ry] = rx
+        elif ry < rx:
+            parent[rx] = ry
+    return {v: find(v) for v in parent}
+
+
 def cluster_canonical(
     df: DataFrame,
     pairs: DataFrame,
@@ -619,36 +657,43 @@ def cluster_canonical(
     """X2 completion: collapse near-dup *pairs* into clusters and elect one
     canonical document per cluster (the component-minimum id) — the step a
     dedup pipeline needs after pair detection to decide what to keep.
+    Docs with no near-dup pair keep themselves as canonical; a NULL id
+    pairs with nothing and stays NULL.
 
-    Connected components by iterative min-label propagation WITH pointer
-    jumping: every node starts labelled with itself; each round every node
-    takes the min label among itself and its neighbors, then follows its
-    label one hop (label ← label(label)).  The shortcut halves the distance
-    a component-minimum still has to travel, so rounds are O(log diameter)
-    instead of O(diameter) — chain-shaped near-dup graphs (transitive
-    paraphrase chains) otherwise cost one full pass per hop (measured 22
-    rounds → 6 on the sf0.1 semantic-dedup graph).  Fixpoint = component
-    minimum, identical to plain propagation (the jump only ever replaces a
-    label with a smaller same-component label).
-    ``localCheckpoint`` truncates lineage each round so plans don't grow
-    exponentially; the convergence check is a cheap ``limit(1).count``
-    over the previous label carried THROUGH the round's aggregate (no
-    extra old-vs-new join).  Docs with no near-dup pair keep themselves as
-    canonical.
+    The pairs become a distinct, symmetric edge set whose count picks one
+    of two ways to the same component minima:
 
-    The loop runs with AQE ``coalescePartitions.parallelismFirst=false``
+    - **Driver** (under ``_EDGES_PER_PARTITION`` edges — the common case: a
+      few-% dup rate gives a kilobyte-to-megabyte graph): one Arrow
+      collect of the edges, :func:`component_minimum`, and the labels
+      shipped back with ``createDataFrame`` typed like the ids.  The edge
+      count and one collect, whatever the graph's diameter;
+      ``max_iterations`` does not apply, the fixpoint is always reached.
+      No Python worker starts.
+    - **Loop** (larger graphs, which no longer fit one partition):
+      iterative min-label propagation WITH pointer jumping over
+      ``edges.count() // _EDGES_PER_PARTITION + 1`` partitions (capped at
+      the session's parallelism).  Every node starts labelled with itself;
+      each step every node takes the min label among itself and its
+      neighbors, then follows its label one hop (label ← label(label)),
+      so rounds are O(log diameter) instead of O(diameter) (measured 22
+      rounds → 6 on the sf0.1 semantic-dedup graph), at most
+      ``max_iterations`` steps.  The jump only ever replaces a label with
+      a smaller same-component label, so the fixpoint is the component
+      minimum.  ``localCheckpoint`` truncates lineage each round; the
+      convergence check is a cheap ``limit(1).count`` over the previous
+      label carried THROUGH the round's aggregate.
+
+    Both run with AQE ``coalescePartitions.parallelismFirst=false``
     (restored after — UNSET again if the session had never set it, so a
-    default-config session is left bit-identical): iterative graph frames
-    should be partitioned by the GRAPH's size, not the session's
-    parallelism default — AQE then coalesces a kilobyte-scale duplicate
-    graph to ~1 task per round (instead of ``shuffle.partitions``
-    near-empty tasks × rounds) while a 100 TB dup graph still gets the
-    advisory-size partition count.  NOT re-entrant: the conf is
-    session-global, so concurrent queries on the same SparkSession see the
-    override for the duration of the loop, and two overlapping
-    ``cluster_canonical`` calls can restore a mid-flight value — serialize
-    calls per session (the registered queries do; a future multi-tenant
-    wrapper should hold a per-session lock around this function).
+    default-config session is left bit-identical): graph frames should be
+    partitioned by the GRAPH's size, not the session's parallelism
+    default.  NOT re-entrant: the conf is session-global, so concurrent
+    queries on the same SparkSession see the override while it lasts, and
+    two overlapping ``cluster_canonical`` calls can restore a mid-flight
+    value — serialize calls per session (the registered queries do; a
+    future multi-tenant wrapper should hold a per-session lock around this
+    function).
     """
     spark = df.sparkSession
     _pf_key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
@@ -666,92 +711,12 @@ def cluster_canonical(
             .distinct()
             .localCheckpoint(eager=False)
         )
-        # Size the ITERATIVE frames to the GRAPH, not the session default:
-        # the count materializes the edge checkpoint (a job round 0 would
-        # pay anyway) and every round then reads p partitions instead of
-        # shuffle.partitions near-empty ones — per-round task-launch
-        # overhead is the dominant cost on a small dup graph (the common
-        # case: dup pairs are a few % of the corpus), while a genuinely
-        # huge graph keeps full parallelism via the
-        # 2M-edges-per-partition target.
-        # 500k edges per partition: each loop round does ~3 passes over the
-        # edge set (propagate join, node agg, jump join), so the right unit
-        # is smaller than a scan partition — r11 A/B on the sf1 twin-heavy
-        # graph (498k edges): 2M target → p=1 serialized the loop at 4.1 s,
-        # 500k → 2.9 s, 125k → 3.3 s (task-launch overhead wins again).
-        # Still graph-sized, not core-sized: tiny dup graphs stay at p=1,
-        # huge ones cap at the session's parallelism either way.
+        # the count materializes the edge checkpoint, which either path reads
         n_edges = edges.count()
-        p = max(
-            1,
-            min(int(spark.sparkContext.defaultParallelism), n_edges // 500_000 + 1),
-        )
-        edges = edges.repartition(p).localCheckpoint(eager=False)
-        # Iterate over TOUCHED nodes only (nodes on some edge): singletons
-        # can never change label, so keeping them in the loop just
-        # multiplies every round's join/agg by |corpus|.  With this cut the
-        # iterative frames scale with the DUPLICATE population (pairs), not
-        # the corpus — at a typical few-% dup rate that is a 10-100x
-        # smaller loop; singletons rejoin as themselves at the end.
-        touched = (
-            edges.select(F.col("src").alias("node"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        labels = touched.select("node", F.col("node").alias("label"))
-
-        def _step(lbl: DataFrame) -> DataFrame:
-            neighbor_labels = (
-                edges.join(
-                    lbl.select(F.col("node").alias("src"), "label"), "src"
-                ).select(
-                    F.col("dst").alias("node"),
-                    "label",
-                    F.lit(None).cast(lbl.schema["label"].dataType).alias("_old"),
-                )
-            )
-            # The old label rides through the min-fold as max(_old): every
-            # touched node appears exactly once in `lbl`, so max over
-            # (its old label, NULLs from neighbor rows) IS the old label —
-            # the convergence probe then needs no old-vs-new join.
-            propagated = (
-                lbl.select("node", "label", F.col("label").alias("_old"))
-                .unionByName(neighbor_labels)
-                .groupBy("node")
-                .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
-            )
-            # Pointer jump: label ← label(label).  Every label value is itself a
-            # node (labels are min-folds over node ids), so the self-join is
-            # total; left+coalesce guards the invariant anyway.
-            hop = propagated.select(
-                F.col("node").alias("label"), F.col("label").alias("_jump")
-            )
-            return propagated.join(hop, "label", "left").select(
-                "node",
-                F.coalesce("_jump", F.col("label")).alias("label"),
-                "_old",
-            )
-
-        # TWO propagate+jump steps per driver round-trip: one action per
-        # round (the lazy localCheckpoint materializes when the convergence
-        # probe runs), so halving the probe count halves the loop's fixed
-        # job/plan latency — which dominates once the graph is small (r10
-        # profile: ~0.1 s per job × rounds).  Fixpoint unchanged: the probe
-        # tests the SECOND step's own (label != old-label) delta, and a
-        # full propagate+jump step that changed nothing means the fixpoint
-        # was already reached, regardless of what the first step did; a
-        # run that converges on an odd step just pays one extra no-op step
-        # instead of one extra probe.
-        for _ in range((max_iterations + 1) // 2):
-            new_labels = _step(_step(labels).select("node", "label")).localCheckpoint(
-                eager=False
-            )
-            changed = (
-                new_labels.filter(F.col("label") != F.col("_old")).limit(1).count()
-            )
-            labels = new_labels.select("node", "label")
-            if changed == 0:
-                break
+        if n_edges < _EDGES_PER_PARTITION:
+            labels = _driver_labels(edges)
+        else:
+            labels = _propagated_labels(edges, n_edges, max_iterations)
     finally:
         if prev_pf is None:
             spark.conf.unset(_pf_key)
@@ -765,6 +730,114 @@ def cluster_canonical(
             F.coalesce("label", F.col("node")).alias("canonical_id"),
         )
     )
+
+
+def _driver_labels(edges: DataFrame) -> DataFrame:
+    """(node, label) of :func:`cluster_canonical`'s graph, solved on the
+    driver.  ``src < dst`` keeps one direction of each edge and drops
+    self-loops and NULL endpoints (a comparison with NULL is never true):
+    the loop moves no label through either, and the final coalesce gives
+    such nodes themselves.  ``toArrow`` and an Arrow-table
+    ``createDataFrame`` move the data in Arrow batches whatever the
+    session's Arrow setting — the pandas and row fallbacks would collect
+    row by row, and a local-rows ``createDataFrame`` runs a Python worker
+    to re-pickle them."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    one_way = edges.where(F.col("src") < F.col("dst")).toArrow()
+    canon = component_minimum(
+        zip(one_way.column("src").to_pylist(), one_way.column("dst").to_pylist())
+    )
+    id_type = edges.schema["src"].dataType
+    return edges.sparkSession.createDataFrame(
+        pa.table({"node": list(canon), "label": list(canon.values())}),
+        StructType().add("node", id_type).add("label", id_type),
+    )
+
+
+def _propagated_labels(
+    edges: DataFrame, n_edges: int, max_iterations: int
+) -> DataFrame:
+    """(node, label) of :func:`cluster_canonical`'s graph by pointer-jumped
+    min-label propagation, for graphs too big for one partition."""
+    spark = edges.sparkSession
+    # Size the ITERATIVE frames to the GRAPH, not the session default:
+    # every round reads p partitions instead of shuffle.partitions
+    # near-empty ones, and a huge graph keeps full parallelism.  Each round
+    # makes ~3 passes over the edge set (propagate join, node agg, jump
+    # join), so the unit is smaller than a scan partition.
+    p = max(
+        1,
+        min(int(spark.sparkContext.defaultParallelism), n_edges // _EDGES_PER_PARTITION + 1),
+    )
+    edges = edges.repartition(p).localCheckpoint(eager=False)
+    # Iterate over TOUCHED nodes only (nodes on some edge): singletons
+    # can never change label, so keeping them in the loop just
+    # multiplies every round's join/agg by |corpus|.  With this cut the
+    # iterative frames scale with the DUPLICATE population (pairs), not
+    # the corpus — at a typical few-% dup rate that is a 10-100x
+    # smaller loop; singletons rejoin as themselves at the end.
+    touched = (
+        edges.select(F.col("src").alias("node"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    labels = touched.select("node", F.col("node").alias("label"))
+
+    def _step(lbl: DataFrame) -> DataFrame:
+        neighbor_labels = (
+            edges.join(
+                lbl.select(F.col("node").alias("src"), "label"), "src"
+            ).select(
+                F.col("dst").alias("node"),
+                "label",
+                F.lit(None).cast(lbl.schema["label"].dataType).alias("_old"),
+            )
+        )
+        # The old label rides through the min-fold as max(_old): every
+        # touched node appears exactly once in `lbl`, so max over
+        # (its old label, NULLs from neighbor rows) IS the old label —
+        # the convergence probe then needs no old-vs-new join.
+        propagated = (
+            lbl.select("node", "label", F.col("label").alias("_old"))
+            .unionByName(neighbor_labels)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
+        )
+        # Pointer jump: label ← label(label).  Every label value is itself a
+        # node (labels are min-folds over node ids), so the self-join is
+        # total; left+coalesce guards the invariant anyway.
+        hop = propagated.select(
+            F.col("node").alias("label"), F.col("label").alias("_jump")
+        )
+        return propagated.join(hop, "label", "left").select(
+            "node",
+            F.coalesce("_jump", F.col("label")).alias("label"),
+            "_old",
+        )
+
+    # TWO propagate+jump steps per driver round-trip: one action per
+    # round (the lazy localCheckpoint materializes when the convergence
+    # probe runs), so halving the probe count halves the loop's fixed
+    # job/plan latency — which dominates once the graph is small (r10
+    # profile: ~0.1 s per job × rounds).  Fixpoint unchanged: the probe
+    # tests the SECOND step's own (label != old-label) delta, and a
+    # full propagate+jump step that changed nothing means the fixpoint
+    # was already reached, regardless of what the first step did; a
+    # run that converges on an odd step just pays one extra no-op step
+    # instead of one extra probe.
+    for _ in range((max_iterations + 1) // 2):
+        new_labels = _step(_step(labels).select("node", "label")).localCheckpoint(
+            eager=False
+        )
+        changed = (
+            new_labels.filter(F.col("label") != F.col("_old")).limit(1).count()
+        )
+        labels = new_labels.select("node", "label")
+        if changed == 0:
+            break
+    return labels
 
 
 def leakage_safe_split(

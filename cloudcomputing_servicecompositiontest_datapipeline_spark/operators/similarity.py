@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.fastlit import lit_double_matrix, lit_doubles
 from ..sources.star import ensure_parallelism
+from .dedup import component_minimum
 
 # Scale 12 matches every oracle's cast(... AS decimal(28,12)) rounding, so
 # values are engine-identical; precision 18 keeps Spark on its compact-LONG
@@ -1181,39 +1182,16 @@ def semantic_dedup(
 
 def _blocked_components(edges: DataFrame, id_type: str) -> DataFrame:
     """Connected components of an edge set whose every edge lies inside one
-    ``_block``: groupBy(_block) + per-block union-find in an Arrow batch.
-    Output: one (_node, _canon) row per TOUCHED node (canonical = component
-    minimum); untouched ids are the caller's singletons.  Correct ONLY when
-    edges never cross blocks — the k-means/attribute blocking guarantee."""
+    ``_block``: groupBy(_block) + :func:`dedup.component_minimum` per block
+    in an Arrow batch.  Output: one (_node, _canon) row per TOUCHED node
+    (canonical = component minimum); untouched ids are the caller's
+    singletons.  Correct ONLY when edges never cross blocks — the
+    k-means/attribute blocking guarantee."""
     import pandas as pd
 
     def uf(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for x, y in zip(pdf["id_a"], pdf["id_b"]):
-            for v in (x, y):
-                if v not in parent:
-                    parent[v] = v
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                parent[ry] = rx
-        roots: dict = {}
-        for v in parent:
-            r = find(v)
-            m = roots.get(r)
-            if m is None or v < m:
-                roots[r] = v
-        return pd.DataFrame(
-            {"_node": list(parent), "_canon": [roots[find(v)] for v in parent]}
-        )
+        canon = component_minimum(zip(pdf["id_a"].tolist(), pdf["id_b"].tolist()))
+        return pd.DataFrame({"_node": list(canon), "_canon": list(canon.values())})
 
     return edges.groupBy("_block").applyInPandas(
         uf, schema=f"_node {id_type}, _canon {id_type}"

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -28,3 +29,22 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_check_dir() -> str:
     return SF_CHECK
+
+
+@pytest.fixture
+def canonical_both_paths(monkeypatch):
+    """``cluster_canonical`` run twice, on its driver path (every test graph
+    is far below the edges-per-partition unit) and on its label-propagation
+    loop (forced for any non-empty graph by a unit of 1 edge); asserts both
+    give the same rows and returns them."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import dedup
+
+    def run(*args, **kwargs):
+        driver = dedup.cluster_canonical(*args, **kwargs).collect()
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_EDGES_PER_PARTITION", 1)
+            loop = dedup.cluster_canonical(*args, **kwargs).collect()
+        assert Counter(driver) == Counter(loop)
+        return driver
+
+    return run

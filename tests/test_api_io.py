@@ -113,6 +113,36 @@ def test_report_cli_sections_and_dangling_override(spark, tmp_path):
     assert not (tmp_path / "bad").exists()
 
 
+def test_check_cli_rejects_unknown_query_names():
+    """tools/check.py names every unregistered query (and, with --window,
+    every query outside the window) and exits 2 before it starts a
+    session — a typo must not check nothing and pass."""
+    import subprocess
+    import sys
+
+    import __spark_entry__
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = list(__spark_entry__.queries())
+    first, last = names[0], names[-1]  # the last is far outside the 50-query window
+
+    def check(*args):
+        return subprocess.run(
+            [sys.executable, os.path.join(root, "tools", "check.py"), "/nonexistent", *args],
+            capture_output=True, text=True, timeout=300,
+        )
+
+    for args, bad in (
+        ([first, "no_such_query"], "no_such_query"),
+        (["--window", first, last], last),
+    ):
+        proc = check(*args)
+        assert proc.returncode == 2
+        assert bad in proc.stderr
+        assert first not in proc.stderr
+        assert "oracle-checked" not in proc.stdout
+
+
 def test_engine_sql_over_star(spark, sf_dir):
     eng = Engine(spark)
     star.register_views(spark, sf_dir)

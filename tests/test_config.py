@@ -4,6 +4,7 @@ payload inheritance — faas_runner.py / experiment_orchestrator.py semantics)."
 from __future__ import annotations
 
 import json
+import os
 
 from cloudcomputing_servicecompositiontest_datapipeline_spark.config import (
     apply_overrides,
@@ -75,3 +76,26 @@ def test_package_zip_ships_to_workers(spark):
     sc = spark.sparkContext
     assert getattr(sc, "_spark_graft_pyfile", False)
     assert any("spark_graft_pkg" in p for p in sc._python_includes)
+
+
+def test_package_zip_is_one_file_per_version(tmp_path, monkeypatch):
+    """The package zip is named by content and built byte-identically:
+    repeated builds, in this process or a later one, leave exactly one file
+    and no temp file behind."""
+    import tempfile
+    import zipfile
+
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.session import (
+        package_zip,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = package_zip()
+    data = open(first, "rb").read()
+    assert package_zip() == first
+    os.remove(first)  # a later process rebuilds the same bytes
+    assert package_zip() == first
+    assert open(first, "rb").read() == data
+    assert os.listdir(tmp_path) == [os.path.basename(first)]
+    names = zipfile.ZipFile(first).namelist()
+    assert "cloudcomputing_servicecompositiontest_datapipeline_spark/session.py" in names

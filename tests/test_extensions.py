@@ -335,7 +335,7 @@ def test_frame_sample_fanout(docs):
     assert per_doc[0] > 1  # 44-byte payload at 16-byte stride → multiple frames
 
 
-def test_cluster_canonical_transitive_chain(spark):
+def test_cluster_canonical_transitive_chain(spark, canonical_both_paths):
     """a-b and b-c near-dup pairs must land a, b, c in ONE cluster with the
     min id canonical, even though a-c is not itself a pair; isolated docs
     keep themselves."""
@@ -345,8 +345,50 @@ def test_cluster_canonical_transitive_chain(spark):
     pairs = spark.createDataFrame(
         [(10, 11), (11, 12), (13, 13)], ["id_a", "id_b"]
     ).filter(F.col("id_a") != F.col("id_b"))
-    out = {r.doc_id: r.canonical_id for r in dd.cluster_canonical(docs, pairs, "doc_id").collect()}
+    out = {r.doc_id: r.canonical_id for r in canonical_both_paths(docs, pairs, "doc_id")}
     assert out == {10: 10, 11: 10, 12: 10, 13: 13, 14: 14}
+
+
+def test_cluster_canonical_null_endpoint_links_nothing(spark, canonical_both_paths):
+    """A NULL endpoint is no node: (2, NULL) and (NULL, 3) must not join 2
+    and 3 through it, a pair with two NULLs is no edge, and a NULL doc id
+    comes back with a NULL canonical."""
+    docs = spark.createDataFrame(
+        [(1,), (2,), (3,), (4,), (None,)], "doc_id LONG"
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (None, None)], "id_a LONG, id_b LONG"
+    )
+    out = {r.doc_id: r.canonical_id for r in canonical_both_paths(docs, pairs, "doc_id")}
+    assert out == {1: 1, 2: 1, 3: 3, 4: 4, None: None}
+
+
+def test_cluster_canonical_string_ids(spark, canonical_both_paths):
+    """String ids keep their type and elect the smallest string (Spark's
+    binary UTF-8 order, which the driver's code-point order matches)."""
+    docs = spark.createDataFrame(
+        [("b",), ("c",), ("a",), ("é",), ("z",), ("d",)], "doc_id STRING"
+    )
+    pairs = spark.createDataFrame(
+        [("b", "c"), ("c", "a"), ("é", "z")], "id_a STRING, id_b STRING"
+    )
+    out = canonical_both_paths(docs, pairs, "doc_id")
+    assert {r.doc_id: r.canonical_id for r in out} == {
+        "a": "a", "b": "a", "c": "a", "é": "z", "z": "z", "d": "d",
+    }
+
+
+def test_cluster_canonical_empty_pair_set(spark, canonical_both_paths):
+    """No pairs: every doc is its own canonical.  An empty graph is under
+    any unit, so both runs of the fixture take the driver path; the loop
+    helper is checked on the empty edge set directly."""
+    docs = spark.createDataFrame([(1,), (2,)], "doc_id LONG")
+    pairs = spark.createDataFrame([], "id_a LONG, id_b LONG")
+    out = canonical_both_paths(docs, pairs, "doc_id")
+    assert sorted(tuple(r) for r in out) == [(1, 1), (2, 2)]
+    edges = spark.createDataFrame([], "src LONG, dst LONG")
+    assert dd._driver_labels(edges).collect() == []
+    assert dd._propagated_labels(edges, 0, 25).collect() == []
 
 
 def test_ivf_topk_raises_cleanly_on_unusable_corpus(spark):
@@ -386,14 +428,15 @@ def test_cluster_canonical_restores_session_conf(spark):
             spark.conf.set(key, prev)
 
 
-def test_cluster_canonical_converges_on_long_chain(spark):
+def test_cluster_canonical_converges_on_long_chain(spark, canonical_both_paths):
     """A path graph is the worst case for label propagation (diameter =
     n-1); pointer jumping must reach the fixpoint in clearly fewer rounds
-    than the diameter (plain propagation needs n-1 = 39 here)."""
+    than the diameter (plain propagation needs n-1 = 39 here).  The driver
+    path ignores the cap and always reaches it."""
     n = 40
     docs = spark.createDataFrame([(i, "t") for i in range(n)], ["doc_id", "text"])
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"])
-    out = dd.cluster_canonical(docs, pairs, "doc_id", max_iterations=n // 2 + 2).collect()
+    out = canonical_both_paths(docs, pairs, "doc_id", max_iterations=n // 2 + 2)
     assert {r.canonical_id for r in out} == {0}
 
 

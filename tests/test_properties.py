@@ -485,12 +485,11 @@ def test_bloom_prefiltered_anti_join_matches_plain_anti_join(spark, inc_keys, co
     )
 )
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-def test_cluster_canonical_matches_union_find(spark, edges):
-    """Pointer-jumped min-label CC must equal a plain union-find on ANY
-    pair graph (chains, stars, cycles, self-loops, disconnected nodes) —
-    the jump may only accelerate convergence, never change the fixpoint."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.dedup import cluster_canonical
-
+def test_cluster_canonical_matches_union_find(spark, canonical_both_paths, edges):
+    """Both CC paths — the driver union-find and the pointer-jumped
+    min-label loop — must equal this independent union-find on ANY pair
+    graph (chains, stars, cycles, self-loops, disconnected nodes): the
+    jump may only accelerate convergence, never change the fixpoint."""
     n = 26
     parent = list(range(n))
 
@@ -516,7 +515,7 @@ def test_cluster_canonical_matches_union_find(spark, edges):
     ).filter(F.col("id_a") != F.col("id_b"))
     got = {
         r.doc_id: r.canonical_id
-        for r in cluster_canonical(docs, pairs, "doc_id").collect()
+        for r in canonical_both_paths(docs, pairs, "doc_id")
     }
     assert got == expect
 

@@ -21,6 +21,9 @@ factory's tuning) — the closest local simulation of the round driver's
 environment; every query must force its own runtime conf to pass.
 
 Usage: python tools/check.py [sf_dir] [query ...]
+
+A query name that is not registered (or, with --window, not in the window)
+exits 2 before any session starts.
 """
 
 from __future__ import annotations
@@ -86,6 +89,14 @@ def frame_fingerprint(df: pd.DataFrame) -> tuple[int, list[str], str]:
 def main() -> int:
     import __spark_entry__ as entrymod
 
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    if WINDOW_ONLY:
+        qs = {n: fn for i, (n, fn) in enumerate(qs.items()) if i < 50}
+    unknown = sorted(ONLY - set(qs))
+    if unknown:
+        where = "in the driver window" if WINDOW_ONLY else "registered"
+        print(f"query names not {where}: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     if os.environ.get("SG_CHECK_PLAIN", "") not in ("", "0"):
         from pyspark.sql import SparkSession
 
@@ -103,9 +114,6 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    if WINDOW_ONLY:
-        qs = {n: fn for i, (n, fn) in enumerate(qs.items()) if i < 50}
     failures, n_checked = [], 0
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
