@@ -4,7 +4,7 @@ idiomatic Spark DataFrame / SQL / Structured Streaming plans.
 
 Public surface (SURVEY.md §3.3):
     engine.session.get_spark()        — tuned SparkSession factory
-    engine.sources.star.load_tables() — driver star-schema loader
+    engine.sources.star.table()       — driver star-schema loader
     engine.operators.*                — the operator inventory (SURVEY.md §2)
     engine.streaming.*                — available-now / event-time layer
 """

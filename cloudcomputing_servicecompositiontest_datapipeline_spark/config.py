@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import copy
 import json
-import os
 from typing import Any
 
 from .operators.report import ReportConfig
@@ -90,23 +89,6 @@ def apply_overrides(
             for c in out:
                 c[key] = val
     return out
-
-
-def resolve_payloads(cfg: dict[str, Any]) -> list[dict[str, Any]]:
-    """Payload inheritance: ``payloads > payloadFolder > parentPayload``;
-    each resolved payload is ``{**parent, **payload}``
-    (experiment_orchestrator.py:90-130)."""
-    parent = cfg.get("parentPayload") or {}
-    payloads = list(cfg.get("payloads") or [])
-    folder = cfg.get("payloadFolder") or ""
-    if not payloads and folder and os.path.isdir(folder):
-        for name in sorted(os.listdir(folder)):
-            if name.endswith(".json"):
-                with open(os.path.join(folder, name)) as f:
-                    payloads.append(json.load(f))
-    if not payloads:
-        payloads = [{}]
-    return [{**parent, **p} for p in payloads]
 
 
 def to_report_config(cfg: dict[str, Any]) -> ReportConfig:

@@ -1,1 +1,1 @@
-from .exact import dsum, davg, dround  # noqa: F401
+from .exact import dsum, davg  # noqa: F401

@@ -64,11 +64,6 @@ def davg(col: str | Column, alias: str | None = None, scale: int = 2) -> Column:
     return out.alias(alias) if alias else out
 
 
-def dround(col: Column, scale: int = 2) -> Column:
-    """Round a computed double column (mirrors `report_generator.py:112,153`)."""
-    return F.round(col, scale)
-
-
 def fround(col: Column, scale: int = 2) -> Column:
     """Cross-engine-deterministic round of a double: ``floor(x*10^s + 0.5)/10^s``.
     Library round() on doubles diverges between Spark (decimal-string HALF_UP)

@@ -1,42 +1,21 @@
-"""Mergeable sketches (Apache DataSketches via Spark's ``hll_*`` functions).
+"""Mergeable sketches: Count-Min (frequency), equi-width histogram
+(quantile) and a portable HyperLogLog (distinct).
 
-The 100 TB cardinality pattern: compute one small HLL sketch per partition /
-group / day, STORE the sketches (kilobytes), and merge them later for any
-rollup — distinct counts across arbitrary group combinations without
-re-touching raw data.  This is the mergeable-summary architecture the
-reference's report engine lacks (it recounts from raw on every compile,
-``report_generator.py:384``); at scale the sketch column is the only thing
-that moves.
+The 100 TB pattern: compute one small sketch per partition / group / day,
+STORE the sketches (kilobytes), and merge them later for any rollup —
+answers across arbitrary group combinations without re-touching raw data.
+This is the mergeable-summary architecture the reference's report engine
+lacks (it recounts from raw on every compile, ``report_generator.py:384``);
+at scale the sketch column is the only thing that moves.
 
-``approx_count_distinct`` (HLL++) covers the one-shot case; these helpers
-cover the store-and-merge case.  Estimates are implementation-defined, so
-sketch outputs are pytest-verified against exact counts (no DuckDB oracle).
+``approx_count_distinct`` (HLL++) covers the one-shot distinct case; these
+helpers cover the store-and-merge case.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def group_sketches(df: DataFrame, key_col: str, group_cols: list[str]) -> DataFrame:
-    """One HLL sketch per group over ``key_col`` — the storable artifact.
-    Output: group columns + ``sketch`` (binary) + ``exact_n`` is NOT
-    included (that's the point)."""
-    return df.groupBy(*group_cols).agg(F.hll_sketch_agg(key_col).alias("sketch"))
-
-
-def estimate(df: DataFrame, sketch_col: str = "sketch") -> DataFrame:
-    """Per-row estimate from a sketch column."""
-    return df.withColumn("estimate", F.hll_sketch_estimate(sketch_col).cast("long"))
-
-
-def merged_estimate(df: DataFrame, sketch_col: str = "sketch") -> DataFrame:
-    """Union-merge every sketch and estimate the combined cardinality —
-    rollup without raw data."""
-    return df.agg(
-        F.hll_sketch_estimate(F.hll_union_agg(sketch_col)).cast("long").alias("estimate")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -255,9 +234,7 @@ def hist_quantile(
 # Portable HLL — a hand-rolled HyperLogLog in the engine-portable md5_32
 # hash mode (the dedup_simhash / cm_sketch precedent), so the whole
 # registers→max-merge→estimate pipeline is recomputable bit for bit by a
-# SQL oracle.  Production one-shot / store-and-merge callers keep the
-# DataSketches ``hll_*`` path above (better constants, dense/sparse modes);
-# this twin exists so the DISTINCT member of the sketch trio is
+# SQL oracle, so the DISTINCT member of the sketch trio is
 # hash-gate-checked like the frequency (CM) and quantile (hist) members.
 #
 # Layout (Flajolet et al. 2007): 32-bit hash = md5 first 8 hex chars;

@@ -4,8 +4,6 @@ re-expressed as Spark's.
 F1 ``yourFunction(request, context)`` (python_template/src/handler.py:2-19):
 arbitrary per-record user code → vectorized ``pandas_udf`` (Arrow batches;
 10-100× over row-at-a-time Python).
-F3 ``addAttribute`` (Inspector.py:380-381): user columns appended to the
-record → ``withColumn`` over a UDF struct result.
 F4 ``@cloud_function`` deploy decorator (interactive_helpers.py:62-124): the
 engine analogue is ``spark.udf.register`` — the function becomes callable
 from SQL.
@@ -34,11 +32,6 @@ def register_sql_function(
     """F4: publish a user function into the SQL namespace
     (``SELECT name(col) FROM …``)."""
     spark.udf.register(name, user_function_udf(fn, returns))
-
-
-def add_attribute(df: DataFrame, name: str, col: F.Column) -> DataFrame:
-    """F3: append a user attribute column (Inspector.addAttribute)."""
-    return df.withColumn(name, col)
 
 
 def grouped_apply(

@@ -103,41 +103,6 @@ def source_mix_report(
     )
 
 
-def data_card(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    lang_col: str = "lang",
-) -> dict[str, DataFrame]:
-    """X40 capstone: the corpus "data card" — composition, quality funnel,
-    and length distribution in one call, shaped as the ``{section:
-    DataFrame}`` dict ``sources.io.write_report_csv`` publishes, so
-
-        write_report_csv(data_card(docs), out_dir)
-
-    is the whole publish-a-datasheet flow.  Every section is an
-    already-verified operator; composition adds no new shuffles beyond
-    each section's own aggregate."""
-    from .dedup import normalized_text
-    from .text import funnel_report, quality_funnel
-
-    toks = F.split(normalized_text(F.col(text_col)), " ")
-    length_hist = (
-        docs.select(F.floor(F.size(toks) / 10).cast("long").alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .select((F.col("bucket") * 10).alias("bucket_lo"), "n_docs")
-    )
-    return {
-        "source_mix": source_mix_report(docs, source_col),
-        "language_mix": source_mix_report(docs, lang_col),
-        "quality_funnel": funnel_report(quality_funnel(docs, text_col, id_col)),
-        "length_histogram": length_hist,
-    }
-
-
 def temperature_resample(
     df: DataFrame,
     domain_col: str,
@@ -759,7 +724,6 @@ def quantile_map(
     grid: int = 1000,
     round_scale: int = 6,
     broadcast_ranks: bool | None = None,
-    broadcast_distinct_limit: int = 4_000_000,
 ) -> DataFrame:
     """X70 quantile mapping (CDF matching): re-express each NEW score as
     the REFERENCE-distribution value at the same percentile — the score
@@ -790,9 +754,7 @@ def quantile_map(
     a broadcast join, a continuous all-distinct corpus exceeds the
     threshold and keeps the shuffle join (the executor-OOM escape), and no
     driver-side probe job is needed; pass ``broadcast_ranks=True`` to
-    force the planner hint.  ``broadcast_distinct_limit`` is retained for
-    signature compatibility and ignored (the byte-measured AQE gate
-    subsumes the count heuristic).
+    force the planner hint.
 
     Rows with a NULL or non-finite (NaN/±Inf) score are EXCLUDED on BOTH
     sides (a missing score has no rank position; Spark windows order NULLS

@@ -623,9 +623,8 @@ def component_minimum(edges) -> dict:
     of ``edges`` (an iterable of ``(a, b)``; ids non-NULL and mutually
     comparable).  One pass over the edges, no rounds.  Unions hang the
     larger root under the smaller, so every root is its component's
-    minimum; finds compress their path.  The one connected-components
-    kernel: :func:`cluster_canonical` runs it on the driver,
-    ``similarity._blocked_components`` once per block in a Python worker."""
+    minimum; finds compress their path.  :func:`cluster_canonical` runs it
+    on the driver for graphs under ``_EDGES_PER_PARTITION`` edges."""
     parent: dict = {}
 
     def find(x):

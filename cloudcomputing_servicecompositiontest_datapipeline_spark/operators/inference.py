@@ -17,7 +17,6 @@ shuffle; co-partitioning with the upstream scan is preserved.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -126,10 +125,3 @@ def oracle_score_sql(round_scale: int = 6) -> str:
            '{MODEL_VERSION}' AS model_version
     FROM feats
     """
-
-
-def expected_score(distinct_ratio: float, n_tokens: int) -> float:
-    """Reference implementation for tests (plain math, no numpy)."""
-    b, w1, w2 = _WEIGHTS
-    z = b + w1 * distinct_ratio + w2 * math.log1p(n_tokens)
-    return 1.0 / (1.0 + math.exp(-z))

@@ -1,15 +1,10 @@
 """Nested Inspector-record ingestion (SAAF run records).
 
-The reference's run records carry two nested collections
-(jupyter_workspace/src/Inspector.py):
-
-- ``cpuPolls`` — a list of timestamped poll structs appended by
-  ``pollCPUStats`` (Inspector.py:144-174): ``{time: epoch-ms,
-  cpuTotal: {cpuUser, cpuNice, ...}}``; ``inspectCPUDelta``
-  (Inspector.py:213-229) derives ``<metric>Delta`` = last poll − first poll.
-- ``cpuInfo`` — a list of per-core attribute structs from /proc/cpuinfo
-  (Inspector.py:100-139); ``cpuType``/``cpuModel`` come from core 0 and
-  ``cpuCores`` is the list length.
+The reference's run records carry ``cpuPolls``
+(jupyter_workspace/src/Inspector.py): a list of timestamped poll structs
+appended by ``pollCPUStats`` (Inspector.py:144-174): ``{time: epoch-ms,
+cpuTotal: {cpuUser, cpuNice, ...}}``; ``inspectCPUDelta``
+(Inspector.py:213-229) derives ``<metric>Delta`` = last poll − first poll.
 
 Spark-first design: the nesting maps to ``ArrayType(StructType)`` columns,
 and the flatten is pure built-in expressions (``array_sort`` +
@@ -19,7 +14,7 @@ codegen'd; no UDFs, so at 100 TB the flatten costs one projection.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: Poll metrics inside ``cpuTotal`` (Inspector.py:149 ``cpuValues``).
@@ -35,25 +30,6 @@ CPU_POLL_METRICS = [
     "cpuGuest",
     "cpuGuestNice",
 ]
-
-#: Explicit nested schema for Inspector-shaped run JSON.  ``time`` is the
-#: FIRST struct field on purpose: Spark sorts structs lexicographically by
-#: field position, so ``array_sort(cpuPolls)`` orders polls by timestamp.
-#: Extra per-core keys (cpu0, cpu1, …, ctxt, btime) in the raw record are
-#: dropped by schema projection — the reference's "exclude" behavior.
-RUN_SCHEMA = (
-    "uuid STRING, cpuType STRING, cpuModel STRING, runtime DOUBLE, "
-    "cpuInfo ARRAY<STRUCT<model_name: STRING, model: STRING, cpu_MHz: STRING>>, "
-    "cpuPolls ARRAY<STRUCT<time: BIGINT, cpuTotal: STRUCT<"
-    + ", ".join(f"{m}: DOUBLE" for m in CPU_POLL_METRICS)
-    + ">>>"
-)
-
-
-def read_nested_runs(spark: SparkSession, path: str) -> DataFrame:
-    """S-ingest for Inspector-shaped JSON run records (one object per file or
-    per line), with the nested collections typed, not stringified."""
-    return spark.read.schema(RUN_SCHEMA).option("multiLine", "true").json(path)
 
 
 def flatten_cpu_polls(
@@ -84,15 +60,3 @@ def flatten_cpu_polls(
         )
     )
     return df.select(*cols)
-
-
-def flatten_cpu_info(df: DataFrame, info_col: str = "cpuInfo") -> DataFrame:
-    """``inspectCPUInfo`` tail (Inspector.py:129-139): cpuType/cpuModel from
-    core 0, cpuCores = core count; the nested list is then dropped."""
-    core0 = F.when(F.size(F.col(info_col)) > 0, F.element_at(F.col(info_col), 1))
-    out = (
-        df.withColumn("cpuType", F.coalesce(F.col("cpuType"), core0.getField("model_name")))
-        .withColumn("cpuModel", F.coalesce(F.col("cpuModel"), core0.getField("model")))
-        .withColumn("cpuCores", F.size(F.col(info_col)))
-    )
-    return out.drop(info_col)

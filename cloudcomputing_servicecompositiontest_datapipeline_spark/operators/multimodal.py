@@ -199,40 +199,3 @@ def extract_features(df: DataFrame, dim: int = 8) -> DataFrame:
             )
 
     return df.mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def resize_media(df: DataFrame, *, max_side: int = 128) -> DataFrame:
-    """Resize stage: recompute target dimensions so the longest side is
-    ``max_side`` (aspect preserved, integer floor) and pass the payload
-    through.  The geometry math is JVM-side column arithmetic on the decoded
-    dims; only the (stubbed) pixel resample would live in a Python kernel —
-    at scale that keeps the common fast path (metadata-only resize planning)
-    out of Python entirely."""
-    decoded = decode_media(df).select("doc_id", "width", "height")
-    carrier = df.join(decoded, "doc_id")
-    longest = F.greatest("width", "height")
-    scale = F.least(F.lit(1.0), F.lit(max_side) / longest)
-    return carrier.select(
-        "doc_id",
-        "payload",
-        "width",
-        "height",
-        F.floor(F.col("width") * scale).cast("int").alias("out_width"),
-        F.floor(F.col("height") * scale).cast("int").alias("out_height"),
-    )
-
-
-def frame_sample(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """Frame-sampling analogue for video payloads: emit one row per sampled
-    offset (explode is the Spark-side fan-out a real frame sampler uses).
-    Uses byte offsets as stand-in frame indexes — STUB per module docstring."""
-    n_frames = F.greatest((F.length("payload") / every_n_bytes).cast("int"), F.lit(1))
-    return (
-        # NULL payload: no media to sample — zero frames, not one phantom
-        # frame (greatest() SKIPS the NULL length and would emit offset 0)
-        df.where(F.col("payload").isNotNull())
-        .select(
-            "doc_id", F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx")
-        )
-        .withColumn("byte_offset", F.col("frame_idx") * every_n_bytes)
-    )

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.fastlit import lit_double_matrix, lit_doubles
 from ..sources.star import ensure_parallelism
-from .dedup import component_minimum
+from .dedup import cluster_canonical
 
 # Scale 12 matches every oracle's cast(... AS decimal(28,12)) rounding, so
 # values are engine-identical; precision 18 keeps Spark on its compact-LONG
@@ -84,18 +84,6 @@ def _argmin_centroids_seq(vec: F.Column, centers, n_pick: int = 1) -> F.Column:
     )
     ranked = F.slice(F.array_sort(entries), 1, n_pick)
     return F.transform(ranked, lambda s: s["c"])
-
-
-def cosine_score(a: F.Column, b: F.Column, scale: int = 6) -> F.Column:
-    """Cosine similarity with deterministic rounding (floor-based, cross-engine
-    stable)."""
-    dot = _dot_dec(a, b).cast("double")
-    na = F.sqrt(_dot_dec(a, a).cast("double"))
-    nb = F.sqrt(_dot_dec(b, b).cast("double"))
-    mult = float(10**scale)
-    # NULL for a zero-norm side: cosine is undefined, and ANSI mode (the
-    # Spark 4 default) makes the bare division a runtime error
-    return F.when(na * nb > 0, F.floor(dot / (na * nb) * mult + 0.5) / mult)
 
 
 def _with_norm(df: DataFrame, id_alias: str, vec_alias: str, id_col: str, vec_col: str) -> DataFrame:
@@ -988,7 +976,6 @@ def semantic_dedup(
     block_col: str | None = None,
     n_centroids: int = 16,
     seed: int = 42,
-    max_iterations: int = 25,
     exact_dots: bool = True,
     centers=None,
     exact_assign: Literal[False, True, "seq"] = False,
@@ -1010,9 +997,9 @@ def semantic_dedup(
     k-means over a frozen encoder's embeddings.)
 
     Output: (id, canonical_id, is_kept) for every input row — near-identical
-    groups collapse to their minimum id, singletons keep themselves.
-    (``max_iterations`` is kept for API stability; since r8 the CC step is
-    the per-block union-find below, which needs no iteration cap.)
+    groups collapse to their minimum id, singletons keep themselves.  The
+    connected components are :func:`dedup.cluster_canonical`'s, so a pair
+    set under its ``_EDGES_PER_PARTITION`` is solved on the driver.
 
     ``centers`` injects a pre-built quantizer (skipping the sample +
     Lloyd's fit); ``exact_assign`` switches block assignment to a portable
@@ -1153,48 +1140,11 @@ def semantic_dedup(
         # survive as singleton components, they never pair
         .filter(F.col("cosine") >= threshold)
     )
-    # Blocked CC shortcut: every edge lives INSIDE one block (pairs are
-    # scored within blocks only), so components can never span blocks and
-    # connected components decompose into independent per-block problems —
-    # one shuffle on _block + a row-local union-find per block replaces the
-    # generic iterative min-label loop (job count: ~3 vs 2-3 jobs x rounds).
-    # Per-group state is bounded by the block's edge count, and block size
-    # is exactly what the sqrt-rule n_centroids controls; unblocked pair
-    # sets (LSH dedup) keep the iterative cluster_canonical.
-    id_type = dict(zip(emb.schema.names, emb.schema.fields))[id_col].dataType.simpleString()
-    canon_edges = _blocked_components(
-        pairs.select("_block", "id_a", "id_b"), id_type
-    )
-    canon = (
-        emb.select(F.col(id_col))
-        .join(canon_edges, F.col(id_col) == F.col("_node"), "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("_canon"), F.col(id_col)).alias("canonical_id"),
-        )
-    )
+    canon = cluster_canonical(emb, pairs.select("id_a", "id_b"), id_col)
     return canon.select(
         F.col(id_col),
         "canonical_id",
         (F.col("canonical_id") == F.col(id_col)).alias("is_kept"),
-    )
-
-
-def _blocked_components(edges: DataFrame, id_type: str) -> DataFrame:
-    """Connected components of an edge set whose every edge lies inside one
-    ``_block``: groupBy(_block) + :func:`dedup.component_minimum` per block
-    in an Arrow batch.  Output: one (_node, _canon) row per TOUCHED node
-    (canonical = component minimum); untouched ids are the caller's
-    singletons.  Correct ONLY when edges never cross blocks — the
-    k-means/attribute blocking guarantee."""
-    import pandas as pd
-
-    def uf(pdf: pd.DataFrame) -> pd.DataFrame:
-        canon = component_minimum(zip(pdf["id_a"].tolist(), pdf["id_b"].tolist()))
-        return pd.DataFrame({"_node": list(canon), "_canon": list(canon.values())})
-
-    return edges.groupBy("_block").applyInPandas(
-        uf, schema=f"_node {id_type}, _canon {id_type}"
     )
 
 
@@ -1627,7 +1577,6 @@ def pq_topk_recall(
             F.sum("n_hit_rerank").cast("double"), F.lit(float(k)) * n
         ).alias("mean_recall_rerank"),
     )
-
 
 
 def random_projection(

@@ -1,14 +1,13 @@
 """Skew-handling utilities (SURVEY.md §4.2 / 100 TB posture).
 
 AQE's skew-join splitting handles most runtime skew; these utilities cover
-the two cases it can't: (a) aggregation skew on a hot key (two-phase salted
-aggregation), (b) join skew where the build side can be replicated per salt
-(salted broadcast-style join for a skewed probe side).
+aggregation skew on a hot key (two-phase salted aggregation) and report the
+key skew that decides a mitigation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -32,24 +31,6 @@ def salted_count_sum(
         F.sum("_n").alias("uses"),
         F.round(F.sum("_s"), 2).cast("double").alias(f"sum_{value}"),
     )
-
-
-def salted_join(
-    skewed: DataFrame, small: DataFrame, key: str, *, salts: int = 8
-) -> DataFrame:
-    """Join a skewed fact against a small dim by replicating the dim once per
-    salt and shuffling the fact on (key, salt) — the classic pre-AQE skew fix,
-    still needed when the hot key exceeds what skew-split can rebalance."""
-    fact = skewed.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salts))
-    )
-    dim = small.crossJoin(
-        F.broadcast(
-            small.sparkSession.range(salts).select(F.col("id").cast("int").alias("_salt"))
-        )
-    )
-    joined = fact.join(dim, (fact[key] == dim[key]) & (fact["_salt"] == dim["_salt"]))
-    return joined.drop(dim[key]).drop(fact["_salt"]).drop(dim["_salt"])
 
 
 def skew_key_report(df: DataFrame, key: str, *, top_k: int = 10) -> DataFrame:

@@ -623,7 +623,6 @@ def funnel_report(funnel: DataFrame) -> DataFrame:
     ).select("s.rule_order", "s.rule", "s.n_reached", "s.n_dropped", "s.drop_rate")
 
 
-
 def train_bigram_lm(
     df: DataFrame,
     text_col: str,
@@ -1272,34 +1271,6 @@ def winnow_clusters(
     return canon.join(sizes, "canonical_id").select(
         id_col, "canonical_id", "cluster_size"
     )
-
-
-def merge_bigram_models(
-    uni_a: DataFrame,
-    bi_a: DataFrame,
-    uni_b: DataFrame,
-    bi_b: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """X42 incremental maintenance: bigram-LM count tables are ADDITIVE, so
-    the model of corpus A ∪ B is the per-key sum of the models of A and B —
-    a new ingest batch trains on ITS OWN documents only and merges into the
-    stored model (law-tested: merge(train(A), train(B)) ≡ train(A ∪ B)).
-
-    One |vocab|-sized shuffle per table; at 100 TB this is how the
-    perplexity model stays current without rescanning the corpus.  Only
-    valid for UNCAPPED tables (a top_k cut is not distributive; cap once,
-    after merging)."""
-    uni = (
-        uni_a.unionByName(uni_b)
-        .groupBy("w")
-        .agg(F.sum("n").alias("n"))
-    )
-    bi = (
-        bi_a.unionByName(bi_b)
-        .groupBy("a", "b")
-        .agg(F.sum("n").alias("n"))
-    )
-    return uni, bi
 
 
 def mine_hard_negatives(

@@ -1,16 +1,11 @@
-"""TLQ Transform stage as one declarative DataFrame chain.
+"""TLQ Transform-stage row operators: first-wins dedup and a global ordinal.
 
-Reference: ``java_template/src/main/java/lambda/Transform.java`` — a single
-streaming pass that (1) dedups rows by Order ID keeping the *first occurrence in
-file order* (Transform.java:49,58-59,292-294), (2) decodes Order Priority
-``L/M/H/C -> Low/Medium/High/Critical`` (Transform.java:65-79,272-287),
-(3) derives ``GrossMargin = TotalProfit/TotalRevenue`` (Transform.java:88-91) and
-``OrderProcessingTime = days(ShipDate-OrderDate)`` (Transform.java:97-108), with
-``"INVALID DATE"`` substitution on parse failure (Transform.java:106-108).
+Reference: ``java_template/src/main/java/lambda/Transform.java`` dedups rows
+by Order ID keeping the *first occurrence in file order*
+(Transform.java:49,58-59,292-294).  The decode and derive columns of the
+stage live with the ``tlq_*`` queries (``plans/tlq.py``).
 
-Spark-first re-expression: the fused single pass is exactly what whole-stage
-codegen produces from a declarative ``select``/``withColumn`` chain, so no
-hand-fusion is needed.  First-wins dedup needs an explicit deterministic order
+First-wins dedup needs an explicit deterministic order
 (Spark's ``dropDuplicates`` keeps an arbitrary row — SURVEY.md §7.3): we use a
 ``row_number`` window over an ordinal column.  At 100 TB the window shuffles once
 on the dedup key — same cost as any groupBy on that key; AQE handles skew.
@@ -20,18 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-#: Order-priority decode table (Transform.java:65-79).
-PRIORITY_DECODE = {"L": "Low", "M": "Medium", "H": "High", "C": "Critical"}
-
-
-def decode_priority(col: Column) -> Column:
-    """P3 categorical decode: chained CASE/WHEN, unknown codes pass through
-    (Transform.java:284-287 default branch)."""
-    out = None
-    for code, label in PRIORITY_DECODE.items():
-        out = F.when(col == code, label) if out is None else out.when(col == code, label)
-    return out.otherwise(col)
 
 
 def first_wins_dedup(
@@ -52,47 +35,6 @@ def first_wins_dedup(
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def gross_margin(profit: Column, revenue: Column) -> Column:
-    """P1 ratio derive with safe divide (Transform.java:88-91; division by zero
-    in the reference raises and voids the row — we map to null via try_divide)."""
-    return F.try_divide(profit, revenue)
-
-
-def order_processing_days(ship: Column, order: Column, fmt: str | None = None) -> Column:
-    """P2 date-diff derive in whole days (Transform.java:97-108).
-
-    If ``fmt`` is given the inputs are strings parsed with ``to_date`` and a
-    parse failure yields null (the reference substitutes "INVALID DATE" —
-    Transform.java:106-108; P4 handled by caller via coalesce on a string col).
-    """
-    if fmt is not None:
-        ship, order = F.try_to_date(ship, fmt), F.try_to_date(order, fmt)
-    return F.datediff(ship, order)
-
-
-def tlq_transform(
-    df: DataFrame,
-    *,
-    key: str,
-    order: str,
-    priority_col: str,
-    profit_col: str,
-    revenue_col: str,
-    ship_col: str,
-    order_date_col: str,
-) -> DataFrame:
-    """The full Transform stage (D1 + P1 + P2 + P3) as one fused chain."""
-    return (
-        first_wins_dedup(df, key, order)
-        .withColumn("order_priority_decoded", decode_priority(F.col(priority_col)))
-        .withColumn("gross_margin", gross_margin(F.col(profit_col), F.col(revenue_col)))
-        .withColumn(
-            "order_processing_time",
-            order_processing_days(F.col(ship_col), F.col(order_date_col)),
-        )
     )
 
 

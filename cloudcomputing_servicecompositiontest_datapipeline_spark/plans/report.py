@@ -667,9 +667,8 @@ def sketch_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     registers→max-merge→estimate pipeline is DuckDB-oracle-checked —
     upgraded from rows-only in r8, completing the sketch trio (CM =
     frequency, hist = quantile, HLL = distinct) under the hash gate.
-    Production store-and-merge callers keep the DataSketches ``hll_*``
-    path (group_sketches/merged_estimate), whose accuracy vs exact counts
-    and agreement with this twin are pinned in tests/test_report_ops.py.
+    The twin's merge law and accuracy vs exact counts are pinned in
+    tests/test_report_ops.py.
     Rows with NULL user_id or NULL ts are excluded (a dated sketch store
     needs both); the estimate is the RAW alpha_m·m²/Z — the linear-counting
     small-range branch needs libm's ln, the one step the two engines don't

@@ -7,8 +7,6 @@
 | S6 JSON-record-per-file source (report_generator.py:446-455) | :func:`read_runs` |
 | S7 JSON-record sink (report_generator.py:477-485) | :func:`write_runs` |
 | S9 multi-section CSV report (report_generator.py:176-198,285-430) | :func:`write_report_csv` |
-| S10 report splitter (report_splitter.py:26-40) | :func:`write_split_by_group` |
-| S5 JDBC batch-insert (LoadData.java:131-160) | :func:`write_jdbc` (env-gated) |
 | S3/S8 S3 get / bulk pull | any reader over ``s3a://`` URIs — no copy step |
 
 At 100 TB: CSV/JSON are ingest formats only — land them to parquet
@@ -215,166 +213,6 @@ def render_report_compat(
     return "".join(out)
 
 
-def write_split_by_group(df: DataFrame, key: str, out_dir: str) -> None:
-    """S10: report splitter — per-group files via partitionBy (sections become
-    hive-style partitions instead of blank-line-delimited CSV chunks)."""
-    df.write.mode("overwrite").option("header", True).partitionBy(key).csv(out_dir)
-
-
-def write_parquet_partitioned(
-    df: DataFrame, path: str, *, partition_by: list[str], buckets: tuple[int, str] | None = None
-) -> None:
-    """The 100 TB landing format: parquet partitioned on the columns queries
-    filter by (→ partition pruning) and optionally bucketed on the join key
-    (→ shuffle-free co-located joins).  Bucketing requires a table
-    (``saveAsTable``); plain directory write otherwise."""
-    if buckets is not None:
-        n, col = buckets
-        name = os.path.basename(path).replace("-", "_")
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .bucketBy(n, col)
-            .sortBy(col)
-            .option("path", path)
-            .saveAsTable(name)
-        )
-    else:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    *,
-    properties: dict[str, str] | None = None,
-    batchsize: int = 100,
-) -> None:
-    """S5: typed JDBC batch insert (LoadData.java:131-160; batch=100 at
-    LoadData.java:135).  Env-gated: needs a reachable database + driver jar —
-    signature and options mirror the reference's contract."""
-    props = {"batchsize": str(batchsize)}
-    props.update(properties or {})
-    df.write.mode("append").jdbc(url, table, properties=props)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    *,
-    sort_key: str | None = None,
-    target_files: int | None = None,
-    max_records_per_file: int | None = None,
-) -> int:
-    """Small-files compaction — the maintenance pass every long-lived lake
-    needs: streaming sinks and per-batch appends leave thousands of KB-sized
-    files whose per-file open/footer overhead dominates scans at 100 TB.
-
-    Rewrites ``in_path`` into ``target_files`` outputs; with ``sort_key``
-    the rewrite is ``repartitionByRange`` + ``sortWithinPartitions`` so the
-    new files carry non-overlapping sorted key ranges — parquet min/max
-    footer stats then let later scans skip whole files (poor-man's
-    clustering, same idea as a Delta OPTIMIZE ZORDER on one key).
-    ``maxRecordsPerFile`` bounds individual file size regardless of
-    partition count.  Returns the number of files written."""
-    df = spark.read.parquet(in_path)
-    if target_files is None:
-        target_files = max(df.rdd.getNumPartitions() // 8, 1)
-    if sort_key is not None:
-        df = df.repartitionByRange(target_files, F.col(sort_key)).sortWithinPartitions(
-            sort_key
-        )
-    else:
-        df = df.coalesce(target_files)
-    w = df.write.mode("overwrite")
-    if max_records_per_file is not None:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    w.parquet(out_path)
-    return _count_files(spark, out_path, ".parquet")
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    id_col: str,
-    *,
-    salt: str = "",
-    max_records_per_file: int | None = None,
-) -> int:
-    """Shard a curated corpus into ``n_shards`` REPRODUCIBLE parquet files —
-    the hand-off format a training dataloader wants: uniform sizes, a fixed
-    shard count, and byte-stable membership/order across re-runs so a
-    resumed or re-executed export feeds workers identically.
-
-    Determinism: shard membership is ``hash(salt‖id) mod n`` (NOT
-    ``repartitionByRange``, whose sampled boundaries change run to run) and
-    rows sort within each shard by the same salted hash — every run of the
-    same input produces the same (shard, row-order) assignment, and the
-    salt re-deals both membership and order for a fresh epoch shuffle.
-    Uniformity: md5 spreads any id skew flat, so shards differ by ~√(n/N).
-    ONE shuffle; ``max_records_per_file`` caps file size as a safety cut.
-    Returns the number of files written."""
-    key = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    out = (
-        df.withColumn("__shard_key", key)
-        .repartition(n_shards, F.col("__shard_key"))
-        .sortWithinPartitions("__shard_key")
-        .drop("__shard_key")
-    )
-    w = out.write.mode("overwrite")
-    if max_records_per_file is not None:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    w.parquet(path)
-    return _count_files(df.sparkSession, path, ".parquet")
-
-
-def _count_files(spark: SparkSession, path: str, suffix: str) -> int:
-    """Count output files under ``path`` via the Hadoop FileSystem API so the
-    result is correct for ANY URI scheme Spark can write (s3a://, hdfs://,
-    file:///…) — an os.walk would silently return 0 for non-local URIs."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(jpath, True)
-    n = 0
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(suffix):
-            n += 1
-    return n
-
-
-def write_orc(df: DataFrame, path: str) -> None:
-    """Columnar sink #2: ORC (built into Spark).  Same pushdown/pruning
-    behavior as parquet — gives mixed-format lakes a native path."""
-    df.write.mode("overwrite").orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Raw-text ingestion: one row per line (``value`` column) — the entry
-    point for log/corpus files that aren't yet structured.  Splittable and
-    parallel like any file source."""
-    return spark.read.text(path)
-
-
-def read_binary_files(spark: SparkSession, path: str, *, glob: str | None = None) -> DataFrame:
-    """Multimodal ingestion (X5): Spark's ``binaryFile`` source reads whole
-    files as (path, modificationTime, length, content) rows — images/audio
-    land as ``binary`` content plus file metadata, ready for the
-    ``mapInPandas`` decode stage.  Files are NOT splittable (one file = one
-    row), so at 100 TB the parallelism unit is the file; tiny-file corpora
-    should be compacted into parquet binary columns after this first hop."""
-    r = spark.read.format("binaryFile")
-    if glob:
-        r = r.option("pathGlobFilter", glob)
-    return r.load(path)
-
 def zorder_key(df: "DataFrame", cols: list[str], *, bits: int = 16) -> Column:
     """Morton (Z-order) key over numeric columns: each value is min/max
     scaled to ``bits`` bits, then the bits are interleaved, so rows close in
@@ -408,219 +246,3 @@ def zorder_key(df: "DataFrame", cols: list[str], *, bits: int = 16) -> Column:
                 F.shiftleft(F.shiftright(scaled, b).bitwiseAND(F.lit(1)), b * n + i)
             )
     return z
-
-
-def compact_parquet_zorder(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    cols: list[str],
-    *,
-    target_files: int = 8,
-    bits: int = 16,
-) -> int:
-    """Compaction with multi-dimensional clustering (Delta/Iceberg
-    OPTIMIZE ZORDER analogue): rewrite sorted by the interleaved
-    :func:`zorder_key` so later scans filtering on ANY of ``cols`` skip
-    most files on footer stats.  Returns files written."""
-    df = spark.read.parquet(in_path)
-    z = zorder_key(df, cols, bits=bits).alias("_z")
-    out = (
-        df.withColumn("_z", z)
-        .repartitionByRange(target_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    out.write.mode("overwrite").parquet(out_path)
-    return _count_files(spark, out_path, ".parquet")
-
-
-def shard_manifest(spark: SparkSession, path: str) -> "DataFrame":
-    """X39 delivery manifest for an exported shard directory: one row per
-    parquet file with row count, byte size, and content sha256 -- what a
-    training-data hand-off ships alongside the shards so the consumer can
-    verify the delivery (and what :func:`verify_manifest` re-checks later).
-
-    Row counts come from ONE parquet scan grouped by ``input_file_name``
-    (metadata-only count per file); hashes stream each file through
-    ``binaryFile`` + ``sha2`` in parallel (one task per file).  Output is
-    keyed by file NAME (not full path) so a manifest survives relocation."""
-    rows = (
-        spark.read.parquet(path)
-        .groupBy(F.input_file_name().alias("_path"))
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .select(F.element_at(F.split("_path", "/"), -1).alias("file"), "n_rows")
-    )
-    blobs = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(path)
-        .select(
-            F.element_at(F.split("path", "/"), -1).alias("file"),
-            F.col("length").alias("n_bytes"),
-            F.sha2(F.col("content"), 256).alias("content_sha256"),
-        )
-    )
-    return blobs.join(rows, "file", "left").select(
-        "file", F.coalesce("n_rows", F.lit(0)).alias("n_rows"), "n_bytes", "content_sha256"
-    )
-
-
-def verify_manifest(spark: SparkSession, path: str, manifest: "DataFrame") -> "DataFrame":
-    """X39 integrity re-check: re-hash the directory BYTE-LEVEL (binaryFile
-    + sha2 — deliberately NOT a parquet read, so a corrupted footer is
-    reported as a discrepancy instead of failing the scan) and full-outer
-    join against the shipped manifest.  Emits ONLY discrepancies (missing /
-    unexpected / modified files); empty result == delivery intact."""
-    # an integrity checker must not trust the session's FileStatusCache —
-    # stale listed lengths would either mask a modification or fail the scan
-    spark.catalog.refreshByPath(path)
-    cur = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(path)
-        .select(
-            F.element_at(F.split("path", "/"), -1).alias("file"),
-            F.col("length").alias("cur_bytes"),
-            F.sha2(F.col("content"), 256).alias("cur_sha"),
-        )
-    )
-    exp = manifest.select(
-        "file",
-        F.col("n_bytes").alias("exp_bytes"),
-        F.col("content_sha256").alias("exp_sha"),
-    )
-    j = exp.join(cur, "file", "full_outer")
-    status = (
-        F.when(F.col("cur_sha").isNull(), F.lit("missing"))
-        .when(F.col("exp_sha").isNull(), F.lit("unexpected"))
-        .when(
-            (F.col("cur_sha") != F.col("exp_sha"))
-            | (F.col("cur_bytes") != F.col("exp_bytes")),
-            F.lit("modified"),
-        )
-    )
-    return j.select(
-        "file", status.alias("status"), "exp_bytes", "cur_bytes"
-    ).filter(F.col("status").isNotNull())
-
-
-def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """S19 schema evolution on ingest: read a parquet directory whose
-    batches were written with DIFFERENT (additive) schemas — older files
-    simply yield NULL for columns they predate (``mergeSchema``: the footer
-    union, not the first-file schema Spark defaults to for speed).
-
-    100 TB note: schema merging lists every footer once at planning time;
-    for high-file-count tables pin the merged schema explicitly
-    (``spark.read.schema(...)``) after the first evolution instead of
-    re-merging per query."""
-    return spark.read.option("mergeSchema", True).parquet(path)
-
-
-def write_jsonl_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    id_col: str,
-    *,
-    salt: str = "",
-    compression: str | None = "gzip",
-) -> int:
-    """S20: export a curated corpus as reproducible JSONL shards — the
-    interchange format most training dataloaders and external tools read
-    (one JSON object per line).  Same determinism contract as
-    :func:`write_training_shards` (md5(salt‖id) shard membership and
-    in-shard order, salt re-deals an epoch), same ONE shuffle; gzip by
-    default because JSONL is ~3-5x the size of parquet.  Returns the
-    number of data files written."""
-    key = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    out = (
-        df.withColumn("__shard_key", key)
-        .repartition(n_shards, F.col("__shard_key"))
-        .sortWithinPartitions("__shard_key")
-        .drop("__shard_key")
-    )
-    w = out.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
-    import os as _os
-
-    return sum(
-        1
-        for root, _d, files in _os.walk(path)
-        for fn in files
-        if fn.startswith("part-")
-    )
-
-
-def s3_bulk_pull(
-    bucket: str,
-    prefix: str,
-    local_dir: str,
-    *,
-    delete_after: bool = False,
-    max_retries: int = 3,
-    client=None,
-) -> list[str]:
-    """S8 staged bulk pull (reference ``test/s3pull.py:46-94`` semantics):
-    paginated ``list_objects_v2`` under ``prefix``, download every non-"dir"
-    key to ``local_dir`` preserving key paths (bounded per-key retries),
-    optionally delete the pulled objects after.  Returns the local paths.
-
-    The SCALE path is NOT this helper: a cluster reads ``s3a://bucket/
-    prefix`` directly through the Hadoop FileSystem (zero copy, predicate
-    pushdown at the scan — every reader in this module takes such URIs).
-    The staged pull exists for the reference's laptop-ingest workflow and
-    for environments whose executors lack object-store credentials; it is
-    driver-local by design, so use it for config/seed payloads, not data.
-
-    boto3 is imported lazily and gated — environments without it get an
-    ImportError only when actually calling this."""
-    import time
-
-    if client is None:
-        import boto3
-
-        client = boto3.client("s3")
-    keys: list[str] = []
-    token: str | None = None
-    while True:
-        kwargs = {"Bucket": bucket, "Prefix": prefix}
-        if token:
-            kwargs["ContinuationToken"] = token
-        page = client.list_objects_v2(**kwargs)
-        for entry in page.get("Contents") or []:
-            if not entry["Key"].endswith("/"):
-                keys.append(entry["Key"])
-        token = page.get("NextContinuationToken")
-        if token is None:
-            break
-    pulled: list[str] = []
-    root = os.path.realpath(local_dir)
-    for key in keys:
-        # key paths come from the remote listing — never let '..' segments
-        # or a leading '/' escape local_dir (os.path.join discards the base
-        # for absolute paths)
-        dest = os.path.realpath(os.path.join(root, key.lstrip("/")))
-        if not dest.startswith(root + os.sep):
-            raise ValueError(f"S3 key escapes local_dir: {key!r}")
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
-        for attempt in range(max_retries):
-            try:
-                client.download_file(bucket, key, dest)
-                break
-            except Exception:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        pulled.append(dest)
-    if delete_after and keys:
-        # batched delete (1000-key API limit), not per-object calls
-        for i in range(0, len(keys), 1000):
-            client.delete_objects(
-                Bucket=bucket,
-                Delete={"Objects": [{"Key": k} for k in keys[i : i + 1000]]},
-            )
-    return pulled

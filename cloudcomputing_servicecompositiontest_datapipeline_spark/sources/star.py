@@ -146,15 +146,3 @@ def stage_barrier(df: DataFrame, *cols: str) -> DataFrame:
             for c in df.columns
         ]
     )
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load every fixture table as a dict of DataFrames."""
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register all fixture tables as temp views so ``spark.sql`` queries can
-    name them exactly like the DuckDB oracle does."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -3,7 +3,5 @@ from .core import (  # noqa: F401
     bounded_state_partitions,
     session_windowed_counts,
     sliding_windowed_agg,
-    stream_static_enrich,
-    stream_stream_overlap_join,
     tumbling_windowed_agg,
 )

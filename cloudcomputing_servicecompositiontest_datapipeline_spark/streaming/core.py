@@ -20,7 +20,6 @@ Reference semantics being re-expressed:
 
 from __future__ import annotations
 
-import os
 import threading
 from contextlib import contextmanager
 
@@ -28,12 +27,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+#: State-store partitions of a keyed stateful stream (see
+#: :func:`bounded_state_partitions`).
+STATE_PARTITIONS = 8
 #: serializes overlapping bounded_state_partitions set/restore windows
 _STATE_PARTITIONS_LOCK = threading.Lock()
 
 
 @contextmanager
-def bounded_state_partitions(spark: SparkSession, n: int | None = None):
+def bounded_state_partitions(spark: SparkSession):
     """Run a keyed stateful stream with a BOUNDED state-partition count.
 
     A stateful streaming stage materializes exactly
@@ -44,10 +46,10 @@ def bounded_state_partitions(spark: SparkSession, n: int | None = None):
     keys, so batch-engine shuffle width (sized for corpus shuffles) is the
     wrong unit; measured on the burst monitor the 32-partition drain spent
     65 s of task time at 0.8 s of CPU — pure per-partition store overhead.
-    State partitioning is a keyspace/throughput decision, so it is its own
-    knob (``SG_STREAM_STATE_PARTITIONS``, default 8 — generous for these
-    key counts at any input scale; production checkpoints pin whatever the
-    first run chose, making this a start-time decision there too).
+    State partitioning is a keyspace/throughput decision, so it has its own
+    width, :data:`STATE_PARTITIONS` (8 — generous for these key counts at
+    any input scale; production checkpoints pin whatever the first run
+    chose, making this a start-time decision there too).
 
     Session-global conf set/restore.  A process-wide lock serializes
     overlapping wrapped drains (the multi-tenant caveat the r10 docstring
@@ -60,10 +62,9 @@ def bounded_state_partitions(spark: SparkSession, n: int | None = None):
     ``get(key, None)`` / ``unset`` keeps an untouched session
     untouched."""
     key = "spark.sql.shuffle.partitions"
-    n = n or int(os.environ.get("SG_STREAM_STATE_PARTITIONS", "8"))
     with _STATE_PARTITIONS_LOCK:
         prev = spark.conf.get(key, None)
-        spark.conf.set(key, str(n))
+        spark.conf.set(key, str(STATE_PARTITIONS))
         try:
             yield
         finally:
@@ -141,38 +142,6 @@ def sliding_windowed_agg(
     )
 
 
-def stream_stream_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str,
-    ts_col: str = "ts",
-    max_skew: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """T4: the streaming form of J1 — concurrent-run detection as a
-    stream-stream self-join on the tenancy key with an event-time range
-    constraint.  Watermarks on BOTH sides bound the join state; events later
-    than the watermark horizon are dropped (the reference's late-data answer
-    is batch recompute — SURVEY.md §7.3 — which stays the source of truth).
-    """
-    l = left.withWatermark(ts_col, watermark).alias("l")
-    r = right.withWatermark(ts_col, watermark).alias("r")
-    cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (F.col(f"r.{ts_col}") >= F.col(f"l.{ts_col}") - F.expr(f"INTERVAL {max_skew}"))
-        & (F.col(f"r.{ts_col}") <= F.col(f"l.{ts_col}") + F.expr(f"INTERVAL {max_skew}"))
-        & (F.col("l.run_id") != F.col("r.run_id"))
-    )
-    return l.join(r, cond).select(
-        F.col(f"l.{key}").alias(key),
-        F.col("l.run_id").alias("run_a"),
-        F.col("r.run_id").alias("run_b"),
-        F.col(f"l.{ts_col}").alias("ts_a"),
-        F.col(f"r.{ts_col}").alias("ts_b"),
-    )
-
-
 def session_windowed_counts(
     events: DataFrame,
     *,
@@ -220,310 +189,4 @@ def stream_exact_dedup(
         hashed.withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["content_hash"])
         .select(id_col, "content_hash", ts_col)
-    )
-
-
-def attach_progress(
-    stream: DataFrame,
-    *,
-    name: str = "progress",
-    metrics: list[F.Column] | None = None,
-) -> DataFrame:
-    """T2: attach named ``observe()`` metrics to a streaming DataFrame — the
-    library surface of the reference's per-run ``.progress.txt`` watcher
-    (``experiment_caller.py:103-111``: the caller polls a progress file the
-    worker appends to).  Spark's native form is observed metrics: the
-    expressions are evaluated over every micro-batch ON the executors
-    (piggybacked on the batch's own pass — no extra job, no collect) and
-    surfaced in each ``StreamingQueryProgress``; read them back with
-    :func:`progress_records`.
-
-    Default metric is the record count; pass aggregate Columns (count / sum /
-    min / max ...) for more."""
-    if metrics is None:
-        metrics = [F.count(F.lit(1)).alias("n_records")]
-    return stream.observe(name, *metrics)
-
-
-def progress_records(query, *, name: str = "progress") -> list[dict]:
-    """T2 companion: compress a StreamingQuery's ``recentProgress`` into one
-    plain dict per micro-batch — batch id, wall timestamp, input rows, and
-    the named ``observe()`` metrics (flattened) when present.  Works on a
-    finished available-now query or a live one (driver-side metadata only —
-    ``recentProgress`` is already held on the driver, so this never touches
-    executors)."""
-    out: list[dict] = []
-    for p in query.recentProgress or []:
-        rec = {
-            "batch_id": p.get("batchId"),
-            "timestamp": p.get("timestamp"),
-            "num_input_rows": p.get("numInputRows"),
-        }
-        observed = (p.get("observedMetrics") or {}).get(name)
-        if observed:
-            # pyspark surfaces each observed-metrics entry as a Row
-            rec.update(observed.asDict() if hasattr(observed, "asDict") else observed)
-        out.append(rec)
-    return out
-
-
-def stream_static_enrich(
-    stream: DataFrame,
-    static_dim: DataFrame,
-    key: str,
-    *,
-    how: str = "left",
-) -> DataFrame:
-    """Streaming form of J4 (config stamped onto every run record,
-    experiment_caller.py:98-99): a stream joined to a STATIC dimension.
-    Spark plans this as a broadcast hash join per micro-batch — the static
-    side is rebroadcast on restart, never shuffled with the stream, so at
-    100 TB/day of events the per-batch cost is the stream scan alone.
-    Left join keeps records whose key has no config row (annotate, don't
-    drop — matching the reference, which stamps defaults)."""
-    return stream.join(F.broadcast(static_dim), key, how)
-
-
-def foreach_batch_idempotent_append(
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
-    """Exactly-once file sink via ``foreachBatch``: each micro-batch appends
-    under a per-batch marker, and a replayed batch id (restart after a
-    failure between write and checkpoint commit) is skipped — the canonical
-    idempotent-sink pattern for sinks without native transactions.
-
-    Parallelism: the batch write is a normal distributed parquet append; the
-    only serial step is the marker existence check (one driver-side stat per
-    batch)."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(out_dir, f"_committed_{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed batch — already durable, skip
-        batch_df.write.mode("append").parquet(os.path.join(out_dir, "data"))
-        with open(marker, "w") as f:
-            f.write("ok")
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def foreach_batch_keyed_upsert(
-    stream: DataFrame,
-    key: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    *,
-    delete_col: str | None = None,
-) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
-    """Streaming keyed upsert: maintain a materialized table under
-    ``state_dir`` where the LATEST record per ``key`` wins — the serving-side
-    complement of snapshot CDC (operators/cdc.py): arriving
-    added/changed/removed deltas fold into the table instead of appending.
-
-    Each micro-batch: dedupe the batch per key (latest by arrival in the
-    batch), full-outer merge with current state (new version wins), drop
-    rows whose ``delete_col`` is true, then write a NEW versioned snapshot
-    directory and flip a pointer file — readers always see a complete
-    version, writers never mutate one in place (the swap pattern object
-    stores need; Delta/Iceberg do this with a transaction log).  Replayed
-    batch ids re-produce the same version deterministically, so restarts
-    are idempotent.
-
-    Scale: the merge is one keyed join per batch between the batch (small)
-    and state (pre-partitioned by key on disk); at 100 TB the state table
-    would be bucketed by key so the merge is shuffle-free on the state side.
-    """
-    import os
-
-    os.makedirs(state_dir, exist_ok=True)
-    pointer = os.path.join(state_dir, "_current")
-
-    def current_version() -> str | None:
-        try:
-            with open(pointer) as f:
-                return f.read().strip() or None
-        except OSError:
-            return None
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        vdir = os.path.join(state_dir, f"v{batch_id}")
-        spark = batch_df.sparkSession
-        if os.path.exists(os.path.join(vdir, "_SUCCESS")):
-            with open(pointer, "w") as f:  # replay: version already durable
-                f.write(vdir)
-            return
-        batch = batch_df.withColumn("_v", F.lit(batch_id + 1))
-        cur = current_version()
-        if cur is not None:
-            # state snapshots don't carry the tombstone column (deleted rows
-            # are gone); allowMissingColumns null-fills it → coalesced False
-            state = spark.read.parquet(cur).withColumn("_v", F.lit(0))
-            merged = state.unionByName(batch, allowMissingColumns=True)
-        else:
-            merged = batch
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(key).orderBy(F.col("_v").desc())
-        latest = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_v")
-        )
-        if delete_col is not None:
-            latest = latest.where(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
-                delete_col
-            )
-        latest.write.mode("overwrite").parquet(vdir)
-        with open(pointer, "w") as f:
-            f.write(vdir)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def vacuum_versions(state_dir: str, *, keep: int = 2) -> list[str]:
-    """Delete all but the newest ``keep`` snapshot versions written by
-    :func:`foreach_batch_keyed_upsert` / :func:`foreach_batch_sketch_merge`
-    (never the one the ``_current`` pointer references) — the retention pass
-    that bounds versioned-snapshot storage.  Returns removed dirs."""
-    import os
-    import shutil
-
-    try:
-        with open(os.path.join(state_dir, "_current")) as f:
-            current = f.read().strip()
-    except OSError:
-        current = ""
-    versions = sorted(
-        (d for d in os.listdir(state_dir) if d.startswith("v")),
-        key=lambda d: int(d[1:]),
-    )
-    doomed = [d for d in versions[:-keep] if os.path.join(state_dir, d) != current]
-    for d in doomed:
-        shutil.rmtree(os.path.join(state_dir, d))
-    return doomed
-
-
-def foreach_batch_sketch_merge(
-    stream: DataFrame,
-    key_col: str,
-    group_cols: list[str],
-    state_dir: str,
-    checkpoint_dir: str,
-) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: f821
-    """Streaming twin of the sketch_distinct_rollup pattern: maintain one
-    mergeable HLL sketch per group, folding each micro-batch's partial
-    sketches into the state with ``hll_union_agg`` — distinct-count state is
-    kilobytes per group FOREVER, regardless of how many events streamed
-    through (a running ``countDistinct`` would need unbounded key state).
-    Same versioned-snapshot/pointer discipline as
-    :func:`foreach_batch_keyed_upsert`; replays are idempotent."""
-    import os
-
-    os.makedirs(state_dir, exist_ok=True)
-    pointer = os.path.join(state_dir, "_current")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        vdir = os.path.join(state_dir, f"v{batch_id}")
-        spark = batch_df.sparkSession
-        if os.path.exists(os.path.join(vdir, "_SUCCESS")):
-            with open(pointer, "w") as f:
-                f.write(vdir)
-            return
-        part = batch_df.groupBy(*group_cols).agg(
-            F.hll_sketch_agg(key_col).alias("sketch")
-        )
-        try:
-            with open(pointer) as f:
-                cur = f.read().strip() or None
-        except OSError:
-            cur = None
-        if cur is not None:
-            merged = (
-                spark.read.parquet(cur)
-                .unionByName(part)
-                .groupBy(*group_cols)
-                .agg(F.hll_union_agg("sketch").alias("sketch"))
-            )
-        else:
-            merged = part
-        merged.write.mode("overwrite").parquet(vdir)
-        with open(pointer, "w") as f:
-            f.write(vdir)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def foreach_batch_cm_merge(
-    stream: DataFrame,
-    item_col: str,
-    group_cols: list[str],
-    state_dir: str,
-    checkpoint_dir: str,
-    *,
-    depth: int = 4,
-    width: int = 256,
-) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: f821
-    """Frequency twin of :func:`foreach_batch_sketch_merge`: maintain one
-    Count-Min counter array per group, element-wise-summing each
-    micro-batch's partial sketch into the state — heavy-hitter-queryable
-    frequency state stays ``depth*width`` longs per group FOREVER, while an
-    exact running count-per-item would grow with item cardinality.  The CM
-    merge law (sum of partials == sketch of the union, exactly) makes
-    batch-boundary effects impossible.  Same versioned-snapshot/pointer
-    discipline; replays are idempotent."""
-    import os
-
-    from ..functions.sketch import cm_merge, cm_sketch
-
-    os.makedirs(state_dir, exist_ok=True)
-    pointer = os.path.join(state_dir, "_current")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        vdir = os.path.join(state_dir, f"v{batch_id}")
-        spark = batch_df.sparkSession
-        if os.path.exists(os.path.join(vdir, "_SUCCESS")):
-            with open(pointer, "w") as f:
-                f.write(vdir)
-            return
-        part = cm_sketch(batch_df, item_col, group_cols, depth=depth, width=width)
-        try:
-            with open(pointer) as f:
-                cur = f.read().strip() or None
-        except OSError:
-            cur = None
-        if cur is not None:
-            merged = cm_merge(
-                spark.read.parquet(cur).unionByName(part), group_cols or None
-            )
-        else:
-            merged = part
-        merged.write.mode("overwrite").parquet(vdir)
-        with open(pointer, "w") as f:
-            f.write(vdir)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -70,95 +70,6 @@ def container_lifetimes(events: DataFrame, key: str = "uuid") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas twin — the successor API (SPARK-49564):
-# typed per-key state handles + RocksDB-backed state store, replacing the
-# single packed-tuple state of applyInPandasWithState.  Same operator
-# semantics as container_lifetimes; kept as a twin so either API serves the
-# T5/T6 custom-state row.
-# ---------------------------------------------------------------------------
-
-try:  # pragma: no cover - import guard exercised via availability flag
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    # The TWS Python runner speaks protobuf to the JVM state server; a
-    # missing/broken google.protobuf crashes the runner at query start, so
-    # probe it up front and gate on the probe.
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pyspark < 4.0, or no usable protobuf runtime
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = None  # type: ignore[assignment,misc]
-    HAS_TRANSFORM_WITH_STATE = False
-
-
-class ContainerLifetimeProcessor(StatefulProcessor):
-    """Per-container lifetime tracker on the transformWithState API: one
-    ValueState handle holds (runs, cold_starts, first_us, last_us)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("lifetime", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        runs, cold, first_us, last_us = (
-            tuple(self._state.get()) if self._state.exists() else (0, 0, None, None)
-        )
-        for pdf in rows:
-            runs += len(pdf)
-            if "newcontainer" in pdf:
-                cold += int(pdf["newcontainer"].fillna(0).sum())
-            ts_us = (pdf["ts"].astype("int64") // 1000) if "ts" in pdf else None
-            if ts_us is not None and len(ts_us):
-                lo, hi = int(ts_us.min()), int(ts_us.max())
-                first_us = lo if first_us is None else min(first_us, lo)
-                last_us = hi if last_us is None else max(last_us, hi)
-        self._state.update((runs, cold, first_us, last_us))
-        yield pd.DataFrame(
-            {
-                "uuid": [key[0]],
-                "runs": [runs],
-                "cold_starts": [cold],
-                "first_us": [first_us],
-                "last_us": [last_us],
-                "recycled": [runs > max(cold, 1)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def container_lifetimes_tws(events: DataFrame, key: str = "uuid") -> DataFrame:
-    """:func:`container_lifetimes` on ``transformWithStateInPandas``.
-
-    Requires the RocksDB state store provider (the API rejects the default
-    HDFS-backed one); callers set::
-
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-
-    before starting the query.  At scale RocksDB state also brings
-    incremental checkpointing + changelog, so the twin is the preferred
-    form on large keyspaces.
-    """
-    if not HAS_TRANSFORM_WITH_STATE:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires pyspark >= 4.0 AND a "
-            "google.protobuf runtime (the Python runner speaks protobuf to "
-            "the JVM state server); use container_lifetimes (the "
-            "applyInPandasWithState form, identical semantics) instead"
-        )
-    return events.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=ContainerLifetimeProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-# ---------------------------------------------------------------------------
 # X34: streaming per-source admission quota — the arrival-time form of the
 # batch per-source cap (operators/curation.py:per_source_cap).  A live ingest
 # can't rank a source's documents by quality before admitting (future docs

@@ -1,18 +1,21 @@
-"""Config subsystem tests (defaults, typed overrides, per-index overrides,
-payload inheritance — faas_runner.py / experiment_orchestrator.py semantics)."""
+"""Config and session tests: defaults, typed overrides and per-index
+overrides (faas_runner.py / experiment_orchestrator.py semantics), the
+package zip, the session memos and the scratch root."""
 
 from __future__ import annotations
 
 import json
 import os
 
+from pyspark.sql import functions as F
+
 from cloudcomputing_servicecompositiontest_datapipeline_spark.config import (
     apply_overrides,
     coerce_override,
     load_config,
-    resolve_payloads,
     to_report_config,
 )
+from cloudcomputing_servicecompositiontest_datapipeline_spark.sources.star import ensure_parallelism
 
 
 def test_load_config_fills_defaults(tmp_path):
@@ -37,21 +40,6 @@ def test_apply_overrides_global_and_indexed():
     assert out[0]["runs"] == 9 and out[1]["runs"] == 9
     assert "threads" not in out[0] and out[1]["threads"] == 4
     assert cfgs[0]["runs"] == 1  # originals untouched
-
-
-def test_payload_inheritance_priority(tmp_path):
-    folder = tmp_path / "payloads"
-    folder.mkdir()
-    (folder / "a.json").write_text(json.dumps({"x": 1}))
-    (folder / "b.json").write_text(json.dumps({"x": 2, "y": 3}))
-    # payloads key wins over folder
-    cfg = {"payloads": [{"x": 7}], "payloadFolder": str(folder), "parentPayload": {"x": 0, "z": 9}}
-    assert resolve_payloads(cfg) == [{"x": 7, "z": 9}]  # child over parent
-    # folder used when payloads empty
-    cfg2 = {"payloads": [], "payloadFolder": str(folder), "parentPayload": {"z": 9}}
-    assert resolve_payloads(cfg2) == [{"x": 1, "z": 9}, {"x": 2, "y": 3, "z": 9}]
-    # parent alone
-    assert resolve_payloads({"parentPayload": {"z": 1}}) == [{"z": 1}]
 
 
 def test_to_report_config_projection():
@@ -99,3 +87,73 @@ def test_package_zip_is_one_file_per_version(tmp_path, monkeypatch):
     assert os.listdir(tmp_path) == [os.path.basename(first)]
     names = zipfile.ZipFile(first).namelist()
     assert "cloudcomputing_servicecompositiontest_datapipeline_spark/session.py" in names
+
+
+# ------------------------------------ session memos and scratch placement
+
+
+def test_ensure_parallelism_memoizes_per_input(spark, sf_dir):
+    """Repeated calls on the same input object must return the SAME child
+    (one planning probe, canonically-equal exchange subtrees for reuse),
+    and the memo must not leak across distinct inputs."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
+
+    df = star.table(spark, sf_dir, "embeddings")
+    out1 = ensure_parallelism(df)
+    out2 = ensure_parallelism(df)
+    assert out1 is out2
+    other = df.filter(F.col("vec_id") < 5)
+    out3 = ensure_parallelism(other)
+    assert out3 is not out1
+    # values unchanged by the round-robin spread
+    assert out1.count() == df.count()
+
+
+def test_table_memoizes_per_session_and_dir(spark, sf_dir, sf_check_dir):
+    """star.table memoizes the resolved scan per (session, dir, name): the
+    same object comes back (one relation resolution per session instead of
+    one per plan build), distinct dirs/tables stay distinct, and the scan
+    still reads the parquet data on every execution (values correct)."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
+
+    a1 = star.table(spark, sf_dir, "region")
+    a2 = star.table(spark, sf_dir, "region")
+    assert a1 is a2
+    b = star.table(spark, sf_check_dir, "region")
+    assert b is not a1
+    c = star.table(spark, sf_dir, "nation")
+    assert c is not a1
+    assert a1.count() == 5  # fixture regions — a real execution, not a cache
+
+
+def test_apply_runtime_conf_memo_reapplies_on_canary_miss(spark):
+    """apply_runtime_conf skips the 11 conf round-trips once applied, but a
+    session whose timeZone canary was reset gets the full engine conf
+    re-applied (the hostile-session contract of tools/check.py PLAIN mode)."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.session import (
+        apply_runtime_conf,
+    )
+
+    apply_runtime_conf(spark)
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    # simulate a hostile reset of a VALUE-affecting conf
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        apply_runtime_conf(spark)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_scratch_root_honors_env(tmp_path, monkeypatch):
+    """scratch_root prefers SG_SCRATCH_DIR (the cluster-deployment knob)
+    over the RAM-backed local default."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark import session as sess
+
+    target = tmp_path / "scratch"
+    monkeypatch.setenv("SG_SCRATCH_DIR", str(target))
+    assert sess.scratch_root() == str(target)
+    assert target.is_dir()
+    monkeypatch.delenv("SG_SCRATCH_DIR")
+    root = sess.scratch_root()
+    assert root and root != str(target)

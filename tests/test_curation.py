@@ -4,10 +4,13 @@ coverage, int8 quantization laws, and the batched-inference harness."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import curation as cu
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import dedup as dd
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import inference as inf
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import similarity as sim
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import text as tx
@@ -128,8 +131,9 @@ def test_inference_scores_match_reference_math(spark):
         [(1, "one two three two"), (2, "a a a a")], "doc_id LONG, text STRING"
     )
     got = {r.doc_id: r for r in inf.score_documents(df, "text", "doc_id").collect()}
-    # doc 1: 4 tokens, 3 distinct
-    exp1 = inf.expected_score(3 / 4, 4)
+    # doc 1: 4 tokens, 3 distinct — the logistic model in plain math
+    b, w1, w2 = inf._WEIGHTS
+    exp1 = 1.0 / (1.0 + math.exp(-(b + w1 * 3 / 4 + w2 * math.log1p(4))))
     assert got[1].score == pytest.approx(exp1, abs=2e-6)
     assert got[1].n_tokens == 4
     assert got[1].model_version == inf.MODEL_VERSION
@@ -508,7 +512,6 @@ def test_bpe_encode_pandas_large_vocab_scales(spark):
     assert "MapInPandas" in p150
 
 
-
 # ----------------------------------------------------- X38 drift monitors
 
 
@@ -575,33 +578,6 @@ def test_categorical_drift_attribution(spark):
     assert got["en"].psi_term > 0.5
     assert got["de"].psi_term > 0.2
     assert got["en"].n_old == 80 and got["en"].n_new == 20
-
-
-
-def test_data_card_publishes_via_write_report(spark, sf_dir, tmp_path):
-    """X40: the curation.data_card dict plugs straight into
-    Engine.write_report — a full publish-a-datasheet flow in two calls;
-    sections carry the documented invariants (shares sum to 1, funnel
-    conserves counts)."""
-    import os
-
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.api import Engine
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.curation import data_card
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
-
-    eng = Engine(spark)
-    docs = star.table(spark, sf_dir, "documents")
-    card = data_card(docs)
-    assert set(card) == {"source_mix", "language_mix", "quality_funnel", "length_histogram"}
-    shares = [r.share for r in card["language_mix"].collect()]
-    assert abs(sum(shares) - 1.0) < 1e-9
-    hist_total = sum(r.n_docs for r in card["length_histogram"].collect())
-    assert hist_total == docs.count()
-    out = str(tmp_path / "card")
-    paths = eng.write_report(card, out)
-    assert set(paths) == set(card)
-    assert all(os.path.isdir(p) for p in paths.values())
-
 
 
 # ------------------------------------------------- X41 JL random projection
@@ -674,7 +650,6 @@ def test_jl_projection_md5_mode_matches_python_model(spark):
 
     with pytest.raises(ValueError, match="unknown hash_fn"):
         sim.random_projection(emb, out_dim=4, hash_fn="crc32")
-
 
 
 # -------------------------------------------------- X42 perplexity scoring
@@ -791,26 +766,6 @@ def test_pack_sequences_contiguous_per_shard(spark):
         for r in cu.pack_sequences_sharded(df.repartition(13), "n_tok", "doc_id", context_len=1000, n_shards=4).collect()
     )
     assert a == b
-
-
-def test_bigram_model_merge_law(spark):
-    """merge(train(A), train(B)) must equal train(A ∪ B) exactly — the
-    additivity that makes the perplexity model incrementally maintainable —
-    and scoring through the merged model must match the one-shot model."""
-    a_rows = [(1, "the cat sat on the mat"), (2, "a dog ran far")]
-    b_rows = [(3, "the cat ran home"), (4, "mat and dog and cat")]
-    A = spark.createDataFrame(a_rows, "doc_id LONG, text STRING")
-    B = spark.createDataFrame(b_rows, "doc_id LONG, text STRING")
-    both = A.unionByName(B)
-    ua, ba = tx.train_bigram_lm_df(A, "text")
-    ub, bb = tx.train_bigram_lm_df(B, "text")
-    mu, mb = tx.merge_bigram_models(ua, ba, ub, bb)
-    fu, fb = tx.train_bigram_lm_df(both, "text")
-    assert sorted(map(tuple, mu.collect())) == sorted(map(tuple, fu.collect()))
-    assert sorted(map(tuple, mb.collect())) == sorted(map(tuple, fb.collect()))
-    one_shot = {r.doc_id: r.perplexity for r in tx.perplexity_scores_join(both, "text", "doc_id", fu, fb).collect()}
-    merged = {r.doc_id: r.perplexity for r in tx.perplexity_scores_join(both, "text", "doc_id", mu, mb).collect()}
-    assert one_shot == merged
 
 
 def test_packing_report_hand_case(spark):
@@ -1135,3 +1090,489 @@ def test_bpe_encoders_agree_on_null_and_empty_documents(spark):
     pan = {r.doc_id: (list(r.tokens), r.n_tokens) for r in bpe.bpe_encode_pandas(df, "text", "doc_id", merges).collect()}
     assert lit == pan
     assert lit[2] == ([], 0) and lit[3] == ([], 0)
+
+
+# ---------------------------------------------------------------- X84
+
+
+@pytest.fixture(scope="module")
+def lined_docs(spark):
+    rows = [
+        # 4 lines, "nav" repeated twice -> dup_line_ratio 1/4;
+        # chars: nav(3)*2 + body lines -> dup mass = 3
+        (0, "nav\nalpha beta\nnav\ngamma delta epsilon"),
+        # no repeats at all
+        (1, "one two\nthree four\nfive six"),
+        # 2 paragraphs, second an exact copy of the first
+        (2, "header line\nbody text\n\nheader line\nbody text"),
+        # blank/whitespace-only lines are dropped, not counted
+        (3, "a\n\n   \n\na"),
+        (4, ""),
+        (5, None),
+    ]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def test_structural_repetition_line_ratios(lined_docs):
+    out = {r.doc_id: r for r in tx.structural_repetition(lined_docs, "text", "doc_id").collect()}
+    r0 = out[0]
+    assert r0.n_lines == 4 and r0.dup_line_ratio == 0.25
+    total = 3 + 10 + 3 + 19  # nav + "alpha beta" + nav + "gamma delta epsilon"
+    assert r0.dup_line_char_ratio == pytest.approx(3 / total, abs=1e-6)
+    r1 = out[1]
+    assert r1.dup_line_ratio == 0.0 and r1.dup_line_char_ratio == 0.0
+
+
+def test_structural_repetition_paragraph_ratios(lined_docs):
+    out = {r.doc_id: r for r in tx.structural_repetition(lined_docs, "text", "doc_id").collect()}
+    r2 = out[2]
+    assert r2.n_paras == 2 and r2.dup_para_ratio == 0.5
+    # duplicated paragraph mass = chars of one copy
+    assert r2.dup_para_char_ratio == 0.5
+    # its 4 lines are 2x2 copies -> dup_line_ratio 0.5
+    assert r2.n_lines == 4 and r2.dup_line_ratio == 0.5
+
+
+def test_structural_repetition_degenerates(lined_docs):
+    out = {r.doc_id: r for r in tx.structural_repetition(lined_docs, "text", "doc_id").collect()}
+    # whitespace-only segments dropped: doc 3 has lines ["a", "a"]
+    assert out[3].n_lines == 2 and out[3].dup_line_ratio == 0.5
+    # empty text -> zero segments -> NULL ratios, zero counts
+    assert out[4].n_lines == 0 and out[4].dup_line_ratio is None
+    # NULL text -> NULL everything
+    assert out[5].dup_line_ratio is None and out[5].dup_para_ratio is None
+
+
+# ---------------------------------------------------------------- X85
+
+
+@pytest.fixture(scope="module")
+def fold_docs(spark):
+    rows = [(i, "en" if i % 3 else "de") for i in range(101)]
+    return spark.createDataFrame(rows, ["doc_id", "lang"])
+
+
+def test_kfold_stratified_exact_balance(fold_docs):
+    out = cu.kfold_assign(fold_docs, "doc_id", k=5, strata_col="lang").collect()
+    assert len(out) == 101 and all(0 <= r.fold < 5 for r in out)
+    by = {}
+    for r in out:
+        by.setdefault(r.stratum, []).append(r.fold)
+    for stratum, folds in by.items():
+        counts = [folds.count(f) for f in range(5)]
+        assert max(counts) - min(counts) <= 1, (stratum, counts)
+
+
+def test_kfold_deterministic_and_redealable(fold_docs):
+    a = {r.doc_id: r.fold for r in cu.kfold_assign(fold_docs, "doc_id", k=5).collect()}
+    b = {r.doc_id: r.fold for r in cu.kfold_assign(fold_docs, "doc_id", k=5).collect()}
+    assert a == b
+    c = {r.doc_id: r.fold for r in cu.kfold_assign(fold_docs, "doc_id", k=5, salt="cv1").collect()}
+    assert a != c  # a new salt re-deals
+
+
+def test_kfold_unstratified_is_map_only(fold_docs):
+    plan = (
+        cu.kfold_assign(fold_docs, "doc_id", k=5)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange" not in plan
+
+
+def test_kfold_rejects_degenerate_k(fold_docs):
+    with pytest.raises(ValueError):
+        cu.kfold_assign(fold_docs, "doc_id", k=1)
+
+
+# ---------------------------------------------------------------- X86
+
+
+@pytest.fixture(scope="module")
+def span_docs(spark):
+    shared = "one two three four five"  # a 5-gram shared by docs 0 and 1
+    rows = [
+        (0, shared + " apple banana cherry date elder fig grape"),
+        (1, "kiwi lemon mango nectar orange " + shared),
+        (2, "unique words only here nothing repeats at all today friend"),
+        (3, "tiny dup"),  # < k tokens, duplicated with doc 4
+        (4, "tiny dup"),
+    ]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def test_span_coverage_marks_shared_spans(span_docs):
+    out = {r.doc_id: r for r in dd.repeated_span_coverage(span_docs, "text", "doc_id", k=5).collect()}
+    # docs 0/1: exactly the 5 shared positions are covered
+    assert out[0].covered_tokens == 5 and out[0].n_tokens == 12
+    assert out[0].dup_span_frac == pytest.approx(5 / 12, abs=1e-6)
+    assert out[1].covered_tokens == 5 and out[1].n_tokens == 10
+    # doc 2 shares nothing
+    assert out[2].covered_tokens == 0 and out[2].dup_span_frac == 0.0
+    # short duplicated docs are fully covered (truncated gram, clamped)
+    assert out[3].dup_span_frac == 1.0 and out[4].dup_span_frac == 1.0
+
+
+def test_span_coverage_union_not_double_count(spark):
+    # one doc that repeats its own 5-gram with overlap: positions must be
+    # a union, never counted twice
+    text = "a b c d e a b c d e a b c d e"
+    df = spark.createDataFrame([(0, text)], ["doc_id", "text"])
+    r = dd.repeated_span_coverage(df, "text", "doc_id", k=5).collect()[0]
+    assert r.n_tokens == 15
+    assert r.covered_tokens == 15 and r.dup_span_frac == 1.0
+
+
+def test_span_coverage_no_corpus_broadcast(span_docs):
+    plan = (
+        dd.repeated_span_coverage(span_docs, "text", "doc_id", k=5)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+# ---------------------------------------------------------------- X87
+
+
+@pytest.fixture(scope="module")
+def boiler_docs(spark):
+    rows = [
+        (0, "enable javascript\nreal content zero\nmore real text"),
+        (1, "enable javascript\nreal content one"),
+        (2, "enable javascript\nreal content two"),
+        (3, "enable javascript\nenable javascript"),  # fully boilerplate
+        (4, None),
+        (5, ""),
+    ]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def test_boilerplate_lines_removed_corpus_wide(boiler_docs):
+    out = {
+        r.doc_id: r
+        for r in tx.remove_boilerplate_lines(
+            boiler_docs, "text", "doc_id", min_df=3
+        ).collect()
+    }
+    # "enable javascript" occurs 5x (incl. twice in doc 3) -> dropped
+    assert out[0].clean_text == "real content zero\nmore real text"
+    assert out[0].n_lines_kept == 2 and out[0].n_lines_removed == 1
+    assert out[1].clean_text == "real content one"
+    # fully-boilerplate doc survives as an EMPTY string, not a lost row
+    assert out[3].clean_text == "" and out[3].n_lines_kept == 0
+    assert out[3].n_lines_removed == 2
+    # NULL text propagates NULL; empty text stays empty with zero counts
+    assert out[4].clean_text is None and out[4].n_lines_removed == 0
+    assert out[5].clean_text == "" and out[5].n_lines_kept == 0
+
+
+def test_boilerplate_keeps_original_line_order(spark):
+    df = spark.createDataFrame(
+        [(0, "zz last\naa first\nmm mid"), (1, "unrelated line")],
+        ["doc_id", "text"],
+    )
+    out = tx.remove_boilerplate_lines(df, "text", "doc_id", min_df=3).collect()
+    got = {r.doc_id: r.clean_text for r in out}
+    # nothing repeats -> everything kept, ORIGINAL order (not sorted text)
+    assert got[0] == "zz last\naa first\nmm mid"
+
+
+# ---------------------------------------------------------------- X88
+
+
+@pytest.fixture(scope="module")
+def length_docs(spark):
+    # ids 0..199 with token counts alternating tiny/huge: arrival-order
+    # batching pads ~half of every batch to the huge length
+    rows = [(i, 10 if i % 2 else 500) for i in range(200)]
+    return spark.createDataFrame(rows, ["doc_id", "n_tok"])
+
+
+def test_batch_by_length_shape_and_pad(length_docs):
+    out = cu.batch_by_length(
+        length_docs, "n_tok", "doc_id", batch_size=8, n_shards=4
+    ).collect()
+    assert len(out) == 200
+    sizes = {}
+    for r in out:
+        assert r.pad_tokens == r.batch_max_tokens - r.n_tokens >= 0
+        sizes.setdefault((r.shard, r.batch_id), 0)
+        sizes[(r.shard, r.batch_id)] += 1
+    assert max(sizes.values()) <= 8
+
+
+def test_batch_by_length_beats_arrival_order(length_docs):
+    out = cu.batch_by_length(
+        length_docs, "n_tok", "doc_id", batch_size=8, n_shards=4
+    ).collect()
+    waste = sum(r.pad_tokens for r in out) / sum(r.batch_max_tokens for r in out)
+    # arrival order on this corpus wastes 0.49 (every batch holds both 10s
+    # and 500s, so half of every batch pads 490-to-500); bucketing leaves
+    # only each shard's single straddle batch paying that price
+    toks = [10 if i % 2 else 500 for i in range(200)]
+    pad = tot = 0
+    for b in range(0, 200, 8):
+        batch = toks[b : b + 8]
+        m = max(batch)
+        pad += sum(m - t for t in batch)
+        tot += m * len(batch)
+    arrival = pad / tot
+    assert waste < arrival / 2
+
+
+def test_batch_by_length_drops_tokenless_rows(spark):
+    df = spark.createDataFrame(
+        [(0, 5), (1, 0), (2, None)], ["doc_id", "n_tok"]
+    )
+    out = cu.batch_by_length(df, "n_tok", "doc_id", batch_size=4, n_shards=2).collect()
+    assert [r.doc_id for r in out] == [0]
+
+
+# ---------------------------------------------------------------- X89
+
+
+def test_nostraddle_packing_never_splits_and_flags_overflow(spark):
+    rows = [(i, n) for i, n in enumerate([30, 30, 30, 100, 10, 64, 5])]
+    df = spark.createDataFrame(rows, ["doc_id", "n_tok"])
+    out = cu.pack_documents_nostraddle(
+        df, "n_tok", "doc_id", context_len=64, n_shards=1
+    ).collect()
+    by_bin = {}
+    for r in out:
+        by_bin.setdefault(r.bin_id, []).append(r)
+    for rows_in_bin in by_bin.values():
+        total = sum(r.n_tokens for r in rows_in_bin)
+        if len(rows_in_bin) > 1:
+            # multi-doc bins always fit; no document straddles a boundary
+            assert total <= 64
+    # the 100-token doc is alone in its bin and flagged
+    big = next(r for r in out if r.n_tokens == 100)
+    assert big.overflow and len(by_bin[big.bin_id]) == 1
+    assert big.offset_in_bin == 0
+    # nothing else is flagged
+    assert sum(1 for r in out if r.overflow) == 1
+
+
+def test_nostraddle_packing_matches_python_model(spark):
+    import hashlib
+
+    toks = [7, 64, 3, 65, 64, 1, 1, 62, 2, 2, 40, 25, 24, 10, 90]
+    rows = list(enumerate(toks))
+    df = spark.createDataFrame(rows, ["doc_id", "n_tok"])
+    out = {
+        r.doc_id: (r.shard, r.bin_id, r.offset_in_bin, r.overflow)
+        for r in cu.pack_documents_nostraddle(
+            df, "n_tok", "doc_id", context_len=64, n_shards=2
+        ).collect()
+    }
+
+    def draw(i):
+        return hashlib.md5(f"p0:{i}".encode()).hexdigest()
+
+    want = {}
+    for s in range(2):
+        members = sorted(
+            (i for i, _ in rows if int(draw(i)[:6], 16) % 2 == s),
+            key=lambda i: (draw(i), i),
+        )
+        bin_id, used = 0, 0
+        for j, i in enumerate(members):
+            n = toks[i]
+            if j > 0 and used + n > 64:
+                bin_id, used = bin_id + 1, 0
+            want[i] = (s, bin_id, used, n > 64)
+            used += n
+    assert out == want
+
+
+# ------------- row-local pair expansions pinned against the join forms
+# they replaced (winnow candidates, vocabulary overlap, boilerplate
+# anti-join, dup-rate window): same pairs and counts, exactly
+
+
+def test_winnow_candidates_matches_join_formulation(spark):
+    """winnow_candidates' row-local pair expansion (one collect_list
+    aggregate per fingerprint) must reproduce the original explode +
+    bucket-count + fp self-join pair set exactly — including the bucket
+    cap counting ROWS (NULL ids included) while pairs only ever contain
+    non-NULL ids, and the min_shared cut on the pair count."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.text import (
+        winnow_candidates,
+    )
+
+    # hand-built fingerprint sets: fp 1 shared by 4 docs, fp 2 by 2, fp 3
+    # oversized (> cap) and must be dropped, fp 4 shared only via a NULL id
+    rows = [
+        (1, [1, 2, 4]),
+        (2, [1, 2]),
+        (3, [1, 3]),
+        (4, [1, 3]),
+        (5, [3]),
+        (6, [3]),
+        (None, [4, 1]),
+        (7, [4]),
+    ]
+    fps = spark.createDataFrame(rows, "doc_id BIGINT, fingerprints ARRAY<BIGINT>")
+
+    def old_form(fps, cap, min_shared):
+        e = fps.select(
+            F.col("doc_id").alias("_id"), F.explode_outer("fingerprints").alias("fp")
+        ).filter(F.col("fp").isNotNull())
+        small = (
+            e.groupBy("fp")
+            .agg(F.count(F.lit(1)).alias("_bucket"))
+            .filter(F.col("_bucket") <= cap)
+            .select("fp")
+        )
+        e = e.join(small, "fp")
+        a = e.select(F.col("_id").alias("id_a"), "fp")
+        b = e.select(F.col("_id").alias("id_b"), "fp")
+        return (
+            a.join(b, "fp")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+            .filter(F.col("n_shared") >= min_shared)
+        )
+
+    for cap, min_shared in ((3, 1), (4, 1), (200, 2)):
+        want = {
+            (r.id_a, r.id_b): r.n_shared
+            for r in old_form(fps, cap, min_shared).collect()
+        }
+        got = {
+            (r.id_a, r.id_b): r.n_shared
+            for r in winnow_candidates(
+                fps, "doc_id", min_shared=min_shared, max_bucket_size=cap
+            ).collect()
+        }
+        assert got == want, f"pair divergence at cap={cap} min_shared={min_shared}"
+
+
+def test_vocabulary_overlap_matches_selfjoin_formulation(spark):
+    """vocabulary_overlap's row-local pair expansion (collect_set per word +
+    sorted combos) must reproduce the original distinct + word-keyed
+    self-join pair counts exactly — including NULL-group exclusion and the
+    binary string ordering of group_a < group_b."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.text import (
+        vocabulary_overlap,
+    )
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.dedup import (
+        normalized_text,
+    )
+
+    rows = [
+        (1, "alpha beta gamma", "s1"),
+        (2, "beta gamma delta", "s2"),
+        (3, "gamma delta", "s3"),
+        (4, "alpha alpha beta", "s1"),   # within-group dup words
+        (5, "epsilon", None),            # NULL group must not pair
+        (6, "Beta, GAMMA!", "s2"),       # normalization collapses case/punct
+    ]
+    df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING, source STRING")
+
+    def old_form(df):
+        words = (
+            df.select(
+                F.col("source").alias("_g"),
+                F.explode(F.split(normalized_text(F.col("text")), " ")).alias("_w"),
+            )
+            .filter(F.length("_w") > 0)
+            .distinct()
+        )
+        a = words.select(F.col("_g").alias("group_a"), "_w")
+        b = words.select(F.col("_g").alias("group_b"), "_w")
+        return (
+            a.join(b, "_w")
+            .filter(F.col("group_a") < F.col("group_b"))
+            .groupBy("group_a", "group_b")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+        )
+
+    want = {(r.group_a, r.group_b): r.n_shared for r in old_form(df).collect()}
+    out = {(r.group_a, r.group_b): r for r in vocabulary_overlap(df, "text", "source").collect()}
+    assert {k: r.n_shared for k, r in out.items()} == want
+    # full output row sanity: jaccard = shared / (na + nb - shared)
+    for (a, b), r in out.items():
+        assert abs(r.jaccard - r.n_shared / (r.n_vocab_a + r.n_vocab_b - r.n_shared)) < 1e-6
+
+
+def test_remove_boilerplate_anti_join_matches_inner_join(spark):
+    """The >= min_df anti-join inversion must keep exactly the lines the
+    original under-threshold inner join kept."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.text import (
+        remove_boilerplate_lines,
+    )
+
+    nav = "enable javascript"
+    rows = [
+        (1, f"{nav}\nunique one\ncommon line"),
+        (2, f"{nav}\nunique two\ncommon line"),
+        (3, f"{nav}\nunique three"),
+        (4, f"{nav}\n{nav}"),          # fully-boilerplate doc survives empty
+        (5, None),                      # NULL text
+        (6, "  \n\n  "),                # only blank lines
+    ]
+    df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+    out = {r.doc_id: r for r in remove_boilerplate_lines(df, "text", "doc_id", min_df=3).collect()}
+    # nav occurs 5 times (>=3, dropped); "common line" twice (kept)
+    assert out[1].clean_text == "unique one\ncommon line"
+    assert out[2].clean_text == "unique two\ncommon line"
+    assert out[3].clean_text == "unique three"
+    assert (out[1].n_lines_kept, out[1].n_lines_removed) == (2, 1)
+    assert out[4].clean_text == "" and out[4].n_lines_kept == 0 and out[4].n_lines_removed == 2
+    assert out[5].clean_text is None
+    assert out[6].clean_text == "" and out[6].n_lines_removed == 0
+
+
+def test_dup_rate_window_matches_join_formulation(spark):
+    """dup_rate_by_group's (hash, group) aggregate + cluster-min window must
+    reproduce the original exact_dedup annotate-back join counts — incl.
+    cross-group clusters (drop attributed to the dropped copy's group),
+    singleton clusters, and a group with only duplicates."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.dedup import (
+        dup_rate_by_group,
+        exact_dedup,
+    )
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.dedup import (
+        normalized_text,
+    )
+
+    rows = [
+        (10, "same content", "s1"),   # keeper (min id of the cluster)
+        (11, "same content", "s2"),   # cross-group dup -> counts against s2
+        (12, "same content", "s1"),   # within-group dup -> counts against s1
+        (None, "same content", "s2"), # NULL id: never dropped (id != keep is NULL)
+        (10, "same content", "s1"),   # duplicate keeper id: BOTH rows survive
+        (20, "unique a", "s1"),
+        (21, "unique b", "s2"),
+        (30, "other dup", "s3"),      # keeper
+        (31, "OTHER  dup", "s3"),     # normalization makes this a dup
+        (40, None, "s1"),             # NULL text: excluded (NULL hash never joins)
+    ]
+    df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING, source STRING")
+
+    h = F.sha2(normalized_text(F.col("text")), 256)
+    tagged = df.select(F.col("doc_id"), F.col("source").alias("group"), h.alias("content_hash"))
+    old = {
+        r.group: (r.n_docs, r.n_dropped)
+        for r in tagged.join(exact_dedup(df, "text", "doc_id"), "content_hash")
+        .groupBy("group")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(
+                F.when((F.col("n_copies") >= 2) & (F.col("doc_id") != F.col("keep_id")), 1)
+                .otherwise(0)
+            ).cast("long").alias("n_dropped"),
+        )
+        .collect()
+    }
+    new = {
+        r.group: (r.n_docs, r.n_dropped)
+        for r in dup_rate_by_group(df, "text", "doc_id", "source").collect()
+    }
+    assert new == old
+    assert new["s2"] == (3, 1) and new["s1"] == (4, 1) and new["s3"] == (2, 1)

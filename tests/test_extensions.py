@@ -4,12 +4,24 @@ ranking sanity, multimodal plumbing."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import (
     dedup as dd,
     multimodal as mm,
     similarity as sim,
+)
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.similarity import (
+    _argmin_centroids,
+    _argmin_centroids_exact,
+    _bucket_structs,
+    _cosine_rounded,
+    _dot_dec,
+    _pq_codes,
+    _with_norm,
+    brute_force_topk,
+    lsh_bucket,
 )
 
 
@@ -325,14 +337,6 @@ def test_multimodal_codec_probe_dual_mode(spark, docs):
         [row] = mm.decode_media(carrier.filter(F.col("doc_id") == 0)).collect()
         payload = carrier.filter(F.col("doc_id") == 0).first().payload
         assert (row.width, row.height, row.channels) == mm._fake_decode(bytes(payload))
-
-
-def test_frame_sample_fanout(docs):
-    carrier = mm.attach_binary(docs, "text", "doc_id")
-    out = mm.frame_sample(carrier, every_n_bytes=16)
-    per_doc = {r.doc_id: r.n for r in out.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
-    assert all(n >= 1 for n in per_doc.values())
-    assert per_doc[0] > 1  # 44-byte payload at 16-byte stride → multiple frames
 
 
 def test_cluster_canonical_transitive_chain(spark, canonical_both_paths):
@@ -800,16 +804,6 @@ def test_extract_features_deterministic_fixed_width(docs):
     assert all(0.0 <= v <= 1.0 for v in vals)
 
 
-def test_resize_media_aspect_preserved_never_upscaled(docs):
-    carrier = mm.attach_binary(docs, "text", "doc_id")
-    for r in mm.resize_media(carrier, max_side=100).collect():
-        assert max(r.out_width, r.out_height) <= 100
-        if max(r.width, r.height) <= 100:  # small media pass through
-            assert (r.out_width, r.out_height) == (r.width, r.height)
-        else:  # aspect ratio preserved within integer floor
-            assert abs(r.out_width / r.out_height - r.width / r.height) < 0.05
-
-
 def test_snapshot_diff_classifies_all_change_kinds(spark):
     from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.cdc import snapshot_diff
 
@@ -1089,6 +1083,19 @@ def test_semantic_dedup_canonical_invariants(spark, sf_dir):
         assert r.canonical_id <= r.vec_id  # canonical is the component minimum
         assert r.canonical_id in ids
         assert r.is_kept == (r.canonical_id == r.vec_id)
+
+
+def test_semantic_dedup_clusters_plan_runs_no_python_worker(spark, sf_dir):
+    """The semantic pairs go through cluster_canonical, whose small graphs
+    are solved on the driver: the executed plan has no grouped-pandas
+    stage, so no pyspark.daemon starts for the query."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.plans import registry
+
+    registry.load_all()
+    df = registry.QUERIES["dedup_semantic_clusters"](spark, sf_dir)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
 
 
 def test_leakage_safe_split_keeps_clusters_together(spark, sf_dir):
@@ -2446,8 +2453,7 @@ def test_multimodal_kernels_surface_null_payloads(spark):
     """bytes(None) in the decode/feature Arrow kernels killed the whole
     task — one corrupt media row must not fail a shard.  NULL payloads now
     surface as rows with NULL decode fields (visible corruption, not
-    silent loss); frame_sample emits ZERO frames for them (greatest()
-    skips the NULL length and used to emit one phantom frame at offset 0)."""
+    silent loss)."""
     from pyspark.sql import functions as F
 
     from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import multimodal as mm
@@ -2468,9 +2474,6 @@ def test_multimodal_kernels_surface_null_payloads(spark):
 
     feats = {r.doc_id: r.feature for r in mm.extract_features(carrier).collect()}
     assert feats[2] is None and feats[1] is not None
-
-    frames = mm.frame_sample(carrier).select("doc_id").distinct().collect()
-    assert {r.doc_id for r in frames} == {1, 3}  # no phantom frame for 2
 
 
 def test_ann_oracles_agree_with_engine_on_ragged_fixture(spark, tmp_path):
@@ -2512,3 +2515,142 @@ def test_ann_oracles_agree_with_engine_on_ragged_fixture(spark, tmp_path):
         want = con.execute(oracles[name]).df()
         assert frame_fingerprint(got) == frame_fingerprint(want), name
         assert len(got), f"{name} produced no rows on the ragged fixture"
+
+
+# ---------- expression-tree rewrites pinned against the unrolled forms
+# they replaced (matrix-literal LSH signatures, subspace-indexed PQ codes):
+# bit-identical values
+
+
+def _vectors_df(spark, n=24, dim=8):
+    rows = [
+        (i, [((i * 31 + j * 17) % 19 - 9) / 7.0 for j in range(dim)])
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+
+
+def test_bucket_structs_matches_unrolled_lsh_bucket(spark):
+    """_bucket_structs (one matrix-literal transform) must reproduce the
+    original per-table lsh_bucket loop bit-for-bit in BOTH hash modes."""
+    dim, planes, tables = 8, 2, 4
+    df = _vectors_df(spark, dim=dim)
+    for hash_fn in ("md5_32", "xxhash64"):
+        old = df.select(
+            "vec_id",
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("tbl"),
+                        lsh_bucket(
+                            F.col("embedding"),
+                            planes=planes,
+                            dim=dim,
+                            plane_offset=t * planes,
+                            hash_fn=hash_fn,
+                        ).alias("bits"),
+                    )
+                    for t in range(tables)
+                ]
+            ).alias("bk"),
+        )
+        new = df.select(
+            "vec_id",
+            _bucket_structs(
+                F.col("embedding"), planes=planes, dim=dim, tables=tables, hash_fn=hash_fn
+            ).alias("bk"),
+        )
+        got_old = {r.vec_id: [(s.tbl, s.bits) for s in r.bk] for r in old.collect()}
+        got_new = {r.vec_id: [(s.tbl, s.bits) for s in r.bk] for r in new.collect()}
+        assert got_new == got_old, f"bucket divergence in {hash_fn} mode"
+
+
+def test_pq_codes_matches_unrolled_argmin(spark):
+    """_pq_codes (3-level codebook literal, subspace-indexed transform) must
+    reproduce the original per-subspace argmin loop in both assign modes."""
+    dim, m = 8, 2
+    sub = dim // m
+    df = _vectors_df(spark, dim=dim)
+    codebooks = [
+        [[((j * 13 + c * 7 + k * 3) % 11 - 5) / 3.0 for k in range(sub)] for c in range(3)]
+        for j in range(m)
+    ]
+    for exact in (True, False):
+        argmin = _argmin_centroids_exact if exact else _argmin_centroids
+        codes = []
+        for j, cb in enumerate(codebooks):
+            subvec = F.slice(F.col("embedding"), j * sub + 1, sub)
+            codes.append(argmin(subvec, cb, 1)[0])
+        old = df.select("vec_id", F.array(*codes).alias("codes"))
+        new = df.select(
+            "vec_id", _pq_codes(F.col("embedding"), codebooks, exact).alias("codes")
+        )
+        got_old = {r.vec_id: list(r.codes) for r in old.collect()}
+        got_new = {r.vec_id: list(r.codes) for r in new.collect()}
+        assert got_new == got_old, f"pq code divergence (exact_assign={exact})"
+
+
+# ------------- cosine join guard: ``cosine IS NOT NULL`` <=> equal sizes
+# and ``norm_a * norm_b > 0``. Mismatched-length vectors NULL the dot
+# (zip_with pads the shorter side) while both norms stay positive, so the
+# size term is needed; pinned on ragged, zero, NULL-element and NULL vectors
+
+
+def _ragged_df(spark):
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [0.5, 0.5, 0.0, 0.0]),
+        (3, [0.0, 1.0, 1.0, 0.0]),
+        (4, [1.0, 1.0, 1.0]),          # ragged: 3-wide in a 4-wide corpus
+        (5, [0.0, 0.0, 0.0, 0.0]),     # zero vector: no direction
+        (6, [1.0, None, 0.0, 0.0]),    # NULL element poisons norm AND dot
+        (7, None),                     # NULL vector
+        (8, [2.0, 0.0, 1.0, 0.0]),
+    ]
+    return spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+
+
+def _old_cosine_isnotnull_topk(corpus, queries, k=3):
+    """The pre-r10 formulation: score every pair, then filter on the cosine
+    alias itself (the form whose pushdown duplicated the decimal fold into
+    the join condition — slow, but the semantic ground truth)."""
+    mult = 1000000.0
+    q = _with_norm(queries, "query_id", "query_vec", "vec_id", "embedding")
+    c = _with_norm(corpus, "cand_id", "cand_vec", "vec_id", "embedding")
+    dot = _dot_dec(F.col("query_vec"), F.col("cand_vec")).cast("double")
+    scored = (
+        F.broadcast(q)
+        .crossJoin(c)
+        .filter(F.col("query_id") != F.col("cand_id"))
+        .select(
+            "query_id",
+            "cand_id",
+            _cosine_rounded(
+                dot, F.col("query_vec_norm"), F.col("cand_vec_norm"), mult
+            ).alias("cosine"),
+        )
+        .filter(F.col("cosine").isNotNull())
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "cand_id", "cosine", "rnk")
+    )
+
+
+def test_norm_guard_matches_cosine_isnotnull_on_ragged_vectors(spark):
+    df = _ragged_df(spark)
+    got = {
+        (r.query_id, r.cand_id, r.cosine, r.rnk)
+        for r in brute_force_topk(df, df, k=3).collect()
+    }
+    want = {
+        (r.query_id, r.cand_id, r.cosine, r.rnk)
+        for r in _old_cosine_isnotnull_topk(df, df, k=3).collect()
+    }
+    assert got == want
+    # the hostile rows must actually exercise the guard: the ragged vector
+    # (4) pairs with nobody 4-wide, and no surviving row carries NULL cosine
+    assert all(c is not None for (_, _, c, _) in got)
+    assert not any(q == 4 or c == 4 for (q, c, _, _) in got)

@@ -46,21 +46,6 @@ def test_single_shuffle_for_dedup_then_join(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_partition_pruning_on_partitioned_layout(spark, tmp_path):
-    """The 100 TB landing layout: a filter on the partition column must show
-    up as a PartitionFilter (pruned at planning), not a data filter."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import io as sio
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
-
-    ev = star.table(spark, SF, "events")
-    out = str(tmp_path / "events_part")
-    sio.write_parquet_partitioned(ev, out, partition_by=["event_type"])
-    back = spark.read.parquet(out).filter("event_type = 'click'")
-    plan = back._jdf.queryExecution().toString()
-    assert "PartitionFilters: [isnotnull(event_type" in plan
-    assert back.count() == ev.filter("event_type = 'click'").count()
-
-
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):
     """Bucketed tables on the join key ⇒ no Exchange on either side."""
     from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star

@@ -3,6 +3,7 @@ on arbitrary inputs, and partition-invariance of the exact aggregates."""
 
 from __future__ import annotations
 
+import math
 from decimal import Decimal
 
 from hypothesis import HealthCheck, given, settings
@@ -10,6 +11,9 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cloudcomputing_servicecompositiontest_datapipeline_spark.functions.exact import davg, dsum
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import curation as cu
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import dedup as dd
+from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import text as tx
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.transform import (
     first_wins_dedup,
 )
@@ -1055,3 +1059,164 @@ def test_concentration_report_matches_python_model(spark, rows):
             math.floor(top_raw) / 1e6,
         )
     assert got == expect
+
+
+# ----------- structural repetition, boilerplate, span coverage, k-fold
+# and length batching against plain-Python models on generated corpora
+
+
+CORPUS_SETTINGS = settings(
+    max_examples=10, deadline=None, suppress_health_check=list(HealthCheck)
+)
+
+_word = st.sampled_from(["aa", "bb", "cc", "dd", "ee"])
+_line = st.lists(_word, min_size=1, max_size=4).map(" ".join)
+_doc = st.lists(_line, min_size=0, max_size=6).map("\n".join)
+docs_st = st.lists(_doc, min_size=1, max_size=12)
+
+
+def _grid(x: float) -> float:
+    return math.floor(x * 1e6 + 0.5) / 1e6
+
+
+@given(texts=docs_st)
+@CORPUS_SETTINGS
+def test_structural_repetition_matches_python_model(spark, texts):
+    df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+    got = {
+        r.doc_id: (r.n_lines, r.dup_line_ratio, r.dup_line_char_ratio)
+        for r in tx.structural_repetition(df, "text", "doc_id").collect()
+    }
+    for i, t in enumerate(texts):
+        lines = [s.strip() for s in t.split("\n") if s.strip()]
+        if not lines:
+            assert got[i] == (0, None, None)
+            continue
+        n, nd = len(lines), len(set(lines))
+        chars = sum(len(s) for s in lines)
+        dchars = sum(len(s) for s in set(lines))
+        want = (
+            n,
+            _grid((n - nd) / n),
+            _grid((chars - dchars) / chars) if chars else None,
+        )
+        assert got[i] == want, (i, t)
+
+
+@given(texts=docs_st, min_df=st.integers(min_value=2, max_value=4))
+@CORPUS_SETTINGS
+def test_remove_boilerplate_matches_python_model(spark, texts, min_df):
+    df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+    got = {
+        r.doc_id: (r.clean_text, r.n_lines_kept, r.n_lines_removed)
+        for r in tx.remove_boilerplate_lines(
+            df, "text", "doc_id", min_df=min_df
+        ).collect()
+    }
+    split = [[s.strip() for s in t.split("\n") if s.strip()] for t in texts]
+    from collections import Counter
+
+    freq = Counter(ln for lines in split for ln in lines)
+    for i, lines in enumerate(split):
+        kept = [ln for ln in lines if freq[ln] < min_df]
+        want = ("\n".join(kept), len(kept), len(lines) - len(kept))
+        assert got[i] == want, (i, lines)
+
+
+@given(
+    texts=st.lists(
+        st.lists(_word, min_size=1, max_size=12).map(" ".join),
+        min_size=1,
+        max_size=10,
+    ),
+    k=st.integers(min_value=2, max_value=4),
+)
+@CORPUS_SETTINGS
+def test_span_coverage_matches_python_model(spark, texts, k):
+    df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+    got = {
+        r.doc_id: (r.n_tokens, r.covered_tokens, r.dup_span_frac)
+        for r in dd.repeated_span_coverage(df, "text", "doc_id", k=k).collect()
+    }
+    from collections import Counter
+
+    toks = [t.split(" ") for t in texts]
+    grams: Counter = Counter()
+    per_doc = []
+    for tk in toks:
+        n = len(tk)
+        occ = [
+            (p, " ".join(tk[p : p + k]))
+            for p in range(0, max(n - k, 0) + 1)
+        ]
+        per_doc.append(occ)
+        grams.update(g for _, g in occ)
+    for i, tk in enumerate(toks):
+        n = len(tk)
+        covered = set()
+        for p, g in per_doc[i]:
+            if grams[g] >= 2:
+                covered.update(range(p, p + k))
+        cov = min(len(covered), n)
+        want = (n, cov, _grid(cov / n) if n else None)
+        assert got[i] == want, (i, tk)
+
+
+@given(
+    n_rows=st.integers(min_value=1, max_value=60),
+    k=st.integers(min_value=2, max_value=7),
+    strat=st.booleans(),
+)
+@CORPUS_SETTINGS
+def test_kfold_partitions_every_row_exactly_once(spark, n_rows, k, strat):
+    rows = [(i, "s" + str(i % 3)) for i in range(n_rows)]
+    df = spark.createDataFrame(rows, ["doc_id", "lang"])
+    out = cu.kfold_assign(
+        df, "doc_id", k=k, strata_col="lang" if strat else None
+    ).collect()
+    assert sorted(r.doc_id for r in out) == list(range(n_rows))
+    assert all(0 <= r.fold < k for r in out)
+    if strat:
+        by: dict = {}
+        for r in out:
+            by.setdefault(r.stratum, []).append(r.fold)
+        for folds in by.values():
+            counts = [folds.count(f) for f in range(k)]
+            assert max(counts) - min(counts) <= 1
+
+
+@given(
+    toks=st.lists(st.integers(min_value=0, max_value=1000), min_size=1, max_size=60),
+    batch_size=st.integers(min_value=1, max_value=9),
+    n_shards=st.integers(min_value=1, max_value=4),
+)
+@CORPUS_SETTINGS
+def test_batch_by_length_matches_python_model(spark, toks, batch_size, n_shards):
+    import hashlib
+
+    rows = list(enumerate(toks))
+    df = spark.createDataFrame(rows, ["doc_id", "n_tok"])
+    out = cu.batch_by_length(
+        df, "n_tok", "doc_id", batch_size=batch_size, n_shards=n_shards
+    ).collect()
+    # model: identical md5 shard deal, per-shard sort, fixed cuts
+    def shard(i: int) -> int:
+        return int(hashlib.md5(f"b0:{i}".encode()).hexdigest()[:6], 16) % n_shards
+
+    kept = [(i, t) for i, t in rows if t > 0]
+    want = {}
+    for s in range(n_shards):
+        members = sorted(
+            ((t, i) for i, t in kept if shard(i) == s),
+            key=lambda x: (-x[0], x[1]),
+        )
+        for rn, (t, i) in enumerate(members):
+            b = rn // batch_size
+            batch = members[b * batch_size : (b + 1) * batch_size]
+            mx = max(t2 for t2, _ in batch)
+            want[i] = (s, b, t, mx, mx - t)
+    got = {
+        r.doc_id: (r.shard, r.batch_id, r.n_tokens, r.batch_max_tokens, r.pad_tokens)
+        for r in out
+    }
+    assert got == want

@@ -171,3 +171,152 @@ def test_bench_contract_shape():
     for name in bench.SCALING_PROBES:
         assert name in qs, f"scaling probe is not a registered query: {name!r}"
     assert not set(bench.SCALING_PROBES) & set(bench.HEADLINE)
+
+
+#: Top-level package definitions no query, tool, bench.py or perfbench
+#: reaches, kept because a test pins a live path against them (a reference
+#: implementation).  Keyed (package-relative module, name).  What they
+#: call is covered through them.
+TEST_REFERENCES = {
+    ("functions/sketch.py", "hll_portable_merge"): "test_hll_portable_merge_law_and_accuracy pins hll_portable_registers' max-merge law",
+    ("functions/sketch.py", "hll_portable_estimate"): "same test pins hll_portable_registers' accuracy against exact distinct counts",
+    ("operators/dedup.py", "minhash_signatures"): "test_lsh_bucket_cap_bounds_candidate_pairs_under_skew feeds lsh_candidate_pairs with it",
+    ("operators/similarity.py", "_dot_seq"): "test_portable_folds pins the sequential fold _argmin_centroids_seq rests on against DuckDB",
+    ("operators/similarity.py", "lsh_bucket"): "test_bucket_structs_matches_unrolled_lsh_bucket pins _bucket_structs bit-for-bit against it",
+    ("operators/similarity.py", "pq_train"): "PQ tests encode with its Lloyd's codebooks to pin pq_encode",
+    ("operators/text.py", "perplexity_scores"): "test_perplexity_join_path_* pin perplexity_scores_join against this literal-map scorer",
+    ("operators/text.py", "train_bigram_lm"): "the model the literal-map perplexity reference scores with",
+    ("sources/io.py", "render_report_compat"): "test_golden_layout renders report() through it against the reference's golden CSV",
+}
+
+
+def _unreachable_definitions() -> tuple[list[str], list[str]]:
+    """AST reachability over the package: (unreachable top-level definitions
+    outside TEST_REFERENCES, stale TEST_REFERENCES keys).
+
+    Roots are the ``@query`` functions, module-level statements (imports
+    excepted, so ``__init__`` re-exports reach nothing), decorators,
+    defaults and base classes, and every line of ``tools/``, ``bench.py``,
+    ``__spark_entry__.py`` and non-test ``perfbench/``.  A name resolves
+    through the module's own definitions and its ``from`` imports; an
+    attribute on an imported module resolves in that module, and any other
+    attribute (``self.x``, ``df.x``) reaches every definition of that name.
+    """
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    pkg = repo / registry.__name__.split(".")[0]
+    root_files = [
+        *sorted((repo / "tools").glob("*.py")),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+        *sorted((repo / "perfbench").glob("*.py")),
+    ]
+    mods = {}  # dotted name -> (tree, is_package, is_root)
+    for f in [*sorted(pkg.rglob("*.py")), *root_files]:
+        parts = list(f.relative_to(repo).with_suffix("").parts)
+        is_pkg = parts[-1] == "__init__"
+        mods[".".join(parts[:-1] if is_pkg else parts)] = (
+            ast.parse(f.read_text()), is_pkg, f in root_files,
+        )
+    defs, by_name = {}, {}
+    for m, (tree, _, is_root) in mods.items():
+        for node in tree.body if not is_root else ():
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[(m, node.name)] = node
+                by_name.setdefault(node.name, []).append((m, node.name))
+
+    def aliases(m, tree, is_pkg):
+        out = {}  # local name -> ("mod", module) | ("def", (module, name))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                base = m.split(".") if is_pkg else m.split(".")[:-1]
+                base = base[: len(base) - node.level + 1] if node.level else []
+                src = ".".join(base + ([node.module] if node.module else []))
+                for a in node.names:
+                    full = f"{src}.{a.name}"
+                    out[a.asname or a.name] = ("mod", full) if full in mods else ("def", (src, a.name))
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    name = a.name if a.asname else a.name.split(".")[0]
+                    out[a.asname or name] = ("mod", name)
+        return out
+
+    al = {m: aliases(m, tree, is_pkg) for m, (tree, is_pkg, _) in mods.items()}
+
+    def refs(m, node):
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                kind, target = al[m].get(n.id, ("def", (m, n.id)))
+                if kind == "def":
+                    out.add(target)
+            elif isinstance(n, ast.Attribute):
+                v = n.value
+                if isinstance(v, ast.Name) and al[m].get(v.id, ("",))[0] == "mod":
+                    out.add((al[m][v.id][1], n.attr))
+                else:
+                    out.update(by_name.get(n.attr, ()))
+        return out
+
+    def resolve(t):  # follow package re-exports to the defining module
+        for _ in range(5):  # re-export chains are short; a cycle stops here
+            if t in defs or t[0] not in al:
+                return t
+            kind, target = al[t[0]].get(t[1], ("", None))
+            if kind != "def":
+                return t
+            t = target
+        return t
+
+    roots, edges = set(), {}
+    for m, (tree, _, is_root) in mods.items():
+        if is_root:
+            roots |= refs(m, tree)
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if (m, getattr(node, "name", None)) not in defs:
+                roots |= refs(m, node)
+                continue
+            edges[(m, node.name)] = refs(m, node)
+            for d in node.decorator_list:
+                roots |= refs(m, d)
+                if isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query":
+                    roots.add((m, node.name))
+            extra = node.bases if isinstance(node, ast.ClassDef) else [
+                *node.args.defaults, *filter(None, node.args.kw_defaults)
+            ]
+            for e in extra:
+                roots |= refs(m, e)
+
+    def closure(start):
+        seen, stack = set(), [resolve(t) for t in start]
+        while stack:
+            t = stack.pop()
+            if t in defs and t not in seen:
+                seen.add(t)
+                stack.extend(resolve(r) for r in edges.get(t, ()))
+        return seen
+
+    prefix = pkg.name + "."
+    key = lambda t: (t[0].removeprefix(prefix).replace(".", "/") + ".py", t[1])
+    allowed = {t for t in defs if key(t) in TEST_REFERENCES}
+    live = {key(t) for t in closure(roots)}
+    stale = sorted(k for k in TEST_REFERENCES if k in live or k not in map(key, defs))
+    kept = closure(roots | allowed)
+    dead = sorted("{}:{}".format(*key(t)) for t in defs if t not in kept)
+    return dead, [f"{f}:{n}" for f, n in stale]
+
+
+def test_every_package_definition_is_reachable():
+    """Ratchet against dead code: every top-level function and class in the
+    package is reached from a registered query, a tool, bench.py or
+    perfbench — or is a reasoned TEST_REFERENCES entry.  An entry that has
+    become reachable, or whose definition is gone, fails too, so the list
+    cannot rot (the tools/plan_audit.py allow-list rule)."""
+    dead, stale = _unreachable_definitions()
+    assert not dead, f"unreachable outside tests (delete, or add a TEST_REFERENCES reason): {dead}"
+    assert not stale, f"stale TEST_REFERENCES entries: {stale}"

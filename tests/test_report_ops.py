@@ -1,51 +1,15 @@
-"""Report-engine operator tests: pipeline state machine, combineSheets,
-group-conflict resolution, validity gate, approx-sketch accuracy."""
+"""Report-engine operator tests: combineSheets, group-conflict resolution, validity gate, approx-sketch accuracy."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.pipeline import (
-    Stage,
-    run_pipeline,
-)
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.report import (
     combine_sheets,
     resolve_group_conflicts,
     validity_gate,
 )
-
-
-def test_pipeline_stage_machine_with_transitions(spark):
-    df = spark.createDataFrame([(1, 10.0), (2, 20.0)], ["id", "message"])
-    stages = [
-        # stage 1 consumes "message" renamed to "payload" (transitions P15)
-        Stage("derive", lambda d: d.withColumn("derived", F.col("payload") * 2),
-              transitions={"message": "payload"}),
-        Stage("filter", lambda d: d.filter(F.col("derived") > 25)),
-    ]
-    out = run_pipeline(df, stages)
-    rows = out.collect()
-    assert [r.id for r in rows] == [2] and rows[0].derived == 40.0
-
-
-def test_pipeline_custom_transition_loops_and_stops(spark):
-    df = spark.createDataFrame([(0,)], ["n"])
-    stages = [Stage("inc", lambda d: d.withColumn("n", F.col("n") + 1))]
-
-    def run_three_times(i, stage, d):  # F2 user transition function
-        return 0 if d.first().n < 3 else 1
-
-    out = run_pipeline(df, stages, transition=run_three_times)
-    assert out.first().n == 3
-
-
-def test_pipeline_max_steps_guard(spark):
-    df = spark.createDataFrame([(0,)], ["n"])
-    stages = [Stage("noop", lambda d: d)]
-    with pytest.raises(RuntimeError, match="max_steps"):
-        run_pipeline(df, stages, transition=lambda i, s, d: 0, max_steps=5)
 
 
 def test_combine_sheets_tags_iteration_scoped_keys(spark):
@@ -214,28 +178,6 @@ def test_approx_sketches_close_to_exact(spark, sf_dir):
     )
     assert abs(row.approx - row.exact) / row.exact < 0.05
     assert abs(row.approx_med - row.exact_med) <= 1.0
-
-
-def test_hll_sketch_store_and_merge(spark, sf_dir):
-    """Stored per-group sketches merge to the same answer as counting raw:
-    per-group estimates and the union-merged global estimate both land
-    within HLL tolerance of exact distinct counts."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.functions import sketch
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
-
-    ev = star.table(spark, sf_dir, "events")
-    stored = sketch.group_sketches(ev, "user_id", ["event_type"])
-
-    exact = {
-        r.event_type: r.n
-        for r in ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("n")).collect()
-    }
-    for r in sketch.estimate(stored).collect():
-        assert abs(r.estimate - exact[r.event_type]) / exact[r.event_type] < 0.05
-
-    global_exact = ev.agg(F.countDistinct("user_id")).first()[0]
-    merged = sketch.merged_estimate(stored).first().estimate
-    assert abs(merged - global_exact) / global_exact < 0.05
 
 
 def test_hll_portable_merge_law_and_accuracy(spark, sf_dir):

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.skew import (
     salted_count_sum,
-    salted_join,
 )
 
 
@@ -28,14 +27,4 @@ def test_salted_agg_matches_plain_groupby(spark):
         .collect()
     }
     salted = {r.k: (r.uses, r.sum_v) for r in salted_count_sum(df, "k", "v").collect()}
-    assert salted == plain
-
-
-def test_salted_join_matches_plain_join(spark):
-    fact = _skewed_df(spark)
-    dim = spark.createDataFrame(
-        [("hot", "H")] + [(f"cold{i}", f"C{i}") for i in range(1, 1000, 10)], ["k", "label"]
-    )
-    plain = sorted((r.k, r.v, r.label) for r in fact.join(dim, "k").collect())
-    salted = sorted((r.k, r.v, r.label) for r in salted_join(fact, dim, "k").collect())
     assert salted == plain

@@ -111,88 +111,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert any(r.ws.hour == 2 for r in emitted)  # on-time windows were emitted
 
 
-def test_stream_stream_overlap_join(spark, tmp_path):
-    """T4: concurrent runs on the same container are paired by the
-    stream-stream range join; distant-in-time runs are not."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.streaming import (
-        stream_stream_overlap_join,
-    )
-
-    d = tmp_path / "ss"
-    d.mkdir()
-    recs = [
-        {"run_id": 0, "uuid": "c0", "value": 1.0, "ts": "2024-01-01 00:00:00"},
-        {"run_id": 1, "uuid": "c0", "value": 1.0, "ts": "2024-01-01 00:05:00"},  # within 10m of 0
-        {"run_id": 2, "uuid": "c0", "value": 1.0, "ts": "2024-01-01 06:00:00"},  # far away
-        {"run_id": 3, "uuid": "c1", "value": 1.0, "ts": "2024-01-01 00:05:00"},  # other container
-    ]
-    with open(d / "a.json", "w") as f:
-        for r in recs:
-            f.write(json.dumps(r) + "\n")
-
-    def stream():
-        return (
-            spark.readStream.schema(_parse_datatype_string(SCHEMA))
-            .json(str(d))
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-
-    joined = stream_stream_overlap_join(stream(), stream(), key="uuid")
-    q = (
-        joined.writeStream.format("memory").queryName("t_ss")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ss"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    pairs = {(r.run_a, r.run_b) for r in spark.table("t_ss").collect()}
-    assert pairs == {(0, 1), (1, 0)}  # only the concurrent same-container pair
-
-
-def test_observe_progress_metrics(spark, run_dir, tmp_path):
-    """T2: progress tracking (experiment_caller.py:103-111 .progress.txt) →
-    the library's attach_progress/progress_records pair, with explicit
-    metrics and with the default metric (count)."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.streaming.core import (
-        attach_progress,
-        progress_records,
-    )
-
-    stream = spark.readStream.schema(_parse_datatype_string(SCHEMA)).json(run_dir)
-    observed = attach_progress(
-        stream,
-        metrics=[
-            F.count(F.lit(1)).alias("n_records"),
-            F.sum("value").alias("sum_value"),
-        ],
-    )
-    q = (
-        observed.writeStream.format("noop")
-        .option("checkpointLocation", str(tmp_path / "ckpt_obs"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    recs = progress_records(q)
-    with_data = [r for r in recs if r.get("n_records")]
-    assert with_data and with_data[0]["n_records"] == 6
-    assert with_data[0]["num_input_rows"] == 6
-    assert "batch_id" in with_data[0]
-
-    # the same pair, default metric (count)
-    q2 = (
-        attach_progress(
-            spark.readStream.schema(_parse_datatype_string(SCHEMA)).json(run_dir)
-        )
-        .writeStream.format("noop")
-        .option("checkpointLocation", str(tmp_path / "ckpt_obs2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    recs2 = [r for r in progress_records(q2) if r.get("n_records")]
-    assert recs2 and recs2[0]["n_records"] == 6
-
-
 def test_stateful_container_lifetimes_across_batches(spark, tmp_path):
     """applyInPandasWithState: per-container state persists across
     micro-batches (runs accumulate, cold starts counted once)."""
@@ -284,291 +202,6 @@ def test_stream_exact_dedup_within_watermark(spark, tmp_path):
     kept = {r.doc_id for r in spark.table("dedup_stream").collect()}
     assert 3 in kept and len(kept) == 2  # one of {1,2} survives, never both
     assert kept - {1, 2, 3} == set()
-
-
-def test_foreach_batch_idempotent_append(spark, tmp_path):
-    """A replayed batch id must not double-write; a fresh batch id must."""
-    import pandas as pd
-
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.streaming.core import (
-        foreach_batch_idempotent_append,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    pd.DataFrame({"x": [1, 2, 3]}).to_json(src / "a.json", orient="records", lines=True)
-    out = str(tmp_path / "out")
-    q = foreach_batch_idempotent_append(
-        spark.readStream.schema("x LONG").json(str(src)),
-        out,
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-    assert spark.read.parquet(out + "/data").count() == 3
-
-    # simulate a failure replay: re-run the committed batch function directly
-    import os
-
-    markers = [m for m in os.listdir(out) if m.startswith("_committed_")]
-    assert markers, "marker missing"
-    # second drain over the same source with the same checkpoint: no new data,
-    # no duplicate writes
-    q2 = foreach_batch_idempotent_append(
-        spark.readStream.schema("x LONG").json(str(src)),
-        out,
-        str(tmp_path / "ckpt"),
-    )
-    q2.awaitTermination()
-    assert spark.read.parquet(out + "/data").count() == 3
-
-
-def test_stream_static_enrich_broadcasts_dim(spark, run_dir, tmp_path):
-    """J4 streaming form: every stream record is stamped with its static
-    config row via a per-batch broadcast join; keys missing from the dim
-    stay (left join, annotate-don't-drop)."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.streaming import (
-        stream_static_enrich,
-    )
-
-    dim = spark.createDataFrame(
-        [("c0", "endpoint-a", 512)], ["uuid", "endpoint", "mem_mb"]
-    )
-    stream = spark.readStream.schema(_parse_datatype_string(SCHEMA)).json(run_dir)
-    enriched = stream_static_enrich(stream, dim, "uuid")
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("t_enrich")
-        .option("checkpointLocation", str(tmp_path / "ckpt_enrich"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table("t_enrich").collect()
-    assert len(rows) == 6
-    by_uuid = {}
-    for r in rows:
-        by_uuid.setdefault(r.uuid, set()).add((r.endpoint, r.mem_mb))
-    assert by_uuid["c0"] == {("endpoint-a", 512)}
-    assert by_uuid["c1"] == {(None, None)}  # unmatched keys annotated with nulls
-
-
-def test_foreach_batch_keyed_upsert(spark, tmp_path):
-    """Latest record per key wins across drains; tombstones delete; replay
-    with the same checkpoint is a no-op."""
-    import pandas as pd
-
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.streaming.core import (
-        foreach_batch_keyed_upsert,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "k LONG, val STRING, deleted BOOLEAN"
-
-    def drain():
-        q = foreach_batch_keyed_upsert(
-            spark.readStream.schema(schema).json(str(src)),
-            "k",
-            state,
-            ckpt,
-            delete_col="deleted",
-        )
-        q.awaitTermination()
-        with open(state + "/_current") as f:
-            return {r.k: r.val for r in spark.read.parquet(f.read().strip()).collect()}
-
-    pd.DataFrame(
-        [{"k": 1, "val": "a", "deleted": False}, {"k": 2, "val": "b", "deleted": False}]
-    ).to_json(src / "b0.json", orient="records", lines=True)
-    assert drain() == {1: "a", 2: "b"}
-
-    # batch 2: update k=1, delete k=2, insert k=3
-    pd.DataFrame(
-        [
-            {"k": 1, "val": "a2", "deleted": False},
-            {"k": 2, "val": "b", "deleted": True},
-            {"k": 3, "val": "c", "deleted": False},
-        ]
-    ).to_json(src / "b1.json", orient="records", lines=True)
-    assert drain() == {1: "a2", 3: "c"}
-
-    # re-drain with nothing new: state unchanged
-    assert drain() == {1: "a2", 3: "c"}
-
-
-def test_foreach_batch_sketch_merge_and_vacuum(spark, tmp_path):
-    """Per-group HLL state folds each drained batch in (estimates track the
-    union of everything seen); vacuum retains the newest versions only."""
-    import os
-
-    import pandas as pd
-
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.streaming.core import (
-        foreach_batch_sketch_merge,
-        vacuum_versions,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
-        q = foreach_batch_sketch_merge(
-            spark.readStream.schema("g STRING, uid LONG").json(str(src)),
-            "uid",
-            ["g"],
-            state,
-            ckpt,
-        )
-        q.awaitTermination()
-        with open(state + "/_current") as f:
-            cur = f.read().strip()
-        return {
-            r.g: r.est
-            for r in spark.read.parquet(cur)
-            .select("g", F.expr("cast(hll_sketch_estimate(sketch) as long)").alias("est"))
-            .collect()
-        }
-
-    pd.DataFrame([{"g": "a", "uid": u} for u in range(50)]).to_json(
-        src / "b0.json", orient="records", lines=True
-    )
-    assert drain() == {"a": 50}
-
-    # second batch: 25 repeat uids (no-op for distinct) + 50 new + new group
-    recs = [{"g": "a", "uid": u} for u in range(25, 125)]
-    recs += [{"g": "b", "uid": u} for u in range(10)]
-    pd.DataFrame(recs).to_json(src / "b1.json", orient="records", lines=True)
-    est = drain()
-    assert est["b"] == 10
-    assert abs(est["a"] - 125) <= 3  # union of 0..124, HLL tolerance
-
-    removed = vacuum_versions(state, keep=1)
-    assert removed == ["v0"]
-    assert not os.path.exists(os.path.join(state, "v0"))
-    assert drain() == est  # state intact after vacuum
-
-
-def test_stateful_container_lifetimes_tws_across_batches(spark, tmp_path):
-    """transformWithStateInPandas twin: same semantics as the
-    applyInPandasWithState form, state persists across drains (RocksDB
-    state store, as the API requires).
-
-    Either-way contract (r8, replacing the perpetual env skip): with a
-    protobuf runtime the twin runs end-to-end; without one (this container
-    — no pip, no wheel on disk, and the runner's generated ``_pb2`` modules
-    need the real descriptor-pool runtime, so vendoring is not a
-    stdlib-only copy) the operator must REFUSE with a clear
-    NotImplementedError pointing at the applyInPandasWithState primary,
-    which test_stateful_container_lifetimes_across_batches exercises
-    fully.  Both branches are real assertions; the suite reports 0 skips."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.streaming.stateful import (
-        HAS_TRANSFORM_WITH_STATE,
-        container_lifetimes_tws,
-    )
-
-    if not HAS_TRANSFORM_WITH_STATE:
-        events = spark.createDataFrame(
-            [(0, "c0")], "run_id LONG, uuid STRING"
-        )
-        with pytest.raises(NotImplementedError, match="protobuf runtime"):
-            container_lifetimes_tws(events)
-        return
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        d = tmp_path / "tws"
-        d.mkdir()
-        schema = "run_id BIGINT, uuid STRING, newcontainer INT, ts TIMESTAMP"
-        with open(d / "a.json", "w") as f:
-            f.write(json.dumps({"run_id": 0, "uuid": "c0", "newcontainer": 1, "ts": "2024-01-01 00:00:00"}) + "\n")
-            f.write(json.dumps({"run_id": 1, "uuid": "c0", "newcontainer": 0, "ts": "2024-01-01 00:01:00"}) + "\n")
-        ckpt = str(tmp_path / "ckpt_tws")
-
-        def drain():
-            stream = spark.readStream.schema(_parse_datatype_string(schema)).json(str(d))
-            out = container_lifetimes_tws(stream)
-            rows = {}
-
-            def sink(batch_df, _epoch):
-                for r in batch_df.collect():
-                    rows[r.uuid] = r
-
-            q = (
-                out.writeStream.foreachBatch(sink).outputMode("update")
-                .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-            )
-            q.awaitTermination()
-            return rows
-
-        got = drain()
-        assert got["c0"].runs == 2 and got["c0"].cold_starts == 1 and got["c0"].recycled
-        with open(d / "b.json", "w") as f:
-            f.write(json.dumps({"run_id": 2, "uuid": "c0", "newcontainer": 0, "ts": "2024-01-01 00:05:00"}) + "\n")
-            f.write(json.dumps({"run_id": 3, "uuid": "c1", "newcontainer": 1, "ts": "2024-01-01 00:05:00"}) + "\n")
-        got2 = drain()
-        assert got2["c0"].runs == 3  # state carried across drains
-        assert got2["c1"].runs == 1 and not got2["c1"].recycled
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_foreach_batch_cm_merge_tracks_frequencies(spark, tmp_path):
-    """Streaming CM state: batch partials element-wise-sum into the stored
-    sketch, so after two drains the point estimates equal the EXACT totals
-    across both batches (merge law — no batch-boundary drift)."""
-    import pandas as pd
-
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.functions.sketch import cm_query
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.streaming.core import (
-        foreach_batch_cm_merge,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
-        q = foreach_batch_cm_merge(
-            spark.readStream.schema("g STRING, item STRING").json(str(src)),
-            "item",
-            ["g"],
-            state,
-            ckpt,
-        )
-        q.awaitTermination()
-        with open(state + "/_current") as f:
-            cur = f.read().strip()
-        sk = spark.read.parquet(cur)
-        probe = spark.createDataFrame([("x",), ("y",)], "item STRING")
-        return {
-            (r.g, r.item): r.cm_estimate
-            for r in cm_query(sk.crossJoin(probe), F.col("item")).collect()
-        }
-
-    pd.DataFrame([{"g": "a", "item": "x"}] * 30 + [{"g": "a", "item": "y"}] * 5).to_json(
-        src / "b0.json", orient="records", lines=True
-    )
-    est = drain()
-    assert est[("a", "x")] == 30 and est[("a", "y")] == 5
-
-    # second drain adds 20 more x to group a and a new group b
-    pd.DataFrame([{"g": "a", "item": "x"}] * 20 + [{"g": "b", "item": "y"}] * 7).to_json(
-        src / "b1.json", orient="records", lines=True
-    )
-    est = drain()
-    assert est[("a", "x")] == 50  # 30 + 20 across batch boundary
-    assert est[("b", "y")] == 7
 
 
 def test_streaming_source_quota_admits_across_batches(spark, tmp_path):

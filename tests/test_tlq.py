@@ -5,10 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.transform import (
-    decode_priority,
     first_wins_dedup,
-    gross_margin,
-    order_processing_days,
 )
 
 
@@ -18,28 +15,6 @@ def test_first_wins_dedup_keeps_first_in_order(spark):
     )
     out = {r.k: r.v for r in first_wins_dedup(df, "k", F.col("ord")).collect()}
     assert out == {1: "b", 2: "c"}
-
-
-def test_decode_priority_maps_and_passes_through(spark):
-    df = spark.createDataFrame([("L",), ("M",), ("H",), ("C",), ("X",)], ["p"])
-    out = [r.d for r in df.select(decode_priority(F.col("p")).alias("d")).collect()]
-    assert out == ["Low", "Medium", "High", "Critical", "X"]
-
-
-def test_gross_margin_null_on_zero_revenue(spark):
-    df = spark.createDataFrame([(10.0, 40.0), (5.0, 0.0)], ["profit", "revenue"])
-    out = [r.m for r in df.select(gross_margin(F.col("profit"), F.col("revenue")).alias("m")).collect()]
-    assert out[0] == 0.25 and out[1] is None
-
-
-def test_order_processing_days_with_invalid_date(spark):
-    df = spark.createDataFrame(
-        [("5/28/2010", "6/27/2010"), ("bogus", "6/27/2010")], ["o", "s"]
-    )
-    out = df.select(
-        order_processing_days(F.col("s"), F.col("o"), fmt="M/d/yyyy").alias("d")
-    ).collect()
-    assert out[0].d == 30 and out[1].d is None
 
 
 def test_entry_smoke(spark):
