@@ -79,12 +79,12 @@ def sql_fround(expr: str, scale: int = 2) -> str:
     return f"floor(({expr}) * {mult} + 0.5) / {mult}"
 
 
-def dsum_exact(col: Column, alias: str | None = None, scale: int = 2) -> Column:
+def dsum_exact(col: Column, alias: str | None = None) -> Column:
     """Sum a column that is ALREADY exact decimal (built via decimal arithmetic
     on decimal-cast inputs).  Use when the expression's true scale exceeds
     DEC's 4 fractional digits — casting the double result would round it and
     reintroduce cross-engine divergence."""
-    out = F.round(F.sum(col), scale).cast("double")
+    out = F.round(F.sum(col), 2).cast("double")
     return out.alias(alias) if alias else out
 
 
@@ -100,11 +100,11 @@ def sql_dec(expr: str) -> str:
     )
 
 
-def sql_dsum(expr: str, alias: str, scale: int = 2) -> str:
+def sql_dsum(expr: str, alias: str) -> str:
     """DuckDB-side twin of :func:`dsum` for oracle strings.  The guarded
     cast (NULL on NaN/±Inf) mirrors Spark's decimal-cast-to-NULL; a plain
     cast would RAISE on the first non-finite double and break parity."""
-    return f"cast(round(sum({sql_dec(expr)}), {scale}) as double) AS {alias}"
+    return f"cast(round(sum({sql_dec(expr)}), 2) as double) AS {alias}"
 
 
 def sql_davg(expr: str, alias: str, scale: int = 2) -> str:

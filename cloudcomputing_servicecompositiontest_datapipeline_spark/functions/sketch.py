@@ -122,7 +122,6 @@ def cm_query(
     *,
     depth: int = 4,
     width: int = 256,
-    sketch_col: str = "cm",
     bucket_hash: str = "xxhash64",
 ) -> DataFrame:
     """Point-query: estimated frequency of ``item_col``'s value in each
@@ -131,7 +130,7 @@ def cm_query(
     est = F.least(
         *[
             F.element_at(
-                F.col(sketch_col),
+                F.col("cm"),
                 (F.lit(r * width) + _cm_bucket(item_col, r, width, bucket_hash)).cast("int")
                 + 1,
             )
@@ -202,19 +201,19 @@ def hist_sketch(
     )
 
 
-def hist_merge(df: DataFrame, group_cols: list[str] | None = None, sketch_col: str = "hist") -> DataFrame:
+def hist_merge(df: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
     """Element-wise-sum histograms — identical law to cm_merge (fixed bin
     edges make merged == whole-data histogram, exactly)."""
-    return cm_merge(df, group_cols, sketch_col)
+    return cm_merge(df, group_cols, "hist")
 
 
 def hist_quantile(
-    df: DataFrame, p: float, *, lo: float, hi: float, sketch_col: str = "hist"
+    df: DataFrame, p: float, *, lo: float, hi: float
 ) -> DataFrame:
     """Estimate the p-quantile from each row's histogram: first bin where
     the cumulative count reaches p·total, reported as that bin's upper
     edge — error bounded by one bin width.  Pure array expressions."""
-    h = F.col(sketch_col)
+    h = F.col("hist")
     total = F.aggregate(h, F.lit(0).cast("long"), lambda a, x: a + x)
     cum = F.transform(
         F.sequence(F.lit(1), F.size(h)),
@@ -362,21 +361,21 @@ def hll_portable_registers(df: DataFrame, item_col: str, group_cols: list[str]) 
 
 
 def hll_portable_merge(
-    df: DataFrame, group_cols: list[str] | None = None, sketch_col: str = "hll"
+    df: DataFrame, group_cols: list[str] | None = None
 ) -> DataFrame:
     """Element-wise-MAX register arrays (optionally per coarser group) —
     the rollup step; same width-bounded posexplode shape as cm_merge
     (reduce state is one int per register, never ∝ stored partials)."""
     gcols = list(group_cols) if group_cols else []
-    ex = df.select(*gcols, F.posexplode(sketch_col).alias("_pos", "_v"))
+    ex = df.select(*gcols, F.posexplode("hll").alias("_pos", "_v"))
     mx = ex.groupBy(*gcols, "_pos").agg(F.max("_v").alias("_m"))
     arr = F.transform(F.array_sort(F.collect_list(F.struct("_pos", "_m"))), lambda s: s["_m"])
     gb = mx.groupBy(*gcols) if gcols else mx.groupBy()
-    return gb.agg(arr.alias(sketch_col))
+    return gb.agg(arr.alias("hll"))
 
 
 def hll_portable_estimate(
-    df: DataFrame, group_cols: list[str], sketch_col: str = "hll"
+    df: DataFrame, group_cols: list[str]
 ) -> DataFrame:
     """Raw HLL estimate per group from a register-array column: explode the
     m registers, ``z_num`` = Σ 2^(RMAX−reg) as an EXACT integer
@@ -387,7 +386,7 @@ def hll_portable_estimate(
     callers wanting the small-range linear-counting branch apply it on
     those columns (floats are fine outside the oracle gate)."""
     pow2 = F.array(*[F.lit(v).cast("long") for v in HLL_POW2_INT])
-    ex = df.select(*group_cols, F.explode(sketch_col).alias("_reg"))
+    ex = df.select(*group_cols, F.explode("hll").alias("_reg"))
     agg = ex.groupBy(*group_cols).agg(
         F.sum(F.when(F.col("_reg") == 0, 1).otherwise(0)).cast("long").alias("zero_registers"),
         F.sum(F.element_at(pow2, F.col("_reg") + 1)).cast("long").alias("z_num"),
@@ -399,7 +398,7 @@ def hll_portable_estimate(
 
 
 def hll_portable_rollup(
-    df: DataFrame, group_cols: list[str], sketch_col: str = "hll"
+    df: DataFrame, group_cols: list[str]
 ) -> DataFrame:
     """Fused max-merge + estimate + shard count per coarser group, ONE pass
     over the stored register arrays (a separate count aggregation would
@@ -410,7 +409,7 @@ def hll_portable_rollup(
     the floored raw estimate.  Output: group cols + n_sketches,
     zero_registers, z_num, estimate."""
     pow2 = F.array(*[F.lit(v).cast("long") for v in HLL_POW2_INT])
-    ex = df.select(*group_cols, F.posexplode(sketch_col).alias("_pos", "_v"))
+    ex = df.select(*group_cols, F.posexplode("hll").alias("_pos", "_v"))
     mx = ex.groupBy(*group_cols, "_pos").agg(
         F.max("_v").alias("_m"), F.count(F.lit(1)).alias("_n")
     )

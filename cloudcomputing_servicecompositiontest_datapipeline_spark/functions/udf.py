@@ -27,11 +27,11 @@ def user_function_udf(fn: Callable[[pd.Series], pd.Series], returns=DoubleType()
 
 
 def register_sql_function(
-    spark: SparkSession, name: str, fn: Callable[[pd.Series], pd.Series], returns=DoubleType()
+    spark: SparkSession, name: str, fn: Callable[[pd.Series], pd.Series]
 ) -> None:
     """F4: publish a user function into the SQL namespace
     (``SELECT name(col) FROM …``)."""
-    spark.udf.register(name, user_function_udf(fn, returns))
+    spark.udf.register(name, user_function_udf(fn, DoubleType()))
 
 
 def grouped_apply(

@@ -109,8 +109,6 @@ def temperature_resample(
     id_col: str,
     *,
     tau: float = 0.5,
-    salt: str = "t0",
-    draw_bits: int = 24,
 ) -> DataFrame:
     """X32 temperature-flattened domain mixture (the alpha/temperature
     sampling of multilingual LM training, e.g. mBERT/mT5 exponent-smoothed
@@ -121,8 +119,8 @@ def temperature_resample(
     (n_min / n_i)^(1-tau) — the smallest domain keeps 100%, larger domains
     shed mass.  Rates are computed from ONE per-domain count aggregate
     (tiny), rounded to 1e-6 for engine independence, broadcast back, and
-    membership is the md5(salt‖id) draw against rate*2^draw_bits — pure
-    function of (salt, id): reproducible across engines/epochs, no RNG
+    membership is the md5("t0:"‖id) draw against rate*2^24 — pure
+    function of the id: reproducible across engines/epochs, no RNG
     state, and the corpus itself never shuffles (row-local predicate after
     a broadcast hash join on the domain).
 
@@ -149,12 +147,12 @@ def temperature_resample(
     )
     draw = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 6
+            F.md5(F.concat(F.lit("t0:"), F.col(id_col).cast("string"))), 1, 6
         ),
         16,
         10,
     ).cast("long")
-    thr = F.floor(F.col("keep_rate") * (1 << draw_bits)).cast("long")
+    thr = F.floor(F.col("keep_rate") * (1 << 24)).cast("long")
     return (
         df.join(F.broadcast(rates), df[domain_col].eqNullSafe(rates["_d"]))
         .filter(draw < thr)
@@ -301,9 +299,6 @@ def target_mix_resample(
     domain_col: str,
     id_col: str,
     targets: dict[str, float],
-    *,
-    salt: str = "m0",
-    draw_bits: int = 24,
 ) -> DataFrame:
     """X51 rebalance the corpus to EXPLICIT target proportions (the
     Dolma/FineWeb-style "15% code, 60% web, 25% books" mixture spec), by
@@ -315,7 +310,7 @@ def target_mix_resample(
 
     Same scale shape as :func:`temperature_resample`: ONE per-domain count
     aggregate, rates rounded 1e-6 and broadcast back, membership a pure
-    md5(salt‖id) draw — reproducible, no corpus shuffle.  Output adds
+    md5("m0:"‖id) draw — reproducible, no corpus shuffle.  Output adds
     ``keep_rate`` as sampling provenance.
 
     A target domain ABSENT from the corpus contributes no rows and no
@@ -349,12 +344,12 @@ def target_mix_resample(
     )
     draw = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 6
+            F.md5(F.concat(F.lit("m0:"), F.col(id_col).cast("string"))), 1, 6
         ),
         16,
         10,
     ).cast("long")
-    thr = F.floor(F.col("keep_rate") * (1 << draw_bits)).cast("long")
+    thr = F.floor(F.col("keep_rate") * (1 << 24)).cast("long")
     return (
         df.join(F.broadcast(rates), df[domain_col].eqNullSafe(rates["_d"]))
         .filter(draw < thr)
@@ -369,7 +364,6 @@ def pack_sequences_sharded(
     *,
     context_len: int,
     n_shards: int = 32,
-    salt: str = "p0",
 ) -> DataFrame:
     """X52 pretraining sequence packing, sharded: concatenate the document
     stream and cut fixed ``context_len`` windows — the standard "pack then
@@ -392,7 +386,7 @@ def pack_sequences_sharded(
     make the exporter order ambiguous — found by a randomized property
     run, pinned in tests."""
     df = df.filter(F.col(token_col).cast("long") > 0)
-    draw = F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
+    draw = F.md5(F.concat(F.lit("p0:"), F.col(id_col).cast("string")))
     shard = F.pmod(
         F.conv(F.substring(draw, 1, 6), 16, 10).cast("long"), F.lit(n_shards)
     ).cast("int")
@@ -427,7 +421,6 @@ def importance_weights(
     is_target: F.Column,
     *,
     n_buckets: int = 1024,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X58 DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling", public): score every
@@ -477,7 +470,7 @@ def importance_weights(
         (F.col("_n_tgt") + 1).cast("double") / float(t_tgt + n_buckets)
     ) - F.log((F.col("_n_raw") + 1).cast("double") / float(t_raw + n_buckets))
     lr = dist.select("_b", log_ratio.alias("_lr"))
-    mult = float(10**round_scale)
+    mult = 1e6
     per_doc = (
         fb.join(F.broadcast(lr), "_b")
         .groupBy(id_col)
@@ -554,8 +547,6 @@ def quantile_normalize(
     value_col: str,
     group_col: str,
     id_col: str,
-    *,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X60 within-group quantile (rank) normalization of a score column:
     percent_rank of ``value_col`` inside each ``group_col`` — the
@@ -569,7 +560,7 @@ def quantile_normalize(
     shuffle on the group + within-partition sort; integer rank arithmetic,
     engine-deterministic."""
     w = Window.partitionBy(group_col).orderBy(F.col(value_col).asc())
-    mult = float(10**round_scale)
+    mult = 1e6
     pr = F.floor(F.percent_rank().over(w) * mult + 0.5) / mult
     return df.select(
         F.col(id_col),
@@ -583,7 +574,6 @@ def packing_report(
     packed: DataFrame,
     *,
     context_len: int,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X68 packing-efficiency report over :func:`pack_sequences_sharded`
     output: per shard — docs, tokens, packs, utilization (tokens /
@@ -595,7 +585,7 @@ def packing_report(
 
     One |shards|-row aggregate over the already-packed frame; ratios from
     exact integer sums."""
-    mult = float(10**round_scale)
+    mult = 1e6
     per = packed.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("total_tokens"),
@@ -722,7 +712,6 @@ def quantile_map(
     id_col: str,
     *,
     grid: int = 1000,
-    round_scale: int = 6,
     broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """X70 quantile mapping (CDF matching): re-express each NEW score as
@@ -808,7 +797,7 @@ def quantile_map(
     q_lo = F.element_at(q, lo + 1)
     q_hi = F.element_at(q, F.least(lo + F.lit(2), F.lit(grid + 1)))
     mapped = q_lo + frac * (q_hi - q_lo)
-    mult = float(10**round_scale)
+    mult = 1e6
     # Join-strategy gate: the default (None) now defers to AQE's runtime
     # sort-merge→broadcast conversion, which measures the rank table's
     # ACTUAL post-shuffle bytes — strictly safer than the former
@@ -878,8 +867,6 @@ def weighted_per_group_sample(
     weight_col: str,
     *,
     k: int,
-    salt: str = "ws0",
-    round_scale: int = 9,
 ) -> DataFrame:
     """X74 exact k-per-group WEIGHTED sample without replacement —
     Efraimidis & Spirakis (2006, public): rank each row by key
@@ -888,20 +875,20 @@ def weighted_per_group_sample(
     inclusion probability is proportional to weight, exactly the
     one-pass distributed weighted reservoir.
 
-    Deterministic: ``u`` derives from md5(salt‖id) (pure function — new
-    salt re-deals) and the sort key is floor-rounded to a 1e-``round_scale``
+    Deterministic: ``u`` derives from md5("ws0:"‖id) (a pure function
+    of the id) and the sort key is floor-rounded to a 1e-9
     grid BEFORE ranking with an id tiebreak — a 1-ulp libm divergence in
     ``ln`` can only flip a rank at a grid boundary (the decayed_activity
     discipline), so the sample is reproducible across engines and
     partitionings.  Rows with NULL or non-positive weight are excluded
     (they have no inclusion probability).  Same WindowGroupLimit shape as
     the uniform sampler: map tasks pre-prune to local top-k per group."""
-    mult = float(10**round_scale)
+    mult = 1e9
     w_val = F.col(weight_col).cast("double")
     u = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 6
+                F.md5(F.concat(F.lit("ws0:"), F.col(id_col).cast("string"))), 1, 6
             ),
             16,
             10,
@@ -925,8 +912,6 @@ def concentration_report(
     df: DataFrame,
     group_col: str,
     within_col: str,
-    *,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X81 source-concentration report: per ``group_col`` (e.g. language),
     the Herfindahl–Hirschman index Σ share_i² over ``within_col`` (e.g.
@@ -937,7 +922,7 @@ def concentration_report(
     One (group, within) count aggregate (reduce side |groups|·|sources|),
     then a |groups|-row rollup; shares and HHI from exact integer counts,
     decimal-accumulated squares so the sum is order-insensitive."""
-    mult = float(10**round_scale)
+    mult = 1e6
     counts = df.groupBy(
         F.col(group_col).alias("group"), F.col(within_col).alias("_w")
     ).agg(F.count(F.lit(1)).cast("long").alias("_n"))
@@ -1010,7 +995,6 @@ def batch_by_length(
     *,
     batch_size: int = 32,
     n_shards: int = 32,
-    salt: str = "b0",
 ) -> DataFrame:
     """X88 length-bucketed inference/training batching: deal rows into
     deterministic hash shards, sort each shard by token count (desc, id
@@ -1033,7 +1017,7 @@ def batch_by_length(
     """
     n_tok = F.col(token_col).cast("long")
     df = df.filter(n_tok > 0)
-    draw = F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
+    draw = F.md5(F.concat(F.lit("b0:"), F.col(id_col).cast("string")))
     shard = F.pmod(
         F.conv(F.substring(draw, 1, 6), 16, 10).cast("long"), F.lit(n_shards)
     ).cast("int")
@@ -1064,7 +1048,6 @@ def pack_documents_nostraddle(
     *,
     context_len: int,
     n_shards: int = 32,
-    salt: str = "p0",
 ) -> DataFrame:
     """X89 no-straddle document packing: greedy next-fit — walk each
     shard's documents in a deterministic md5 order and open a new bin
@@ -1089,7 +1072,7 @@ def pack_documents_nostraddle(
     import pandas as pd
 
     df = df.filter(F.col(token_col).cast("long") > 0)
-    draw = F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
+    draw = F.md5(F.concat(F.lit("p0:"), F.col(id_col).cast("string")))
     shard = F.pmod(
         F.conv(F.substring(draw, 1, 6), 16, 10).cast("long"), F.lit(n_shards)
     ).cast("int")

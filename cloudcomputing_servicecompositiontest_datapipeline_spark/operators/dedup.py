@@ -124,7 +124,7 @@ def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame
 
 
 def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, *, num_hashes: int = 16, shingle_n: int = 3
+    df: DataFrame, text_col: str, id_col: str, *, num_hashes: int = 16
 ) -> DataFrame:
     """X2: MinHash signature per document — ``num_hashes`` independent hash
     functions simulated by salting xxhash64 (deterministic, JVM-side).
@@ -138,8 +138,8 @@ def minhash_signatures(
     pure map stage that pipelines into the LSH banding projection."""
     toks = F.split(normalized_text(F.col(text_col)), " ")
     sh = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - shingle_n, F.lit(0))),
-        lambda i: F.array_join(F.slice(toks, i + 1, shingle_n), " "),
+        F.sequence(F.lit(0), F.greatest(F.size(toks) - 3, F.lit(0))),
+        lambda i: F.array_join(F.slice(toks, i + 1, 3), " "),
     )
     # k independent hash fns = multi-arg xxhash64 with a distinct int salt
     # (cheaper than string concat: no per-row-per-k allocation).
@@ -682,45 +682,21 @@ def cluster_canonical(
       minimum.  ``localCheckpoint`` truncates lineage each round; the
       convergence check is a cheap ``limit(1).count`` over the previous
       label carried THROUGH the round's aggregate.
-
-    Both run with AQE ``coalescePartitions.parallelismFirst=false``
-    (restored after — UNSET again if the session had never set it, so a
-    default-config session is left bit-identical): graph frames should be
-    partitioned by the GRAPH's size, not the session's parallelism
-    default.  NOT re-entrant: the conf is session-global, so concurrent
-    queries on the same SparkSession see the override while it lasts, and
-    two overlapping ``cluster_canonical`` calls can restore a mid-flight
-    value — serialize calls per session (the registered queries do; a
-    future multi-tenant wrapper should hold a per-session lock around this
-    function).
     """
-    spark = df.sparkSession
-    _pf_key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    # get(key, None) returns the EXPLICITLY-set value or None — unlike
-    # get(key), which falls back to the conf entry's defined default and
-    # would pin an untouched session to an explicit "true" on restore
-    prev_pf = spark.conf.get(_pf_key, None)
-    try:
-        spark.conf.set(_pf_key, "false")
-        fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        edges = (
-            fwd.unionByName(
-                fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
+    fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    edges = (
+        fwd.unionByName(
+            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        # the count materializes the edge checkpoint, which either path reads
-        n_edges = edges.count()
-        if n_edges < _EDGES_PER_PARTITION:
-            labels = _driver_labels(edges)
-        else:
-            labels = _propagated_labels(edges, n_edges, max_iterations)
-    finally:
-        if prev_pf is None:
-            spark.conf.unset(_pf_key)
-        else:
-            spark.conf.set(_pf_key, prev_pf)
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    # the count materializes the edge checkpoint, which either path reads
+    n_edges = edges.count()
+    if n_edges < _EDGES_PER_PARTITION:
+        labels = _driver_labels(edges)
+    else:
+        labels = _propagated_labels(edges, n_edges, max_iterations)
     return (
         df.select(F.col(id_col).alias("node"))
         .join(labels.select("node", "label"), "node", "left")
@@ -844,10 +820,7 @@ def leakage_safe_split(
     pairs: DataFrame,
     id_col: str,
     *,
-    train: float = 0.8,
-    val: float = 0.1,
     salt: str = "split0",
-    max_iterations: int = 25,
 ) -> DataFrame:
     """X26 leakage-safe train/val/test split: hash the near-dup CLUSTER, not
     the document.  Splitting by ``hash(doc_id)`` leaks — two near-duplicate
@@ -863,8 +836,9 @@ def leakage_safe_split(
     function of (salt, canonical), no RNG state, reproducible across
     engines and re-runs, re-dealable by changing ``salt``.
 
-    Returns (id, canonical_id, split) with split ∈ {train, val, test}."""
-    canon = cluster_canonical(df.select(id_col), pairs, id_col, max_iterations=max_iterations)
+    Returns (id, canonical_id, split) with split ∈ {train, val, test}: 80%
+    of clusters train, 10% val, 10% test."""
+    canon = cluster_canonical(df.select(id_col), pairs, id_col)
     draw = (
         F.conv(
             F.substring(
@@ -878,7 +852,7 @@ def leakage_safe_split(
         / float(1 << 24)
     )
     split = (
-        F.when(draw < train, "train").when(draw < train + val, "val").otherwise("test")
+        F.when(draw < 0.8, "train").when(draw < 0.9, "val").otherwise("test")
     )
     return canon.select(F.col(id_col), "canonical_id", split.alias("split"))
 
@@ -921,8 +895,6 @@ def dup_rate_by_group(
     text_col: str,
     id_col: str,
     group_col: str,
-    *,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X64 dedup attribution: per-group duplicate rates — which sources are
     shipping copies?  A doc is a duplicate when its normalized content hash
@@ -971,7 +943,7 @@ def dup_rate_by_group(
         .otherwise(F.col("_k"))
         .alias("_dropped"),
     )
-    mult = float(10**round_scale)
+    mult = 1e6
     return (
         flagged.groupBy("group")
         .agg(
@@ -1043,13 +1015,11 @@ def repeated_span_coverage(
     id_col: str,
     *,
     k: int = 5,
-    min_occurrences: int = 2,
-    round_scale: int = 6,
 ) -> DataFrame:
     """ExactSubstr-style duplicate-span signal (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): for each
     document, the fraction of token positions covered by at least one
-    k-token gram that occurs ``min_occurrences``+ times anywhere in the
+    k-token gram that occurs twice or more anywhere in the
     corpus (including within the same document).  The suffix-array
     ExactSubstr pass removes those spans; this operator reports the
     per-document duplicated-span mass so a curation gate can drop or trim
@@ -1078,10 +1048,10 @@ def repeated_span_coverage(
     (same trade every MinHash/winnowing path in this module makes).
 
     Returns (id, n_tokens, covered_tokens, dup_span_frac) with the shared
-    1e-``round_scale`` rounding grid; coverage on a token-less document is
+    1e-6 rounding grid; coverage on a token-less document is
     NULL.
     """
-    mult = float(10**round_scale)
+    mult = 1e6
     toks = F.split(normalized_text(F.col(text_col)), " ")
     base = ensure_parallelism(df).select(
         F.col(id_col).alias("_id"), toks.alias("_t")
@@ -1101,7 +1071,7 @@ def repeated_span_coverage(
     repeated = (
         grams.groupBy("gh")
         .agg(F.count(F.lit(1)).alias("_occ"))
-        .where(F.col("_occ") >= min_occurrences)
+        .where(F.col("_occ") >= 2)
         .select("gh")
     )
     covered = (

@@ -22,11 +22,7 @@ from pyspark.sql import functions as F
 def decayed_activity(
     events: DataFrame,
     *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
     half_life_hours: float = 24.0,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X46 exponentially time-decayed activity score per entity:
     ``score = Σ value·2^(-Δt/half_life)`` with Δt measured to the corpus max
@@ -35,7 +31,7 @@ def decayed_activity(
     incrementally maintainable: old_score · decay + new_batch).
 
     One single-row max-timestamp broadcast + one groupBy(user) partial-agg
-    shuffle.  Per-row terms round to a 1e-``round_scale`` integer grid and
+    shuffle.  Per-row terms round to a 1e-6 integer grid and
     sum EXACTLY in decimal(38,0) — a 1-ulp libm divergence in exp() can
     only flip a term at a grid boundary (P ≈ 7e-9/row), so the result is
     reproducible across engines and partitionings.
@@ -44,17 +40,17 @@ def decayed_activity(
     they cannot be decay-weighted, and counting them in n_events while the
     score skipped them would make the two columns disagree)."""
     events = events.filter(
-        F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
+        F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
     lam = math.log(2.0) / half_life_hours
-    mult = float(10**round_scale)
-    mx = events.agg(F.max(ts_col).alias("_mx"))
-    dmic = F.timestamp_diff("MICROSECOND", F.col(ts_col), F.col("_mx"))
-    term = F.col(value_col) * F.exp(F.lit(-lam) * (dmic / F.lit(3.6e9)))
+    mult = 1e6
+    mx = events.agg(F.max("ts").alias("_mx"))
+    dmic = F.timestamp_diff("MICROSECOND", F.col("ts"), F.col("_mx"))
+    term = F.col("value") * F.exp(F.lit(-lam) * (dmic / F.lit(3.6e9)))
     grid = F.floor(term * mult + 0.5).cast("decimal(38,0)")
     return (
         events.crossJoin(F.broadcast(mx))
-        .groupBy(F.col(user_col))
+        .groupBy(F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             (F.sum(grid).cast("double") / mult).alias("decayed_score"),
@@ -69,8 +65,6 @@ def robust_stats_by_group(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    *,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X48 robust per-group statistics: exact median and MAD (median
     absolute deviation) of ``value_col`` per group — the outlier-resistant
@@ -91,7 +85,7 @@ def robust_stats_by_group(
     monitor reports against)."""
     from ..functions.guards import finite_d
 
-    mult = float(10**round_scale)
+    mult = 1e6
 
     def r6(c):
         return F.floor(c * mult + 0.5) / mult
@@ -117,9 +111,6 @@ def robust_stats_by_group(
 
 def cohort_retention(
     events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """X49 cohort-retention matrix: users bucketed by first-seen day, then
     distinct active users per (cohort_day, day_offset) — the standard
@@ -137,18 +128,18 @@ def cohort_retention(
     the join/count drop them would hide the data-quality issue — surface it
     with profile/constraint checks upstream)."""
     events = events.filter(
-        F.col(user_col).isNotNull() & F.col(ts_col).isNotNull()
+        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
-    day = F.to_date(F.col(ts_col))
-    first_seen = events.groupBy(F.col(user_col).alias("_u")).agg(
+    day = F.to_date(F.col("ts"))
+    first_seen = events.groupBy(F.col("user_id").alias("_u")).agg(
         F.min(day).alias("cohort_day")
     )
     tagged = events.join(
-        first_seen, events[user_col] == F.col("_u")
+        first_seen, events["user_id"] == F.col("_u")
     ).select(
         "cohort_day",
         F.datediff(day, F.col("cohort_day")).alias("day_offset"),
-        F.col(user_col).alias("_uid"),
+        F.col("user_id").alias("_uid"),
     )
     return (
         tagged.groupBy("cohort_day", "day_offset")
@@ -168,7 +159,6 @@ def robust_outliers(
     id_col: str,
     *,
     k: float = 3.0,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X48b robust outlier flagging: |x − median| > k·MAD per group (the
     modified z-score rule, resistant to the outliers it hunts — a stddev
@@ -183,8 +173,8 @@ def robust_outliers(
     flagged rows with their robust z-score."""
     from ..functions.guards import bad_measurement_d
 
-    mult = float(10**round_scale)
-    stats = robust_stats_by_group(df, group_col, value_col, round_scale=round_scale)
+    mult = 1e6
+    stats = robust_stats_by_group(df, group_col, value_col)
     bad = bad_measurement_d(df[value_col])
     dev = F.abs(F.col(value_col) - F.col("median"))
     flagged = F.when(bad, F.lit(True)).otherwise(
@@ -215,10 +205,6 @@ def robust_outliers(
 def funnel_conversion(
     events: DataFrame,
     steps: list[str],
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """X53 ordered-funnel conversion: how many users performed the ``steps``
     event types IN ORDER (first occurrence of each step strictly after the
@@ -235,9 +221,9 @@ def funnel_conversion(
     report zero conversions, which is a spec error, not a funnel."""
     if len(set(steps)) != len(steps) or not steps:
         raise ValueError("steps must be a non-empty list of distinct event types")
-    firsts = events.groupBy(F.col(user_col).alias("_u")).agg(
+    firsts = events.groupBy(F.col("user_id").alias("_u")).agg(
         *[
-            F.min(F.when(F.col(type_col) == s, F.col(ts_col))).alias(f"_t{i}")
+            F.min(F.when(F.col("event_type") == s, F.col("ts"))).alias(f"_t{i}")
             for i, s in enumerate(steps)
         ]
     )
@@ -313,11 +299,7 @@ def _dense_counts(
 def burst_detection(
     events: DataFrame,
     *,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    bucket: str = "hour",
     z_threshold: float = 2.0,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X63 rate-burst detection: bucket each event type's stream onto a
     DENSE time axis (missing buckets count as 0 — without densification a
@@ -336,14 +318,14 @@ def burst_detection(
     sum/sum-of-squares formula (NOT the engines' stddev builtins, whose
     accumulation algorithms differ), so the doubles are engine-identical.
     A constant-rate type (std 0) yields NULL z and never flags."""
-    dense = _dense_counts(events, type_col, ts_col, bucket)
+    dense = _dense_counts(events, "event_type", "ts", "hour")
     if dense is None:
         # no usable time axis (empty / all-NULL timestamps): schema-only
         # empty frame — emitting one zero row per event would blow a
         # degenerate input back up to corpus size
         return events.limit(0).select(
-            F.col(type_col).alias("event_type"),
-            F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"),
+            F.col("event_type").alias("event_type"),
+            F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
             F.lit(0).cast("long").alias("n_events"),
             F.lit(None).cast("double").alias("z_score"),
             F.lit(False).alias("is_burst"),
@@ -356,7 +338,7 @@ def burst_detection(
     mean = F.col("_s").cast("double") / F.col("_nb")
     var = F.col("_ss").cast("double") / F.col("_nb") - mean * mean
     std = F.sqrt(F.greatest(var, F.lit(0.0)))
-    mult = float(10**round_scale)
+    mult = 1e6
     z = F.when(
         std > 0,
         F.floor((F.col("n_events") - mean) / std * mult + 0.5) / mult,
@@ -378,41 +360,32 @@ def bootstrap_ci(
     value_col: str,
     group_col: str,
     id_col: str,
-    *,
-    n_replicates: int = 50,
-    sample_frac: float = 0.5,
-    salt: str = "boot0",
-    lo: float = 0.05,
-    hi: float = 0.95,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X66 deterministic bootstrap confidence intervals for a per-group
     mean — the error bars an eval/monitoring report should carry before
-    anyone acts on a metric delta.  Subsample-bootstrap form: replicate
-    ``b``'s sample is the rows whose md5(salt:b:id) draw falls under
-    ``sample_frac`` (a pure function — no RNG state, reproducible across
-    engines/partitionings/re-runs; new salt = new resample), the statistic
-    is the replicate mean, and the CI is the [lo, hi] quantile band of the
-    replicate means.
+    anyone acts on a metric delta.  Subsample-bootstrap form: each of 50
+    replicates ``b`` samples the rows whose md5("boot0":b:id) draw falls
+    in the lower half (a pure function — no RNG state, reproducible across
+    engines/partitionings/re-runs), the statistic is the replicate mean,
+    and the CI is the [5%, 95%] quantile band of the replicate means.
 
-    100 TB shape: ONE pass — each row map-side explodes to its
-    ``n_replicates`` membership trials (compute-only B× blow-up, no join,
-    no BroadcastNestedLoopJoin) and the shuffle carries
-    |groups|·n_replicates partial sums, never rows.  Replicate draws PACK
-    8 per md5 (each 128-bit digest yields eight 16-bit draws, indexed by
-    ``replicate % 8`` on md5(salt : replicate//8 : id)) — 8× fewer digests
-    than one-hash-per-trial for identical statistics; 16-bit granularity
-    quantizes ``sample_frac`` to 1/65536, immaterial for a bootstrap.
-    Replicate means decimal-accumulate (order-insensitive); the quantile
-    band runs over n_replicates bounded values per group.  A replicate
+    100 TB shape: ONE pass — each row map-side explodes to its 50
+    membership trials (compute-only B× blow-up, no join, no
+    BroadcastNestedLoopJoin) and the shuffle carries |groups|·50 partial
+    sums, never rows.  Replicate draws PACK 8 per md5 (each 128-bit digest
+    yields eight 16-bit draws, indexed by ``replicate % 8`` on
+    md5("boot0" : replicate//8 : id)) — 8× fewer digests than
+    one-hash-per-trial for identical statistics.  Replicate means
+    decimal-accumulate (order-insensitive); the quantile band runs over
+    50 bounded values per group.  A replicate
     that samples zero rows of a group contributes no mean (consistently on
     both engines)."""
     from ..sources.star import ensure_parallelism
 
-    thr = int(sample_frac * (1 << 16))
-    mult = float(10**round_scale)
+    thr = 1 << 15  # half the 16-bit draw range
+    mult = 1e6
     df = df.filter(F.col(value_col).isNotNull())
-    n_hashes = (n_replicates - 1) // 8 + 1
+    n_hashes = 7  # 50 replicates at 8 draws per digest
     hashed = ensure_parallelism(df).select(
         F.col(group_col).alias("group"),
         F.col(value_col).cast("double").alias("_v"),
@@ -427,7 +400,7 @@ def bootstrap_ci(
         "_v",
         "_j",
         F.md5(
-            F.concat_ws(":", F.lit(salt), F.col("_j").cast("string"), F.col("_id"))
+            F.concat_ws(":", F.lit("boot0"), F.col("_j").cast("string"), F.col("_id"))
         ).alias("_h"),
     )
     base = hashed.select(
@@ -443,7 +416,7 @@ def bootstrap_ci(
         F.conv(F.substring(F.col("_h"), F.col("_i") * 4 + 1, 4), 16, 10)
         .cast("long")
         .alias("_draw"),
-    ).filter(F.col("_b") < n_replicates)
+    ).filter(F.col("_b") < 50)
     rep_means = (
         base.filter(F.col("_draw") < F.lit(thr))
         .groupBy("group", "_b")
@@ -461,8 +434,8 @@ def bootstrap_ci(
     )
     band = rep_means.groupBy("group").agg(
         F.count(F.lit(1)).cast("int").alias("n_replicates"),
-        (F.floor(F.expr(f"percentile(_m, {lo})") * mult + 0.5) / mult).alias("ci_lo"),
-        (F.floor(F.expr(f"percentile(_m, {hi})") * mult + 0.5) / mult).alias("ci_hi"),
+        (F.floor(F.expr("percentile(_m, 0.05)") * mult + 0.5) / mult).alias("ci_lo"),
+        (F.floor(F.expr("percentile(_m, 0.95)") * mult + 0.5) / mult).alias("ci_hi"),
     )
     point = df.groupBy(F.col(group_col).alias("group")).agg(
         (
@@ -482,12 +455,6 @@ def bootstrap_ci(
 
 def transition_matrix(
     events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    round_scale: int = 6,
 ) -> DataFrame:
     """X76 event transition matrix (first-order Markov estimate): per-user
     chronological event streams reduced to (from_type -> to_type)
@@ -500,16 +467,16 @@ def transition_matrix(
     |types|² aggregate; probabilities from exact integer counts against
     broadcast row totals.  Ordering ties break on the event id (total
     order, engine-deterministic)."""
-    w = Window.partitionBy(user_col).orderBy(
-        F.col(ts_col).asc(), F.col(id_col).asc()
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
     )
     pairs = (
         events.select(
-            F.col(user_col),
-            F.col(ts_col),
-            F.col(id_col),
-            F.col(type_col).alias("from_type"),
-            F.lead(type_col).over(w).alias("to_type"),
+            F.col("user_id"),
+            F.col("ts"),
+            F.col("event_id"),
+            F.col("event_type").alias("from_type"),
+            F.lead("event_type").over(w).alias("to_type"),
         )
         .filter(F.col("to_type").isNotNull())
         .groupBy("from_type", "to_type")
@@ -518,7 +485,7 @@ def transition_matrix(
     totals = pairs.groupBy("from_type").agg(
         F.sum("n_transitions").cast("long").alias("_row_n")
     )
-    mult = float(10**round_scale)
+    mult = 1e6
     return pairs.join(F.broadcast(totals), "from_type").select(
         "from_type",
         "to_type",
@@ -533,10 +500,7 @@ def transition_matrix(
 def survival_curve(
     events: DataFrame,
     *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     horizon_hours: float = 24.0,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X77 Kaplan-Meier retention/survival estimate (public standard) over
     user lifetimes: lifetime = hours between a user's first and last event;
@@ -554,10 +518,10 @@ def survival_curve(
     over THAT tiny table (log-domain: decimal-accumulated Σln terms, one
     exp + round per output row — the per-term lns are engine-identical
     doubles and the sum is order-insensitive, the psi discipline)."""
-    mult = float(10**round_scale)
-    ev = events.filter(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
-    per_user = ev.groupBy(F.col(user_col)).agg(
-        F.min(ts_col).alias("_first"), F.max(ts_col).alias("_last")
+    mult = 1e6
+    ev = events.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
+    per_user = ev.groupBy(F.col("user_id")).agg(
+        F.min("ts").alias("_first"), F.max("ts").alias("_last")
     )
     # corpus end as an EPOCH DOUBLE computed engine-side (collecting a
     # datetime and calling .timestamp() would re-interpret it in the local
@@ -567,7 +531,7 @@ def survival_curve(
     # is unchanged (same doubles through the same ops, the empty-input
     # 0.0 default via coalesce instead of Python).
     end_agg = ev.agg(
-        F.coalesce(F.max(F.col(ts_col)).cast("double"), F.lit(0.0)).alias("_end")
+        F.coalesce(F.max(F.col("ts")).cast("double"), F.lit(0.0)).alias("_end")
     )
     life = (
         F.col("_last").cast("double") - F.col("_first").cast("double")
@@ -632,10 +596,6 @@ def survival_curve(
 def ab_test_zscores(
     events: DataFrame,
     assign: F.Column,
-    *,
-    metric_col: str = "value",
-    group_col: str = "event_type",
-    round_scale: int = 6,
 ) -> DataFrame:
     """X78 two-sample z-test per group: mean difference between an A and a
     B arm (``assign`` = boolean Column, True → B) scored as
@@ -651,12 +611,12 @@ def ab_test_zscores(
     form), matching the classical Welch denominator — population variance
     would inflate |z| for small arms and make the 1.96 flag
     anti-conservative."""
-    mult = float(10**round_scale)
+    mult = 1e6
     dec = "decimal(28,8)"
-    m = F.col(metric_col).cast("double")
+    m = F.col("value").cast("double")
     s = (
         events.filter(m.isNotNull())
-        .groupBy(F.col(group_col).alias("group"))
+        .groupBy(F.col("event_type").alias("group"))
         .agg(
             F.sum(F.when(~assign, 1).otherwise(0)).cast("long").alias("n_a"),
             F.sum(F.when(assign, 1).otherwise(0)).cast("long").alias("n_b"),
@@ -704,20 +664,11 @@ def ab_test_zscores(
     )
 
 
-def cusum_changepoints(
-    events: DataFrame,
-    *,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    bucket: str = "hour",
-    k_stds: float = 0.5,
-    h_stds: float = 4.0,
-    round_scale: int = 6,
-) -> DataFrame:
+def cusum_changepoints(events: DataFrame) -> DataFrame:
     """X79 CUSUM changepoint scores (Page 1954, public standard): per event
     type, the one-sided cumulative-sum statistic over the dense bucketed
-    rate — S_t = max(0, S_{t-1} + (x_t − mean − k)), flagged when S_t
-    crosses ``h_stds``·std.  CUSUM accumulates small persistent shifts a
+    rate — S_t = max(0, S_{t-1} + (x_t − mean − k)) with k = 0.5·std,
+    flagged when S_t crosses 4·std.  CUSUM accumulates small persistent shifts a
     per-bucket z-score (X63) never sees — the level-shift detector next to
     the spike detector.
 
@@ -730,12 +681,12 @@ def cusum_changepoints(
     100 TB shape: everything after the one (type, bucket) count aggregate
     operates on |types|·|buckets| metadata-sized rows; the windows
     partition by the type."""
-    dense = _dense_counts(events, type_col, ts_col, bucket)
+    dense = _dense_counts(events, "event_type", "ts", "hour")
     if dense is None:
         # schema-only empty frame, same rationale as burst_detection
         return events.limit(0).select(
-            F.col(type_col).alias("event_type"),
-            F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"),
+            F.col("event_type").alias("event_type"),
+            F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
             F.lit(0).cast("long").alias("n_events"),
             F.lit(None).cast("double").alias("cusum"),
             F.lit(False).alias("is_shift"),
@@ -752,8 +703,8 @@ def cusum_changepoints(
         "event_type",
         "bucket_ts",
         "n_events",
-        (F.col("n_events") - mean - F.lit(float(k_stds)) * std).alias("_d"),
-        (F.lit(float(h_stds)) * std).alias("_h"),
+        (F.col("n_events") - mean - F.lit(0.5) * std).alias("_d"),
+        (F.lit(4.0) * std).alias("_h"),
     )
     wrun = Window.partitionBy("event_type").orderBy(F.col("bucket_ts").asc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -765,7 +716,7 @@ def cusum_changepoints(
         "event_type", "bucket_ts", "n_events", "_h", cum.alias("_cum")
     )
     s = F.col("_cum") - F.least(F.lit(0.0), F.min("_cum").over(wrun))
-    mult = float(10**round_scale)
+    mult = 1e6
     return staged.select(
         "event_type",
         "bucket_ts",
@@ -778,11 +729,7 @@ def cusum_changepoints(
 def rolling_rate(
     events: DataFrame,
     *,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    bucket: str = "hour",
     window_buckets: int = 7,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X82 rolling-rate smoother: per-type trailing moving average of the
     dense bucketed event rate plus the ratio of each bucket to its own
@@ -792,12 +739,12 @@ def rolling_rate(
     Shares the dense (type, bucket) axis with the other rate monitors (one
     count aggregate, generated axis); the trailing window is a rows-frame
     per type over metadata-sized rows, its mean from exact integer sums."""
-    dense = _dense_counts(events, type_col, ts_col, bucket)
+    dense = _dense_counts(events, "event_type", "ts", "hour")
     if dense is None:
         # schema-only empty frame, same rationale as burst_detection
         return events.limit(0).select(
-            F.col(type_col).alias("event_type"),
-            F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"),
+            F.col("event_type").alias("event_type"),
+            F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
             F.lit(0).cast("long").alias("n_events"),
             F.lit(None).cast("double").alias("trailing_avg"),
             F.lit(None).cast("double").alias("ratio_to_avg"),
@@ -805,7 +752,7 @@ def rolling_rate(
     w = Window.partitionBy("event_type").orderBy(F.col("bucket_ts").asc()).rowsBetween(
         -(window_buckets - 1), Window.currentRow
     )
-    mult = float(10**round_scale)
+    mult = 1e6
     avg = F.sum("n_events").over(w).cast("double") / F.count(F.lit(1)).over(w)
     return dense.select(
         "event_type",

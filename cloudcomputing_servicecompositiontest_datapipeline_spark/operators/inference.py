@@ -48,6 +48,9 @@ MODEL_VERSION = "stub-logreg-v1"
 #: Fixed stub weights: (bias, w_distinct_ratio, w_log1p_tokens).
 _WEIGHTS = (-1.5, 3.0, 0.25)
 
+#: Decimals scores are floor-rounded to, here and in the SQL twin.
+ROUND_SCALE = 6
+
 
 def _load_model():
     """STUB model loader — stands in for torch.load / onnxruntime session
@@ -64,14 +67,12 @@ def _load_model():
     return score
 
 
-def score_documents(
-    df: DataFrame, text_col: str, id_col: str, *, round_scale: int = 6
-) -> DataFrame:
+def score_documents(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Model-scored quality per document.  Feature extraction (normalize,
     tokenize) stays JVM-side so the Python boundary carries only the small
     numeric feature frame — at 100 TB shipping raw text through Arrow just
     to count tokens would dominate the stage, so the harness ships two
-    numbers per row instead.  Scores are floor-rounded to ``round_scale``
+    numbers per row instead.  Scores are floor-rounded to ``ROUND_SCALE``
     decimals for engine-independent comparison."""
     from .dedup import normalized_text
 
@@ -84,7 +85,7 @@ def score_documents(
         ),
     )
 
-    mult = float(10**round_scale)
+    mult = float(10**ROUND_SCALE)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _load_model()  # ONCE per task, then streams every batch
@@ -105,11 +106,11 @@ def score_documents(
     return feats.mapInPandas(run, SCORE_SCHEMA)
 
 
-def oracle_score_sql(round_scale: int = 6) -> str:
+def oracle_score_sql() -> str:
     """The stub model in ANSI SQL (DuckDB twin) — possible only BECAUSE the
     stub is closed-form; a real checkpoint would make this query rows-only."""
     b, w1, w2 = _WEIGHTS
-    mult = 10**round_scale
+    mult = 10**ROUND_SCALE
     norm = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
     return f"""
     WITH feats AS (

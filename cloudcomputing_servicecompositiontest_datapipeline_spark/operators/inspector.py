@@ -33,27 +33,27 @@ CPU_POLL_METRICS = [
 
 
 def flatten_cpu_polls(
-    df: DataFrame, polls_col: str = "cpuPolls", metrics: list[str] | None = None
+    df: DataFrame, metrics: list[str] | None = None
 ) -> DataFrame:
     """``inspectCPU`` + ``inspectCPUDelta`` (Inspector.py:190-229): stamp each
     run with the first poll's absolute metrics and the last−first deltas,
     plus ``totalPolls``; drop the nested column afterwards (the reference
     keeps flat attributes only unless ``processCPUPolls`` opts in)."""
     metrics = CPU_POLL_METRICS if metrics is None else metrics
-    polls = F.array_sort(F.col(polls_col))  # time is field 0 → time order
+    polls = F.array_sort(F.col("cpuPolls"))  # time is field 0 → time order
     # empty-poll guard: element_at on an empty array is a runtime error
     # under ANSI mode (the Spark 4 default), not NULL — a run record with
     # zero polls must flatten to NULL metrics, not kill the job
-    has = F.size(F.col(polls_col)) > 0
+    has = F.size(F.col("cpuPolls")) > 0
     first = F.when(has, F.element_at(polls, 1))
     last = F.when(has, F.element_at(polls, -1))
-    cols = [F.col(c) for c in df.columns if c != polls_col]
+    cols = [F.col(c) for c in df.columns if c != "cpuPolls"]
     for m in metrics:
         f = first.getField("cpuTotal").getField(m)
         l = last.getField("cpuTotal").getField(m)
         cols.append(f.alias(m))
         cols.append((l - f).alias(f"{m}Delta"))
-    cols.append(F.size(F.col(polls_col)).alias("totalPolls"))
+    cols.append(F.size(F.col("cpuPolls")).alias("totalPolls"))
     cols.append(
         (last.getField("time") - first.getField("time")).alias(
             "pollSpanMs"

@@ -27,7 +27,6 @@ def runtime_overlap(
     start_col: str,
     end_col: str,
     overlap_filter: str | None = None,
-    scale: int = 1_000_000,
     demo_max_rows: int | None = None,
 ) -> DataFrame:
     """J1: per-row overlap score.
@@ -36,7 +35,8 @@ def runtime_overlap(
     divide by ``max(len, 1)``; a row never overlaps itself.  Per-pair ratios
     are floor-scaled to integers before summing so the aggregate is exact and
     order-insensitive (doubles would make the hash shuffle-dependent).
-    Returns ``id_col, overlap_score`` (score = scaled sum / scale).
+    Returns ``id_col, overlap_score`` (score = sum of pair ratios scaled by
+    10^6, / 10^6).
 
     Without ``overlap_filter`` the plan is an all-pairs broadcast-nested-loop
     — quadratic, demo-only — so that form now REQUIRES ``demo_max_rows``: a
@@ -67,22 +67,20 @@ def runtime_overlap(
     # otherwise score a bogus self-overlap — gate on the b side being present.
     term = F.when(
         F.col(f"b.{id_col}").isNull(), F.lit(0).cast("long")
-    ).otherwise(F.floor(overlap.cast("double") / length * scale).cast("long"))
+    ).otherwise(F.floor(overlap.cast("double") / length * 1_000_000).cast("long"))
     joined = a.join(b, cond, "left")
     return (
         joined.groupBy(F.col(f"a.{id_col}").alias(id_col))
-        .agg((F.coalesce(F.sum(term), F.lit(0)) / F.lit(float(scale))).alias("overlap_score"))
+        .agg((F.coalesce(F.sum(term), F.lit(0)) / F.lit(1e6)).alias("overlap_score"))
     )
 
 
-def tenancy_annotate(
-    df: DataFrame, vm_col: str, type_col: str, out_col: str = "tenancy"
-) -> DataFrame:
+def tenancy_annotate(df: DataFrame, vm_col: str, type_col: str) -> DataFrame:
     """J2/W3: stamp each row with ``"<type> - <uses>"`` where uses is the
     row count of its vm/container partition (report_generator.py:241-251)."""
     w = Window.partitionBy(vm_col)
     return df.withColumn(
-        out_col,
+        "tenancy",
         F.concat_ws(" - ", F.col(type_col), F.count(F.lit(1)).over(w).cast("string")),
     )
 
@@ -142,7 +140,6 @@ def binned_runtime_overlap(
     start_col: str,
     end_col: str,
     bin_width: int,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """J1 WITHOUT an equality key, scale-safe: the binned interval self-join.
 
@@ -182,7 +179,7 @@ def binned_runtime_overlap(
         F.col(f"b.{start_col}"), F.col(f"a.{start_col}")
     )
     length = F.greatest(F.col(f"a.{end_col}") - F.col(f"a.{start_col}"), F.lit(1))
-    term = F.floor(overlap.cast("double") / length * scale).cast("long")
+    term = F.floor(overlap.cast("double") / length * 1_000_000).cast("long")
     scores = (
         a.join(b, cond, "inner")
         .groupBy(F.col(f"a.{id_col}").alias(id_col))
@@ -193,7 +190,7 @@ def binned_runtime_overlap(
         .join(scores, id_col, "left")
         .select(
             id_col,
-            (F.coalesce(F.col("scaled"), F.lit(0)) / F.lit(float(scale))).alias(
+            (F.coalesce(F.col("scaled"), F.lit(0)) / F.lit(1e6)).alias(
                 "overlap_score"
             ),
         )

@@ -134,8 +134,6 @@ def psi_drift(
     col: str,
     *,
     bins: int = 10,
-    eps: float = 1e-6,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X38 distribution-drift report between two corpus snapshots for one
     numeric column: equi-width bin shares over the COMBINED min/max range,
@@ -148,7 +146,7 @@ def psi_drift(
     Scale shape: ONE tiny min/max aggregate over the union (2 rows ->
     broadcast), then each snapshot reduces map-side to ``bins`` counts --
     the shuffle carries bins rows per partition, never data rows.  Shares
-    are eps-smoothed so empty bins stay finite; all math is double with
+    are smoothed by 1e-6 so empty bins stay finite; all math is double with
     floor-rounding, hence oracle-checkable.
 
     NULL **and non-finite (NaN/±Inf)** values of ``col`` are excluded from
@@ -234,15 +232,15 @@ def psi_drift(
     tot = joined.agg(
         F.sum("n_old").alias("_to"), F.sum("n_new").alias("_tn")
     )
-    mult = float(10**round_scale)
+    mult = 1e6
 
     def r6(x):
         return F.floor(x * mult + 0.5) / mult
 
     # empty-snapshot guard: a zero total means every share is 0 (then
-    # eps-smoothed), not an ANSI division error
-    p = F.when(F.col("_to") > 0, F.col("n_old") / F.col("_to")).otherwise(0.0) + eps
-    q = F.when(F.col("_tn") > 0, F.col("n_new") / F.col("_tn")).otherwise(0.0) + eps
+    # smoothed by 1e-6), not an ANSI division error
+    p = F.when(F.col("_to") > 0, F.col("n_old") / F.col("_to")).otherwise(0.0) + 1e-6
+    q = F.when(F.col("_tn") > 0, F.col("n_new") / F.col("_tn")).otherwise(0.0) + 1e-6
     m = (p + q) / 2
     per_bin = (
         joined.crossJoin(F.broadcast(tot))
@@ -270,14 +268,7 @@ def psi_drift(
     )
 
 
-def categorical_drift(
-    old: DataFrame,
-    new: DataFrame,
-    col: str,
-    *,
-    eps: float = 1e-6,
-    round_scale: int = 6,
-) -> DataFrame:
+def categorical_drift(old: DataFrame, new: DataFrame, col: str) -> DataFrame:
     """X38 categorical twin: per-value share drift with PSI attribution per
     value (which category moved) -- one count aggregate per snapshot on the
     value, full-outer joined; no binning needed."""
@@ -291,11 +282,11 @@ def categorical_drift(
         F.coalesce("n_new", F.lit(0)).alias("n_new"),
     )
     tot = joined.agg(F.sum("n_old").alias("_to"), F.sum("n_new").alias("_tn"))
-    mult = float(10**round_scale)
+    mult = 1e6
     # empty-snapshot guard: a zero total means every share is 0 (then
-    # eps-smoothed), not an ANSI division error
-    p = F.when(F.col("_to") > 0, F.col("n_old") / F.col("_to")).otherwise(0.0) + eps
-    q = F.when(F.col("_tn") > 0, F.col("n_new") / F.col("_tn")).otherwise(0.0) + eps
+    # smoothed by 1e-6), not an ANSI division error
+    p = F.when(F.col("_to") > 0, F.col("n_old") / F.col("_to")).otherwise(0.0) + 1e-6
+    q = F.when(F.col("_tn") > 0, F.col("n_new") / F.col("_tn")).otherwise(0.0) + 1e-6
     return (
         joined.crossJoin(F.broadcast(tot))
         .select(

@@ -181,22 +181,18 @@ def capped_distinct_list(
 
 
 def add_tenancy_columns(
-    df: DataFrame, vm_col: str, cpu_col: str = "cpuType", order_col: str | None = None
+    df: DataFrame, vm_col: str, cpu_col: str = "cpuType"
 ) -> DataFrame:
     """zTenancy semantics (report_generator.py:230-255): per-vm uses count and
     the vm's cpuType (first occurrence), stamped onto every run as
     ``zTenancy[vm] = "<cpuType> - <uses>"`` plus ``tenants[vm] = uses``.
 
-    ``order_col`` gives the deterministic "first" (the reference uses ingest
-    order); without one, ``min(cpuType)`` — identical when a vm has one
-    cpuType, which the data model guarantees."""
+    The vm's "first" cpuType is ``min(cpuType)`` (the reference uses ingest
+    order) — identical when a vm has one cpuType, which the data model
+    guarantees."""
     w = Window.partitionBy(vm_col)
     uses = F.count(F.lit(1)).over(w)
-    if order_col is not None:
-        # first-in-ingest-order via min over (order, cpu) pairs
-        cpu = F.min(F.struct(F.col(order_col), F.col(cpu_col))).over(w).getField(cpu_col)
-    else:
-        cpu = F.min(cpu_col).over(w)
+    cpu = F.min(cpu_col).over(w)
     return df.withColumn(
         f"zTenancy[{vm_col}]", F.concat(cpu.cast("string"), F.lit(" - "), uses.cast("string"))
     ).withColumn(f"tenants[{vm_col}]", uses)
@@ -205,16 +201,12 @@ def add_tenancy_columns(
 def add_pipeline_metrics(
     df: DataFrame,
     metrics: list[str],
-    *,
-    run_col: str = "1_run_id",
-    thread_col: str = "2_thread_id",
-    stage_col: str = "3_pipeline_stage",
 ) -> DataFrame:
     """A8/W1: cumulative ``X + "Pipeline"`` columns — running sum of X over
     pipeline stages within (run, thread) (report_generator.py:143-164)."""
     w = (
-        Window.partitionBy(run_col, thread_col)
-        .orderBy(stage_col)
+        Window.partitionBy("1_run_id", "2_thread_id")
+        .orderBy("3_pipeline_stage")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     for m in metrics:

@@ -111,9 +111,6 @@ def _cosine_rounded(dot: F.Column, na: F.Column, nb: F.Column, mult: float) -> F
 def brute_force_scores(
     corpus: DataFrame,
     queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Every guard-surviving (query_id, cand_id, cosine) pair — the exact
     score table.  Split out of :func:`brute_force_topk` so the ANN evals can
@@ -122,8 +119,8 @@ def brute_force_scores(
     join both attaches the identical cosine and reproduces the guard drop
     without re-running the 64-wide decimal fold per candidate occurrence."""
     mult = 1000000.0
-    q = _with_norm(queries, "query_id", "query_vec", id_col, vec_col)
-    c = _with_norm(corpus, "cand_id", "cand_vec", id_col, vec_col)
+    q = _with_norm(queries, "query_id", "query_vec", "vec_id", "embedding")
+    c = _with_norm(corpus, "cand_id", "cand_vec", "vec_id", "embedding")
     dot = _dot_dec(F.col("query_vec"), F.col("cand_vec")).cast("double")
     # The NULL-cosine guard tests the CHEAP norm columns, not the cosine
     # alias: cosine is NULL exactly when norm_a * norm_b > 0 fails (a NULL
@@ -169,17 +166,13 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
 ) -> DataFrame:
     """X3 exact baseline: score every (query, candidate) pair, keep top-k per
     query with a deterministic id tiebreak.  The query side is broadcast, the
     corpus is never shuffled (linear scan), and per-vector norms are
     precomputed outside the pair loop."""
-    return topk_from_scores(
-        brute_force_scores(corpus, queries, id_col=id_col, vec_col=vec_col), k
-    )
+    return topk_from_scores(brute_force_scores(corpus, queries), k)
 
 
 def _hyperplane_sign(vec: F.Column, plane: int, dim: int, hash_fn: str = "xxhash64") -> F.Column:
@@ -337,7 +330,7 @@ def _homogeneous_sample(sample: list[list[float]]) -> list[list[float]]:
     return [v for v in sample if len(v) == dim]
 
 
-def _train_centroids(sample_vecs: list[list[float]], n_centroids: int, n_iters: int = 10):
+def _train_centroids(sample_vecs: list[list[float]], n_centroids: int):
     """Driver-side Lloyd's iterations on a BOUNDED training sample —
     deterministic (evenly-spaced init over the sample, fixed iteration count,
     numpy double arithmetic).  This is the FAISS recipe: IVF coarse
@@ -355,7 +348,7 @@ def _train_centroids(sample_vecs: list[list[float]], n_centroids: int, n_iters: 
         )
     idx = np.linspace(0, len(X) - 1, n_centroids).astype(int)
     C = X[idx].copy()
-    for _ in range(n_iters):
+    for _ in range(10):
         d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         a = d2.argmin(axis=1)
         for j in range(n_centroids):
@@ -405,8 +398,6 @@ def _argmin_centroids_exact(vec: F.Column, centers, n_pick: int = 1) -> F.Column
 def ivf_seed_centers(
     corpus: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 8,
     seed: int = 42,
 ):
@@ -424,14 +415,14 @@ def ivf_seed_centers(
     tests/test_extensions.py::test_ivf_seed_centers_portable."""
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string"))), 1, 8
+            F.md5(F.concat(F.lit(f"{seed}:"), F.col("vec_id").cast("string"))), 1, 8
         ),
         16,
         10,
     ).cast("long")
     rows = (
-        corpus.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv"), h.alias("_h"))
+        corpus.where(F.col("embedding").isNotNull())
+        .select(F.col("vec_id").alias("_cid"), F.col("embedding").alias("_cv"), h.alias("_h"))
         .orderBy("_h", "_cid")
         .limit(n_centroids)
         .collect()
@@ -477,26 +468,23 @@ def _argmin_centroids(vec: F.Column, centers, n_pick: int = 1) -> F.Column:
 def train_ivf_centroids(
     corpus: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
-    seed: int = 42,
 ):
     """Train the IVF coarse quantizer from a bounded, deterministic sample
     WITHOUT a count job: take the ``200 * n_centroids`` lowest salted-hash
     ids (TakeOrdered = per-partition heap, linear scan, no full sort) — a
-    uniform pseudo-random spread that is a pure function of (seed, id) —
+    uniform pseudo-random spread that is a pure function of (42, id) —
     and fit plain Lloyd's iterations driver-side (the FAISS shape: a
     distributed ML fit would pay per-iteration job overhead to cluster
     kilobytes).  Exposed so ``n_probe`` sweeps train once."""
-    c = _with_norm(corpus, "cand_id", "cand_vec", id_col, vec_col).where(
+    c = _with_norm(corpus, "cand_id", "cand_vec", "vec_id", "embedding").where(
         F.col("cand_vec").isNotNull()
     )
     target = 200 * n_centroids
     sample = [
         [float(x) for x in r.cand_vec]
         for r in c.select("cand_id", "cand_vec")
-        .orderBy(F.xxhash64(F.lit(seed), F.col("cand_id").cast("string")), "cand_id")
+        .orderBy(F.xxhash64(F.lit(42), F.col("cand_id").cast("string")), "cand_id")
         .limit(target)
         .collect()
     ]
@@ -507,12 +495,9 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
     n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
     centers=None,
     exact_assign: bool = False,
     scores: DataFrame | None = None,
@@ -549,17 +534,15 @@ def ivf_topk(
     # trainer is not iterable — one bad row must not kill the index build);
     # drop them here, row-local, before anything touches numpy
     if scores is None:
-        c = _with_norm(corpus, "cand_id", "cand_vec", id_col, vec_col)
+        c = _with_norm(corpus, "cand_id", "cand_vec", "vec_id", "embedding")
     else:
         # score table supplied — assignment only, no norm folds
         c = ensure_parallelism(corpus).select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cand_vec")
+            F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cand_vec")
         )
     c = c.where(F.col("cand_vec").isNotNull())
     if centers is None:
-        centers = train_ivf_centroids(
-            corpus, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids, seed=seed
-        )
+        centers = train_ivf_centroids(corpus, n_centroids=n_centroids)
     dim = len(centers[0]) if len(centers) and len(centers[0]) else None
     argmin = _argmin_centroids_exact if exact_assign else _argmin_centroids
 
@@ -571,10 +554,10 @@ def ivf_topk(
         # (silently short-zips) — exclude it like a NULL
         assigned = assigned.where(F.size("cand_vec") == dim)
     if scores is None:
-        q = _with_norm(queries, "query_id", "query_vec", id_col, vec_col)
+        q = _with_norm(queries, "query_id", "query_vec", "vec_id", "embedding")
     else:
         q = ensure_parallelism(queries).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
     if dim is not None:
         q = q.where(F.size("query_vec") == dim)
@@ -718,8 +701,6 @@ def lsh_topk_sweep(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
     planes: int = 4,
     dim: int = 64,
@@ -750,10 +731,10 @@ def lsh_topk_sweep(
 
     def with_buckets(df: DataFrame, id_out: str, vec_out: str) -> DataFrame:
         base = (
-            _with_norm(df, id_out, vec_out, id_col, vec_col)
+            _with_norm(df, id_out, vec_out, "vec_id", "embedding")
             if scores is None
             else ensure_parallelism(df).select(
-                F.col(id_col).alias(id_out), F.col(vec_col).alias(vec_out)
+                F.col("vec_id").alias(id_out), F.col("embedding").alias(vec_out)
             )
         )
         tb = F.explode(
@@ -824,12 +805,9 @@ def ivf_topk_sweep(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
     n_centroids: int = 16,
     n_probe_list=(1, 2, 4),
-    seed: int = 42,
     centers=None,
     exact_assign: bool = False,
     scores: DataFrame | None = None,
@@ -852,16 +830,14 @@ def ivf_topk_sweep(
     pmax = max(n_probe_list)
     mult = 1000000.0
     if scores is None:
-        c = _with_norm(corpus, "cand_id", "cand_vec", id_col, vec_col)
+        c = _with_norm(corpus, "cand_id", "cand_vec", "vec_id", "embedding")
     else:
         c = ensure_parallelism(corpus).select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cand_vec")
+            F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cand_vec")
         )
     c = c.where(F.col("cand_vec").isNotNull())
     if centers is None:
-        centers = train_ivf_centroids(
-            corpus, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids, seed=seed
-        )
+        centers = train_ivf_centroids(corpus, n_centroids=n_centroids)
     dim = len(centers[0]) if len(centers) and len(centers[0]) else None
     argmin = _argmin_centroids_exact if exact_assign else _argmin_centroids
     assigned = c.withColumn(
@@ -870,10 +846,10 @@ def ivf_topk_sweep(
     if dim is not None:
         assigned = assigned.where(F.size("cand_vec") == dim)
     if scores is None:
-        q = _with_norm(queries, "query_id", "query_vec", id_col, vec_col)
+        q = _with_norm(queries, "query_id", "query_vec", "vec_id", "embedding")
     else:
         q = ensure_parallelism(queries).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
     if dim is not None:
         # same wrong-dimension exclusion as ivf_topk: a short-zipped probe
@@ -939,7 +915,7 @@ def ivf_topk_sweep(
     )
 
 
-def label_centroids(emb: DataFrame, vec_col: str = "embedding", label_col: str = "label") -> DataFrame:
+def label_centroids(emb: DataFrame) -> DataFrame:
     """Per-label centroid vectors, exploded to (label, dim, centroid) rows —
     the building block of semantic clustering / IVF retraining / per-cluster
     quality probes over an embedding corpus.
@@ -953,7 +929,7 @@ def label_centroids(emb: DataFrame, vec_col: str = "embedding", label_col: str =
     mult = 1000000.0
     return (
         ensure_parallelism(emb)
-        .select(F.col(label_col).alias("label"), F.posexplode(vec_col).alias("dim", "v"))
+        .select(F.col("label").alias("label"), F.posexplode("embedding").alias("dim", "v"))
         .groupBy("label", "dim")
         .agg(
             (
@@ -970,12 +946,9 @@ def label_centroids(emb: DataFrame, vec_col: str = "embedding", label_col: str =
 def semantic_dedup(
     emb: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.35,
     block_col: str | None = None,
     n_centroids: int = 16,
-    seed: int = 42,
     exact_dots: bool = True,
     centers=None,
     exact_assign: Literal[False, True, "seq"] = False,
@@ -1020,9 +993,9 @@ def semantic_dedup(
         # duplicate ids (the ngram_jaccard_pairs r11 finding; value-
         # identical for unique ids, oracle-faithful under duplicates)
         blocked = ensure_parallelism(emb).select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_vec"),
-            F.sqrt(_dot_dec(F.col(vec_col), F.col(vec_col)).cast("double")).alias(
+            F.col("vec_id").alias("_id"),
+            F.col("embedding").alias("_vec"),
+            F.sqrt(_dot_dec(F.col("embedding"), F.col("embedding")).cast("double")).alias(
                 "_vec_norm"
             ),
             F.col(block_col).alias("_block"),
@@ -1032,7 +1005,7 @@ def semantic_dedup(
         # assignment kernel's np.stack kills the whole Arrow task); they
         # drop out of pairing here and rejoin as singletons in the final
         # cluster_canonical pass, which unions ALL input ids
-        c = _with_norm(emb, "_id", "_vec", id_col, vec_col).where(
+        c = _with_norm(emb, "_id", "_vec", "vec_id", "embedding").where(
             F.col("_vec").isNotNull()
         )
         if centers is None:
@@ -1043,7 +1016,7 @@ def semantic_dedup(
             # transfer.
             sample_pdf = (
                 c.select("_vec")
-                .orderBy(F.xxhash64(F.lit(seed), F.col("_id").cast("string")), "_id")
+                .orderBy(F.xxhash64(F.lit(42), F.col("_id").cast("string")), "_id")
                 .limit(target)
                 .toPandas()
             )
@@ -1140,17 +1113,15 @@ def semantic_dedup(
         # survive as singleton components, they never pair
         .filter(F.col("cosine") >= threshold)
     )
-    canon = cluster_canonical(emb, pairs.select("id_a", "id_b"), id_col)
+    canon = cluster_canonical(emb, pairs.select("id_a", "id_b"), "vec_id")
     return canon.select(
-        F.col(id_col),
+        F.col("vec_id"),
         "canonical_id",
-        (F.col("canonical_id") == F.col(id_col)).alias("is_kept"),
+        (F.col("canonical_id") == F.col("vec_id")).alias("is_kept"),
     )
 
 
-def quantize_int8(
-    emb: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_int8(emb: DataFrame) -> DataFrame:
     """X30 int8 embedding quantization: per-vector symmetric scale
     (max|v|/127, the standard absmax scheme), elements rounded with the
     engine-independent floor(x+0.5).  Output (id, scale, qvec:array<int>,
@@ -1159,20 +1130,18 @@ def quantize_int8(
     payload shrinks 4x (the difference between an in-memory ANN working set
     and a spilling one at 100 TB).  Zero vectors quantize to zeros with
     scale 0.  Row-local, no shuffle."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     absmax = F.array_max(F.transform(v, F.abs))
     scale = (absmax / F.lit(127.0)).alias("scale")
     q = F.when(absmax == 0, F.transform(v, lambda x: F.lit(0))).otherwise(
         F.transform(v, lambda x: F.floor(x / (absmax / F.lit(127.0)) + F.lit(0.5)).cast("int"))
     )
     return ensure_parallelism(emb).select(
-        F.col(id_col), scale, q.alias("qvec"), F.col(vec_col)
+        F.col("vec_id"), scale, q.alias("qvec"), F.col("embedding")
     )
 
 
-def quantization_error_report(
-    emb: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding", scale_out: int = 6
-) -> DataFrame:
+def quantization_error_report(emb: DataFrame) -> DataFrame:
     """Per-vector int8 reconstruction-error report: scalar digests only
     (q_sum / q_l1 / max_abs_err / rms_err) so the result is hash-comparable
     without array-representation pitfalls.  absmax quantization bounds
@@ -1180,21 +1149,19 @@ def quantization_error_report(
     # Rename the raw scale before rounding: the output alias is also called
     # "scale", and Spark's lateral-column-alias resolution would otherwise
     # bind the deq lambda's reference to the ROUNDED value.
-    qd = quantize_int8(emb, id_col=id_col, vec_col=vec_col).withColumnRenamed(
-        "scale", "_scale_raw"
-    )
+    qd = quantize_int8(emb).withColumnRenamed("scale", "_scale_raw")
     deq = F.zip_with(
         F.col("qvec"),
-        F.col(vec_col),
+        F.col("embedding"),
         lambda q, x: q.cast("double") * F.col("_scale_raw") - x.cast("double"),
     )
-    mult = float(10**scale_out)
+    mult = 1e6
 
     def r6(c: F.Column) -> F.Column:
         return F.floor(c * mult + 0.5) / mult
 
     return qd.select(
-        F.col(id_col),
+        F.col("vec_id"),
         r6(F.col("_scale_raw")).alias("scale"),
         F.aggregate(F.col("qvec"), F.lit(0).cast("long"), lambda a, x: a + x).alias("q_sum"),
         F.aggregate(F.col("qvec"), F.lit(0).cast("long"), lambda a, x: a + F.abs(x)).alias("q_l1"),
@@ -1211,8 +1178,6 @@ def quantized_topk_recall(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
     """Self-eval for the int8 path: recall@k of quantized-cosine top-k vs
@@ -1221,8 +1186,8 @@ def quantized_topk_recall(
     per-vector absmax differences, which is exactly the approximation being
     measured.  Same broadcast(queries) x corpus scan shape as
     brute_force_topk; both rankings share one quantized projection."""
-    qc = quantize_int8(corpus, id_col=id_col, vec_col=vec_col)
-    qq = quantize_int8(queries, id_col=id_col, vec_col=vec_col)
+    qc = quantize_int8(corpus)
+    qq = quantize_int8(queries)
 
     def qnorm(c: F.Column) -> F.Column:
         return F.sqrt(
@@ -1230,19 +1195,19 @@ def quantized_topk_recall(
         )
 
     c = qc.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").alias("c_vec"),
         F.col("qvec").alias("c_q"),
         qnorm(F.col("qvec")).alias("c_qn"),
-        F.sqrt(_dot_dec(F.col(vec_col), F.col(vec_col)).cast("double")).alias("c_n"),
+        F.sqrt(_dot_dec(F.col("embedding"), F.col("embedding")).cast("double")).alias("c_n"),
     )
     q = F.broadcast(
         qq.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("q_vec"),
             F.col("qvec").alias("q_q"),
             qnorm(F.col("qvec")).alias("q_qn"),
-            F.sqrt(_dot_dec(F.col(vec_col), F.col(vec_col)).cast("double")).alias("q_n"),
+            F.sqrt(_dot_dec(F.col("embedding"), F.col("embedding")).cast("double")).alias("q_n"),
         )
     )
     joined = c.join(q, F.col("c_id") != F.col("q_id"))
@@ -1303,11 +1268,8 @@ def quantized_topk_recall(
 def pq_train(
     emb: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 8,
     k: int = 16,
-    seed: int = 42,
 ) -> list:
     """Train the m per-subspace codebooks on a BOUNDED seeded sample (the
     same TakeOrdered draw + driver Lloyd's as IVF training — ~200 points
@@ -1316,10 +1278,10 @@ def pq_train(
     target = max(200 * k, 512)
     sample = [
         [float(x) for x in r._v]
-        for r in emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        for r in emb.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
         # a NULL vector in the sample is not iterable and kills training
-        .where(F.col(vec_col).isNotNull())
-        .orderBy(F.xxhash64(F.lit(seed), F.col("_id").cast("string")), "_id")
+        .where(F.col("embedding").isNotNull())
+        .orderBy(F.xxhash64(F.lit(42), F.col("_id").cast("string")), "_id")
         .limit(target)
         .collect()
     ]
@@ -1339,8 +1301,6 @@ def pq_train(
 def pq_seed_codebooks(
     emb: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 16,
     k: int = 16,
     seed: int = 42,
@@ -1352,9 +1312,7 @@ def pq_seed_codebooks(
     and the slices, so pq_encode over these codebooks (with exact_assign)
     is hash-checkable end to end.  Lloyd's-refined :func:`pq_train` stays
     the production path (ADC recall floors pinned in tests)."""
-    seeds = ivf_seed_centers(
-        emb, id_col=id_col, vec_col=vec_col, n_centroids=k, seed=seed
-    )
+    seeds = ivf_seed_centers(emb, n_centroids=k, seed=seed)
     if not seeds:
         raise ValueError("empty embedding table")
     d = len(seeds[0])
@@ -1368,8 +1326,6 @@ def pq_encode(
     emb: DataFrame,
     codebooks: list,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact_assign: bool = False,
 ) -> DataFrame:
     """Encode every vector to its m-byte PQ code array — codebooks are plan
@@ -1380,9 +1336,9 @@ def pq_encode(
     form (pair with :func:`pq_seed_codebooks` for the oracle-checkable
     mode)."""
     return ensure_parallelism(emb).select(
-        F.col(id_col),
-        _pq_codes(F.col(vec_col), codebooks, exact_assign).alias("codes"),
-        F.col(vec_col),
+        F.col("vec_id"),
+        _pq_codes(F.col("embedding"), codebooks, exact_assign).alias("codes"),
+        F.col("embedding"),
     )
 
 
@@ -1466,16 +1422,13 @@ def pq_topk_recall(
     queries: DataFrame,
     codebooks: list,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    rerank_depth: int = 50,
     exact_dots: bool = False,
 ) -> DataFrame:
     """Self-eval: recall@k of PQ asymmetric-distance ranking (exact query
     subvector · reconstructed candidate centroid, summed over subspaces —
     ADC) against exact-dot ranking, BOTH raw and after the production
-    two-stage pattern (ADC shortlist of ``rerank_depth`` → exact re-rank —
+    two-stage pattern (ADC shortlist of depth 50 → exact re-rank —
     recall@k then counts exact-top-k hits inside the shortlist).  Broadcast
     query panel × linear scan of the CODES (m ints per row — the working
     set a 100 TB corpus actually fits in memory); original vectors are only
@@ -1490,14 +1443,12 @@ def pq_topk_recall(
     modes, so no float accumulation order leaks into the output."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    enc = pq_encode(
-        corpus, codebooks, id_col=id_col, vec_col=vec_col, exact_assign=exact_dots
-    )
+    enc = pq_encode(corpus, codebooks, exact_assign=exact_dots)
     c = enc.select(
-        F.col(id_col).alias("c_id"), F.col("codes").alias("c_codes"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("c_id"), F.col("codes").alias("c_codes"), F.col("embedding").alias("c_vec")
     )
     q = F.broadcast(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+        queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     )
     joined = c.join(q, F.col("c_id") != F.col("q_id"))
     if exact_dots:
@@ -1554,11 +1505,11 @@ def pq_topk_recall(
                 F.when((F.col("r_exact") <= k) & (F.col("r_adc") <= k), 1).otherwise(0)
             ).alias("n_hit"),
             # two-stage: exact-top-k candidate survives iff the ADC shortlist
-            # (depth rerank_depth) contains it — re-ranking the shortlist by
+            # (depth 50) contains it — re-ranking the shortlist by
             # exact score then returns it in the final top-k by construction
             F.sum(
                 F.when(
-                    (F.col("r_exact") <= k) & (F.col("r_adc") <= rerank_depth), 1
+                    (F.col("r_exact") <= k) & (F.col("r_adc") <= 50), 1
                 ).otherwise(0)
             ).alias("n_hit_rerank"),
         )
@@ -1582,8 +1533,6 @@ def pq_topk_recall(
 def random_projection(
     emb: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     out_dim: int = 16,
     seed: str = "jl0",
     hash_fn: str = "xxhash64",
@@ -1609,7 +1558,7 @@ def random_projection(
     partition order -- DuckDB can recompute the projection exactly.
     Literal sign rows need a STATIC input width (array expressions can't be
     sized from a runtime column), so md5 mode takes it as ``in_dim``."""
-    dim = F.size(F.col(vec_col))
+    dim = F.size(F.col("embedding"))
     inv = 1.0 / float(out_dim) ** 0.5
 
     if hash_fn == "md5_32":
@@ -1626,10 +1575,10 @@ def random_projection(
             )
 
         comps = [
-            (_dot_dec(F.col(vec_col), sign_row(i)).cast("double") * inv) for i in range(out_dim)
+            (_dot_dec(F.col("embedding"), sign_row(i)).cast("double") * inv) for i in range(out_dim)
         ]
         return ensure_parallelism(emb).select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.array(*comps).alias("projected"),
         )
     if hash_fn != "xxhash64":
@@ -1651,7 +1600,7 @@ def random_projection(
 
         return F.aggregate(
             F.zip_with(
-                F.col(vec_col),
+                F.col("embedding"),
                 F.transform(F.sequence(F.lit(0), dim - 1), sign),
                 lambda x, r: x.cast("double") * r,
             ),
@@ -1661,7 +1610,7 @@ def random_projection(
 
     comps = [component(i) for i in range(out_dim)]
     return ensure_parallelism(emb).select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.array(*[(c * inv) for c in comps]).alias("projected"),
     )
 
@@ -1669,11 +1618,8 @@ def random_projection(
 def projection_distortion_eval(
     emb: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     out_dim: int = 16,
     n_pairs_side: int = 40,
-    seed: str = "jl0",
     hash_fn: str = "xxhash64",
     in_dim: int = 64,
 ) -> DataFrame:
@@ -1697,15 +1643,12 @@ def projection_distortion_eval(
     partitionings."""
     proj = random_projection(
         emb,
-        id_col=id_col,
-        vec_col=vec_col,
         out_dim=out_dim,
-        seed=seed,
         hash_fn=hash_fn,
         in_dim=in_dim,
     )
-    base = emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).join(
-        proj.select(F.col(id_col).alias("_id"), "projected"), "_id"
+    base = emb.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")).join(
+        proj.select(F.col("vec_id").alias("_id"), "projected"), "_id"
     ).filter(F.col("_id") < n_pairs_side)
     a = base.select(
         F.col("_id").alias("id_a"), F.col("_v").alias("va"), F.col("projected").alias("pa")
@@ -1776,10 +1719,6 @@ def projection_distortion_eval(
 
 def normalize_embeddings_zscore(
     emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_scale: int = 6,
 ) -> DataFrame:
     """X45 per-dimension z-score standardization of an embedding column —
     the feature-scaling step before quantization / distance computations
@@ -1798,7 +1737,7 @@ def normalize_embeddings_zscore(
     dec = "decimal(38,12)"
     x = F.col("_x").cast("double")
     per_dim = (
-        emb.select(F.posexplode(vec_col).alias("_dim", "_x"))
+        emb.select(F.posexplode("embedding").alias("_dim", "_x"))
         .groupBy("_dim")
         .agg(
             F.count(F.lit(1)).alias("_n"),
@@ -1823,9 +1762,9 @@ def normalize_embeddings_zscore(
     )
     mean_arr = F.col("_means")
     std_arr = F.col("_stds")
-    mult = float(10**round_scale)
+    mult = 1e6
     normalized = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda v, i: F.when(
             F.element_at(std_arr, i + 1) > 0.0,
             F.floor(
@@ -1842,7 +1781,7 @@ def normalize_embeddings_zscore(
     return (
         ensure_parallelism(emb)
         .crossJoin(F.broadcast(stats))
-        .select(F.col(id_col), normalized.alias("normalized"))
+        .select(F.col("vec_id"), normalized.alias("normalized"))
     )
 
 
@@ -1850,9 +1789,7 @@ def hybrid_rrf(
     lexical: DataFrame,
     vector: DataFrame,
     *,
-    k_rrf: int = 60,
     topk: int = 10,
-    round_scale: int = 9,
 ) -> DataFrame:
     """X54 hybrid retrieval fusion — reciprocal rank fusion (Cormack,
     Clarke & Buettcher, SIGIR 2009): ``score(d) = Σ_sources 1/(k + rank_s)``
@@ -1866,11 +1803,11 @@ def hybrid_rrf(
     one windowed top-k.  Per-doc contributions are 1/(k+rank) doubles; at
     most one term per source, and two-term IEEE addition is commutative, so
     the fused score is deterministic without decimal machinery."""
-    mult = float(10**round_scale)
+    mult = 1e9
     contrib = lambda df: df.select(
         "query_id",
         "doc_id",
-        (F.lit(1.0) / (F.lit(float(k_rrf)) + F.col("rank").cast("double"))).alias("_c"),
+        (F.lit(1.0) / (F.lit(60.0) + F.col("rank").cast("double"))).alias("_c"),
     )
     fused = (
         contrib(lexical)
@@ -1897,9 +1834,6 @@ def embedding_qc(
     id_col: str,
     *,
     expected_dim: int | None = None,
-    norm_low: float = 1e-6,
-    norm_high: float = 1e6,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X65 embedding quality control — the vector-side ingest gate: flag
     NULL vectors, wrong dimensionality, non-finite components (NaN/Inf
@@ -1934,7 +1868,7 @@ def embedding_qc(
             lambda acc, x: acc + x.cast("double") * x.cast("double"),
         )
     )
-    mult = float(10**round_scale)
+    mult = 1e6
     norm = F.floor(F.sqrt(norm_sq) * mult + 0.5) / mult
     bad_dim = (
         F.lit(False) if expected_dim is None else dim != F.lit(int(expected_dim))
@@ -1945,7 +1879,7 @@ def embedding_qc(
     flag_norm = (
         ~flag_null
         & ~flag_nonfinite
-        & ((norm < F.lit(norm_low)) | (norm > F.lit(norm_high)))
+        & ((norm < F.lit(1e-6)) | (norm > F.lit(1e6)))
     )
     return df.select(
         F.col(id_col),

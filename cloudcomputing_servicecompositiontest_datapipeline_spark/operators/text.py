@@ -543,10 +543,6 @@ def quality_funnel(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    *,
-    min_tokens: int = 10,
-    max_dup_token_ratio: float = 0.6,
-    max_top2gram_ratio: float = 0.5,
 ) -> DataFrame:
     """X35 quality-filter funnel with per-rule attribution (the FineWeb-style
     "how much did each filter remove" observability layer, public): evaluate
@@ -574,9 +570,9 @@ def quality_funnel(
     ).otherwise(0.0)
     hits = [ _stopword_hits(toks, ws) for ws in STOPWORDS.values() ]
     rules = {
-        "min_tokens": n_toks >= min_tokens,
-        "max_dup_tokens": dup_ratio <= max_dup_token_ratio,
-        "max_top2gram": cov2 <= max_top2gram_ratio,
+        "min_tokens": n_toks >= 10,
+        "max_dup_tokens": dup_ratio <= 0.6,
+        "max_top2gram": cov2 <= 0.5,
         "lang_known": F.greatest(*hits) > 0,
     }
     assert tuple(rules) == FUNNEL_RULES
@@ -685,8 +681,6 @@ def perplexity_scores(
     text_col: str,
     id_col: str,
     model: dict,
-    *,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X42 scoring: per-document bigram perplexity under ``model`` --
     exp(-mean ln p(w_i | w_{i-1})) with interpolated add-one smoothing
@@ -757,7 +751,7 @@ def perplexity_scores(
             )
         ),
     )
-    mult = float(10**round_scale)
+    mult = 1e6
     # decimal-accumulate the per-pair log-probs (terms are engine-identical
     # doubles; only fold order would differ between engines)
     dec = "decimal(28,12)"
@@ -827,8 +821,6 @@ def perplexity_scores_join(
     id_col: str,
     uni_df: DataFrame,
     bi_df: DataFrame,
-    *,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X42 scoring, broadcast-join variant: the model arrives as the two
     count DATAFRAMES from :func:`train_bigram_lm_df` — no driver collect, no
@@ -899,7 +891,7 @@ def perplexity_scores_join(
         / (F.coalesce(F.col("_uac").cast("double"), F.lit(0.0)) + 1.0)
     ).cast(dec)
     sums = j.groupBy(id_col).agg(F.sum(lp).alias("_slp"))
-    mult = float(10**round_scale)
+    mult = 1e6
     n_tok_col = F.size("_tk")
     mean_logp = F.col("_slp").cast("double") / (n_tok_col - 1)
     ppl = F.when(n_tok_col >= 2, F.exp(-mean_logp))
@@ -1064,10 +1056,7 @@ def bm25_topk(
     id_col: str,
     queries: list[tuple[str, list[str]]],
     *,
-    k1: float = 1.2,
-    b: float = 0.75,
     topk: int = 10,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X44 BM25 lexical retrieval (Robertson & Zaragoza 2009; Lucene's
     non-negative idf ``ln(1 + (N - df + .5)/(df + .5))``) for a bounded
@@ -1137,9 +1126,9 @@ def bm25_topk(
     idf = F.log((n_d - F.col("_df").cast("double") + 0.5) / (F.col("_df").cast("double") + 0.5) + 1.0)
     tf_d = F.col("_tf").cast("double")
     dl_d = F.col("_dl").cast("double")
-    tfn = tf_d * (k1 + 1.0) / (tf_d + k1 * (1.0 - b + b * dl_d / avgdl))
+    tfn = tf_d * (1.2 + 1.0) / (tf_d + 1.2 * (1.0 - 0.75 + 0.75 * dl_d / avgdl))
     dec = "decimal(28,12)"
-    mult = float(10**round_scale)
+    mult = 1e6
     scored = (
         tf.join(F.broadcast(qdf), "term")
         .join(F.broadcast(df_t), "term")
@@ -1166,7 +1155,6 @@ def winnow_verify(
     *,
     k: int = 5,
     min_jaccard: float = 0.2,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X43 verify stage: EXACT k-gram Jaccard over the candidate pairs from
     :func:`winnow_candidates` — the cheap-candidates → exact-verify
@@ -1229,7 +1217,7 @@ def winnow_verify(
     staged = stage_barrier(staged, "n_common_grams")
     inter = F.col("n_common_grams")
     union = F.col("_tot") - inter
-    mult = float(10**round_scale)
+    mult = 1e6
     jac = F.floor(inter.cast("double") / union.cast("double") * mult + 0.5) / mult
     return (
         staged.select(
@@ -1318,9 +1306,6 @@ def normalize_unicode(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    *,
-    form: str = "NFC",
-    strip_controls: bool = True,
 ) -> DataFrame:
     """X56 unicode normalization — step 0 of every text pipeline: compose
     to NFC (é as one codepoint, not e+combining-acute: exact dedup, shingle
@@ -1339,13 +1324,11 @@ def normalize_unicode(
 
     def _norm_fn(s):
         return s.map(
-            lambda x: unicodedata.normalize(form, x) if x is not None else None
+            lambda x: unicodedata.normalize("NFC", x) if x is not None else None
         )
 
     _norm = F.pandas_udf(_norm_fn, returnType="string")
-    out = F.col("_nfc")
-    if strip_controls:
-        out = F.regexp_replace(out, r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]", "")
+    out = F.regexp_replace(F.col("_nfc"), r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]", "")
     return (
         ensure_parallelism(df)
         .select(F.col(id_col), F.col(text_col).alias("_raw"), _norm(F.col(text_col)).alias("_nfc"))
@@ -1361,16 +1344,13 @@ def compression_ratio_scores(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    *,
-    level: int = 6,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X57 compression-ratio quality signal (the classic cheap filter used
     alongside Gopher rules: machine-generated or looping text compresses
     far below prose, so a very LOW deflate ratio flags boilerplate and a
     ratio near 1 flags random/encrypted junk).
 
-    One Arrow-batched pandas UDF (zlib at a fixed level) — map-only, no
+    One Arrow-batched pandas UDF (zlib at level 6) — map-only, no
     shuffle, only the two lengths come back per row.  Declared rows-only:
     deflate output length is zlib-build-dependent in principle, so no SQL
     oracle; the monotonicity (repetition ⇒ smaller ratio) and bounds are
@@ -1388,11 +1368,11 @@ def compression_ratio_scores(
                 continue
             raw = x.encode("utf-8")
             raws.append(len(raw))
-            comps.append(len(zlib.compress(raw, level)) if raw else 0)
+            comps.append(len(zlib.compress(raw, 6)) if raw else 0)
         return pd.DataFrame({"raw": raws, "comp": comps})
 
     _c = F.pandas_udf(_fn, returnType="struct<raw:long,comp:long>")
-    mult = float(10**round_scale)
+    mult = 1e6
     return (
         ensure_parallelism(df)
         .select(F.col(id_col), _c(F.col(text_col)).alias("_z"))
@@ -1412,8 +1392,6 @@ def token_stats_by_group(
     df: DataFrame,
     text_col: str,
     group_col: str,
-    *,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X61 per-group corpus token statistics — the datasheet numbers a
     training-mix designer reads before weighting sources: docs, total
@@ -1432,7 +1410,7 @@ def token_stats_by_group(
     aggregation phase: 0.38 → 0.52 s.)"""
     from .dedup import normalized_text
 
-    mult = float(10**round_scale)
+    mult = 1e6
 
     def r6(x):
         return F.floor(x * mult + 0.5) / mult
@@ -1529,8 +1507,6 @@ def vocabulary_overlap(
     df: DataFrame,
     text_col: str,
     group_col: str,
-    *,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X75 cross-source vocabulary overlap: pairwise Jaccard of the
     distinct-word vocabularies of every group pair — the redundancy matrix
@@ -1587,7 +1563,7 @@ def vocabulary_overlap(
         .groupBy("group_a", "group_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
     )
-    mult = float(10**round_scale)
+    mult = 1e6
     return (
         inter.join(
             F.broadcast(sizes.select(F.col("_g").alias("group_a"), F.col("_n").alias("_na"))),
@@ -1624,7 +1600,6 @@ def winnow_containment(
     *,
     k: int = 5,
     min_containment: float = 0.6,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X80 ASYMMETRIC containment verify over the winnow candidate pairs:
     containment(A⊂B) = |grams_A ∩ grams_B| / |grams_A| — the detector for
@@ -1676,7 +1651,7 @@ def winnow_containment(
     )
     staged = stage_barrier(staged, "n_common_grams")
     inter = F.col("n_common_grams")
-    mult = float(10**round_scale)
+    mult = 1e6
 
     def frac(num, den):
         return F.when(
@@ -1708,7 +1683,6 @@ def novelty_scores(
     id_col: str,
     *,
     n: int = 5,
-    round_scale: int = 6,
 ) -> DataFrame:
     """X83 n-gram novelty vs a reference corpus: fraction of a document's
     DISTINCT word n-grams absent from the reference — the inverse of
@@ -1760,7 +1734,7 @@ def novelty_scores(
         .distinct()
         .withColumn("_seen", F.lit(1))
     )
-    mult = float(10**round_scale)
+    mult = 1e6
     per = (
         d_grams.join(r_grams, "gh", "left")
         .groupBy(id_col)
@@ -1794,10 +1768,6 @@ def structural_repetition(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    *,
-    line_sep: str = "\n",
-    para_sep: str = "\n\n",
-    round_scale: int = 6,
 ) -> DataFrame:
     """Gopher structural-repetition signals (Rae et al. 2021 §A1.1): the
     fraction of LINES (resp. paragraphs) that are duplicates of an earlier
@@ -1813,7 +1783,7 @@ def structural_repetition(
       mass, where the duplicated mass of a line appearing c times is
       (c - 1) · len(line) — algebraically ``total_chars - distinct_chars``,
       so no per-distinct counting loop is needed.
-    - same pair for paragraphs (split on ``para_sep`` first).
+    - same pair for paragraphs (split on blank lines first).
 
     Documents with no non-empty lines get NULL ratios (nothing to judge —
     the caller's quality gate decides, matching quality_scores' stance).
@@ -1827,7 +1797,7 @@ def structural_repetition(
     Reference semantics: Rae et al. 2021 (Gopher) repetition filters; same
     rounding grid as repetition_scores so both engines agree bit-for-bit.
     """
-    mult = float(10**round_scale)
+    mult = 1e6
 
     def segs(sep: str) -> F.Column:
         return F.filter(
@@ -1837,8 +1807,8 @@ def structural_repetition(
 
     staged = df.select(
         F.col(id_col),
-        segs(line_sep).alias("_ln"),
-        segs(para_sep).alias("_pa"),
+        segs("\n").alias("_ln"),
+        segs("\n\n").alias("_pa"),
     ).select(
         F.col(id_col),
         "_ln",
@@ -1881,7 +1851,6 @@ def remove_boilerplate_lines(
     id_col: str,
     *,
     min_df: int = 3,
-    line_sep: str = "\n",
 ) -> DataFrame:
     """C4-style cross-corpus boilerplate removal (Raffel et al. 2020 §2.2):
     drop every line that occurs ``min_df``+ times across the WHOLE corpus
@@ -1917,7 +1886,7 @@ def remove_boilerplate_lines(
     → NULL clean_text, zero counts.
     """
     lines = F.filter(
-        F.transform(F.split(F.col(text_col), line_sep), lambda s: F.trim(s)),
+        F.transform(F.split(F.col(text_col), "\n"), lambda s: F.trim(s)),
         lambda s: F.length(s) > 0,
     )
     # stage_barrier: InferFiltersFromGenerate derives size(_ls)>0 from the
@@ -1942,7 +1911,7 @@ def remove_boilerplate_lines(
                 F.array_sort(F.collect_list(F.struct("i", "ln"))),
                 lambda s: s["ln"],
             ),
-            line_sep,
+            "\n",
         ).alias("_clean"),
         F.count(F.lit(1)).cast("long").alias("n_lines_kept"),
     )

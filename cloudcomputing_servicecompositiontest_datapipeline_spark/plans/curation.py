@@ -13,7 +13,6 @@ from ..operators import curation as cu
 from ..operators import inference as inf
 from ..operators import similarity as sim
 from ..operators import text as tx
-from ..session import apply_runtime_conf
 from ..sources import star
 from ..sources.io import zorder_key
 from .registry import query
@@ -22,7 +21,6 @@ _NORM = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_conf(spark)
     return star.table(spark, sf_dir, "documents")
 
 
@@ -170,7 +168,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X30 int8 absmax quantization with per-vector reconstruction-error
     digests — 4x smaller ANN working set; engine-independent floor(x+0.5)
     rounding makes the quantized representation itself hash-checkable."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     return sim.quantization_error_report(emb)
 
@@ -233,7 +230,6 @@ def similarity_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate) is engine-portable arithmetic, with the mean recomposed as
     Σn_hit/(k·n) so no float accumulation order leaks into the hash; the
     quantitative floor stays pinned in tests/test_curation.py."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return sim.quantized_topk_recall(emb, queries, k=5)
@@ -267,7 +263,6 @@ def layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     idea from pure bit arithmetic; file-level narrowing asserted in
     tests/test_api_io.py).  One tiny stats agg, then a row-local codegen'd
     bit fold."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ev.select(
         "event_id", zorder_key(ev, ["user_id", "event_id"], bits=12).alias("zkey")
@@ -542,7 +537,6 @@ def similarity_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     SFs — the r8 verdict's no->5s-non-headline rule.  The unbounded encode
     is the production pq_encode operator, exercised at full width in
     tests and the sf1 curvature bench."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 2000)
     cbs = sim.pq_seed_codebooks(emb, m=16, k=16, seed=42)
     d = 16 * len(cbs[0][0])
@@ -634,7 +628,6 @@ def similarity_pq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rows-only in r8's second pass).  Declared corpus is the fixed
     vec_id<2000 slice (= the whole sf0.01 gate corpus; caps the timed cost
     of the decimal folds at larger SFs — see similarity_pq_encode)."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 2000)
     cbs = sim.pq_seed_codebooks(emb, m=8, k=32, seed=42)
     d = 8 * len(cbs[0][0])
@@ -736,7 +729,6 @@ def drift_events_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-accumulate for engine-independent sums."""
     from ..operators.quality_checks import psi_drift
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return psi_drift(
         ev.filter(F.col("event_id") % 2 == 0),
@@ -769,7 +761,6 @@ def drift_documents_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     count aggregate per side, broadcast one-row totals."""
     from ..operators.quality_checks import categorical_drift
 
-    apply_runtime_conf(spark)
     d = star.table(spark, sf_dir, "documents")
     return categorical_drift(
         d.filter(F.col("doc_id") % 2 == 0),
@@ -809,7 +800,6 @@ def similarity_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB-oracle-checked (upgraded from rows-only in r8); production
     callers keep the default xxhash64 family, distortion bounds pinned by
     the eval twin + a mode-agreement test."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     proj = sim.random_projection(emb, out_dim=16, hash_fn="md5_32", in_dim=64)
     mult = 1000000.0
@@ -876,7 +866,6 @@ def similarity_jl_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB-oracle-checked (upgraded from rows-only in r8); production
     callers keep the default xxhash64 family, distortion floors pinned in
     tests either way."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     return sim.projection_distortion_eval(emb, out_dim=16, hash_fn="md5_32", in_dim=64)
 

@@ -13,7 +13,6 @@ from ..operators import dedup as dd
 from ..operators import multimodal as mm
 from ..operators import similarity as sim
 from ..operators import text as tx
-from ..session import apply_runtime_conf
 from ..sources import star
 from .registry import query
 
@@ -29,7 +28,6 @@ _ANN_DIM = 64
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_conf(spark)
     return star.table(spark, sf_dir, "documents")
 
 
@@ -313,7 +311,6 @@ def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 exact ANN baseline: brute-force cosine top-3 for query vectors
     (vec_id < 10) against the corpus; decimal-accumulated dot products keep
     the score hash partition-order-insensitive."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     return sim.brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=3)
 
@@ -357,7 +354,6 @@ def similarity_bruteforce_scale_probe(spark: SparkSession, sf_dir: str) -> DataF
     ~40M decimal fold terms of genuinely parallel CPU, fully oracle-
     checked down to the decimal-exact global sum.  Output is one
     (n_pairs, sum_cosine) row."""
-    apply_runtime_conf(spark)
     from ..sources.star import ensure_parallelism
 
     emb = star.table(spark, sf_dir, "embeddings")
@@ -400,7 +396,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate candidates (the semantic-dedup stage of an LLM pipeline).
     Exact all-pairs on a bounded subset here; the scale path reuses the
     LSH/IVF bucketing from similarity.py so only same-bucket pairs score."""
-    apply_runtime_conf(spark)
     from ..operators.similarity import _dot_dec, _with_norm
     from ..sources.star import stage_barrier
 
@@ -460,7 +455,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_semantic_centroids``, whose k-means blocking keeps block size
     controlled by n_centroids).  DuckDB computes the same CC fixpoint with a
     recursive CTE."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 400)
     return sim.semantic_dedup(emb, threshold=0.35, block_col="label")
 
@@ -547,7 +541,6 @@ def dedup_semantic_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-agreement and invariant pins in tests/test_extensions.py."""
     import math
 
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     # sqrt-rule quantizer width, recomputed by the oracle's kk CTE; an
     # empty corpus short-circuits to the seed trainer's loud ValueError
@@ -571,7 +564,6 @@ def dedup_semantic_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def docs_join_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal-adjacent: text table joined to its embedding table on the
     shared id (the standard document↔vector layout) with per-language stats."""
-    apply_runtime_conf(spark)
     d = star.table(spark, sf_dir, "documents")
     e = star.table(spark, sf_dir, "embeddings")
     s = F.sum(F.col("label").cast("decimal(28,4)")).cast("double")
@@ -661,7 +653,6 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeded baseline and vs brute force is pinned in
     tests/test_extensions.py::test_ivf_seed_centers_portable and the
     ann-eval floors."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     centers = sim.ivf_seed_centers(emb, n_centroids=8, seed=42)
     return sim.ivf_topk(
@@ -724,7 +715,6 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall curve (0.28 → 0.98 over 1 → 8 tables on the fixture) is measured
     by similarity_ann_eval and pinned in tests along with a md5/xxhash
     mode-agreement check."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     return sim.lsh_topk(
         emb,
@@ -1378,7 +1368,6 @@ def embedding_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     the semantic-clustering primitive (IVF retraining, per-cluster probes).
     Exploded output keeps the driver canonicalizer array-free; the one
     shuffle reduces to n_labels x dim rows."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     return sim.label_centroids(emb)
 
@@ -1937,7 +1926,6 @@ def similarity_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_extensions.py.  Output: (method, n_truth, n_hit, recall)."""
     from ..operators import similarity as sim
 
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     k = 5
@@ -2068,7 +2056,6 @@ def similarity_ann_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     law.  Output: (method, setting, n_truth, n_hit, recall), ordered."""
     from ..operators import similarity as sim
 
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     k = 5
@@ -2325,7 +2312,6 @@ def embedding_normalize_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals (D bounded by the model, the IVF-centroid justification), then
     a row-local normalize.  Exploded to (vec_id, dim, z) for the oracle
     hash; the operator's native output is the normalized array."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     out = sim.normalize_embeddings_zscore(emb)
     return out.select(
@@ -2366,7 +2352,6 @@ def events_decayed_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and raw double sums would hash-diverge."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.decayed_activity(ev, half_life_hours=24.0)
 
@@ -2476,7 +2461,6 @@ def events_mad_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     anomalies it hunts."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.robust_stats_by_group(ev, "event_type", "value")
 
@@ -2499,7 +2483,6 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg whose cardinality is days-squared, never events."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.cohort_retention(ev)
 
@@ -2542,7 +2525,6 @@ def events_outliers_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds compare ROUNDED stats so both engines cut identically."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.robust_outliers(ev, "event_type", "value", "event_id", k=3.0)
 
@@ -2668,7 +2650,6 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local, tiny rollup -- no self-joins or windows at any scale."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.funnel_conversion(ev, ["view", "click", "purchase"])
 
@@ -2738,7 +2719,6 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank fusion -- the production default because RRF compares ranks, never
     raw scores across modalities.  Only |panel|*k rows move after the two
     retrievers; fusion is one union + tiny groupBy + windowed top-k."""
-    apply_runtime_conf(spark)
     docs = _docs(spark, sf_dir)
     emb = star.table(spark, sf_dir, "embeddings")
     panel = [("0", ["hash", "join"]), ("1", ["window", "sort"]), ("2", ["vector", "scan"])]
@@ -3071,7 +3051,6 @@ def events_burst_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     stddev builtins).  Reduce side is |types|x|hours| rows, never events."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.burst_detection(ev)
 
@@ -3148,7 +3127,6 @@ def embedding_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     an IVF training sample skews every centroid).  Map-only row-local
     array expressions; norm² folds in array order so it is
     engine-identical without decimal machinery."""
-    apply_runtime_conf(spark)
     emb = star.table(spark, sf_dir, "embeddings")
     return sim.embedding_qc(emb, "embedding", "vec_id", expected_dim=_ANN_DIM)
 
@@ -3196,7 +3174,6 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicate means decimal-accumulated, band = [5%, 95%] quantiles."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.bootstrap_ci(ev, "value", "event_type", "event_id")
 
@@ -3308,7 +3285,6 @@ def curation_quantile_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row broadcast) and row-local interpolation."""
     from ..operators import curation as cu
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     new = ev.filter(F.col("event_id") % 2 == 1)
     ref = ev.filter(F.col("event_id") % 2 == 0)
@@ -3333,7 +3309,6 @@ def curation_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership is row-local."""
     from ..operators import curation as cu
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return cu.temporal_split_embargo(
         ev, "ts", "event_id", train_frac=0.8, embargo_seconds=86400.0
@@ -3361,7 +3336,6 @@ def dedup_fuzzy_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation-blocked Levenshtein<=2 self-join (record linkage / master-data
     dedup).  Per-block quadratic with the LSH-style skew cap; levenshtein
     is a built-in on both engines."""
-    apply_runtime_conf(spark)
     sup = star.table(spark, sf_dir, "supplier")
     return dd.fuzzy_pairs_by_block(
         sup, "s_name", "s_suppkey", "s_nationkey", max_distance=2
@@ -3456,7 +3430,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities from exact integer counts."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.transition_matrix(ev)
 
@@ -3503,7 +3476,6 @@ def events_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifetimes| rows."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.survival_curve(ev, horizon_hours=24.0)
 
@@ -3550,7 +3522,6 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-accumulated moments, engine-identical z statistics."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.ab_test_zscores(ev, F.col("user_id") % 2 == 1)
 
@@ -3607,7 +3578,6 @@ def events_cusum_shifts(spark: SparkSession, sf_dir: str) -> DataFrame:
     beside the X63 spike detector."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.cusum_changepoints(ev)
 
@@ -3721,7 +3691,6 @@ def events_rolling_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense-axis aggregate; trailing means from exact integer sums."""
     from ..operators import features as ft
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return ft.rolling_rate(ev)
 

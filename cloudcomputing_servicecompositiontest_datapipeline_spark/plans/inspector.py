@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.inspector import flatten_cpu_polls
-from ..session import apply_runtime_conf
 from ..sources import star
 from .registry import query
 
@@ -43,7 +42,6 @@ def inspector_nested_poll_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-poll value + last−first delta (Inspector.py:144-229).  ``event_id``
     plays the poll timestamp (unique per user → a total order both engines
     agree on); ``value`` plays cpuUser."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     nested = ev.groupBy("user_id").agg(
         F.collect_list(

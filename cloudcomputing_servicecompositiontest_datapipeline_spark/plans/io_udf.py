@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import sql_dsum, dsum
 from ..functions.udf import grouped_apply, register_sql_function, user_function_udf
-from ..session import apply_runtime_conf, scratch_root
+from ..session import scratch_root
 from ..sources import io as sio
 from ..sources import star
 from .registry import query
@@ -30,7 +30,6 @@ def io_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1+S4: CSV sink → CSV scan round-trip preserves values exactly
     (shortest-repr doubles survive the text hop); the aggregate over the
     round-tripped data must hash-match the oracle computed on the original."""
-    apply_runtime_conf(spark)
     li = star.table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
     )
@@ -52,7 +51,6 @@ def io_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def io_json_runs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6+S7: JSON-record sink → source round-trip (the run{i}.json folder
     flow, report_generator.py:446-485)."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     path = os.path.join(tempfile.mkdtemp(dir=scratch_root(), prefix="sg_json_"), "runs")
     sio.write_runs(ev, path)
@@ -73,7 +71,6 @@ def udf_user_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1: arbitrary per-record user code as a vectorized pandas UDF
     (yourFunction analogue, handler.py:2-19).  Arrow-batched; deterministic
     arithmetic so the oracle can check the full pipeline."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
 
     @F.pandas_udf("double")
@@ -93,7 +90,6 @@ def udf_user_function(spark: SparkSession, sf_dir: str) -> DataFrame:
 def udf_sql_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4: user function published into the SQL namespace
     (spark.udf.register — the engine's @cloud_function analogue)."""
-    apply_runtime_conf(spark)
 
     def score(v: pd.Series) -> pd.Series:
         return v * 2.0 + 1.0
@@ -119,7 +115,6 @@ def udaf_grouped_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5: custom per-group reduction via grouped applyInPandas
     (report_generator.py:308-326's config-dispatched reductions, beyond
     avg/sum/list)."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events").select("event_type", "value")
 
     def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -152,7 +147,6 @@ def udaf_grouped_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rename_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P15: attribute rename between pipeline stages
     (transitions {"message": "name"}, experiment_caller.py:190-193)."""
-    apply_runtime_conf(spark)
     return (
         star.table(spark, sf_dir, "events")
         .select("event_id", "event_type", "value")
@@ -178,7 +172,6 @@ def payload_merge_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P16: payload/dict merge with child-over-parent priority
     ({**parent, **payload}, experiment_orchestrator.py:117-128) — per-column
     coalesce after a broadcast join of the defaults document."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     defaults = ev.sparkSession.createDataFrame(
         [("view", 100.0, "fallback")], ["event_type", "default_value", "source"]
@@ -206,7 +199,6 @@ def payload_cycling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U3: payload-list cycling to match the run count
     (payloadList += payload, experiment_caller.py:274-276) — sequence +
     explode + modular indexing instead of a driver loop."""
-    apply_runtime_conf(spark)
     payloads = F.array(F.lit("a"), F.lit("b"), F.lit("c"))
     return (
         spark.range(10)

@@ -9,7 +9,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.joins import binned_runtime_overlap, runtime_overlap, tenancy_annotate
-from ..session import apply_runtime_conf
 from ..sources import star
 from .registry import query
 
@@ -23,7 +22,6 @@ _ORACLE_END = "epoch_us(ts) + cast(floor(value * 1000000.0) AS bigint)"
 
 
 def _intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     start = F.unix_micros(F.col("ts"))
     return ev.select(
@@ -153,7 +151,6 @@ def overlap_global_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tenancy_annotate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2/W3 tenancy annotate-back (report_generator.py:231-255): the
     reference's build-dict-then-stamp second pass is one window exchange."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     return tenancy_annotate(ev, "user_id", "event_type").select(
         "event_id", "user_id", "tenancy"
@@ -179,7 +176,6 @@ def pipeline_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3+W1+A8+O4: pipeline-stage alignment and cumulative ``X + "Pipeline"``
     running sums (report_generator.py:115-164): stage order is the per-thread
     event order; running sum is decimal-exact so the hash is stable."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     stage_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     cum_w = (
@@ -212,7 +208,6 @@ def join_config_stamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (experiment_caller.py:98-99) — a broadcast equi-join of a tiny config
     dimension onto the fact stream (explicit ``broadcast()`` hint: the config
     side is always driver-small)."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     region = star.table(spark, sf_dir, "region")
     return ev.join(
@@ -239,7 +234,6 @@ def join_asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     same semantics).  Timestamps as epoch micros (exact ints both engines)."""
     from ..operators.joins import asof_backward_join
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", F.unix_micros("ts").alias("purchase_us")
@@ -275,7 +269,6 @@ def funnel_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-funnel analysis: users who clicked, then purchased strictly
     after their first click.  One shuffle (groupBy user) then a 1-row global
     agg — the per-entity-then-global pattern that holds at any event volume."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     f = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("first_click"),
@@ -306,7 +299,6 @@ def retention_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention: users active in week W who are also active in W+1.
     The distinct (user, week) grid is tiny relative to raw events (one
     map-side distinct prunes before the self-join on user_id+week)."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     wk = ev.select(
         "user_id", F.date_trunc("week", "ts").cast("date").alias("w")
@@ -341,7 +333,6 @@ def events_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFr
     agg), days reduce to new-user counts, and the cumulative sum runs over
     the tiny per-day series.  EXACT at any scale — the expensive distinct
     collapses map-side; only |days| rows reach the running-sum window."""
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(F.min(F.col("ts").cast("date")).alias("d"))
     daily = first_seen.groupBy("d").agg(F.count(F.lit(1)).alias("new_users"))
@@ -381,7 +372,6 @@ def skew_key_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the diagnosed key is high-cardinality."""
     from ..operators.skew import skew_key_report as _report
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     out = _report(ev, "event_type", top_k=10)
     mult = 1000000.0

@@ -8,9 +8,12 @@ re-exports ``QUERIES`` / ``ORACLES``.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import apply_runtime_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -20,15 +23,26 @@ ORACLES: dict[str, str] = {}
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a declared query; ``oracle`` is the DuckDB-equivalent ANSI SQL
-    (omit for non-SQL-expressible ops → driver does a rows-only check)."""
+    (omit for non-SQL-expressible ops → driver does a rows-only check).
+
+    The registered function applies the engine's session conf
+    (:func:`~..session.apply_runtime_conf`) before building, so no query
+    sets it up itself.  It replaces the module-level name too: a direct
+    ``module.query_fn(spark, sf_dir)`` call gets the same set-up."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def built(spark: SparkSession, sf_dir: str) -> DataFrame:
+            apply_runtime_conf(spark)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = built
         if oracle is not None:
             ORACLES[name] = " ".join(oracle.split())
-        return fn
+        return built
 
     return deco
 

@@ -14,13 +14,11 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import DEC, davg, dsum, fround, sql_davg, sql_dsum, sql_fround
 from ..operators.report import ReportConfig, invalidator_filter, report, schema_unify, warmup_filter
-from ..session import apply_runtime_conf
 from ..sources import star
 from .registry import query
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_conf(spark)
     return star.table(spark, sf_dir, "events")
 
 
@@ -330,7 +328,6 @@ def report_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree of IEEE double ops, identical on both engines, floor-rounded at
     1e-6.  No iterative fitting, no driver-side math — scales as one
     aggregation regardless of row count."""
-    apply_runtime_conf(spark)
     li = star.table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("decimal(18,4)")
     y = F.col("l_extendedprice").cast("decimal(18,4)")
@@ -852,7 +849,6 @@ def report_regression_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, broadcast back), a row-local prediction on test, one MAPE
     aggregate — two shuffles total, both partial-agg; APE terms are
     engine-identical doubles decimal-accumulated (psi pattern)."""
-    apply_runtime_conf(spark)
     li = star.table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("decimal(18,4)")
     y = F.col("l_extendedprice").cast("decimal(18,4)")

@@ -12,7 +12,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import apply_runtime_conf, scratch_root
+from ..session import scratch_root
 from ..sources import star
 from ..streaming import (
     available_now_compile,
@@ -25,7 +25,6 @@ from .registry import query
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_conf(spark)
     return star.table(spark, sf_dir, "events")
 
 
@@ -241,7 +240,6 @@ def streaming_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_admitted == min(cap, per-source total), pinned in tests)."""
     from ..streaming.stateful import source_quota_admit
 
-    apply_runtime_conf(spark)
     docs = star.table(spark, sf_dir, "documents")
     workdir = tempfile.mkdtemp(dir=scratch_root(), prefix="sg_quota_stream_")
     json_dir = os.path.join(workdir, "docs")
@@ -283,7 +281,6 @@ def streaming_burst_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     including a cross-drain state-carryover case."""
     from ..streaming.stateful import burst_monitor
 
-    apply_runtime_conf(spark)
     ev = star.table(spark, sf_dir, "events")
     workdir = tempfile.mkdtemp(dir=scratch_root(), prefix="sg_burst_stream_")
     json_dir = os.path.join(workdir, "ev")

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import sql_davg
 from ..operators.transform import first_wins_dedup
-from ..session import apply_runtime_conf
 from ..sources import star
 from .registry import query
 
@@ -70,7 +69,6 @@ def tlq_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-merge-joins on the same key the dedup window shuffled on, so Catalyst
     reuses the partitioning (one shuffle of lineitem total at scale).
     """
-    apply_runtime_conf(spark)
     li = star.table(spark, sf_dir, "lineitem")
     orders = star.table(spark, sf_dir, "orders")
     # (linenumber, partkey, suppkey, extendedprice) is a total order within an
@@ -106,7 +104,6 @@ def tlq_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tlq_dedup_first_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 in isolation: first order per customer in orderkey order
     (Transform.java:49,58-59 HashSet first-wins, deterministic tiebreak)."""
-    apply_runtime_conf(spark)
     orders = star.table(spark, sf_dir, "orders")
     return first_wins_dedup(orders, "o_custkey", F.col("o_orderkey")).select(
         F.col("o_custkey").alias("cust"),
@@ -125,7 +122,6 @@ def tlq_dedup_first_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tlq_decode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3 categorical decode (Transform.java:272-287) + uses count."""
-    apply_runtime_conf(spark)
     orders = star.table(spark, sf_dir, "orders")
     return (
         orders.select(
@@ -151,7 +147,6 @@ def tlq_invalid_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4 invalid-value substitution: unparsable MM/dd/yyyy date becomes the
     literal "INVALID DATE" (Transform.java:106-108).  One in every 100 keys is
     given a deliberately bogus date string to exercise the failure path."""
-    apply_runtime_conf(spark)
     orders = star.table(spark, sf_dir, "orders")
     datestr = F.when(F.col("o_orderkey") % 100 == 0, F.lit("13/45/2020")).otherwise(
         F.date_format(F.col("o_orderdate"), "MM/dd/yyyy")
@@ -180,7 +175,6 @@ def tlq_typed_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5 typed cast projection (LoadData.java:137-152): string→int/double/
     decimal casts, including a string round-trip like the reference's
     stringly-typed CSV→SQL load."""
-    apply_runtime_conf(spark)
     li = star.table(spark, sf_dir, "lineitem")
     return li.select(
         F.col("l_orderkey").alias("order_id"),
@@ -207,7 +201,6 @@ def tlq_typed_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tlq_processing_time_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2 date-diff derive aggregated per decoded priority — the TLQ "Query"
     stage the reference delegates to an external DBMS (SURVEY.md §3.2)."""
-    apply_runtime_conf(spark)
     from ..functions.exact import davg
 
     li = star.table(spark, sf_dir, "lineitem")

@@ -19,13 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import DEC, dsum, fround, sql_dsum, sql_fround
-from ..session import apply_runtime_conf
 from ..sources import star
 from .registry import query
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_conf(spark)
     return star.table(spark, sf_dir, name)
 
 

@@ -6,13 +6,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import apply_runtime_conf
 from ..sources import star
 from .registry import query
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_conf(spark)
     return star.table(spark, sf_dir, "events")
 
 

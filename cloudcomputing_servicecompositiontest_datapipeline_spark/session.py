@@ -48,7 +48,7 @@ ENGINE_RUNTIME_CONF = {
     # errors then carry the JVM context only, values are untouched.  The
     # flag is read once and cached process-wide, so it must be set before
     # the first Column op (get_spark: builder conf; apply_runtime_conf:
-    # queries call it before building expressions).
+    # the registry calls it before building a query's expressions).
     "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Exact decimal aggregation needed for oracle hash-matching.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
@@ -107,7 +107,13 @@ def get_spark(app_name: str = "spark-graft", master: str | None = None) -> Spark
     )
     for k, v in ENGINE_RUNTIME_CONF.items():
         builder = builder.config(k, v)
-    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+    # Half the host's physical memory, at most 24g: a fixed 24g heap can
+    # outgrow a smaller host, whose OOM killer then takes the whole JVM.
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    builder = builder.config(
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(half_mb, 24 * 1024)}m"),
+    )
     builder = builder.config("spark.sql.files.maxPartitionBytes", "128MB")
     # Static conf — only effective when this builder launches the JVM (the
     # bench and tools do); an externally created session keeps its own dirs.
@@ -184,15 +190,17 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     """Best-effort apply of runtime-settable conf to an externally created session
     (the driver hands us its own SparkSession in ``__spark_entry__``).
 
-    Memoized with a canary: every registered query calls this before
-    building expressions, so the 11 ``conf.set`` py4j round-trips (~40 ms)
-    were paid per plan build.  After the first full apply we only re-read
-    the timeZone canary (one round-trip); if something reset the session
-    (a new hostile session under the same object is impossible, but a test
-    or tool may unset engine conf wholesale) the canary misses and the full
-    apply runs again.  Operators that mutate engine conf mid-session
-    (bounded_state_partitions, cluster_canonical) set/restore under
-    try/finally, so the memo never masks their changes."""
+    The registry calls this before building every registered query
+    (``plans/registry.query``), so no query sets conf up itself.
+    Memoized with a canary, since the 11 ``conf.set`` py4j round-trips
+    (~40 ms) would otherwise be paid per plan build.  After the first full
+    apply we only re-read the timeZone canary (one round-trip); if
+    something reset the session (a new hostile session under the same
+    object is impossible, but a test or tool may unset engine conf
+    wholesale) the canary misses and the full apply runs again.  The one
+    operator that changes engine conf mid-session
+    (``bounded_state_partitions``) restores it under try/finally, so the
+    memo never masks its change."""
     if getattr(spark, "_sg_conf_applied", False):
         try:
             if spark.conf.get("spark.sql.session.timeZone", None) == "UTC":

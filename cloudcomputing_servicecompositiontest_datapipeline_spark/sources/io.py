@@ -10,7 +10,7 @@
 | S3/S8 S3 get / bulk pull | any reader over ``s3a://`` URIs — no copy step |
 
 At 100 TB: CSV/JSON are ingest formats only — land them to parquet
-partitioned on query keys; the writers here take a ``partition_by`` for that.
+partitioned on query keys (``DataFrameWriter.partitionBy``).
 """
 
 from __future__ import annotations
@@ -20,6 +20,9 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+#: Row bound of the driver-assembled single-file compat report.
+COMPAT_MAX_ROWS = 100_000
 
 
 def read_csv(
@@ -36,12 +39,9 @@ def read_csv(
     return reader.csv(path)
 
 
-def write_csv(df: DataFrame, path: str, *, partition_by: list[str] | None = None) -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """S4: header CSV sink (Transform_result.csv analogue)."""
-    w = df.write.mode("overwrite").option("header", True)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.csv(path)
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
 def read_runs(spark: SparkSession, path: str, schema: StructType | str | None = None) -> DataFrame:
@@ -75,7 +75,7 @@ def write_report_csv(sections: dict[str, DataFrame], out_dir: str) -> dict[str, 
 
 
 def write_report_csv_compat(
-    sections: dict[str, DataFrame], path: str, *, max_rows: int = 100_000
+    sections: dict[str, DataFrame], path: str, *, max_rows: int = COMPAT_MAX_ROWS
 ) -> str:
     """S9 compat mode: ONE multi-section CSV text file in the reference's
     layout (exampleOutput.csv: raw rows first, then one block per group key,
@@ -111,7 +111,6 @@ def render_report_compat(
     list_runs_of_category: tuple[str, ...] = (),
     ignore_from_groups: tuple[str, ...] = (),
     ignore_by_group: dict[str, list[str]] | None = None,
-    max_rows: int = 100_000,
 ) -> str:
     """S9 layout-compat mode: render the report as ONE text blob in the
     reference's EXACT section layout (`report_generator.py:170-198` header +
@@ -121,7 +120,7 @@ def render_report_compat(
     sub-blocks) — byte-for-byte against ``test/history/exampleOutput.csv``
     given the same input (pinned by tests/test_golden_layout.py).
 
-    Driver-side assembly bounded by ``max_rows`` (same contract as
+    Driver-side assembly bounded by ``COMPAT_MAX_ROWS`` (same contract as
     :func:`write_report_csv_compat`): a single text artifact is a
     REPORTING surface, not a data interchange — the scale path stays
     :func:`write_report_csv`.
@@ -135,10 +134,10 @@ def render_report_compat(
     within a category are ordered by the group key on BOTH sides here
     (the reference sorts sub-keys too, ``:333``)."""
     ignore_by_group = ignore_by_group or {}
-    raw_rows = raw.limit(max_rows + 1).collect()
-    if len(raw_rows) > max_rows:
+    raw_rows = raw.limit(COMPAT_MAX_ROWS + 1).collect()
+    if len(raw_rows) > COMPAT_MAX_ROWS:
         raise ValueError(
-            f"raw section exceeds compat max_rows={max_rows}; "
+            f"raw section exceeds compat max_rows={COMPAT_MAX_ROWS}; "
             "use write_report_csv (per-section directories) at scale"
         )
     integral = {
@@ -172,9 +171,9 @@ def render_report_compat(
 
     for key in sorted(k for k in sections if k != "raw" and not k.startswith("raw:")):
         sec = sections[key]
-        rows = sec.limit(max_rows + 1).collect()
-        if len(rows) > max_rows:
-            raise ValueError(f"section {key!r} exceeds compat max_rows={max_rows}")
+        rows = sec.limit(COMPAT_MAX_ROWS + 1).collect()
+        if len(rows) > COMPAT_MAX_ROWS:
+            raise ValueError(f"section {key!r} exceeds compat max_rows={COMPAT_MAX_ROWS}")
         # the reference interleaves avg_/sum_/X_list columns in sorted order
         # of the UNDERLYING attribute name (report_generator.py:297-326)
         value_cols = sorted(

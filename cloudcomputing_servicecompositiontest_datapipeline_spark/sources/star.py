@@ -81,7 +81,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition a narrow input so compute-heavy downstream ops use every
     core.  Small single-file parquet arrives as ONE partition — fine for
     scans, a 32× slowdown for CPU-bound ops (shingling, hashing, vector
@@ -97,12 +97,12 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     subtrees canonicalize identically, so AQE's exchange reuse executes
     the scan+shuffle once instead of per branch.  Values are unaffected —
     round-robin placement never changes row content."""
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
     cached = getattr(df, "_sg_ensure_parallelism", None)
-    if cached is not None and cached[0] == target:
-        return cached[1]
+    if cached is not None:
+        return cached
+    target = df.sparkSession.sparkContext.defaultParallelism
     out = df.repartition(target) if df.rdd.getNumPartitions() < target else df
-    df._sg_ensure_parallelism = (target, out)
+    df._sg_ensure_parallelism = out
     return out
 
 

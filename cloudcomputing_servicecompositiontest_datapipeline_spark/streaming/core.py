@@ -102,7 +102,6 @@ def available_now_compile(
 def tumbling_windowed_agg(
     events: DataFrame,
     *,
-    ts_col: str = "ts",
     window: str = "1 hour",
     watermark: str = "2 hours",
     keys: list[str] | None = None,
@@ -112,8 +111,8 @@ def tumbling_windowed_agg(
     state and drops data later than its horizon."""
     df = events
     if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    group = [F.window(F.col(ts_col), window).alias("win")] + [
+        df = df.withWatermark("ts", watermark)
+    group = [F.window(F.col("ts"), window).alias("win")] + [
         F.col(k) for k in (keys or [])
     ]
     return df.groupBy(*group).agg(
@@ -127,17 +126,15 @@ def tumbling_windowed_agg(
 def sliding_windowed_agg(
     events: DataFrame,
     *,
-    ts_col: str = "ts",
     window: str = "1 hour",
     slide: str = "30 minutes",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """T3 sliding variant: overlapping windows (each event lands in
     window/slide buckets)."""
     df = events
     if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(F.window(F.col(ts_col), window, slide).alias("win")).agg(
+        df = df.withWatermark("ts", "2 hours")
+    return df.groupBy(F.window(F.col("ts"), window, slide).alias("win")).agg(
         F.count(F.lit(1)).alias("n_events")
     )
 
@@ -145,27 +142,22 @@ def sliding_windowed_agg(
 def session_windowed_counts(
     events: DataFrame,
     *,
-    ts_col: str = "ts",
-    key: str = "user_id",
     gap: str = "5 minutes",
-    watermark: str = "30 minutes",
 ) -> DataFrame:
-    """T5: sessionization — events of one key within ``gap`` of each other
-    share a session (container-lifetime analogue: runs sharing a uuid)."""
+    """T5: sessionization — events of one ``user_id`` within ``gap`` of each
+    other share a session (container-lifetime analogue: runs sharing a
+    uuid)."""
     df = events
     if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
+        df = df.withWatermark("ts", "30 minutes")
     return df.groupBy(
-        F.session_window(F.col(ts_col), gap).alias("session"), F.col(key)
+        F.session_window(F.col("ts"), gap).alias("session"), F.col("user_id")
     ).agg(F.count(F.lit(1)).alias("n_events"))
 
 
 def stream_exact_dedup(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ts_col: str = "ts",
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Streaming exact dedup (dedup-on-arrival): drop any document whose
@@ -183,10 +175,10 @@ def stream_exact_dedup(
     from ..operators.dedup import normalized_text
 
     hashed = docs.withColumn(
-        "content_hash", F.sha2(normalized_text(F.col(text_col)), 256)
+        "content_hash", F.sha2(normalized_text(F.col("text")), 256)
     )
     return (
-        hashed.withWatermark(ts_col, watermark)
+        hashed.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["content_hash"])
-        .select(id_col, "content_hash", ts_col)
+        .select("doc_id", "content_hash", "ts")
     )

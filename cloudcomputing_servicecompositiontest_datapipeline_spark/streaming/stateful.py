@@ -57,10 +57,10 @@ def _track(
     )
 
 
-def container_lifetimes(events: DataFrame, key: str = "uuid") -> DataFrame:
-    """Apply the stateful tracker per container key.  Works on a streaming
+def container_lifetimes(events: DataFrame) -> DataFrame:
+    """Apply the stateful tracker per container ``uuid``.  Works on a streaming
     input (state persists across micro-batches via the state store)."""
-    return events.groupBy(key).applyInPandasWithState(
+    return events.groupBy("uuid").applyInPandasWithState(
         _track,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -86,8 +86,6 @@ def source_quota_admit(
     docs: DataFrame,
     *,
     cap: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Admit at most ``cap`` documents per source across the whole stream,
     first-come-first-admitted (id order inside a micro-batch for
@@ -102,7 +100,7 @@ def source_quota_admit(
     ) -> Iterator[pd.DataFrame]:
         kept, seen = state.get if state.exists else (0, 0)
         for pdf in pdfs:
-            pdf = pdf.sort_values(id_col)
+            pdf = pdf.sort_values("doc_id")
             seen += len(pdf)
             room = cap - kept
             if room > 0:
@@ -111,14 +109,14 @@ def source_quota_admit(
                 yield pd.DataFrame(
                     {
                         "source": [key[0]] * n,
-                        "doc_id": take[id_col].to_numpy(),
+                        "doc_id": take["doc_id"].to_numpy(),
                         "kept_rank": range(kept + 1, kept + 1 + n),
                     }
                 )
                 kept += n
         state.update((kept, seen))
 
-    return docs.groupBy(source_col).applyInPandasWithState(
+    return docs.groupBy("source").applyInPandasWithState(
         admit,
         outputStructType=QUOTA_OUTPUT_SCHEMA,
         stateStructType=QUOTA_STATE_SCHEMA,
@@ -137,9 +135,6 @@ BURST_OUTPUT_SCHEMA = (
 def burst_monitor(
     counts: DataFrame,
     *,
-    type_col: str = "event_type",
-    bucket_col: str = "bucket_ts",
-    count_col: str = "n_events",
     z_threshold: float = 2.0,
 ) -> DataFrame:
     """X69 ONLINE burst monitor — the streaming face of
@@ -161,17 +156,17 @@ def burst_monitor(
     ) -> Iterator[pd.DataFrame]:
         n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
         for pdf in pdfs:
-            pdf = pdf.sort_values(bucket_col)
+            pdf = pdf.sort_values("bucket_ts")
             out = {k: [] for k in ("bucket_ts", "n_events", "z_score", "is_burst", "n_seen")}
             for _, row in pdf.iterrows():
-                x = float(row[count_col])
+                x = float(row["n_events"])
                 if n >= 2:
                     var = m2 / n
                     std = var**0.5
                     z = (x - mean) / std if std > 0 else None
                 else:
                     z = None
-                out["bucket_ts"].append(row[bucket_col])
+                out["bucket_ts"].append(row["bucket_ts"])
                 out["n_events"].append(int(x))
                 out["z_score"].append(z)
                 out["is_burst"].append(bool(z is not None and z >= z_threshold))
@@ -193,7 +188,7 @@ def burst_monitor(
             )
         state.update((n, mean, m2))
 
-    return counts.groupBy(type_col).applyInPandasWithState(
+    return counts.groupBy("event_type").applyInPandasWithState(
         score,
         outputStructType=BURST_OUTPUT_SCHEMA,
         stateStructType=BURST_STATE_SCHEMA,

@@ -5,14 +5,14 @@ execution; the engine's contract on top of that is:
 
 1. Concurrent read-only engine queries return exactly what serial runs
    return (no shared mutable planning state leaks between threads).
-2. No operator leaves the session conf changed after it returns — the one
-   operator that overrides conf mid-flight (``cluster_canonical``'s AQE
-   parallelismFirst toggle, operators/dedup.py) must restore-by-unset.
-3. Even while that override is live, a concurrently running query on the
-   same session stays CORRECT: the toggle only changes physical
-   partitioning decisions, never semantics (the documented non-reentrancy
-   is about two overlapping *cluster_canonical* calls clobbering each
-   other's restore, not about correctness of bystander queries).
+2. No operator leaves the session conf changed after it returns.  The
+   engine conf (``session.ENGINE_RUNTIME_CONF``, AQE parallelismFirst=false
+   included) is applied once per query by the registry, and
+   ``cluster_canonical`` (operators/dedup.py) sets no conf: an unset key
+   stays unset.
+3. A query running concurrently with ``dedup_cluster_canonical`` on the
+   same session stays CORRECT: parallelismFirst only changes physical
+   partitioning decisions, never semantics.
 """
 
 from __future__ import annotations
@@ -74,7 +74,7 @@ def test_no_operator_leaves_session_conf_dirty(spark, sf_dir, queries):
     operator that sets without restoring (or restores a default by pinning
     an explicit value, the get-vs-get(None) bug class) fails here."""
     sample = [
-        "dedup_cluster_canonical",  # the AQE parallelismFirst toggle
+        "dedup_cluster_canonical",  # runs under AQE parallelismFirst=false
         "dedup_cluster_canonical_lsh",
         "dedup_minhash_lsh",
         "report_full",
@@ -94,10 +94,9 @@ def test_no_operator_leaves_session_conf_dirty(spark, sf_dir, queries):
 
 
 def test_bystander_query_correct_while_conf_override_live(spark, sf_dir, queries):
-    """While cluster_canonical's conf override is in flight in one thread, a
-    bystander query hammering the same session from another thread must
-    keep returning its serial result (planning-conf toggles change physical
-    plans, never answers)."""
+    """While dedup_cluster_canonical runs in one thread, a bystander query
+    hammering the same session from another thread must keep returning its
+    serial result (planning conf changes physical plans, never answers)."""
     bystander = "report_group_avg"
     serial = _rows_key(queries[bystander](spark, sf_dir).collect())
     stop = threading.Event()
@@ -127,10 +126,11 @@ def test_bystander_query_correct_while_conf_override_live(spark, sf_dir, queries
 
 
 def test_cluster_canonical_restore_is_unset_not_pin(spark):
-    """Restore must UNSET a key the session never set (pinning the default
-    as an explicit value is the bug class the r6 verdict flagged).
+    """A key the session never set stays UNSET after cluster_canonical
+    (pinning the default as an explicit value is the bug class the r6
+    verdict flagged): the operator sets no conf.
 
-    Since r10 the engine session factory itself sets parallelismFirst=false
+    The engine session factory sets parallelismFirst=false
     (ENGINE_RUNTIME_CONF), so the fixture session arrives with the key set;
     unset it first to reconstruct the untouched-session precondition this
     test is about, and restore the engine posture afterwards."""

@@ -145,6 +145,28 @@ def test_apply_runtime_conf_memo_reapplies_on_canary_miss(spark):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def test_registry_applies_conf_for_query_without_own_setup(spark, sf_dir):
+    """The registry applies the engine conf before building any query, so a
+    query whose body never calls apply_runtime_conf (the streaming dedup
+    drain) still runs in UTC on a session that had another zone and no
+    memo."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.plans import registry
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.session import (
+        apply_runtime_conf,
+    )
+
+    registry.load_all()
+    key = "spark.sql.session.timeZone"
+    spark.conf.set(key, "America/New_York")
+    spark._sg_conf_applied = False
+    try:
+        registry.QUERIES["streaming_dedup_on_arrival"](spark, sf_dir)
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, "UTC")
+        apply_runtime_conf(spark)
+
+
 def test_scratch_root_honors_env(tmp_path, monkeypatch):
     """scratch_root prefers SG_SCRATCH_DIR (the cluster-deployment knob)
     over the RAM-backed local default."""

@@ -408,10 +408,11 @@ def test_ivf_topk_raises_cleanly_on_unusable_corpus(spark):
 
 
 def test_cluster_canonical_restores_session_conf(spark):
-    """cluster_canonical pins AQE parallelismFirst=false for its loop; an
-    untouched session must come back EXPLICITLY-UNSET (not pinned to the
-    default's value), and an explicitly-set session gets its value back
-    (r6 advice)."""
+    """cluster_canonical leaves the session conf as it found it: the AQE
+    parallelismFirst=false it runs under is the engine posture the registry
+    applies, not a per-call override, so an untouched session stays
+    EXPLICITLY-UNSET (not pinned to the default's value) and an
+    explicitly-set session keeps its value (r6 advice)."""
     key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     docs = spark.createDataFrame([(1, "t"), (2, "t")], ["doc_id", "text"])
     pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])

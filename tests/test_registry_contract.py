@@ -121,9 +121,8 @@ def test_oracle_queries_return_no_nested_columns(spark, sf_dir):
     most queries (trainer queries run their bounded collect), and builds
     are independent, so they run on a small thread pool (guide §2.6:
     overlap independent driver work — this was the suite's single slowest
-    test at 45 s serial; conf set/restore inside cluster_canonical is a
-    no-op collision since parallelismFirst=false became the engine
-    posture)."""
+    test at 45 s serial; the registry applies the session conf before each
+    build, so concurrent builds all set the same values)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import types as T
@@ -152,7 +151,11 @@ def test_bench_contract_shape():
     surface as a driver-side crash at round end)."""
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("bench", "/root/repo/bench.py")
+    from pathlib import Path
+
+    spec = importlib.util.spec_from_file_location(
+        "bench", Path(__file__).resolve().parents[1] / "bench.py"
+    )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
 
@@ -320,3 +323,123 @@ def test_every_package_definition_is_reachable():
     dead, stale = _unreachable_definitions()
     assert not dead, f"unreachable outside tests (delete, or add a TEST_REFERENCES reason): {dead}"
     assert not stale, f"stale TEST_REFERENCES entries: {stale}"
+
+
+def _package_files():
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    return repo, repo / registry.__name__.split(".")[0]
+
+
+def test_only_the_registry_applies_runtime_conf():
+    """The registry applies the engine conf before every query build, so no
+    other plans/ module imports or calls apply_runtime_conf: set-up has one
+    home, and no query can skip it."""
+    import ast
+
+    _, pkg = _package_files()
+    offenders = []
+    for f in sorted((pkg / "plans").glob("*.py")):
+        if f.name == "registry.py":
+            continue
+        for n in ast.walk(ast.parse(f.read_text())):
+            names = (
+                [a.name for a in n.names] if isinstance(n, ast.ImportFrom)
+                else [n.id] if isinstance(n, ast.Name)
+                else [n.attr] if isinstance(n, ast.Attribute) else []
+            )
+            if "apply_runtime_conf" in names:
+                offenders.append(f"{f.name}:{n.lineno}")
+    assert not offenders, f"plans/ modules setting up conf themselves: {offenders}"
+
+
+#: Defaulted parameters no call sets that stay parameters: deployment
+#: settings a host chooses, keyed (package-relative module, function,
+#: parameter).
+DEPLOYMENT_SETTINGS = {
+    ("session.py", "get_spark", "master"): "the cluster manager URL is the deployment's choice; local[SPARK_GRAFT_CPUS] when absent",
+}
+
+
+def _unset_defaulted_parameters() -> tuple[list[str], list[str]]:
+    """(defaulted parameters of top-level package functions outside plans/
+    that no call passes, by keyword or position, minus DEPLOYMENT_SETTINGS;
+    stale DEPLOYMENT_SETTINGS keys).
+
+    Calls are matched by function name, through ``import ... as`` aliases,
+    over the package, ``tools/``, ``bench.py``, ``__spark_entry__.py``,
+    ``perfbench/`` and ``tests/``.  A call through a ``*``/``**`` spread,
+    or a function used as a value (``f = a if x else b``, a callback),
+    counts as setting every parameter: its calls cannot be matched.
+    """
+    import ast
+    from collections import defaultdict
+
+    repo, pkg = _package_files()
+    params = {}  # (module, function, parameter) -> position, or None if keyword-only
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg)
+        if rel.parts[0] == "plans":
+            continue
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                pos = [*a.posonlyargs, *a.args]
+                first = len(pos) - len(a.defaults)
+                for i in range(first, len(pos)):
+                    params[(str(rel), node.name, pos[i].arg)] = i
+                for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                    if d is not None:
+                        params[(str(rel), node.name, arg.arg)] = None
+
+    keywords, positions, spread = defaultdict(set), defaultdict(int), set()
+    callers = [pkg, repo / "tools", repo / "perfbench", repo / "tests"]
+    files = [p for d in callers for p in d.rglob("*.py")]
+    for f in [*files, repo / "bench.py", repo / "__spark_entry__.py"]:
+        tree = ast.parse(f.read_text())
+        alias = {
+            a.asname: a.name
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Import, ast.ImportFrom))
+            for a in n.names
+            if a.asname
+        }
+        called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in called:
+                used = n.attr if isinstance(n, ast.Attribute) else n.id
+                spread.add(alias.get(used, used))
+            if not isinstance(n, ast.Call):
+                continue
+            name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+            name = alias.get(name, name)
+            if any(isinstance(a, ast.Starred) for a in n.args) or any(
+                k.arg is None for k in n.keywords
+            ):
+                spread.add(name)
+            positions[name] = max(positions[name], len(n.args))
+            keywords[name].update(k.arg for k in n.keywords)
+
+    unset = {
+        (m, fn, p)
+        for (m, fn, p), i in params.items()
+        if fn not in spread
+        and p not in keywords[fn]
+        and (i is None or i >= positions[fn])
+    }
+    never = sorted("{}:{}({})".format(*k) for k in unset - DEPLOYMENT_SETTINGS.keys())
+    stale = sorted("{}:{}({})".format(*k) for k in DEPLOYMENT_SETTINGS.keys() - unset)
+    return never, stale
+
+
+def test_every_defaulted_parameter_is_set_by_some_caller():
+    """Ratchet against knobs nobody turns: a defaulted parameter of a
+    package function outside plans/ that no caller passes is a constant in
+    disguise — inline it (or share one module constant between twins that
+    must agree).  Deployment settings are the reasoned exception; an
+    exception that some caller now sets, or whose parameter is gone, fails
+    too."""
+    never, stale = _unset_defaulted_parameters()
+    assert not never, f"defaulted parameters no caller sets (make them constants): {never}"
+    assert not stale, f"stale DEPLOYMENT_SETTINGS entries: {stale}"
