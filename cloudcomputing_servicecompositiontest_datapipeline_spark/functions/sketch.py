@@ -30,19 +30,15 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 
-def _cm_bucket(item: F.Column, r: int, width: int, bucket_hash: str) -> F.Column:
-    """Row-``r`` bucket of ``item``: ``xxhash64`` (production, 64-bit avalanche)
-    or ``md5_32`` (first 8 hex chars of ``md5("r:item")`` as a 32-bit int —
-    engine-portable, so the whole sketch→merge→point-query pipeline can be
-    recomputed bit for bit by a SQL oracle; the dedup_simhash precedent)."""
-    if bucket_hash == "xxhash64":
-        return F.pmod(F.xxhash64(F.lit(r), item), F.lit(width))
-    if bucket_hash == "md5_32":
-        h = F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{r}:"), item.cast("string"))), 1, 8), 16, 10
-        ).cast("long")
-        return F.pmod(h, F.lit(width))
-    raise ValueError(f"unknown bucket_hash {bucket_hash!r}")
+def _cm_bucket(item: F.Column, r: int, width: int) -> F.Column:
+    """Row-``r`` bucket of ``item``: the first 8 hex chars of
+    ``md5("r:item")`` as a 32-bit int — engine-portable, so the whole
+    sketch→merge→point-query pipeline can be recomputed bit for bit by a
+    SQL oracle (the dedup_simhash precedent)."""
+    h = F.conv(
+        F.substring(F.md5(F.concat(F.lit(f"{r}:"), item.cast("string"))), 1, 8), 16, 10
+    ).cast("long")
+    return F.pmod(h, F.lit(width))
 
 
 def cm_sketch(
@@ -52,7 +48,6 @@ def cm_sketch(
     *,
     depth: int = 4,
     width: int = 256,
-    bucket_hash: str = "xxhash64",
 ) -> DataFrame:
     """One Count-Min sketch per group: a flat ``depth*width`` LONG array
     in column ``cm``.
@@ -63,16 +58,13 @@ def cm_sketch(
     lookup — the shuffles move (group, cell, count) triples, never items.
 
     NULL items are uncountable keys and are excluded BEFORE hashing, the
-    same shape distinct_sketch uses — filtering the cells after the explode
-    (the r8 form) only caught md5 mode, where md5(NULL) is NULL; xxhash64
-    hashes NULL to a real per-row bucket, so the two modes produced
-    different sketches on null-bearing corpora (r8 ADVICE)."""
+    same shape distinct_sketch uses."""
     cells = df.where(F.col(item_col).isNotNull()).select(
         *group_cols,
         F.explode(
             F.array(
                 *[
-                    (F.lit(r * width) + _cm_bucket(F.col(item_col), r, width, bucket_hash))
+                    (F.lit(r * width) + _cm_bucket(F.col(item_col), r, width))
                     .cast("int")
                     .alias("c")
                     for r in range(depth)
@@ -122,16 +114,14 @@ def cm_query(
     *,
     depth: int = 4,
     width: int = 256,
-    bucket_hash: str = "xxhash64",
 ) -> DataFrame:
     """Point-query: estimated frequency of ``item_col``'s value in each
-    row's sketch = min over the depth rows of that item's counter.
-    ``bucket_hash`` must match the one the sketch was built with."""
+    row's sketch = min over the depth rows of that item's counter."""
     est = F.least(
         *[
             F.element_at(
                 F.col("cm"),
-                (F.lit(r * width) + _cm_bucket(item_col, r, width, bucket_hash)).cast("int")
+                (F.lit(r * width) + _cm_bucket(item_col, r, width)).cast("int")
                 + 1,
             )
             for r in range(depth)

@@ -17,10 +17,11 @@ joins — is a Bloom filter over the corpus keys:
 2. **Collect (bounded)**: the dense word array is ``num_bits/8`` bytes
    (16 KiB at the default 2^17 bits) — bounded by the *parameter*, not the
    data, the same justification as the IVF training sample
-   (`similarity.py`).  ~10 bits/key keeps FPR under ~1%; a 1-billion-key
-   corpus needs ~1.25 GB, which still broadcasts (use ``probe="pandas"``,
-   which ships the array once per executor via ``SparkContext.broadcast``,
-   not per-task).
+   (`similarity.py`).  ~10 bits/key keeps FPR under ~1%.  The array is
+   baked into the probe's plan as one literal, which suits filters up to
+   ~1M bits; a 1-billion-key corpus (~1.25 GB) would need the array
+   broadcast instead.  The pandas-UDF broadcast probe that did that was
+   removed because no query used it.
 3. **Probe (map-local, ZERO shuffle)**: rows whose k bits are not all set
    are *definitely* absent from the corpus and pass through without
    touching a join.  Only the "maybe present" sliver — true duplicates
@@ -93,9 +94,8 @@ def might_contain(
     """JVM-side membership test: all k bits set in the literal word array.
 
     The filter is baked into the plan as a literal array (fine to ~1M bits;
-    beyond that plan size grows — switch to :func:`might_contain_pandas`,
-    which broadcasts instead).  Stays inside whole-stage codegen: no Python,
-    no join, no shuffle.
+    beyond that plan size grows).  Stays inside whole-stage codegen: no
+    Python, no join, no shuffle.
 
     The word array ships as ONE json literal (functions/fastlit):
     ``F.lit(list)`` costs one py4j round-trip per word — measured ~2 s of
@@ -112,40 +112,6 @@ def might_contain(
     )
 
 
-def might_contain_pandas(
-    df: DataFrame,
-    words: list[int],
-    key: Column,
-    *,
-    num_bits: int = DEFAULT_NUM_BITS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    flag_col: str = "_maybe",
-) -> DataFrame:
-    """Scale-path membership test: positions computed JVM-side (so hashing is
-    bit-identical to :func:`might_contain`), bit tests vectorized in an
-    Arrow-batched pandas UDF over a ``SparkContext.broadcast`` of the word
-    array — one copy per executor, any filter size the executor heap fits.
-    Returns ``df`` plus a boolean ``flag_col``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as _F
-
-    bc = df.sparkSession.sparkContext.broadcast(
-        np.array([w & 0xFFFFFFFFFFFFFFFF for w in words], dtype=np.uint64)
-    )
-
-    def _probe_fn(pos):
-        arr = bc.value
-        if len(pos) == 0:
-            return pd.Series([], dtype=bool)
-        mat = np.stack(pos.to_numpy()).astype(np.uint64)  # (batch, k)
-        bits = (arr[(mat >> np.uint64(6))] >> (mat & np.uint64(63))) & np.uint64(1)
-        return pd.Series(bits.all(axis=1))
-
-    _probe = _F.pandas_udf(_probe_fn, returnType="boolean")
-    return df.withColumn(flag_col, _probe(_positions(key, num_bits, num_hashes)))
-
-
 def prefiltered_anti_join(
     incoming: DataFrame,
     corpus_keys: DataFrame,
@@ -153,7 +119,6 @@ def prefiltered_anti_join(
     *,
     num_bits: int = DEFAULT_NUM_BITS,
     num_hashes: int = DEFAULT_NUM_HASHES,
-    probe: str = "literal",
 ) -> DataFrame:
     """Exact ``incoming LEFT ANTI JOIN corpus`` with a Bloom fast path.
 
@@ -165,8 +130,7 @@ def prefiltered_anti_join(
     at scale, persist the keyed projection or write it once between stages
     if the source scan is the dominant cost.
 
-    ``probe``: ``"literal"`` bakes the filter into the plan (small filters,
-    pure codegen); ``"pandas"`` broadcasts it (arbitrarily large filters)."""
+    The filter is baked into the plan (:func:`might_contain`)."""
     words = bloom_build(
         corpus_keys, F.col(key), num_bits=num_bits, num_hashes=num_hashes
     )
@@ -175,16 +139,9 @@ def prefiltered_anti_join(
     # predicate pushdown inlines that chain num_hashes times per row
     # (plan_audit LambdaCaptureHash).  The fence pins it to one evaluation.
     incoming = stage_barrier(incoming, key)
-    if probe == "pandas":
-        flagged = might_contain_pandas(
-            incoming, words, F.col(key), num_bits=num_bits, num_hashes=num_hashes
-        )
-        fresh = flagged.filter(~F.col("_maybe")).drop("_maybe")
-        maybe = flagged.filter(F.col("_maybe")).drop("_maybe")
-    else:
-        flag = might_contain(words, F.col(key), num_bits=num_bits, num_hashes=num_hashes)
-        fresh = incoming.filter(~flag)
-        maybe = incoming.filter(flag)
+    flag = might_contain(words, F.col(key), num_bits=num_bits, num_hashes=num_hashes)
+    fresh = incoming.filter(~flag)
+    maybe = incoming.filter(flag)
     # corpus side fenced too: constraint propagation copies the probe
     # predicate across the join equality onto the corpus branch — useless
     # (every corpus key passes its own filter) and, unfenced, it re-derives

@@ -712,7 +712,6 @@ def quantile_map(
     id_col: str,
     *,
     grid: int = 1000,
-    broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """X70 quantile mapping (CDF matching): re-express each NEW score as
     the REFERENCE-distribution value at the same percentile — the score
@@ -742,8 +741,7 @@ def quantile_map(
     the rank table's actual post-shuffle size — a small table converts to
     a broadcast join, a continuous all-distinct corpus exceeds the
     threshold and keeps the shuffle join (the executor-OOM escape), and no
-    driver-side probe job is needed; pass ``broadcast_ranks=True`` to
-    force the planner hint.
+    driver-side probe job is needed.
 
     Rows with a NULL or non-finite (NaN/±Inf) score are EXCLUDED on BOTH
     sides (a missing score has no rank position; Spark windows order NULLS
@@ -798,20 +796,13 @@ def quantile_map(
     q_hi = F.element_at(q, F.least(lo + F.lit(2), F.lit(grid + 1)))
     mapped = q_lo + frac * (q_hi - q_lo)
     mult = 1e6
-    # Join-strategy gate: the default (None) now defers to AQE's runtime
-    # sort-merge→broadcast conversion, which measures the rank table's
-    # ACTUAL post-shuffle bytes — strictly safer than the former
-    # distinct-count probe (it needed a whole extra job per execution) and
-    # scale-adaptive by construction: a continuous all-distinct corpus
-    # exceeds the broadcast threshold and stays a shuffle join, the common
-    # small rank table converts at runtime.  ``True`` still forces the
-    # planner hint; ``False`` keeps the hint off (AQE may still convert a
-    # provably tiny table — that conversion is the safe direction).
-    if broadcast_ranks is True:
-        rank_side = F.broadcast(ranks)
-    else:
-        rank_side = ranks
-    return base.join(rank_side, F.col("value") == F.col("_v")).select(
+    # No join hint: AQE's runtime sort-merge→broadcast conversion measures
+    # the rank table's ACTUAL post-shuffle bytes — strictly safer than the
+    # former distinct-count probe (it needed a whole extra job per
+    # execution) and scale-adaptive by construction: a continuous
+    # all-distinct corpus exceeds the broadcast threshold and stays a
+    # shuffle join, the common small rank table converts at runtime.
+    return base.join(ranks, F.col("value") == F.col("_v")).select(
         id_col,
         "value",
         (F.floor(pr * mult + 0.5) / mult).alias("quantile"),

@@ -162,7 +162,6 @@ def lsh_candidate_pairs(
     bands: int = 4,
     rows_per_band: int = 4,
     max_bucket_size: int | None = None,
-    bucket_hash: str = "xxhash64",
 ) -> DataFrame:
     """X2: band the signatures and bucket the docs — docs sharing any band
     bucket become candidate pairs.  The shuffle key is (band, band_hash):
@@ -174,7 +173,7 @@ def lsh_candidate_pairs(
     signatures → banding) once per side and shuffles it twice; the grouped
     form computes it once, shuffles the narrow (id, band, bucket) rows once,
     and expands pairs inside the bucket row.  The member list per bucket is
-    small by construction (bucket = 1/2^64 hash cell), and degenerate
+    small by construction (bucket = 1/2^128 hash cell), and degenerate
     buckets are exactly what ``max_bucket_size`` bounds.
 
     ``max_bucket_size`` is the skew guard for real corpora: a degenerate
@@ -200,22 +199,12 @@ def lsh_candidate_pairs(
     away.  Without a cap (None) the single-pass form runs — the caller is
     accepting unbounded buckets explicitly.
 
-    ``bucket_hash`` picks the band-bucket key: ``"xxhash64"`` (default —
-    64-bit long, the fast production path) or ``"md5"`` (the md5 hex string
-    of the same joined slice — engine-portable, so an md5_32-signed LSH
-    pipeline is DuckDB-oracle-checkable end to end).  Bucket keys only need
-    EQUALITY semantics, so the swap changes nothing downstream."""
-    if bucket_hash == "xxhash64":
-        def bucket_fn(s):
-            return F.xxhash64(s)
-    elif bucket_hash == "md5":
-        # 16-byte binary digest, not the 32-char hex string: bucket keys
-        # only need equality (docstring above), unhex(hex) is injective,
-        # and the (band, bucket) exchange carries half the key bytes
-        def bucket_fn(s):
-            return F.unhex(F.md5(s))
-    else:
-        raise ValueError(f"unknown bucket_hash {bucket_hash!r}")
+    The band-bucket key is the md5 digest of the band's joined slice —
+    engine-portable, so an md5_32-signed LSH pipeline is
+    DuckDB-oracle-checkable end to end.  It is the 16-byte binary digest,
+    not the 32-char hex string: bucket keys only need EQUALITY semantics,
+    unhex(hex) is injective, and the (band, bucket) exchange carries half
+    the key bytes."""
     banded = sig.select(
         F.col(id_col),
         F.explode(
@@ -223,13 +212,15 @@ def lsh_candidate_pairs(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        bucket_fn(
-                            F.array_join(
-                                F.transform(
-                                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                                    lambda x: x.cast("string"),
-                                ),
-                                ",",
+                        F.unhex(
+                            F.md5(
+                                F.array_join(
+                                    F.transform(
+                                        F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
+                                        lambda x: x.cast("string"),
+                                    ),
+                                    ",",
+                                )
                             )
                         ).alias("bucket"),
                     )
@@ -290,17 +281,16 @@ def minhash_near_dups(
     threshold: float = 0.5,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """X2 end-to-end: LSH candidates → exact Jaccard verification → pairs ≥
     threshold.  Candidates only are verified (bucket-bounded);
     ``max_bucket_size`` passes through as the degenerate-bucket skew guard.
 
-    ``hash_fn``: ``"xxhash64"`` (default, 64-bit salted production hashes)
-    or ``"md5_32"`` (salted md5-prefix 32-bit signature slots + md5 string
-    band buckets — engine-portable, so the WHOLE candidates→verify pipeline
-    is DuckDB-oracle-checkable; slightly higher band-collision rate from the
-    32-bit slots, which the exact-Jaccard verify step absorbs).
+    Signatures are salted md5 32-bit slots and band buckets are md5
+    digests — engine-portable, so the WHOLE candidates→verify pipeline is
+    DuckDB-oracle-checkable (the 32-bit slots collide slightly more often
+    in a band than 64-bit hashes would, which the exact-Jaccard verify step
+    absorbs).
 
     Signature and verification share ONE item space — the ``shingle_n``-word
     shingle set — so the MinHash collision probability estimates exactly the
@@ -332,62 +322,51 @@ def minhash_near_dups(
         .select(F.col(id_col), items.alias("items"))
         .persist()
     )
-    if hash_fn == "xxhash64":
-        mins = [
-            F.array_min(F.transform(F.col("items"), lambda s: F.xxhash64(F.lit(k), s)))
-            for k in range(num_hashes)
-        ]
-        sig = sets.select(F.col(id_col), F.array(*mins).alias("sig"))
-        bucket_hash = "xxhash64"
-    elif hash_fn == "md5_32":
-        # one md5 digest yields FOUR independent 32-bit slots (substrings of
-        # the 32 hex chars) — ceil(num_hashes/4) digests per shingle instead
-        # of num_hashes, the dominant cost of the portable mode.  The nested
-        # transform stages each shingle's digest array ONCE (no CSE inside
-        # interpreted higher-order lambdas — the SCALING.md lambda-capture
-        # note), then fans the 8-hex-char windows out row-locally.
-        n_digests = (num_hashes + 3) // 4
-        slots = F.transform(
-            F.col("items"),
-            lambda s: F.transform(
-                F.sequence(F.lit(0), F.lit(n_digests - 1)),
-                lambda g: F.md5(F.concat(g.cast("string"), F.lit(":"), s)),
-            ),
-        )
-        def _slot_min(k: int):
-            # closure factory, NOT a default-arg lambda: a 2-param lambda is
-            # read by pyspark as (element, index).  Fixed-width lowercase
-            # hex sorts like its numeric value, so take the min over the
-            # 8-hex-char windows and parse ONE winner per (doc, slot) —
-            # not one conv per shingle (16×|shingles| string-parses saved;
-            # values identical by monotonicity of conv on fixed-width hex).
-            return F.conv(
-                F.array_min(
-                    F.transform(
-                        F.col("_digests"),
-                        lambda ds: F.substring(
-                            F.element_at(ds, k // 4 + 1), 8 * (k % 4) + 1, 8
-                        ),
-                    )
-                ),
-                16,
-                10,
-            ).cast("long")
+    # one md5 digest yields FOUR independent 32-bit slots (substrings of
+    # the 32 hex chars) — ceil(num_hashes/4) digests per shingle instead
+    # of num_hashes, the dominant cost of the signatures.  The nested
+    # transform stages each shingle's digest array ONCE (no CSE inside
+    # interpreted higher-order lambdas — the SCALING.md lambda-capture
+    # note), then fans the 8-hex-char windows out row-locally.
+    n_digests = (num_hashes + 3) // 4
+    slots = F.transform(
+        F.col("items"),
+        lambda s: F.transform(
+            F.sequence(F.lit(0), F.lit(n_digests - 1)),
+            lambda g: F.md5(F.concat(g.cast("string"), F.lit(":"), s)),
+        ),
+    )
 
-        mins = [_slot_min(k) for k in range(num_hashes)]
-        sig = sets.select(F.col(id_col), slots.alias("_digests")).select(
-            F.col(id_col), F.array(*mins).alias("sig")
-        )
-        bucket_hash = "md5"
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    def _slot_min(k: int):
+        # closure factory, NOT a default-arg lambda: a 2-param lambda is
+        # read by pyspark as (element, index).  Fixed-width lowercase
+        # hex sorts like its numeric value, so take the min over the
+        # 8-hex-char windows and parse ONE winner per (doc, slot) —
+        # not one conv per shingle (16×|shingles| string-parses saved;
+        # values identical by monotonicity of conv on fixed-width hex).
+        return F.conv(
+            F.array_min(
+                F.transform(
+                    F.col("_digests"),
+                    lambda ds: F.substring(
+                        F.element_at(ds, k // 4 + 1), 8 * (k % 4) + 1, 8
+                    ),
+                )
+            ),
+            16,
+            10,
+        ).cast("long")
+
+    mins = [_slot_min(k) for k in range(num_hashes)]
+    sig = sets.select(F.col(id_col), slots.alias("_digests")).select(
+        F.col(id_col), F.array(*mins).alias("sig")
+    )
     cands = lsh_candidate_pairs(
         sig,
         id_col,
         bands=bands,
         rows_per_band=rows_per_band,
         max_bucket_size=max_bucket_size,
-        bucket_hash=bucket_hash,
     )
     ta = sets.withColumnRenamed(id_col, "id_a").withColumnRenamed("items", "items_a")
     tb = sets.withColumnRenamed(id_col, "id_b").withColumnRenamed("items", "items_b")
@@ -422,39 +401,20 @@ def minhash_near_dups(
     )
 
 
-def simhash(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    bits: int = 64,
-    *,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """X2 variant: 64-bit SimHash per document, fully JVM-side and ROW-LOCAL:
+def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """X2 variant: 32-bit SimHash per document, fully JVM-side and ROW-LOCAL:
     hash each distinct token once (``transform``), then per bit vote +1/-1
     over the document's own hash array (``aggregate``), sign → bit.  No
     explode, no groupBy, ZERO shuffle — a pure map stage at any scale.
-    (The earlier explode→groupBy(64 sums) formulation computes identical
-    signatures but shuffles ~|tokens|× the row count.)
+    (The earlier explode→groupBy(per-bit sums) formulation computes
+    identical signatures but shuffles ~|tokens|× the row count.)
 
-    ``hash_fn`` picks the token hash: ``"xxhash64"`` (default — the fast
-    production path, 64 usable bits) or ``"md5_32"`` (first 8 hex chars of
-    md5 as a 32-bit int — engine-portable, so the signature is
-    DuckDB-oracle-checkable exactly like the winnowing fingerprints;
-    ``bits`` must be <= 32 in that mode)."""
-    if hash_fn == "xxhash64":
-        def tok_hash(t):
-            return F.xxhash64(t)
-    elif hash_fn == "md5_32":
-        if bits > 32:
-            raise ValueError(f"md5_32 provides 32 vote bits, got bits={bits}")
-        def tok_hash(t):
-            return F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    The token hash is the first 8 hex chars of md5 as a 32-bit int — one
+    vote per bit, engine-portable, so the signature is
+    DuckDB-oracle-checkable exactly like the winnowing fingerprints."""
     hashes = F.transform(
         F.array_distinct(F.split(normalized_text(F.col(text_col)), " ")),
-        tok_hash,
+        lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"),
     )
     votes = [
         F.aggregate(
@@ -463,10 +423,10 @@ def simhash(
             lambda acc, h: acc
             + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
         )
-        for b in range(bits)
+        for b in range(32)
     ]
     sig = None
-    for b in range(bits):
+    for b in range(32):
         bit = F.when(votes[b] > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
         term = F.shiftleft(bit, b)
         sig = term if sig is None else sig.bitwiseOR(term)

@@ -76,7 +76,7 @@ def constraint_report(
     )
 
 
-def profile_columns(df: DataFrame, cols: list[str], *, exact_distinct: bool = True) -> DataFrame:
+def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     """Column-profile report (the ANALYZE TABLE / Deequ-profile analogue a
     curation pipeline runs before declaring constraints): one output row per
     profiled column — ``(col_name, n_rows, n_null, n_distinct, min_value,
@@ -84,11 +84,9 @@ def profile_columns(df: DataFrame, cols: list[str], *, exact_distinct: bool = Tr
     share one report schema.
 
     Scale design: every statistic for every column folds into ONE aggregate
-    over ONE scan.  ``exact_distinct=True`` uses ``count(distinct c)`` —
-    Spark plans the multi-distinct via a single Expand (still one scan, but
-    the expand multiplies rows by the column count); at 100 TB pass
-    ``exact_distinct=False`` to swap in ``approx_count_distinct`` (HLL,
-    no Expand) — the profile is advisory, ±2% is fine there.
+    over ONE scan.  Distinct counts are exact ``count(distinct c)`` — Spark
+    plans the multi-distinct via a single Expand (still one scan, but the
+    expand multiplies rows by the column count).
 
     Dirty-data stance (deliberate, opposite of the monitoring operators'
     finite guards): a NaN in a double column SURFACES as ``max_value =
@@ -100,14 +98,11 @@ def profile_columns(df: DataFrame, cols: list[str], *, exact_distinct: bool = Tr
         raise ValueError("no columns to profile")
     aggs: list[Column] = [F.count(F.lit(1)).cast("long").alias("__n")]
     for c in cols:
-        distinct = (
-            F.countDistinct(c) if exact_distinct else F.approx_count_distinct(c)
-        )
         aggs += [
             F.coalesce(F.sum(F.col(c).isNull().cast("long")), F.lit(0))
             .cast("long")
             .alias(f"__null_{c}"),
-            distinct.cast("long").alias(f"__nd_{c}"),
+            F.countDistinct(c).cast("long").alias(f"__nd_{c}"),
             F.min(F.col(c)).cast("string").alias(f"__min_{c}"),
             F.max(F.col(c)).cast("string").alias(f"__max_{c}"),
         ]

@@ -12,8 +12,6 @@ accumulated in decimal so results are partition-order-insensitive.
 
 from __future__ import annotations
 
-from typing import Literal
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -175,132 +173,58 @@ def brute_force_topk(
     return topk_from_scores(brute_force_scores(corpus, queries), k)
 
 
-def _hyperplane_sign(vec: F.Column, plane: int, dim: int, hash_fn: str = "xxhash64") -> F.Column:
-    """Sign of ``vec · r_plane`` for a deterministic pseudo-random hyperplane.
+def _hyperplane(plane: int, dim: int) -> list[float]:
+    """Components of a deterministic pseudo-random hyperplane
+    (engine-portable, the dedup_simhash precedent): component j is the
+    INTEGER ``(int(md5("hp{p}:{j}")[:8], 16) % 1000) - 500``.  They are
+    plane-constant, so callers bake them into the plan as literals (Python
+    hashlib md5 == every engine's md5) instead of hashing per row."""
+    import hashlib
 
-    ``hash_fn="xxhash64"`` (production): component j of plane p is
-    ``(xxhash64("hp{p}:{j}") % 1000)/1000 - 0.5``, generated JVM-side inside
-    the row expression and folded in double — seedable, no stored model.
-
-    ``hash_fn="md5_32"`` (engine-portable declared mode, the dedup_simhash
-    precedent): component j is the INTEGER ``(int(md5("hp{p}:{j}")[:8], 16)
-    % 1000) - 500`` — the same hyperplane scaled by the positive constant
-    1000, so the sign is unchanged within the family.  The components are
-    plane-constant, so they are baked as an array literal (Python hashlib
-    md5 == every engine's md5) instead of hashing per row, and the dot is
-    accumulated in decimal so the >= 0 test is bit-identical on any engine
-    and partition order — DuckDB can recompute the whole signature."""
-    if hash_fn == "xxhash64":
-        comps = F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda j: (
-                F.pmod(
-                    F.xxhash64(F.concat(F.lit(f"hp{plane}:"), j.cast("string"))), F.lit(1000)
-                ).cast("double")
-                / 1000.0
-                - 0.5
-            ),
-        )
-        dot = F.aggregate(
-            F.zip_with(vec, comps, lambda x, r: x.cast("double") * r),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0))
-    if hash_fn == "md5_32":
-        import hashlib
-
-        comps = F.array(
-            *[
-                F.lit(
-                    float(
-                        int(hashlib.md5(f"hp{plane}:{j}".encode()).hexdigest()[:8], 16) % 1000
-                        - 500
-                    )
-                )
-                for j in range(dim)
-            ]
-        )
-        return F.when(_dot_dec(vec, comps) >= 0, F.lit(1)).otherwise(F.lit(0))
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    return [
+        float(int(hashlib.md5(f"hp{plane}:{j}".encode()).hexdigest()[:8], 16) % 1000 - 500)
+        for j in range(dim)
+    ]
 
 
-def lsh_bucket(
-    vec: F.Column, *, planes: int, dim: int, plane_offset: int = 0, hash_fn: str = "xxhash64"
-) -> F.Column:
+def _hyperplane_sign(vec: F.Column, plane: int, dim: int) -> F.Column:
+    """Sign of ``vec · r_plane`` for the :func:`_hyperplane` of ``plane``.
+    The dot is accumulated in decimal so the >= 0 test is bit-identical on
+    any engine and partition order — DuckDB can recompute the whole
+    signature."""
+    comps = F.array(*[F.lit(c) for c in _hyperplane(plane, dim)])
+    return F.when(_dot_dec(vec, comps) >= 0, F.lit(1)).otherwise(F.lit(0))
+
+
+def lsh_bucket(vec: F.Column, *, planes: int, dim: int, plane_offset: int = 0) -> F.Column:
     """Sign-pattern bucket id from ``planes`` hyperplanes (random projection).
     ``plane_offset`` selects an independent hyperplane set per LSH table."""
     bucket = None
     for p in range(planes):
         bit = F.shiftleft(
-            _hyperplane_sign(vec, plane_offset + p, dim, hash_fn).cast("long"), p
+            _hyperplane_sign(vec, plane_offset + p, dim).cast("long"), p
         )
         bucket = bit if bucket is None else bucket.bitwiseOR(bit)
     return bucket
 
 
-def _bucket_structs(
-    vec: F.Column, *, planes: int, dim: int, tables: int, hash_fn: str = "xxhash64"
-) -> F.Column:
+def _bucket_structs(vec: F.Column, *, planes: int, dim: int, tables: int) -> F.Column:
     """``array<struct<tbl,bits>>`` of every table's LSH bucket id for ``vec``
     — the signature column both ``lsh_topk`` variants explode.
 
     Construction is O(planes) Column calls regardless of ``tables``: one
-    plane-component source (a baked matrix literal in md5_32 mode, an
-    index-derived generator in xxhash64 mode) under a single table-indexed
-    ``transform`` replaces the tables x planes unrolled sign trees — whose
-    md5_32 form alone (64 ``F.lit`` py4j round-trips per plane) accounted
-    for 6.8 s of similarity_ann_sweep's 9.6 s plan build (r10 profile).
+    baked matrix literal of plane components under a single table-indexed
+    ``transform`` replaces the tables x planes unrolled sign trees, whose
+    64 ``F.lit`` py4j round-trips per plane accounted for 6.8 s of
+    similarity_ann_sweep's 9.6 s plan build (r10 profile).
     Values are bit-identical to :func:`lsh_bucket` over plane
-    ``t*planes + p``: same components, same decimal/double dot fold, same
-    ``>= 0`` sign test, same shiftleft packing."""
-    if hash_fn == "md5_32":
-        import hashlib
+    ``t*planes + p``: same components, same decimal dot fold, same ``>= 0``
+    sign test, same shiftleft packing."""
+    mat = lit_double_matrix([_hyperplane(p, dim) for p in range(tables * planes)])
 
-        mat = lit_double_matrix(
-            [
-                [
-                    float(
-                        int(hashlib.md5(f"hp{p}:{j}".encode()).hexdigest()[:8], 16) % 1000
-                        - 500
-                    )
-                    for j in range(dim)
-                ]
-                for p in range(tables * planes)
-            ]
-        )
-
-        def _sign(idx: F.Column) -> F.Column:
-            dot = _dot_dec(vec, F.element_at(mat, (idx + 1).cast("int")))
-            return F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0))
-
-    elif hash_fn == "xxhash64":
-
-        def _sign(idx: F.Column) -> F.Column:
-            comps = F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda j: (
-                    F.pmod(
-                        F.xxhash64(
-                            F.concat(
-                                F.lit("hp"), idx.cast("string"), F.lit(":"), j.cast("string")
-                            )
-                        ),
-                        F.lit(1000),
-                    ).cast("double")
-                    / 1000.0
-                    - 0.5
-                ),
-            )
-            dot = F.aggregate(
-                F.zip_with(vec, comps, lambda x, r: x.cast("double") * r),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            return F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0))
-
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    def _sign(idx: F.Column) -> F.Column:
+        dot = _dot_dec(vec, F.element_at(mat, (idx + 1).cast("int")))
+        return F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0))
 
     def _bits(t: F.Column) -> F.Column:
         bits = None
@@ -359,14 +283,14 @@ def _train_centroids(sample_vecs: list[list[float]], n_centroids: int):
 
 
 def _argmin_centroids_exact(vec: F.Column, centers, n_pick: int = 1) -> F.Column:
-    """Engine-portable twin of :func:`_argmin_centroids`: the full squared
-    distance ``Σ (x_i − c_i)²`` per centroid, each term an IEEE-double
-    subtract/square cast to decimal, folded in fixed order — so a SQL
-    oracle recomputing the same centers gets bit-identical distances and
-    therefore the identical argmin (ties broken by centroid index, exact
-    under decimals).  Float mode drops the per-row ``||x||²`` term as a
-    rank-invariant; here it must stay, because the ORACLE computes the full
-    distance and decimal equality is what makes the tie-break portable.
+    """Row-local nearest-centroid expression, engine-portable: the full
+    squared distance ``Σ (x_i − c_i)²`` per centroid, each term an
+    IEEE-double subtract/square cast to decimal, folded in fixed order — so
+    a SQL oracle recomputing the same centers gets bit-identical distances
+    and therefore the identical argmin (ties broken by centroid index, exact
+    under decimals).  Centroids are LITERALS baked into the plan, so
+    assignment is pure narrow compute — no join, no shuffle.  Returns the
+    ``n_pick`` nearest centroid ids as an array.
 
     Built as ONE nested-literal centroid table + an indexed ``transform``
     (not a per-centroid Python loop): expression construction is O(1)
@@ -434,37 +358,6 @@ def ivf_seed_centers(
     return [[float(x) for x in r._cv] for r in rows]
 
 
-def _argmin_centroids(vec: F.Column, centers, n_pick: int = 1) -> F.Column:
-    """Row-local nearest-centroid expression: for each centroid j,
-    ``||x−c_j||² = ||c_j||² − 2·x·c_j + ||x||²`` (the ``||x||²`` term is
-    constant per row and dropped); centroids are LITERALS baked into the
-    plan, so assignment is pure narrow compute — no join, no shuffle.
-    Returns the ``n_pick`` nearest centroid ids as an array (struct sort on
-    (dist, id) keeps ties deterministic).  One nested-literal table + an
-    indexed ``transform`` — O(1) Column construction like
-    :func:`_argmin_centroids_exact` (the unrolled per-centroid loop was a
-    multi-second py4j plan-build tax at k ≳ 16)."""
-    tbl = lit_double_matrix(centers)
-    norms = lit_doubles(sum(float(x) * float(x) for x in c) for c in centers)
-    entries = F.transform(
-        tbl,
-        lambda cv, j: F.struct(
-            (
-                F.element_at(norms, j + 1)
-                - 2.0
-                * F.aggregate(
-                    F.zip_with(vec, cv, lambda x, r: x.cast("double") * r),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ).alias("d"),
-            j.alias("c"),
-        ),
-    )
-    ranked = F.slice(F.array_sort(entries), 1, n_pick)
-    return F.transform(ranked, lambda s: s["c"])
-
-
 def train_ivf_centroids(
     corpus: DataFrame,
     *,
@@ -499,7 +392,6 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 4,
     centers=None,
-    exact_assign: bool = False,
     scores: DataFrame | None = None,
 ) -> DataFrame:
     """X3 IVF variant: k-means coarse quantizer → inverted lists by centroid →
@@ -514,11 +406,10 @@ def ivf_topk(
     index) train ONCE via :func:`train_ivf_centroids` instead of paying the
     bounded sample collect + Lloyd's fit per sweep point.
 
-    ``exact_assign`` switches nearest-centroid selection to the decimal-
-    exact full-distance form (:func:`_argmin_centroids_exact`) — pair it
-    with :func:`ivf_seed_centers` for the engine-portable, oracle-checkable
-    IVF mode (same inverted-list/probing shape, cross-engine-identical
-    assignments).
+    Nearest-centroid selection is the decimal-exact full-distance form
+    (:func:`_argmin_centroids_exact`) — paired with :func:`ivf_seed_centers`
+    it is the engine-portable, oracle-checkable IVF mode (cross-engine-
+    identical assignments).
 
     At 100 TB the corpus is written partitioned by ``centroid`` (the inverted
     index IS the partitioning), so a query touches n_probe/n_centroids of the
@@ -526,7 +417,7 @@ def ivf_topk(
     centroid, seeded) collected to the driver and fit with plain Lloyd's
     iterations (:func:`_train_centroids`); a distributed ML fit here would
     pay per-iteration job overhead to cluster kilobytes.  Assignment bakes
-    the centroids into the plan as literals (:func:`_argmin_centroids`) —
+    the centroids into the plan as literals (:func:`_argmin_centroids_exact`) —
     row-local, shuffle-free, embarrassingly parallel at any corpus size.
     Recall vs brute force is tunable via n_probe (tested in
     tests/test_extensions.py)."""
@@ -544,10 +435,8 @@ def ivf_topk(
     if centers is None:
         centers = train_ivf_centroids(corpus, n_centroids=n_centroids)
     dim = len(centers[0]) if len(centers) and len(centers[0]) else None
-    argmin = _argmin_centroids_exact if exact_assign else _argmin_centroids
-
     assigned = c.withColumn(
-        "centroid", argmin(F.col("cand_vec"), centers, 1)[0]
+        "centroid", _argmin_centroids_exact(F.col("cand_vec"), centers, 1)[0]
     )
     if dim is not None:
         # a wrong-dimension vector would poison the zip_with distance fold
@@ -566,7 +455,10 @@ def ivf_topk(
         # identical cosine; guard-dropped pairs are absent — the inner join
         # reproduces the norm/size filter (see lsh_topk)
         probes = q.select(
-            "query_id", F.explode(argmin(F.col("query_vec"), centers, n_probe)).alias("centroid")
+            "query_id",
+            F.explode(_argmin_centroids_exact(F.col("query_vec"), centers, n_probe)).alias(
+                "centroid"
+            ),
         )
         scored = (
             F.broadcast(probes)
@@ -581,7 +473,7 @@ def ivf_topk(
         "query_vec",
         "query_vec_norm",
         F.explode(
-            argmin(F.col("query_vec"), centers, n_probe)
+            _argmin_centroids_exact(F.col("query_vec"), centers, n_probe)
         ).alias("centroid"),
     )
 
@@ -612,13 +504,10 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
     planes: int = 4,
     dim: int = 64,
     tables: int = 1,
-    hash_fn: str = "xxhash64",
     scores: DataFrame | None = None,
 ) -> DataFrame:
     """X3 scale path: bucket both sides by hyperplane signs, score only
@@ -632,8 +521,8 @@ def lsh_topk(
     reproduces the single-table layout; the same pair surviving several
     tables scores once (distinct before ranking).
 
-    ``hash_fn`` selects the hyperplane family: ``xxhash64`` (production) or
-    ``md5_32`` (engine-portable — see :func:`_hyperplane_sign`).
+    The hyperplanes are the engine-portable md5 family (see
+    :func:`_hyperplane_sign`).
 
     ``scores`` (optional) is a precomputed :func:`brute_force_scores` table
     over the SAME corpus/queries: candidates then skip the per-occurrence
@@ -646,17 +535,15 @@ def lsh_topk(
 
     def with_buckets(df: DataFrame, id_out: str, vec_out: str) -> DataFrame:
         base = (
-            _with_norm(df, id_out, vec_out, id_col, vec_col)
+            _with_norm(df, id_out, vec_out, "vec_id", "embedding")
             if scores is None
             # score table supplied — buckets only, no norm folds
             else ensure_parallelism(df).select(
-                F.col(id_col).alias(id_out), F.col(vec_col).alias(vec_out)
+                F.col("vec_id").alias(id_out), F.col("embedding").alias(vec_out)
             )
         )
         tb = F.explode(
-            _bucket_structs(
-                F.col(vec_out), planes=planes, dim=dim, tables=tables, hash_fn=hash_fn
-            )
+            _bucket_structs(F.col(vec_out), planes=planes, dim=dim, tables=tables)
         ).alias("bk")
         return base.select("*", tb).select(
             base["*"], F.col("bk.tbl").alias("tbl"), F.col("bk.bits").alias("bits")
@@ -705,7 +592,6 @@ def lsh_topk_sweep(
     planes: int = 4,
     dim: int = 64,
     tables_list=(1, 2, 4),
-    hash_fn: str = "xxhash64",
     scores: DataFrame | None = None,
 ) -> DataFrame:
     """Multi-setting LSH top-k in ONE retrieval: result-identical to running
@@ -738,9 +624,7 @@ def lsh_topk_sweep(
             )
         )
         tb = F.explode(
-            _bucket_structs(
-                F.col(vec_out), planes=planes, dim=dim, tables=tmax, hash_fn=hash_fn
-            )
+            _bucket_structs(F.col(vec_out), planes=planes, dim=dim, tables=tmax)
         ).alias("bk")
         return base.select("*", tb).select(
             base["*"], F.col("bk.tbl").alias("tbl"), F.col("bk.bits").alias("bits")
@@ -809,7 +693,6 @@ def ivf_topk_sweep(
     n_centroids: int = 16,
     n_probe_list=(1, 2, 4),
     centers=None,
-    exact_assign: bool = False,
     scores: DataFrame | None = None,
 ) -> DataFrame:
     """Multi-setting IVF top-k in ONE retrieval: result-identical to running
@@ -820,9 +703,9 @@ def ivf_topk_sweep(
     pairs whose probe position < p: posexplode the max-width probe list,
     score once, explode per setting, rank per (setting, query).
 
-    ``exact_assign`` mirrors :func:`ivf_topk`: decimal-exact full-distance
-    assignment/probing — pair with :func:`ivf_seed_centers` for the
-    engine-portable, oracle-checkable sweep mode.
+    Assignment and probing are decimal-exact, as in :func:`ivf_topk` —
+    pair with :func:`ivf_seed_centers` for the engine-portable,
+    oracle-checkable sweep mode.
 
     ``scores`` (optional): precomputed :func:`brute_force_scores` over the
     same corpus/queries — candidates skip the per-pair cosine fold and
@@ -839,9 +722,8 @@ def ivf_topk_sweep(
     if centers is None:
         centers = train_ivf_centroids(corpus, n_centroids=n_centroids)
     dim = len(centers[0]) if len(centers) and len(centers[0]) else None
-    argmin = _argmin_centroids_exact if exact_assign else _argmin_centroids
     assigned = c.withColumn(
-        "centroid", argmin(F.col("cand_vec"), centers, 1)[0]
+        "centroid", _argmin_centroids_exact(F.col("cand_vec"), centers, 1)[0]
     )
     if dim is not None:
         assigned = assigned.where(F.size("cand_vec") == dim)
@@ -858,7 +740,7 @@ def ivf_topk_sweep(
     if scores is not None:
         probes = q.select(
             "query_id",
-            F.posexplode(argmin(F.col("query_vec"), centers, pmax)).alias(
+            F.posexplode(_argmin_centroids_exact(F.col("query_vec"), centers, pmax)).alias(
                 "_pos", "centroid"
             ),
         )
@@ -875,7 +757,7 @@ def ivf_topk_sweep(
             "query_vec",
             "query_vec_norm",
             F.posexplode(
-                argmin(F.col("query_vec"), centers, pmax)
+                _argmin_centroids_exact(F.col("query_vec"), centers, pmax)
             ).alias("_pos", "centroid"),
         )
         dot = _dot_dec(F.col("query_vec"), F.col("cand_vec")).cast("double")
@@ -949,9 +831,7 @@ def semantic_dedup(
     threshold: float = 0.35,
     block_col: str | None = None,
     n_centroids: int = 16,
-    exact_dots: bool = True,
     centers=None,
-    exact_assign: Literal[False, True, "seq"] = False,
 ) -> DataFrame:
     """X25 semantic dedup (SemDeDup-style): prune documents whose EMBEDDINGS
     are near-identical, catching paraphrases and re-renders that no lexical
@@ -975,17 +855,13 @@ def semantic_dedup(
     set under its ``_EDGES_PER_PARTITION`` is solved on the driver.
 
     ``centers`` injects a pre-built quantizer (skipping the sample +
-    Lloyd's fit); ``exact_assign`` switches block assignment to a portable
-    baked-literal argmin — ``"seq"`` for the float-sequential form
-    (list_reduce-matched, the fast portable mode) or ``True`` for the
-    decimal-exact twin.  Pair either with :func:`ivf_seed_centers` for the
-    oracle-checkable mode, exactly the IVF/PQ precedent (the float
-    ``exact_dots=False`` pair fold is itself sequential and therefore
-    list_reduce-portable)."""
-    if exact_assign not in (False, True, "seq"):
-        raise ValueError(
-            f"exact_assign must be False, True or 'seq', got {exact_assign!r}"
-        )
+    Lloyd's fit).  Block assignment is the portable baked-literal
+    float-sequential argmin (:func:`_argmin_centroids_seq`, list_reduce's
+    fold order); pair it with :func:`ivf_seed_centers` for the
+    oracle-checkable mode, exactly the IVF/PQ precedent.  Pair cosines fold
+    their dots in decimal under attribute blocking and float-sequentially
+    (:func:`_dot_seq`, itself list_reduce-portable) under centroid
+    blocking — the two arithmetics the two blocking modes' queries use."""
     if block_col is not None:
         # block attribute carried THROUGH the norm projection, not joined
         # back on the id: the join-back was an id-keyed shuffle of the
@@ -1001,10 +877,9 @@ def semantic_dedup(
             F.col(block_col).alias("_block"),
         )
     else:
-        # NULL vectors cannot be blocked (and a None reaching the pandas
-        # assignment kernel's np.stack kills the whole Arrow task); they
-        # drop out of pairing here and rejoin as singletons in the final
-        # cluster_canonical pass, which unions ALL input ids
+        # NULL vectors cannot be blocked; they drop out of pairing here and
+        # rejoin as singletons in the final cluster_canonical pass, which
+        # unions ALL input ids
         c = _with_norm(emb, "_id", "_vec", "vec_id", "embedding").where(
             F.col("_vec").isNotNull()
         )
@@ -1023,43 +898,11 @@ def semantic_dedup(
             sample = [[float(x) for x in v] for v in sample_pdf["_vec"]]
             centers = _train_centroids(sample, n_centroids)
         if len(centers) and len(centers[0]):
-            # a wrong-dimension vector makes the kernel's np.stack ragged
-            # (task-killing) — exclude it like a NULL; it rejoins as a
-            # singleton in cluster_canonical
+            # a wrong-dimension vector would silently short-zip the argmin
+            # fold — exclude it like a NULL; it rejoins as a singleton in
+            # cluster_canonical
             c = c.where(F.size("_vec") == len(centers[0]))
-        if exact_assign:
-            # portable mode: baked-literal argmin the oracle recomputes —
-            # "seq" (float sequential fold, list_reduce's order) is the fast
-            # portable form; True keeps the decimal-exact twin
-            argmin = (
-                _argmin_centroids_seq
-                if exact_assign == "seq"
-                else _argmin_centroids_exact
-            )
-            blocked = c.withColumn(
-                "_block", argmin(F.col("_vec"), centers, 1)[0]
-            )
-        else:
-            # Vectorized assignment: one Arrow-batched pandas UDF doing the
-            # (batch × centroids) distance matmul in numpy — ~5x the
-            # interpreted per-centroid fold chain for dense vector math, the
-            # same sanctioned Arrow surface as the inference harness.  Ties
-            # break to the lowest centroid index, matching
-            # _argmin_centroids' (dist, id) sort.
-            import numpy as np
-            import pandas as pd
-
-            C = np.asarray([[float(x) for x in row] for row in centers])
-
-            def _assign_fn(v):
-                if len(v) == 0:
-                    return pd.Series([], dtype="int32")
-                X = np.stack(v.to_numpy()).astype(np.float64)
-                d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                return pd.Series(d2.argmin(axis=1).astype("int32"))
-
-            _assign = F.pandas_udf(_assign_fn, returnType="int")
-            blocked = c.withColumn("_block", _assign(F.col("_vec")))
+        blocked = c.withColumn("_block", _argmin_centroids_seq(F.col("_vec"), centers, 1)[0])
 
     # The self-join below reads `blocked` TWICE; without a checkpoint Spark
     # re-evaluates the expensive row-local work (norm fold + n_centroids
@@ -1079,27 +922,15 @@ def semantic_dedup(
         "_block",
     )
     mult = 1000000.0
-    if exact_dots:
+    if block_col is not None:
         dot = _dot_dec(F.col("vec_a"), F.col("vec_b")).cast("double")
     else:
-        # Scale path: plain float64 fold in the JVM (zip_with + aggregate,
-        # left-to-right — the same summation order as a numpy einsum, so the
-        # doubles are identical), keeping Python entirely OUT of the
-        # per-pair hot path: a pandas-UDF dot pays Arrow transfer + python
-        # worker dispatch per task on the JOINED pair frame (the largest
-        # frame in the operator), which dwarfs the O(dim) arithmetic it
-        # vectorizes.  Decimal folds are only needed when a DIFFERENT
-        # engine must reproduce the exact threshold decisions (the
-        # oracle-checked attribute twin keeps exact_dots=True).
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("vec_a"),
-                F.col("vec_b"),
-                lambda x, y: x.cast("double") * y.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        # Scale path: plain float64 fold in the JVM, keeping Python
+        # entirely OUT of the per-pair hot path: a pandas-UDF dot pays
+        # Arrow transfer + python worker dispatch per task on the JOINED
+        # pair frame (the largest frame in the operator), which dwarfs the
+        # O(dim) arithmetic it vectorizes.
+        dot = _dot_seq(F.col("vec_a"), F.col("vec_b"))
     pairs = (
         a.join(b, ["_block"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1309,8 +1140,8 @@ def pq_seed_codebooks(
     :func:`pq_train`, same posture as :func:`ivf_seed_centers`): the k
     seed vectors drawn by md5_32 rank supply EVERY subspace's codebook —
     codebook j is their j-th sub-slices.  A SQL oracle recomputes the draw
-    and the slices, so pq_encode over these codebooks (with exact_assign)
-    is hash-checkable end to end.  Lloyd's-refined :func:`pq_train` stays
+    and the slices, so pq_encode over these codebooks is hash-checkable end
+    to end.  Lloyd's-refined :func:`pq_train` stays
     the production path (ADC recall floors pinned in tests)."""
     seeds = ivf_seed_centers(emb, n_centroids=k, seed=seed)
     if not seeds:
@@ -1322,34 +1153,28 @@ def pq_seed_codebooks(
     return [[row[j * sub : (j + 1) * sub] for row in seeds] for j in range(m)]
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebooks: list,
-    *,
-    exact_assign: bool = False,
-) -> DataFrame:
+def pq_encode(emb: DataFrame, codebooks: list) -> DataFrame:
     """Encode every vector to its m-byte PQ code array — codebooks are plan
     LITERALS, so encoding is row-local narrow compute (zero shuffle, the
     same no-join assignment story as IVF).  Output (id, codes:array<int>,
-    original vector for downstream rescoring).  ``exact_assign`` switches
-    per-subspace nearest-code selection to the decimal-exact full-distance
-    form (pair with :func:`pq_seed_codebooks` for the oracle-checkable
-    mode)."""
+    original vector for downstream rescoring).  Per-subspace nearest-code
+    selection is the decimal-exact full-distance form (pair with
+    :func:`pq_seed_codebooks` for the oracle-checkable mode)."""
     return ensure_parallelism(emb).select(
         F.col("vec_id"),
-        _pq_codes(F.col("embedding"), codebooks, exact_assign).alias("codes"),
+        _pq_codes(F.col("embedding"), codebooks).alias("codes"),
         F.col("embedding"),
     )
 
 
-def _pq_codes(vec: F.Column, codebooks: list, exact_assign: bool) -> F.Column:
+def _pq_codes(vec: F.Column, codebooks: list) -> F.Column:
     """All m PQ codes for ``vec`` as one subspace-indexed ``transform`` over
     a single 3-level codebook literal — O(1) Column construction instead of
-    m unrolled :func:`_argmin_centroids` trees (the per-subspace loop cost
-    ~1.5 s of py4j round-trips per pq_encode build at m=16, r10 profile).
-    Per-element values are bit-identical to ``argmin(subvec, cb, 1)[0]``:
-    same distance folds (decimal exact / float norms−2·dot), same struct
-    sort, same (d, c) tie-break."""
+    m unrolled :func:`_argmin_centroids_exact` trees (the per-subspace loop
+    cost ~1.5 s of py4j round-trips per pq_encode build at m=16, r10
+    profile).  Per-element values are bit-identical to
+    ``_argmin_centroids_exact(subvec, cb, 1)[0]``: same decimal distance
+    fold, same struct sort, same (d, c) tie-break."""
     from ..functions.fastlit import fast_lit
 
     m = len(codebooks)
@@ -1358,60 +1183,31 @@ def _pq_codes(vec: F.Column, codebooks: list, exact_assign: bool) -> F.Column:
         [[[float(x) for x in row] for row in cb] for cb in codebooks],
         "array<array<array<double>>>",
     )
-    if exact_assign:
 
-        def entries(subvec: F.Column, cbj: F.Column) -> F.Column:
-            return F.transform(
-                cbj,
-                lambda cv, c: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            subvec,
-                            cv,
-                            lambda x, r: (
-                                (x.cast("double") - r) * (x.cast("double") - r)
-                            ).cast(_ACC_DEC),
+    def entries(subvec: F.Column, cbj: F.Column) -> F.Column:
+        return F.transform(
+            cbj,
+            lambda cv, c: F.struct(
+                F.aggregate(
+                    F.zip_with(
+                        subvec,
+                        cv,
+                        lambda x, r: ((x.cast("double") - r) * (x.cast("double") - r)).cast(
+                            _ACC_DEC
                         ),
-                        F.lit(0).cast(_ACC_DEC),
-                        lambda acc, t: (acc + t).cast(_ACC_DEC),
-                    ).alias("d"),
-                    c.alias("c"),
-                ),
-            )
-
-    else:
-        norms2 = fast_lit(
-            [[sum(float(x) * float(x) for x in row) for row in cb] for cb in codebooks],
-            "array<array<double>>",
+                    ),
+                    F.lit(0).cast(_ACC_DEC),
+                    lambda acc, t: (acc + t).cast(_ACC_DEC),
+                ).alias("d"),
+                c.alias("c"),
+            ),
         )
-
-        def entries(subvec: F.Column, cbj: F.Column, nj: F.Column = None) -> F.Column:
-            return F.transform(
-                cbj,
-                lambda cv, c: F.struct(
-                    (
-                        F.element_at(nj, c + 1)
-                        - 2.0
-                        * F.aggregate(
-                            F.zip_with(subvec, cv, lambda x, r: x.cast("double") * r),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                    ).alias("d"),
-                    c.alias("c"),
-                ),
-            )
 
     def code_j(j: F.Column) -> F.Column:
         subvec = F.slice(vec, j * sub + 1, sub)
         cbj = F.element_at(cb3, (j + 1).cast("int"))
-        ent = (
-            entries(subvec, cbj)
-            if exact_assign
-            else entries(subvec, cbj, F.element_at(norms2, (j + 1).cast("int")))
-        )
         return F.element_at(
-            F.transform(F.slice(F.array_sort(ent), 1, 1), lambda s: s["c"]), 1
+            F.transform(F.slice(F.array_sort(entries(subvec, cbj)), 1, 1), lambda s: s["c"]), 1
         )
 
     return F.transform(F.sequence(F.lit(0), F.lit(m - 1)), code_j)
@@ -1423,7 +1219,6 @@ def pq_topk_recall(
     codebooks: list,
     *,
     k: int = 5,
-    exact_dots: bool = False,
 ) -> DataFrame:
     """Self-eval: recall@k of PQ asymmetric-distance ranking (exact query
     subvector · reconstructed candidate centroid, summed over subspaces —
@@ -1434,16 +1229,14 @@ def pq_topk_recall(
     set a 100 TB corpus actually fits in memory); original vectors are only
     touched for the truth ranking and the re-rank stage.
 
-    ``exact_dots`` switches BOTH score folds to the decimal-exact form
-    (ADC as one dot against the flattened reconstructed vector — the same
-    term set as the per-subspace sum, exact under decimals) so rankings
-    are cross-engine-identical; pair with :func:`pq_seed_codebooks` +
-    ``exact_assign`` for the fully oracle-checkable mode.  The recall
-    aggregate is recomposed from integer hit counts (Σn_hit/(k·n)) in both
-    modes, so no float accumulation order leaks into the output."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    enc = pq_encode(corpus, codebooks, exact_assign=exact_dots)
+    Both score folds are decimal-exact (ADC as one dot against the
+    flattened reconstructed vector — the same term set as the per-subspace
+    sum, exact under decimals) so rankings are cross-engine-identical; pair
+    with :func:`pq_seed_codebooks` for the fully oracle-checkable mode.
+    The recall aggregate is recomposed from integer hit counts
+    (Σn_hit/(k·n)), so no float accumulation order leaks into the
+    output."""
+    enc = pq_encode(corpus, codebooks)
     c = enc.select(
         F.col("vec_id").alias("c_id"), F.col("codes").alias("c_codes"), F.col("embedding").alias("c_vec")
     )
@@ -1451,45 +1244,22 @@ def pq_topk_recall(
         queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     )
     joined = c.join(q, F.col("c_id") != F.col("q_id"))
-    if exact_dots:
-        # portable mode: ADC as ONE decimal dot against the flattened
-        # reconstructed vector (same terms as the per-subspace sum, exact
-        # under decimals → identical doubles on any engine)
-        recon = F.flatten(
-            F.array(
-                *[
-                    F.element_at(
-                        lit_double_matrix(cb),
-                        F.element_at(F.col("c_codes"), j + 1) + 1,
-                    )
-                    for j, cb in enumerate(codebooks)
-                ]
-            )
-        )
-        adc = _dot_dec(F.col("q_vec"), recon).cast("double")
-        exact = _dot_dec(F.col("q_vec"), F.col("c_vec")).cast("double")
-    else:
-        # ADC inner product: sum_j  q_sub_j · centroid_j[code_j]
-        parts = []
-        for j, cb in enumerate(codebooks):
-            qsub = F.slice(F.col("q_vec"), j * sub + 1, sub)
-            # one F.lit(nested list) call — per-element F.lit would cost one
-            # py4j round-trip per centroid component (k*dsub per subspace)
-            table = lit_double_matrix(cb)
-            cent = F.element_at(table, F.element_at(F.col("c_codes"), j + 1) + 1)
-            parts.append(
-                F.aggregate(
-                    F.zip_with(qsub, cent, lambda x, r: x.cast("double") * r),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
+    # ADC as ONE decimal dot against the flattened reconstructed vector
+    # (same terms as the per-subspace sum, exact under decimals → identical
+    # doubles on any engine)
+    recon = F.flatten(
+        F.array(
+            *[
+                F.element_at(
+                    lit_double_matrix(cb),
+                    F.element_at(F.col("c_codes"), j + 1) + 1,
                 )
-            )
-        adc = sum(parts[1:], parts[0])
-        exact = F.aggregate(
-            F.zip_with(F.col("q_vec"), F.col("c_vec"), lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+                for j, cb in enumerate(codebooks)
+            ]
         )
+    )
+    adc = _dot_dec(F.col("q_vec"), recon).cast("double")
+    exact = _dot_dec(F.col("q_vec"), F.col("c_vec")).cast("double")
     scored = joined.select("q_id", "c_id", adc.alias("adc_ip"), exact.alias("exact_ip"))
     w_exact = Window.partitionBy("q_id").orderBy(F.col("exact_ip").desc(), F.col("c_id"))
     w_adc = Window.partitionBy("q_id").orderBy(F.col("adc_ip").desc(), F.col("c_id"))
@@ -1535,83 +1305,42 @@ def random_projection(
     *,
     out_dim: int = 16,
     seed: str = "jl0",
-    hash_fn: str = "xxhash64",
     in_dim: int = 64,
 ) -> DataFrame:
     """X41 Johnson-Lindenstrauss random projection: project d-dim embeddings
     to ``out_dim`` with a deterministic hash-derived +-1 matrix (Achlioptas
     2003 sign variant, public) scaled by 1/sqrt(out_dim) -- the standard
     cheap dimensionality cut run BEFORE LSH/IVF so bucket hashing and
-    centroid dots cost out_dim, not d.
-
-    The matrix never materializes: component (i, j) is
-    sign(xxhash64(seed:i:j)), generated inside the row expression -- so the
-    projection is row-local, shuffle-free, reproducible on any engine with
-    xxhash64, and needs no stored model.  Distortion obeys the JL lemma in
+    centroid dots cost out_dim, not d.  Distortion obeys the JL lemma in
     expectation; measured bounds are pinned by the self-eval below.
 
-    ``hash_fn="md5_32"`` is the engine-portable declared mode: sign (i, j)
-    is ``+1 if int(md5("{seed}:{i}:{j}")[:8], 16) % 2 == 0 else -1``.  The
-    signs are matrix-constant, so they bake as array literals (Python
-    hashlib md5 == every engine's md5), and each output component folds in
-    DECIMAL so the projected vector is bit-identical on any engine and
-    partition order -- DuckDB can recompute the projection exactly.
-    Literal sign rows need a STATIC input width (array expressions can't be
-    sized from a runtime column), so md5 mode takes it as ``in_dim``."""
-    dim = F.size(F.col("embedding"))
+    Sign (i, j) is ``+1 if int(md5("{seed}:{i}:{j}")[:8], 16) % 2 == 0
+    else -1`` (engine-portable).  The signs are matrix-constant, so they
+    bake as array literals (Python hashlib md5 == every engine's md5) and
+    need no stored model, and each output component folds in DECIMAL so
+    the projected vector is bit-identical on any engine and partition
+    order -- DuckDB can recompute the projection exactly.  Literal sign
+    rows need a STATIC input width (array expressions can't be sized from
+    a runtime column), so it is taken as ``in_dim``."""
+    import hashlib
+
     inv = 1.0 / float(out_dim) ** 0.5
 
-    if hash_fn == "md5_32":
-        import hashlib
-
-        def sign_row(i: int) -> F.Column:
-            # one json literal per row, not in_dim py4j F.lit calls
-            return lit_doubles(
-                1.0
-                if int(hashlib.md5(f"{seed}:{i}:{j}".encode()).hexdigest()[:8], 16) % 2
-                == 0
-                else -1.0
-                for j in range(in_dim)
-            )
-
-        comps = [
-            (_dot_dec(F.col("embedding"), sign_row(i)).cast("double") * inv) for i in range(out_dim)
-        ]
-        return ensure_parallelism(emb).select(
-            F.col("vec_id"),
-            F.array(*comps).alias("projected"),
-        )
-    if hash_fn != "xxhash64":
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-    # factory keeps the row index i a PLAIN INT inside a true 1-arg lambda —
-    # `lambda j, i=i` would make PySpark pick transform's (element, index)
-    # form and bind i to the array-index Column
-    def component(i: int) -> F.Column:
-        def sign(j: F.Column) -> F.Column:
-            return F.when(
-                F.pmod(
-                    F.xxhash64(F.concat(F.lit(f"{seed}:{i}:"), j.cast("string"))),
-                    F.lit(2),
-                )
-                == 0,
-                F.lit(1.0),
-            ).otherwise(F.lit(-1.0))
-
-        return F.aggregate(
-            F.zip_with(
-                F.col("embedding"),
-                F.transform(F.sequence(F.lit(0), dim - 1), sign),
-                lambda x, r: x.cast("double") * r,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+    def sign_row(i: int) -> F.Column:
+        # one json literal per row, not in_dim py4j F.lit calls
+        return lit_doubles(
+            1.0
+            if int(hashlib.md5(f"{seed}:{i}:{j}".encode()).hexdigest()[:8], 16) % 2 == 0
+            else -1.0
+            for j in range(in_dim)
         )
 
-    comps = [component(i) for i in range(out_dim)]
+    comps = [
+        (_dot_dec(F.col("embedding"), sign_row(i)).cast("double") * inv) for i in range(out_dim)
+    ]
     return ensure_parallelism(emb).select(
         F.col("vec_id"),
-        F.array(*[(c * inv) for c in comps]).alias("projected"),
+        F.array(*comps).alias("projected"),
     )
 
 
@@ -1620,7 +1349,6 @@ def projection_distortion_eval(
     *,
     out_dim: int = 16,
     n_pairs_side: int = 40,
-    hash_fn: str = "xxhash64",
     in_dim: int = 64,
 ) -> DataFrame:
     """X41 self-eval: pairwise-distance distortion of the projection over a
@@ -1638,15 +1366,9 @@ def projection_distortion_eval(
 
     All statistics are engine-exact (r8): squared-diff sums fold in
     decimal, the mean accumulates decimal-cast ratios, and every output is
-    floor-rounded to 1e-6 — so under ``hash_fn="md5_32"`` the whole eval is
-    DuckDB-oracle-checkable, and under xxhash64 it is bit-stable across
-    partitionings."""
-    proj = random_projection(
-        emb,
-        out_dim=out_dim,
-        hash_fn=hash_fn,
-        in_dim=in_dim,
-    )
+    floor-rounded to 1e-6 — so with the md5 sign matrix the whole eval is
+    DuckDB-oracle-checkable."""
+    proj = random_projection(emb, out_dim=out_dim, in_dim=in_dim)
     base = emb.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")).join(
         proj.select(F.col("vec_id").alias("_id"), "projected"), "_id"
     ).filter(F.col("_id") < n_pairs_side)

@@ -528,8 +528,8 @@ def similarity_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook) with decimal-exact assignment, so the full encode — draw,
     slicing, per-subspace argmin, digests — is DuckDB-oracle-checked
     (upgraded from rows-only in r8, completing the IVF precedent).
-    Production codebooks keep Lloyd's refinement (pq_train); ADC recall
-    floors and encode determinism stay pinned in tests/test_curation.py.
+    Lloyd's-refined codebooks (pq_train) keep their ADC recall floors and
+    encode determinism pinned in tests/test_curation.py.
 
     The declared corpus is the fixed vec_id<2000 slice: it covers the whole
     sf0.01 gate corpus (so oracle coverage is unchanged) while capping the
@@ -541,7 +541,7 @@ def similarity_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbs = sim.pq_seed_codebooks(emb, m=16, k=16, seed=42)
     d = 16 * len(cbs[0][0])
     usable = emb.where(F.col("embedding").isNotNull() & (F.size("embedding") == d))
-    return sim.pq_encode(usable, cbs, exact_assign=True).select(
+    return sim.pq_encode(usable, cbs).select(
         "vec_id",
         F.md5(F.array_join(F.transform(F.col("codes"), lambda c: c.cast("string")), "-")).alias(
             "code_digest"
@@ -632,9 +632,7 @@ def similarity_pq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbs = sim.pq_seed_codebooks(emb, m=8, k=32, seed=42)
     d = 8 * len(cbs[0][0])
     usable = emb.where(F.col("embedding").isNotNull() & (F.size("embedding") == d))
-    return sim.pq_topk_recall(
-        usable, usable.filter(F.col("vec_id") < 10), cbs, k=5, exact_dots=True
-    )
+    return sim.pq_topk_recall(usable, usable.filter(F.col("vec_id") < 10), cbs, k=5)
 
 
 @query("text_bpe_encode")
@@ -795,13 +793,13 @@ def similarity_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-derived signs generated inside the row expression (no stored
     model), so projection is row-local and shuffle-free.
 
-    This declared query runs the md5_32 engine-portable sign family with
-    decimal-folded dots, so the projection itself (via the norm² digest) is
-    DuckDB-oracle-checked (upgraded from rows-only in r8); production
-    callers keep the default xxhash64 family, distortion bounds pinned by
-    the eval twin + a mode-agreement test."""
+    The signs are the engine-portable md5 family with decimal-folded dots,
+    so the projection itself (via the norm² digest) is DuckDB-oracle-checked
+    (upgraded from rows-only in r8); distortion bounds are pinned by the
+    eval twin.  An xxhash64 sign family was removed because no query used
+    it."""
     emb = star.table(spark, sf_dir, "embeddings")
-    proj = sim.random_projection(emb, out_dim=16, hash_fn="md5_32", in_dim=64)
+    proj = sim.random_projection(emb, out_dim=16, in_dim=64)
     mult = 1000000.0
     dec = "decimal(28,12)"
     norm2 = F.aggregate(
@@ -861,13 +859,11 @@ def similarity_jl_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a bounded pair panel (mean/min/max ratio + fraction inside the
     (0.5, 2) band) -- the JL-lemma concentration made measurable.
 
-    This declared query runs the md5_32 engine-portable sign family with
-    decimal-exact statistics, so the whole distortion eval is
-    DuckDB-oracle-checked (upgraded from rows-only in r8); production
-    callers keep the default xxhash64 family, distortion floors pinned in
-    tests either way."""
+    The md5 sign family and decimal-exact statistics make the whole
+    distortion eval DuckDB-oracle-checked (upgraded from rows-only in r8);
+    distortion floors are pinned in tests."""
     emb = star.table(spark, sf_dir, "embeddings")
-    return sim.projection_distortion_eval(emb, out_dim=16, hash_fn="md5_32", in_dim=64)
+    return sim.projection_distortion_eval(emb, out_dim=16, in_dim=64)
 
 
 @query(

@@ -214,15 +214,14 @@ def dedup_cluster_canonical_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     within a language block, which is quadratic in block size — at 100 TB a
     single language is most of the corpus, so that form is the ORACLE TWIN
     only, never the scale path.  Since late r7 THIS path is oracle-checked
-    too: the declared query runs the engine-portable md5_32 LSH mode, and
-    the oracle chains the shared md5-LSH pair CTEs into the same recursive
-    reach fixpoint the exact twin uses.  Cluster-level agreement of the
-    production xxhash64 mode vs the exact form stays asserted in
+    too: MinHash-LSH runs on engine-portable md5 hashes, and the oracle
+    chains the shared md5-LSH pair CTEs into the same recursive reach
+    fixpoint the exact twin uses.  Cluster-level agreement with the exact
+    form is asserted in
     tests/test_extensions.py::test_lsh_clustering_matches_exact."""
     docs = _docs(spark, sf_dir)
     pairs = dd.minhash_near_dups(
-        docs, "text", "doc_id", num_hashes=16, bands=4, threshold=0.5,
-        max_bucket_size=1000, hash_fn="md5_32",
+        docs, "text", "doc_id", num_hashes=16, bands=4, threshold=0.5, max_bucket_size=1000
     )
     return dd.cluster_canonical(docs, pairs, "doc_id")
 
@@ -236,15 +235,15 @@ def dedup_cluster_canonical_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: MinHash+LSH near-dup pairs (shingle→minhash→band→bucket-join→
-    verify).  The declared query runs the engine-portable md5_32 mode so
-    the ENTIRE pipeline — signatures, banding, bucket cap, candidate pairs,
+    verify).  MinHash-LSH runs on engine-portable md5 hashes, so the
+    ENTIRE pipeline — signatures, banding, bucket cap, candidate pairs,
     exact-Jaccard verify — is DuckDB-oracle-checked (upgraded from
-    rows-only in r7); production callers keep the default xxhash64 mode,
-    whose P/R vs exact-Jaccard truth is pinned by dedup_lsh_eval and
-    tests/test_extensions.py."""
+    rows-only in r7); P/R vs exact-Jaccard truth is measured by
+    dedup_lsh_eval and pinned in tests/test_extensions.py.  (An xxhash64
+    hash family was removed because no query used it.)"""
     return dd.minhash_near_dups(
         _docs(spark, sf_dir), "text", "doc_id", num_hashes=16, bands=4,
-        threshold=0.5, max_bucket_size=1000, hash_fn="md5_32",
+        threshold=0.5, max_bucket_size=1000,
     )
 
 
@@ -278,12 +277,11 @@ _SIMHASH_RECOMBINE = " + ".join(
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 variant: SimHash signatures (JVM-side bit voting; zero shuffle).
-    This declared query runs the md5_32 engine-portable mode so the
-    signature itself is DuckDB-oracle-checked bit for bit (upgraded from
-    rows-only in r7 — the sketch_quantile_rollup precedent); production
-    callers keep the default xxhash64/64-bit mode, pinned equivalent in
-    Hamming behavior by tests/test_extensions.py."""
-    return dd.simhash(_docs(spark, sf_dir), "text", "doc_id", bits=32, hash_fn="md5_32")
+    The 32-bit signature votes over engine-portable md5 token hashes, so it
+    is DuckDB-oracle-checked bit for bit (upgraded from rows-only in r7 —
+    the sketch_quantile_rollup precedent).  A 64-bit xxhash64 mode was
+    removed because no query used it."""
+    return dd.simhash(_docs(spark, sf_dir), "text", "doc_id")
 
 
 @query(
@@ -536,9 +534,10 @@ def dedup_semantic_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles, so portability costs no BigDecimal time), so blocking, edges,
     and the CC fixpoint are DuckDB-oracle-checked end to end (upgraded
     from rows-only in r8's second pass — it also drops the bounded Lloyd's
-    sample collect from the declared plan entirely).  The production
-    k-means mode (numpy Lloyd's + Arrow-vectorized assignment) keeps its
-    cluster-agreement and invariant pins in tests/test_extensions.py."""
+    sample collect from the declared plan entirely).  Blocking on Lloyd's
+    centers (``centers=None``) keeps its cluster-agreement and invariant
+    pins in tests/test_extensions.py; the Arrow-vectorized pandas
+    assignment it once used was removed because no query used it."""
     import math
 
     emb = star.table(spark, sf_dir, "embeddings")
@@ -546,9 +545,7 @@ def dedup_semantic_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty corpus short-circuits to the seed trainer's loud ValueError
     k = max(8, math.ceil(math.sqrt(emb.count() or 1)))
     centers = sim.ivf_seed_centers(emb, n_centroids=k, seed=42)
-    return sim.semantic_dedup(
-        emb, threshold=0.35, centers=centers, exact_assign="seq", exact_dots=False
-    )
+    return sim.semantic_dedup(emb, threshold=0.35, centers=centers)
 
 
 @query(
@@ -648,16 +645,15 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     member of the IVF family) with decimal-exact assignment distances, so
     the ENTIRE pipeline — center selection, inverted lists, multi-probe,
     cosine scoring, ranks — is DuckDB-oracle-checked (upgraded from
-    rows-only in r8).  The production quantizer keeps Lloyd's refinement
-    (train_ivf_centroids, numpy-side → rows-only), whose recall vs this
-    seeded baseline and vs brute force is pinned in
+    rows-only in r8).  Lloyd's-refined centers (train_ivf_centroids,
+    numpy-side → rows-only) have their recall vs this seeded baseline and
+    vs brute force pinned in
     tests/test_extensions.py::test_ivf_seed_centers_portable and the
     ann-eval floors."""
     emb = star.table(spark, sf_dir, "embeddings")
     centers = sim.ivf_seed_centers(emb, n_centroids=8, seed=42)
     return sim.ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 10), k=3, n_centroids=8, n_probe=3,
-        centers=centers, exact_assign=True,
+        emb, emb.filter(F.col("vec_id") < 10), k=3, n_centroids=8, n_probe=3, centers=centers
     )
 
 
@@ -708,13 +704,12 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH: candidates unioned over independent hyperplane sets — miss rate
     falls exponentially in tables at linear bucket-join cost).
 
-    This declared query runs the md5_32 engine-portable hyperplane family so
-    buckets, candidate pairs, cosines AND ranks are DuckDB-oracle-checked
-    end-to-end (upgraded from rows-only in r8 — the dedup_minhash_lsh
-    precedent).  Production callers keep the default xxhash64 family, whose
-    recall curve (0.28 → 0.98 over 1 → 8 tables on the fixture) is measured
-    by similarity_ann_eval and pinned in tests along with a md5/xxhash
-    mode-agreement check."""
+    The hyperplanes are the engine-portable md5 family, so buckets,
+    candidate pairs, cosines AND ranks are DuckDB-oracle-checked end-to-end
+    (upgraded from rows-only in r8 — the dedup_minhash_lsh precedent).
+    Recall over table counts is measured by similarity_ann_sweep and
+    pinned in tests.  An xxhash64 hyperplane family was removed because
+    no query used it."""
     emb = star.table(spark, sf_dir, "embeddings")
     return sim.lsh_topk(
         emb,
@@ -723,7 +718,6 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         planes=4,
         dim=_ANN_DIM,
         tables=4,
-        hash_fn="md5_32",
     )
 
 
@@ -1157,7 +1151,7 @@ def dedup_bloom_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows regardless of corpus size) and the result is EXACTLY the plain
     anti-join — Bloom filters have no false negatives — so the oracle is a
     plain ``NOT EXISTS``.  See operators/bloom.py for the 100 TB sizing
-    story (probe="pandas" broadcasts GB-scale filters once per executor)."""
+    story."""
     from ..operators import bloom as bl
 
     docs = _docs(spark, sf_dir)
@@ -1710,9 +1704,9 @@ def profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     every statistic folded into ONE aggregate over ONE scan.  The profile is
     what a curation pipeline runs FIRST — its output (null fractions, value
     domains, cardinalities) is where the quality_constraint_report
-    thresholds come from.  At 100 TB the exact multi-distinct (one Expand ×
-    column count) swaps to approx_count_distinct via exact_distinct=False;
-    the report is advisory there, so HLL's ±2% is acceptable."""
+    thresholds come from.  Distinct counts are exact (one Expand × column
+    count); an approx_count_distinct alternative was removed because no
+    query used it."""
     from ..operators.quality_checks import profile_columns
 
     return profile_columns(
@@ -1755,10 +1749,9 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus slice — the measurement a dedup pipeline runs when tuning
     (num_hashes, bands) before trusting LSH at full scale.
 
-    This declared query runs the engine-portable md5_32 LSH mode, so the
-    whole eval — truth set, candidate pipeline, P/R arithmetic — is
-    DuckDB-oracle-checked (upgraded from rows-only in r8); the xxhash64
-    production mode's recall floor stays pinned in
+    MinHash-LSH runs on engine-portable md5 hashes, so the whole eval —
+    truth set, candidate pipeline, P/R arithmetic — is DuckDB-oracle-checked
+    (upgraded from rows-only in r8); its recall floor is pinned in
     tests/test_extensions.py::test_lsh_eval_reports_sane_metrics.
 
     Scale shape: truth is the quadratic exact form, so the eval runs on a
@@ -1774,7 +1767,7 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b")
     pred = dd.minhash_near_dups(
         docs, "text", "doc_id", num_hashes=16, bands=8, threshold=0.5,
-        shingle_n=1, max_bucket_size=1000, hash_fn="md5_32",
+        shingle_n=1, max_bucket_size=1000,
     ).select("id_a", "id_b")
     both = pred.withColumn("p", F.lit(1)).join(
         truth.withColumn("t", F.lit(1)), ["id_a", "id_b"], "full_outer"
@@ -1917,13 +1910,13 @@ def similarity_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline runs on an affordable slice before trusting ANN at corpus
     scale (same eval-on-a-slice posture as dedup_lsh_eval).
 
-    The declared query runs the engine-portable modes — md5_32 hyperplanes
-    for LSH, the seed-vector quantizer with decimal-exact assignment for
-    IVF — so truth, both candidate sets, AND the recall aggregate are
-    DuckDB-oracle-checked end to end (upgraded from rows-only in r8's
-    second pass, completing the dedup_lsh_eval precedent).  The production
-    xxhash64 / Lloyd's-refined paths keep their recall floors pinned in
-    tests/test_extensions.py.  Output: (method, n_truth, n_hit, recall)."""
+    Both arms are engine-portable — md5 hyperplanes for LSH, the
+    seed-vector quantizer with decimal-exact assignment for IVF — so truth,
+    both candidate sets, AND the recall aggregate are DuckDB-oracle-checked
+    end to end (upgraded from rows-only in r8's second pass, completing the
+    dedup_lsh_eval precedent).  Lloyd's-refined IVF keeps its recall floors
+    pinned in tests/test_extensions.py.  Output: (method, n_truth, n_hit,
+    recall)."""
     from ..operators import similarity as sim
 
     emb = star.table(spark, sf_dir, "embeddings")
@@ -1937,13 +1930,11 @@ def similarity_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers = sim.ivf_seed_centers(emb, n_centroids=8, seed=42)
     lsh = _ann_recall(
         truth, "lsh",
-        sim.lsh_topk(emb, q, k=k, planes=2, dim=_ANN_DIM, tables=4,
-                     hash_fn="md5_32", scores=bf),
+        sim.lsh_topk(emb, q, k=k, planes=2, dim=_ANN_DIM, tables=4, scores=bf),
     )
     ivf = _ann_recall(
         truth, "ivf",
-        sim.ivf_topk(emb, q, k=k, n_centroids=8, n_probe=4, centers=centers,
-                     exact_assign=True, scores=bf),
+        sim.ivf_topk(emb, q, k=k, n_centroids=8, n_probe=4, centers=centers, scores=bf),
     )
     return lsh.unionByName(ivf).orderBy("method")
 
@@ -2047,13 +2038,13 @@ def similarity_ann_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     produce a candidate SUPERSET, and any candidate outscoring a true
     top-k pair would itself be in the brute-force top-k (global ranking,
     same cand_id tiebreak), so top-k-from-a-superset can only gain truth
-    hits — the monotonicity law tests/test_extensions.py pins.  The
-    declared query runs the engine-portable modes (md5_32 hyperplanes,
-    seed-vector IVF with decimal-exact assignment), so the WHOLE sweep —
-    truth, both candidate explosions, every recall point — is DuckDB-
-    oracle-checked (upgraded from rows-only in r8's second pass); the
-    production xxhash64 / Lloyd's paths keep their monotone-curve pytest
-    law.  Output: (method, setting, n_truth, n_hit, recall), ordered."""
+    hits — the monotonicity law tests/test_extensions.py pins.  Both arms
+    are engine-portable (md5 hyperplanes, seed-vector IVF with
+    decimal-exact assignment), so the WHOLE sweep — truth, both candidate
+    explosions, every recall point — is DuckDB-oracle-checked (upgraded
+    from rows-only in r8's second pass); Lloyd's-refined IVF keeps its
+    monotone-curve pytest law.  Output: (method, setting, n_truth, n_hit,
+    recall), ordered."""
     from ..operators import similarity as sim
 
     emb = star.table(spark, sf_dir, "embeddings")
@@ -2077,14 +2068,13 @@ def similarity_ann_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers = sim.ivf_seed_centers(emb, n_centroids=8, seed=42)
     preds = (
         sim.lsh_topk_sweep(
-            emb, q, k=k, planes=2, dim=_ANN_DIM, tables_list=lsh_settings,
-            hash_fn="md5_32", scores=bf,
+            emb, q, k=k, planes=2, dim=_ANN_DIM, tables_list=lsh_settings, scores=bf
         )
         .select(F.lit("lsh").alias("method"), "setting", "query_id", "cand_id")
         .unionByName(
             sim.ivf_topk_sweep(
                 emb, q, k=k, n_centroids=8, n_probe_list=ivf_settings,
-                centers=centers, exact_assign=True, scores=bf,
+                centers=centers, scores=bf,
             ).select(F.lit("ivf").alias("method"), "setting", "query_id", "cand_id")
         )
     )

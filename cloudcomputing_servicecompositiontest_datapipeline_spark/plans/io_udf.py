@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import sql_dsum, dsum
-from ..functions.udf import grouped_apply, register_sql_function, user_function_udf
+from ..functions.udf import grouped_apply, register_sql_function
 from ..session import scratch_root
 from ..sources import io as sio
 from ..sources import star

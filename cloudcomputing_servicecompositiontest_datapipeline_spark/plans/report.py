@@ -720,11 +720,10 @@ def sketch_frequency_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFram
     tests/test_report_ops.py::test_cm_sketch_frequency_bounds_and_merge_law.
     Output: (event_type, cm_estimate) — deterministic, estimate >= truth.
 
-    This declared query runs the engine-portable md5_32 bucket mode so the
-    whole sketch→merge→point-query pipeline is DuckDB-oracle-checked
-    (upgraded from rows-only in r8); production callers keep the default
-    xxhash64 buckets, pinned equivalent in bound/merge behavior by
-    tests/test_report_ops.py::test_cm_sketch_md5_mode_matches_xxhash_bounds.
+    Buckets are engine-portable md5 hashes, so the whole
+    sketch→merge→point-query pipeline is DuckDB-oracle-checked (upgraded
+    from rows-only in r8).  An xxhash64 bucket mode was removed because no
+    query used it.
 
     Plan note: the probe crossJoin plans as a BroadcastNestedLoopJoin whose
     broadcast side is the ONE merged-sketch row — a kilobyte fanned out to
@@ -732,11 +731,11 @@ def sketch_frequency_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFram
     from ..functions.sketch import cm_merge, cm_query, cm_sketch
 
     ev = _events(spark, sf_dir).withColumn("day", F.to_date("ts"))
-    daily = cm_sketch(ev, "event_type", ["day"], bucket_hash="md5_32")
+    daily = cm_sketch(ev, "event_type", ["day"])
     merged = cm_merge(daily)
     types = ev.select("event_type").distinct()
     return (
-        cm_query(types.crossJoin(merged), F.col("event_type"), bucket_hash="md5_32")
+        cm_query(types.crossJoin(merged), F.col("event_type"))
         .select("event_type", "cm_estimate")
         .orderBy("event_type")
     )

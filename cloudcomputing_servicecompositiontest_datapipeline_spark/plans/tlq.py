@@ -10,7 +10,7 @@ codes, mirroring the L/M/H/C switch at Transform.java:272-287.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import sql_davg

@@ -1,6 +1,6 @@
 """Bloom-prefiltered anti-join (operators/bloom.py): exactness vs the plain
-anti-join on both probe paths, FPR sanity, and the zero-shuffle /
-zero-Python plan guarantee on the definite-fresh branch."""
+anti-join, FPR sanity, and the zero-shuffle / zero-Python plan guarantee
+on the definite-fresh branch."""
 
 from __future__ import annotations
 
@@ -19,14 +19,10 @@ def keysets(spark):
     return corpus, incoming
 
 
-@pytest.mark.parametrize("probe", ["literal", "pandas"])
-def test_prefiltered_anti_join_exact(keysets, probe):
+def test_prefiltered_anti_join_exact(keysets):
     corpus, incoming = keysets
     expected = sorted(r["id"] for r in incoming.join(corpus, "key", "left_anti").collect())
-    got = sorted(
-        r["id"]
-        for r in bl.prefiltered_anti_join(incoming, corpus, "key", probe=probe).collect()
-    )
+    got = sorted(r["id"] for r in bl.prefiltered_anti_join(incoming, corpus, "key").collect())
     assert got == expected  # exact anti-join semantics: no FNs, FPs re-verified
 
 
@@ -38,16 +34,6 @@ def test_no_false_negatives_and_low_fpr(keysets):
     assert maybe >= true_dups  # every true member flagged (no false negatives)
     # 2^17 bits / 3000 keys ≈ 44 bits/key → FPR should be tiny
     assert (maybe - true_dups) / 5000 < 0.01
-
-
-def test_probe_paths_agree(keysets):
-    corpus, incoming = keysets
-    words = bl.bloom_build(corpus, F.col("key"))
-    lit = incoming.withColumn("m", bl.might_contain(words, F.col("key")))
-    pdn = bl.might_contain_pandas(incoming, words, F.col("key"), flag_col="m")
-    a = {r["id"]: r["m"] for r in lit.collect()}
-    b = {r["id"]: r["m"] for r in pdn.collect()}
-    assert a == b  # JVM-literal and broadcast-numpy probes are bit-identical
 
 
 def test_fresh_branch_is_map_only(keysets):

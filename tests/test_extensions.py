@@ -13,7 +13,6 @@ from cloudcomputing_servicecompositiontest_datapipeline_spark.operators import (
     similarity as sim,
 )
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.similarity import (
-    _argmin_centroids,
     _argmin_centroids_exact,
     _bucket_structs,
     _cosine_rounded,
@@ -66,37 +65,16 @@ def test_minhash_lsh_recalls_exact_and_near_dups(docs):
 
 
 def test_minhash_lsh_md5_mode_matches_xxhash_verified_pairs(docs):
-    """The engine-portable md5_32 mode (the dedup_minhash_lsh oracle path)
-    must behave like the production xxhash64 mode where behavior is
-    hash-independent: the exact dup collides in every band under ANY hash
-    family, verified Jaccard values are hash-independent, and both modes
-    agree on this corpus."""
+    """Hash-independent behaviour of the md5 signatures (the
+    dedup_minhash_lsh oracle path): the exact dup collides in every band
+    under ANY hash family, and verified Jaccard is computed from the raw
+    shingle sets.  (The xxhash64 family it was once compared with is gone.)"""
     kw = dict(num_hashes=16, bands=8, threshold=0.5, max_bucket_size=1000)
-    xx = {
+    md = {
         (r.id_a, r.id_b): r.jaccard
         for r in dd.minhash_near_dups(docs, "text", "doc_id", **kw).collect()
     }
-    md = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in dd.minhash_near_dups(
-            docs, "text", "doc_id", hash_fn="md5_32", **kw
-        ).collect()
-    }
-    # Hash-independent invariants: the exact dup collides in every band
-    # under ANY hash family, and verified Jaccard is computed from the raw
-    # shingle sets, so it must agree on every pair BOTH modes surface.
     assert (0, 2) in md and md[(0, 2)] == 1.0
-    assert (0, 2) in xx and xx[(0, 2)] == 1.0
-    for pair in md.keys() & xx.keys():
-        assert md[pair] == xx[pair]
-    # Candidate SETS are hash-dependent in general (different families bucket
-    # differently), so don't pin md == xx — require only that neither mode
-    # misses a pair the other verified at Jaccard >= the 0.5 threshold by a
-    # wide margin (recall-style, robust to fixture edits).
-    strong = {p for p, j in (md | xx).items() if j >= 0.9}
-    assert strong <= md.keys() and strong <= xx.keys()
-    with pytest.raises(ValueError, match="unknown hash_fn"):
-        dd.minhash_near_dups(docs, "text", "doc_id", hash_fn="crc32")
 
 
 def test_simhash_locality(docs):
@@ -108,15 +86,15 @@ def test_simhash_locality(docs):
 
 
 def test_simhash_md5_mode_matches_python_reference(docs):
-    """The engine-portable md5_32 mode (the dedup_simhash oracle path) must
-    agree bit for bit with a direct Python model: distinct normalized
+    """The engine-portable md5 signature (the dedup_simhash oracle path)
+    must agree bit for bit with a direct Python model: distinct normalized
     tokens → int(md5[:8], 16) → per-bit +1/-1 vote → sign."""
     import hashlib
     import re
 
     sigs = {
         r.doc_id: r.simhash
-        for r in dd.simhash(docs, "text", "doc_id", bits=32, hash_fn="md5_32").collect()
+        for r in dd.simhash(docs, "text", "doc_id").collect()
     }
     for r in docs.select("doc_id", "text").collect():
         toks = dict.fromkeys(re.sub(r"\s+", " ", r.text.strip().lower()).split(" "))
@@ -126,16 +104,6 @@ def test_simhash_md5_mode_matches_python_reference(docs):
             if sum(1 if (h >> b) & 1 else -1 for h in hashes) > 0:
                 expect |= 1 << b
         assert sigs[r.doc_id] == expect
-    # locality holds in the portable mode too
-    assert sigs[0] == sigs[2]
-    assert bin(sigs[0] ^ sigs[1]).count("1") < bin(sigs[0] ^ sigs[3]).count("1")
-
-
-def test_simhash_md5_mode_rejects_over_32_bits(docs):
-    with pytest.raises(ValueError, match="32 vote bits"):
-        dd.simhash(docs, "text", "doc_id", bits=64, hash_fn="md5_32")
-    with pytest.raises(ValueError, match="unknown hash_fn"):
-        dd.simhash(docs, "text", "doc_id", hash_fn="sha1")
 
 
 def test_brute_force_topk_self_similarity_excluded_and_ranked(spark):
@@ -167,25 +135,19 @@ def test_lsh_topk_subset_of_bruteforce_scores(spark, sf_dir):
 
 
 def test_lsh_topk_md5_mode_matches_xxhash_scores(spark, sf_dir):
-    """The engine-portable md5_32 hyperplane family (the similarity_lsh_topk
-    oracle path) must behave like the production xxhash64 family where
-    behavior is hash-independent: cosine scores are computed from the raw
-    vectors, so every (query, cand) pair BOTH modes surface must carry the
-    same score; identical vectors always share every bucket, so each mode's
-    hit set is a subset of brute force with identical scores."""
+    """The md5 hyperplane family (the similarity_lsh_topk oracle path) with
+    several tables: cosine scores are computed from the raw vectors, so
+    every hit brute force also ranks carries the identical score.  (The
+    xxhash64 family it was once compared with is gone.)"""
     from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
 
     emb = star.table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    kw = dict(k=3, planes=4, dim=64, tables=4)
-    xx = {(r.query_id, r.cand_id): r.cosine for r in sim.lsh_topk(emb, q, **kw).collect()}
     md = {
         (r.query_id, r.cand_id): r.cosine
-        for r in sim.lsh_topk(emb, q, hash_fn="md5_32", **kw).collect()
+        for r in sim.lsh_topk(emb, q, k=3, planes=4, dim=64, tables=4).collect()
     }
-    assert md and xx
-    for pair in md.keys() & xx.keys():
-        assert abs(md[pair] - xx[pair]) < 1e-9
+    assert md
     brute = {
         (r.query_id, r.cand_id): r.cosine
         for r in sim.brute_force_topk(emb, q, k=3).collect()
@@ -193,8 +155,6 @@ def test_lsh_topk_md5_mode_matches_xxhash_scores(spark, sf_dir):
     for pair, cos in md.items():
         if pair in brute:
             assert abs(brute[pair] - cos) < 1e-9
-    with pytest.raises(ValueError, match="unknown hash_fn"):
-        sim.lsh_topk(emb, q, hash_fn="crc32", **kw)
 
 
 def test_topk_sweep_equals_per_point_runs(spark, sf_dir):
@@ -267,25 +227,19 @@ def test_ivf_topk_recall_vs_bruteforce(spark, sf_dir):
 
 
 def test_ivf_seed_centers_portable(spark, sf_dir):
-    """The portable IVF mode (similarity_ivf_topk's declared form):
-    (a) decimal-exact assignment agrees with the float production
-    assignment on the same seeded centers — the rank-invariant ||x||² drop
-    and the decimal fold must pick the same argmin; (b) the zero-refinement
-    seed quantizer still clears a recall floor vs brute force (it's a real
-    index, not a token gesture); (c) Lloyd's refinement is pinned as
-    at-least-comparable on the fixture (the reason it's the production
-    default)."""
+    """The portable IVF mode (similarity_ivf_topk's declared form): (a) the
+    zero-refinement seed quantizer clears a recall floor vs brute force
+    (it's a real index, not a token gesture); (b) Lloyd's refinement is
+    pinned as at-least-comparable on the fixture.  (The float assignment
+    it was once compared with is gone.)"""
     from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
 
     emb = star.table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     centers = sim.ivf_seed_centers(emb, n_centroids=8, seed=42)
 
-    exact = sim.ivf_topk(emb, q, k=3, n_probe=3, centers=centers, exact_assign=True)
-    flt = sim.ivf_topk(emb, q, k=3, n_probe=3, centers=centers, exact_assign=False)
+    exact = sim.ivf_topk(emb, q, k=3, n_probe=3, centers=centers)
     res_exact = {(r.query_id, r.cand_id, r.cosine, r.rnk) for r in exact.collect()}
-    res_float = {(r.query_id, r.cand_id, r.cosine, r.rnk) for r in flt.collect()}
-    assert res_exact == res_float  # assignment-mode agreement
 
     brute = {(r.query_id, r.cand_id) for r in sim.brute_force_topk(emb, q, k=3).collect()}
     seeded_recall = len({(a, b) for a, b, _, _ in res_exact} & brute) / len(brute)
@@ -937,14 +891,6 @@ def test_profile_columns_stats_and_single_scan(spark):
     plan = profile_columns(df, ["id", "lang", "n"])._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("LogicalRDD") == 1
 
-    # approx path keeps schema, skips the Expand; counts stay exact enough
-    # to land on the true value at this cardinality
-    approx = {
-        r.col_name: r
-        for r in profile_columns(df, ["id"], exact_distinct=False).collect()
-    }
-    assert approx["id"].n_distinct == 4
-
     empty = profile_columns(df.where(F.lit(False)), ["id"]).collect()
     assert empty[0].n_rows == 0 and empty[0].n_null == 0
 
@@ -975,33 +921,13 @@ def test_lsh_eval_reports_sane_metrics(spark, sf_check_dir):
     """dedup_lsh_eval (md5_32 declared mode since r8): consistent counts
     (tp <= both sides) and the 16-hash/8-band recall floor on the sf0.01
     fixture slice (the floors were measured there; the sf0.001 smoke slice
-    is too small for them).  The xxhash64 PRODUCTION mode keeps its own
-    eval pin here: the same P/R computed over the operator's default-mode
-    pairs must clear the same floors — the declared query's oracle gate
-    never sees xxhash64 bits, so this is that mode's quality record."""
-    from cloudcomputing_servicecompositiontest_datapipeline_spark.plans.extensions import _docs, dedup_lsh_eval
+    is too small for them)."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.plans.extensions import dedup_lsh_eval
 
     r = dedup_lsh_eval(spark, sf_check_dir).collect()[0]
     assert r.n_true_positive <= min(r.n_pred, r.n_truth)
     assert r.precision == 1.0  # every emitted pair is exact-verified in-space
     assert r.recall >= 0.9  # J>=0.5 band-collides w.p. >=0.92 at 8x2
-
-    docs = _docs(spark, sf_check_dir).where(F.col("doc_id") < 300)
-    truth = {
-        (p.id_a, p.id_b)
-        for p in dd.ngram_jaccard_pairs(
-            docs, "text", "doc_id", block_col=None, threshold=0.5
-        ).collect()
-    }
-    pred = {
-        (p.id_a, p.id_b)
-        for p in dd.minhash_near_dups(
-            docs, "text", "doc_id", num_hashes=16, bands=8, threshold=0.5,
-            shingle_n=1, max_bucket_size=1000,  # default hash_fn: xxhash64
-        ).collect()
-    }
-    assert pred <= truth  # precision 1.0: every pair exact-verified in-space
-    assert truth and len(pred & truth) / len(truth) >= 0.9
 
 
 def test_multi_table_lsh_improves_recall(spark, sf_dir):
@@ -2424,9 +2350,9 @@ def test_similarity_drops_nan_vectors_instead_of_ranking_them(spark):
 
 
 def test_kmeans_paths_survive_null_and_ragged_vectors(spark):
-    """A NULL embedding reaching the driver-side trainer (not iterable) or
-    the Arrow assignment kernel (np.stack of None) killed the job; a
-    wrong-dimension vector made the training matrix ragged (ValueError).
+    """A NULL embedding reaching the driver-side trainer (not iterable)
+    killed the job; a wrong-dimension vector made the training matrix
+    ragged (ValueError).
     Both classes now drop out of blocking/indexing row-locally — and in
     semantic dedup they REJOIN as self-canonical singletons, so no input
     id is ever silently lost."""
@@ -2436,7 +2362,7 @@ def test_kmeans_paths_survive_null_and_ragged_vectors(spark):
     rows += [(99, None), (98, [1.0, 2.0])]  # NULL + ragged
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
 
-    out = sim.semantic_dedup(emb, n_centroids=3, exact_dots=False)
+    out = sim.semantic_dedup(emb, n_centroids=3)
     got = {r.vec_id: r for r in out.collect()}
     assert len(got) == 32  # every id present
     assert got[99].canonical_id == 99 and got[99].is_kept  # singletons
@@ -2533,42 +2459,35 @@ def _vectors_df(spark, n=24, dim=8):
 
 def test_bucket_structs_matches_unrolled_lsh_bucket(spark):
     """_bucket_structs (one matrix-literal transform) must reproduce the
-    original per-table lsh_bucket loop bit-for-bit in BOTH hash modes."""
+    original per-table lsh_bucket loop bit-for-bit."""
     dim, planes, tables = 8, 2, 4
     df = _vectors_df(spark, dim=dim)
-    for hash_fn in ("md5_32", "xxhash64"):
-        old = df.select(
-            "vec_id",
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        lsh_bucket(
-                            F.col("embedding"),
-                            planes=planes,
-                            dim=dim,
-                            plane_offset=t * planes,
-                            hash_fn=hash_fn,
-                        ).alias("bits"),
-                    )
-                    for t in range(tables)
-                ]
-            ).alias("bk"),
-        )
-        new = df.select(
-            "vec_id",
-            _bucket_structs(
-                F.col("embedding"), planes=planes, dim=dim, tables=tables, hash_fn=hash_fn
-            ).alias("bk"),
-        )
-        got_old = {r.vec_id: [(s.tbl, s.bits) for s in r.bk] for r in old.collect()}
-        got_new = {r.vec_id: [(s.tbl, s.bits) for s in r.bk] for r in new.collect()}
-        assert got_new == got_old, f"bucket divergence in {hash_fn} mode"
+    old = df.select(
+        "vec_id",
+        F.array(
+            *[
+                F.struct(
+                    F.lit(t).alias("tbl"),
+                    lsh_bucket(
+                        F.col("embedding"), planes=planes, dim=dim, plane_offset=t * planes
+                    ).alias("bits"),
+                )
+                for t in range(tables)
+            ]
+        ).alias("bk"),
+    )
+    new = df.select(
+        "vec_id",
+        _bucket_structs(F.col("embedding"), planes=planes, dim=dim, tables=tables).alias("bk"),
+    )
+    got_old = {r.vec_id: [(s.tbl, s.bits) for s in r.bk] for r in old.collect()}
+    got_new = {r.vec_id: [(s.tbl, s.bits) for s in r.bk] for r in new.collect()}
+    assert got_new == got_old
 
 
 def test_pq_codes_matches_unrolled_argmin(spark):
     """_pq_codes (3-level codebook literal, subspace-indexed transform) must
-    reproduce the original per-subspace argmin loop in both assign modes."""
+    reproduce the original per-subspace argmin loop."""
     dim, m = 8, 2
     sub = dim // m
     df = _vectors_df(spark, dim=dim)
@@ -2576,19 +2495,15 @@ def test_pq_codes_matches_unrolled_argmin(spark):
         [[((j * 13 + c * 7 + k * 3) % 11 - 5) / 3.0 for k in range(sub)] for c in range(3)]
         for j in range(m)
     ]
-    for exact in (True, False):
-        argmin = _argmin_centroids_exact if exact else _argmin_centroids
-        codes = []
-        for j, cb in enumerate(codebooks):
-            subvec = F.slice(F.col("embedding"), j * sub + 1, sub)
-            codes.append(argmin(subvec, cb, 1)[0])
-        old = df.select("vec_id", F.array(*codes).alias("codes"))
-        new = df.select(
-            "vec_id", _pq_codes(F.col("embedding"), codebooks, exact).alias("codes")
-        )
-        got_old = {r.vec_id: list(r.codes) for r in old.collect()}
-        got_new = {r.vec_id: list(r.codes) for r in new.collect()}
-        assert got_new == got_old, f"pq code divergence (exact_assign={exact})"
+    codes = []
+    for j, cb in enumerate(codebooks):
+        subvec = F.slice(F.col("embedding"), j * sub + 1, sub)
+        codes.append(_argmin_centroids_exact(subvec, cb, 1)[0])
+    old = df.select("vec_id", F.array(*codes).alias("codes"))
+    new = df.select("vec_id", _pq_codes(F.col("embedding"), codebooks).alias("codes"))
+    got_old = {r.vec_id: list(r.codes) for r in old.collect()}
+    got_new = {r.vec_id: list(r.codes) for r in new.collect()}
+    assert got_new == got_old
 
 
 # ------------- cosine join guard: ``cosine IS NOT NULL`` <=> equal sizes

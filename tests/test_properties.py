@@ -451,11 +451,11 @@ keys_strategy = st.lists(
 )
 
 
-@given(inc_keys=keys_strategy, corp_keys=keys_strategy, probe=st.sampled_from(["literal", "pandas"]))
+@given(inc_keys=keys_strategy, corp_keys=keys_strategy)
 @SETTINGS
-def test_bloom_prefiltered_anti_join_matches_plain_anti_join(spark, inc_keys, corp_keys, probe):
-    """X24 exactness law: whatever the overlap structure, duplicates, FPR, or
-    probe path, the Bloom-prefiltered anti-join returns exactly the rows a
+def test_bloom_prefiltered_anti_join_matches_plain_anti_join(spark, inc_keys, corp_keys):
+    """X24 exactness law: whatever the overlap structure, duplicates or FPR,
+    the Bloom-prefiltered anti-join returns exactly the rows a
     plain left_anti returns (Bloom has no false negatives; positives are
     re-verified).  A tiny 256-bit filter forces plenty of false positives so
     the verify branch is actually exercised."""
@@ -472,9 +472,7 @@ def test_bloom_prefiltered_anti_join_matches_plain_anti_join(spark, inc_keys, co
     expect = sorted(r.row_id for r in inc.join(corp, "key", "left_anti").collect())
     got = sorted(
         r.row_id
-        for r in prefiltered_anti_join(
-            inc, corp, "key", num_bits=256, num_hashes=3, probe=probe
-        ).collect()
+        for r in prefiltered_anti_join(inc, corp, "key", num_bits=256, num_hashes=3).collect()
     )
     assert got == expect
 

@@ -12,17 +12,18 @@ from cloudcomputing_servicecompositiontest_datapipeline_spark.plans import regis
 registry.load_all()
 
 #: rows-only queries allowed inside the driver window: non-SQL-expressible
-#: ops (xxhash64 banding/bucketing, implementation-defined estimates, binary
-#: multimodal) whose correctness is pinned by pytest instead.
+#: ops (implementation-defined estimates, binary multimodal) whose
+#: correctness is pinned by pytest instead.
 ROWS_ONLY_ALLOWED = {
     # dedup_simhash, dedup_minhash_lsh and dedup_cluster_canonical_lsh left
     # this set in r7; similarity_lsh_topk, similarity_jl_projection and
     # sketch_frequency_heavy_hitters left it in r8, then sketch_distinct_
     # rollup (portable-HLL registers→max-merge→decimal-exact estimate) and
     # similarity_ivf_topk (seed-vector quantizer by md5 rank + decimal-exact
-    # assignment): those declared queries now run engine-portable modes and
-    # are fully oracle-checked (production xxhash64/DataSketches/Lloyd's
-    # modes stay pytest/eval-pinned).
+    # assignment): those queries run engine-portable hashes and arithmetic
+    # and are fully oracle-checked.  The xxhash64 modes they once switched
+    # from were removed because no query used them; Lloyd's-trained
+    # centers stay pytest/eval-pinned.
     "multimodal_decode",
     # r3 window additions: binary features are implementation-defined.
     # (dedup_lsh_eval left this set in r8: its declared mode now runs the
@@ -30,17 +31,15 @@ ROWS_ONLY_ALLOWED = {
     # sketch_quantile_rollup left in r7 with its KLL→exact-quantile twin.)
     "multimodal_features",
     # similarity_ann_eval and similarity_ann_sweep left this set in r8's
-    # second pass: their declared forms now run the portable md5_32-LSH +
-    # seed-vector-IVF modes, so truth, candidates, and every recall point
-    # are oracle-checked (production xxhash64/Lloyd's floors stay in
-    # tests/test_extensions.py).
+    # second pass: they run md5 LSH + seed-vector IVF, so truth,
+    # candidates, and every recall point are oracle-checked (Lloyd's-IVF
+    # floors stay in tests/test_extensions.py).
     # r4 window: finishing the never-checked sweep pulls in the remaining
     # rows-only-by-design queries — streaming batch-twins (incremental
-    # micro-batch semantics aren't one SQL statement), the xxhash64-seeded /
-    # learned-codebook compression ops (PQ/int8/JL outputs are
-    # implementation-defined but pinned by recall/distortion pytest floors),
-    # k-means semantic-dedup centroids, and the learned-merge BPE outputs
-    # (training argmax sequence pinned against a pure-Python reference).
+    # micro-batch semantics aren't one SQL statement) and the learned-merge
+    # BPE outputs (training argmax sequence pinned against a pure-Python
+    # reference); the compression ops and semantic-dedup centroids that
+    # were here have since become oracle-checked (below).
     "streaming_available_now",
     "streaming_dedup_on_arrival",
     "streaming_stateful_lifetimes",
@@ -48,14 +47,16 @@ ROWS_ONLY_ALLOWED = {
     # dedup_semantic_centroids left this set in r8's second pass: the
     # declared form blocks on the seed-vector quantizer with decimal-exact
     # assignment/dots, and the CC fixpoint is the recursive-CTE oracle
-    # (numpy Lloyd's production mode stays pinned by the cluster-agreement
-    # tests).
+    # (Lloyd's-trained blocking stays pinned by the cluster-agreement
+    # tests; the pandas-UDF assignment it once used was removed because no
+    # query used it).
     # similarity_pq_encode left this set in r8: seed codebooks by md5 rank
     # + decimal-exact per-subspace assignment (the IVF precedent); then
     # similarity_pq_eval in r8's second pass (decimal ADC against the
     # flattened reconstructed vector + integer-sum recall recomposition
-    # made the whole two-stage eval portable).
-    # similarity_jl_eval left this set in r8: md5_32 signs + decimal-exact
+    # made the whole two-stage eval portable; the float assignment and ADC
+    # modes were later removed because no query used them).
+    # similarity_jl_eval left this set in r8: md5 signs + decimal-exact
     # statistics made the whole distortion eval oracle-checkable; then
     # similarity_quantized_recall (integer-sum mean, NULLS LAST rank
     # windows — every other step was already portable arithmetic).
@@ -146,9 +147,11 @@ def test_oracle_queries_return_no_nested_columns(spark, sf_dir):
 
 def test_bench_contract_shape():
     """bench.py is a driver contract too: it must print ONE JSON line with
-    metric/value/unit/queries/sf, and every name it times must be a
-    registered query (a rename that forgets bench would otherwise only
-    surface as a driver-side crash at round end)."""
+    metric/value/unit/queries/sf, and every name it times — the headline,
+    every GROUPS table, TIER2 and the scaling probes — must be a registered
+    query (``bench._time_group`` silently skips an unregistered name, so a
+    rename that forgets bench would otherwise drop it from the record
+    unseen)."""
     import importlib.util
 
     from pathlib import Path
@@ -162,8 +165,8 @@ def test_bench_contract_shape():
     import __spark_entry__ as em
 
     qs = set(em.queries())
-    timed = bench.HEADLINE + bench.EXTRA + bench.NEW_R3 + bench.NEW_R4 + bench.NEW_R5
-    for name in timed:
+    timed = bench.HEADLINE + [n for names in bench.GROUPS.values() for n in names]
+    for name in [*timed, *bench.TIER2, *bench.SCALING_PROBES]:
         assert name in qs, f"bench times unknown query {name!r}"
     # headline set frozen since r1 for cross-round comparability
     assert len(bench.HEADLINE) == 15
@@ -171,8 +174,6 @@ def test_bench_contract_shape():
     # r11 scaling probes: registered, disjoint from the frozen headline
     # (they ride in the stdout queries map for the driver's low-core ratio
     # measurement but must not change what `value` sums)
-    for name in bench.SCALING_PROBES:
-        assert name in qs, f"scaling probe is not a registered query: {name!r}"
     assert not set(bench.SCALING_PROBES) & set(bench.HEADLINE)
 
 
@@ -184,7 +185,6 @@ TEST_REFERENCES = {
     ("functions/sketch.py", "hll_portable_merge"): "test_hll_portable_merge_law_and_accuracy pins hll_portable_registers' max-merge law",
     ("functions/sketch.py", "hll_portable_estimate"): "same test pins hll_portable_registers' accuracy against exact distinct counts",
     ("operators/dedup.py", "minhash_signatures"): "test_lsh_bucket_cap_bounds_candidate_pairs_under_skew feeds lsh_candidate_pairs with it",
-    ("operators/similarity.py", "_dot_seq"): "test_portable_folds pins the sequential fold _argmin_centroids_seq rests on against DuckDB",
     ("operators/similarity.py", "lsh_bucket"): "test_bucket_structs_matches_unrolled_lsh_bucket pins _bucket_structs bit-for-bit against it",
     ("operators/similarity.py", "pq_train"): "PQ tests encode with its Lloyd's codebooks to pin pq_encode",
     ("operators/text.py", "perplexity_scores"): "test_perplexity_join_path_* pin perplexity_scores_join against this literal-map scorer",
@@ -443,3 +443,188 @@ def test_every_defaulted_parameter_is_set_by_some_caller():
     never, stale = _unset_defaulted_parameters()
     assert not never, f"defaulted parameters no caller sets (make them constants): {never}"
     assert not stale, f"stale DEPLOYMENT_SETTINGS entries: {stale}"
+
+
+def _single_valued_mode_switches() -> list[str]:
+    """Mode-switch parameters of top-level package functions outside plans/
+    that non-test callers give fewer than two distinct values.
+
+    A parameter is a mode switch when the body compares it with a str or
+    bool literal (``==``, ``!=``, ``in``, ``is``), when it is bool-defaulted
+    or bool-annotated and used as a bare ``if`` or conditional-expression
+    test, or when it is passed unchanged into a mode switch of another
+    function.  Its values
+    come from the calls (matched by name, through ``import ... as``
+    aliases) in the package including plans/, ``tools/``, ``bench.py``,
+    ``__spark_entry__.py`` and non-test ``perfbench/``: a literal is its own
+    value, an omitted argument is the default, a parameter passed through
+    unchanged carries the values of the enclosing function's parameter,
+    and any other expression counts as a distinct value.  A function used
+    as a value or called through a ``*``/``**`` spread is exempt: its calls
+    cannot be matched.
+    """
+    import ast
+    from collections import defaultdict
+
+    repo, pkg = _package_files()
+    funcs = {}  # name -> (node, positional names, {name: default node or None})
+    flags = set()  # (function, parameter) bool-defaulted or bool-annotated
+    for f in sorted(pkg.rglob("*.py")):
+        if f.relative_to(pkg).parts[0] == "plans":
+            continue
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                pos = [*a.posonlyargs, *a.args]
+                defaults = dict.fromkeys(p.arg for p in [*pos, *a.kwonlyargs])
+                defaults.update(zip([p.arg for p in pos[len(pos) - len(a.defaults):]], a.defaults))
+                defaults.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d)
+                funcs[node.name] = (node, [p.arg for p in pos], defaults)
+                for p in [*pos, *a.kwonlyargs]:
+                    d = defaults[p.arg]
+                    if getattr(p.annotation, "id", None) == "bool" or (
+                        isinstance(d, ast.Constant) and isinstance(d.value, bool)
+                    ):
+                        flags.add((node.name, p.arg))
+
+    def literal(n):
+        return isinstance(n, ast.Constant) and isinstance(n.value, (str, bool))
+
+    def call_name(call):
+        return getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+
+    def bound(call, fn):  # {parameter: argument node} of one call to fn
+        _, pos, _ = funcs[fn]
+        out = dict(zip(pos, call.args))
+        out.update((k.arg, k.value) for k in call.keywords if k.arg)
+        return out
+
+    switches = set()
+    for fn, (node, _, defaults) in funcs.items():
+        for n in ast.walk(node):
+            if isinstance(n, ast.Compare):
+                sides = [n.left, *n.comparators]
+                names = {s.id for s in sides if isinstance(s, ast.Name)}
+                lits = any(
+                    literal(s) or isinstance(s, (ast.Tuple, ast.List, ast.Set))
+                    and any(map(literal, s.elts))
+                    for s in sides
+                )
+                if lits:
+                    switches |= {(fn, p) for p in names & defaults.keys()}
+            elif isinstance(n, (ast.If, ast.IfExp)) and isinstance(n.test, ast.Name):
+                if (fn, n.test.id) in flags:
+                    switches.add((fn, n.test.id))
+    passes = defaultdict(set)  # (callee, param) -> {(caller, param)}
+    for fn, (node, _, defaults) in funcs.items():
+        for n in ast.walk(node):
+            if isinstance(n, ast.Call) and call_name(n) in funcs:
+                for p, arg in bound(n, call_name(n)).items():
+                    if isinstance(arg, ast.Name) and arg.id in defaults:
+                        passes[(call_name(n), p)].add((fn, arg.id))
+    while True:
+        grown = {src for dst in switches for src in passes[dst]} - switches
+        if not grown:
+            break
+        switches |= grown
+
+    callers = [
+        *pkg.rglob("*.py"),
+        *(repo / "tools").glob("*.py"),
+        *(repo / "perfbench").glob("*.py"),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    values, exempt = defaultdict(set), set()
+    for f in callers:
+        tree = ast.parse(f.read_text())
+        alias = {
+            a.asname: a.name
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Import, ast.ImportFrom))
+            for a in n.names
+            if a.asname
+        }
+        called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        scopes = [
+            (n.name if isinstance(n, ast.FunctionDef) else None, n) for n in tree.body
+        ]
+        for enclosing, scope in scopes:
+            for n in ast.walk(scope):
+                if isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in called:
+                    used = n.attr if isinstance(n, ast.Attribute) else n.id
+                    exempt.add(alias.get(used, used))
+                if not isinstance(n, ast.Call):
+                    continue
+                fn = alias.get(call_name(n), call_name(n))
+                if fn not in funcs:
+                    continue
+                if any(isinstance(a, ast.Starred) for a in n.args) or any(
+                    k.arg is None for k in n.keywords
+                ):
+                    exempt.add(fn)
+                args = bound(n, fn)
+                for p in funcs[fn][2]:
+                    if (fn, p) not in switches:
+                        continue
+                    arg = args.get(p, funcs[fn][2][p])
+                    if arg is None:
+                        continue
+                    if isinstance(arg, ast.Name) and (enclosing, arg.id) in switches:
+                        continue  # carries the enclosing switch's values
+                    values[(fn, p)].add(
+                        ast.dump(arg) if isinstance(arg, ast.Constant)
+                        else f"{f.name}:{arg.lineno}:{arg.col_offset}"
+                    )
+    # a pass-through switch takes every value its callers give it
+    for _ in range(len(switches)):
+        for dst in switches:
+            for src in passes[dst]:
+                values[dst] |= values[src]
+    return sorted(
+        f"{fn}({p})" for fn, p in switches if fn not in exempt and len(values[(fn, p)]) < 2
+    )
+
+
+def test_every_mode_switch_is_used_in_both_modes():
+    """Ratchet against modes no product caller selects: a package
+    parameter that picks between implementations (a str/bool literal
+    comparison, a bool flag tested bare, or a pass-through into one) must
+    receive at least two distinct values from the package, tools, bench.py
+    or perfbench.  A mode only tests select doubles the configurations to
+    cover for no product path — delete the branch, keep the mode the
+    callers use."""
+    single = _single_valued_mode_switches()
+    assert not single, f"mode switches with one product value (delete the other modes): {single}"
+
+
+def _unused_imports() -> list[str]:
+    """``module:line name`` for every name a package import binds that the
+    module never uses.  Imports marked ``# noqa: F401`` (side effects,
+    re-exports) are exempt, as is ``from __future__``."""
+    import ast
+
+    _, pkg = _package_files()
+    out = []
+    for f in sorted(pkg.rglob("*.py")):
+        src = f.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for n in ast.walk(tree):
+            if not isinstance(n, (ast.Import, ast.ImportFrom)):
+                continue
+            if "noqa: F401" in lines[n.lineno - 1] or getattr(n, "module", None) == "__future__":
+                continue
+            for a in n.names:
+                name = a.asname or a.name.split(".")[0]
+                if name not in used:
+                    out.append(f"{f.relative_to(pkg)}:{n.lineno} {name}")
+    return out
+
+
+def test_package_has_no_unused_imports():
+    """Ratchet against dead names the reachability walk cannot see: every
+    name a package module imports is used in that module."""
+    unused = _unused_imports()
+    assert not unused, f"unused imports: {unused}"

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from cloudcomputing_servicecompositiontest_datapipeline_spark.operators.report import (
@@ -344,63 +343,43 @@ def test_cm_sketch_frequency_bounds_and_merge_law(spark):
 
 
 def test_cm_sketch_md5_mode_matches_xxhash_bounds(spark):
-    """The engine-portable md5_32 bucket mode (the
-    sketch_frequency_heavy_hitters oracle path) must satisfy the SAME CM
-    guarantees as the production xxhash64 mode: never undercounts, exact at
-    low collision rates, merge law holds, and a Python md5 model reproduces
-    the bucket placement bit for bit."""
+    """The md5 bucket placement (the sketch_frequency_heavy_hitters oracle
+    path) matches a Python md5 model bit for bit.  The CM guarantees (never
+    undercounts, exact at low collision rates, merge law) are pinned by
+    test_cm_sketch_frequency_bounds_and_merge_law; the xxhash64 bucket mode
+    this test once compared with is gone."""
     import hashlib
 
     from cloudcomputing_servicecompositiontest_datapipeline_spark.functions.sketch import (
-        cm_merge,
-        cm_query,
         cm_sketch,
     )
 
     rows = [("a",)] * 100 + [("b",)] * 30 + [("c",)] * 7
-    df = spark.createDataFrame(rows, "item STRING").withColumn(
-        "shard", (F.monotonically_increasing_id() % 2).cast("int")
-    )
+    df = spark.createDataFrame(rows, "item STRING")
     exact = {"a": 100, "b": 30, "c": 7}
-    whole = cm_sketch(df, "item", [], bucket_hash="md5_32")
-    merged = cm_merge(cm_sketch(df, "item", ["shard"], bucket_hash="md5_32"))
-    w = whole.collect()[0].cm
-    assert w == merged.collect()[0].cm  # merge law is hash-independent
+    w = cm_sketch(df, "item", []).collect()[0].cm
     assert sum(w) == 4 * 137
-    # bucket placement agrees with the portable md5 definition exactly
     for item, n in exact.items():
         for r in range(4):
             b = int(hashlib.md5(f"{r}:{item}".encode()).hexdigest()[:8], 16) % 256
             assert w[r * 256 + b] >= n
-    items = spark.createDataFrame([(k,) for k in exact], "item STRING")
-    est = {
-        r.item: r.cm_estimate
-        for r in cm_query(
-            items.crossJoin(whole), F.col("item"), bucket_hash="md5_32"
-        ).collect()
-    }
-    for k, n in exact.items():
-        assert est[k] == n  # 3 items in 4x256 cells: collision-free
-    with pytest.raises(ValueError, match="unknown bucket_hash"):
-        cm_sketch(df, "item", [], bucket_hash="crc32")
 
 
 def test_cm_sketch_null_items_excluded_in_both_modes(spark):
-    """NULL items must not be counted in EITHER hash mode (r8 ADVICE: the
-    post-explode cell filter only caught md5 mode — xxhash64 hashes NULL to
-    a real bucket, so the two modes diverged on null-bearing corpora).
-    Both modes' sketches of a null-bearing corpus must equal the sketches
-    of the same corpus with nulls pre-dropped."""
+    """NULL items must not be counted (r8 ADVICE: a post-explode cell
+    filter once caught only md5's NULL digests, so an xxhash64 mode that
+    has since been removed counted them): the sketch of a null-bearing
+    corpus must equal the sketch of the same corpus with nulls
+    pre-dropped."""
     from cloudcomputing_servicecompositiontest_datapipeline_spark.functions.sketch import cm_sketch
 
     rows = [("a",)] * 5 + [(None,)] * 3 + [("b",)] * 2
     df = spark.createDataFrame(rows, "item STRING")
     clean = df.where(F.col("item").isNotNull())
-    for mode in ("xxhash64", "md5_32"):
-        w_null = cm_sketch(df, "item", [], bucket_hash=mode).collect()[0].cm
-        w_clean = cm_sketch(clean, "item", [], bucket_hash=mode).collect()[0].cm
-        assert w_null == w_clean, mode
-        assert sum(w_null) == 4 * 7  # depth * non-null rows
+    w_null = cm_sketch(df, "item", []).collect()[0].cm
+    w_clean = cm_sketch(clean, "item", []).collect()[0].cm
+    assert w_null == w_clean
+    assert sum(w_null) == 4 * 7  # depth * non-null rows
 
 
 def test_hist_sketch_merge_law_and_quantile_bound(spark):
