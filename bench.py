@@ -282,6 +282,18 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = em.queries()
 
+    def _noop(name: str, sf: str):
+        """One execution of ``name``, its jobs described as ``q:<name>``."""
+
+        def run() -> None:
+            spark.sparkContext.setJobDescription(f"q:{name}")
+            try:
+                qs[name](spark, sf).write.format("noop").mode("overwrite").save()
+            finally:
+                spark.sparkContext.setJobDescription(None)
+
+        return run
+
     # Warm-up: run every headline plan once at the smallest SF — this
     # Janino-compiles the generated code and JIT-warms the hot loops, so the
     # timed pass measures steady-state execution, not first-run compilation.
@@ -293,9 +305,9 @@ def main() -> None:
             if budget.remaining() < budget.total * 0.7:
                 budget.skipped.append(f"warmup:{name}")
                 continue
-            qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
+            _noop(name, warm_dir)()
     else:
-        qs["report_group_avg"](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        _noop("report_group_avg", SF_DIR)()
 
     # Prime the OS page cache for the timed SF's parquet (first touch after
     # a VM boot otherwise lands in the first timed run): one cheap full scan
@@ -310,15 +322,6 @@ def main() -> None:
     except OSError:
         pass
 
-    # One UNTIMED pass at the timed SF first (the sf0.001 warm-up compiles
-    # the codegen but C2/JIT steady state needs executions at the real data
-    # shape — observed: the same query keeps dropping for ~4-8 runs), then
-    # min of three timed executions: robust to a GC pause, compilation
-    # straggler, or a hypervisor-steal burst landing in one run (observed:
-    # single-run noise up to 5x on virtualized hosts).
-    def _noop(name: str, sf: str):
-        return lambda: qs[name](spark, sf).write.format("noop").mode("overwrite").save()
-
     # Ambient-load sentinel (r9 verdict #1): a fixed data-independent probe
     # timed at start / mid / end of the run, emitted in the record, so a
     # reader can distinguish "host was busy" from "we regressed" — the probe
@@ -329,6 +332,13 @@ def main() -> None:
     prime_sentinel(spark)
     sentinels: dict[str, dict] = {"start": run_sentinel(spark)}
 
+    # One UNTIMED pass at the timed SF first (the sf0.001 warm-up compiles
+    # the codegen but C2/JIT steady state needs executions at the real data
+    # shape — observed: the same query keeps dropping for ~4-8 runs), then
+    # min of three timed executions: robust to a GC pause, compilation
+    # straggler, or a hypervisor-steal burst landing in one run (observed:
+    # single-run noise up to 5x on virtualized hosts).
+    #
     # Headline: 1 untimed + min-of-3 timed, but budget-guarded like every
     # other phase (r9 ADVICE: three ~100 s headline queries stay under the
     # per-exec cap yet blow the whole-run budget) — below 40% remaining the

@@ -25,6 +25,13 @@ def normalized_text(col: F.Column) -> F.Column:
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
+def normalized_text_sql(col: str) -> str:
+    """:func:`normalized_text` of column ``col`` as SQL-expression text, for
+    expressions built as one ``F.expr`` instead of one py4j round trip per
+    ``functions.*`` call."""
+    return f"regexp_replace(lower(trim(`{col}`)), '\\\\s+', ' ')"
+
+
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """X1: exact dedup by normalized content hash, keeping the lowest id
     (deterministic analogue of first-wins, SURVEY.md §7.3).  One shuffle on
@@ -205,29 +212,16 @@ def lsh_candidate_pairs(
     not the 32-char hex string: bucket keys only need EQUALITY semantics,
     unhex(hex) is injective, and the (band, bucket) exchange carries half
     the key bytes."""
+    # one SQL text per generated family: one py4j round trip for the whole
+    # band array instead of several per band
+    bucket = "unhex(md5(array_join(transform(slice(sig, {}, {}), x -> cast(x as string)), ',')))"
+    band_structs = ", ".join(
+        f"struct({b} AS band, {bucket.format(b * rows_per_band + 1, rows_per_band)} AS bucket)"
+        for b in range(bands)
+    )
     banded = sig.select(
         F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.unhex(
-                            F.md5(
-                                F.array_join(
-                                    F.transform(
-                                        F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                                        lambda x: x.cast("string"),
-                                    ),
-                                    ",",
-                                )
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
+        F.expr(f"explode(array({band_structs}))").alias("bb"),
     ).select(id_col, "bb.band", "bb.bucket")
     if max_bucket_size is not None:
         # one exchange for the whole capped pipeline: the bucket-size window
@@ -248,18 +242,10 @@ def lsh_candidate_pairs(
             .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
             .filter(F.size("ids") >= 2)
         )
-    n = F.size("ids")
     # sorted ids ⇒ emitting (ids[i], ids[j]) for i<j gives id_a < id_b
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.slice(F.col("ids"), i + 1, n - i),
-                lambda x: F.struct(
-                    F.element_at(F.col("ids"), i).alias("id_a"), x.alias("id_b")
-                ),
-            ),
-        )
+    pairs = F.expr(
+        "flatten(transform(sequence(1, size(ids) - 1), i -> transform("
+        "slice(ids, i + 1, size(ids) - i), x -> struct(element_at(ids, i) AS id_a, x AS id_b))))"
     )
     return (
         # explode_outer: keeps InferFiltersFromGenerate from duplicating the
@@ -309,17 +295,19 @@ def minhash_near_dups(
     shingles, no raw text) — at 100 TB this is the intermediate you'd
     materialize to parquet between the two stages."""
     rows_per_band = num_hashes // bands
-    toks_arr = F.split(normalized_text(F.col(text_col)), " ")
-    items = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks_arr) - shingle_n, F.lit(0))),
-            lambda i: F.array_join(F.slice(toks_arr, i + 1, shingle_n), " "),
-        )
+    # The shingle set, the digests and the signature slots are each ONE
+    # SQL-expression text: the same expression tree as the Column API
+    # builds, but one py4j round trip per projection instead of one per
+    # ``functions.*`` call (hundreds for the 16 slot lambdas).
+    toks = f"split({normalized_text_sql(text_col)}, ' ')"
+    items = (
+        f"array_distinct(transform(sequence(0, greatest(size({toks}) - {shingle_n}, 0)), "
+        f"i -> array_join(slice({toks}, i + 1, {shingle_n}), ' ')))"
     )
     sets = (
         ensure_parallelism(df)
         .where(F.col(text_col).isNotNull())
-        .select(F.col(id_col), items.alias("items"))
+        .select(F.col(id_col), F.expr(items).alias("items"))
         .persist()
     )
     # one md5 digest yields FOUR independent 32-bit slots (substrings of
@@ -329,37 +317,21 @@ def minhash_near_dups(
     # interpreted higher-order lambdas — the SCALING.md lambda-capture
     # note), then fans the 8-hex-char windows out row-locally.
     n_digests = (num_hashes + 3) // 4
-    slots = F.transform(
-        F.col("items"),
-        lambda s: F.transform(
-            F.sequence(F.lit(0), F.lit(n_digests - 1)),
-            lambda g: F.md5(F.concat(g.cast("string"), F.lit(":"), s)),
-        ),
+    slots = (
+        f"transform(items, s -> transform(sequence(0, {n_digests - 1}), "
+        "g -> md5(concat(cast(g as string), ':', s))))"
     )
-
-    def _slot_min(k: int):
-        # closure factory, NOT a default-arg lambda: a 2-param lambda is
-        # read by pyspark as (element, index).  Fixed-width lowercase
-        # hex sorts like its numeric value, so take the min over the
-        # 8-hex-char windows and parse ONE winner per (doc, slot) —
-        # not one conv per shingle (16×|shingles| string-parses saved;
-        # values identical by monotonicity of conv on fixed-width hex).
-        return F.conv(
-            F.array_min(
-                F.transform(
-                    F.col("_digests"),
-                    lambda ds: F.substring(
-                        F.element_at(ds, k // 4 + 1), 8 * (k % 4) + 1, 8
-                    ),
-                )
-            ),
-            16,
-            10,
-        ).cast("long")
-
-    mins = [_slot_min(k) for k in range(num_hashes)]
-    sig = sets.select(F.col(id_col), slots.alias("_digests")).select(
-        F.col(id_col), F.array(*mins).alias("sig")
+    # Fixed-width lowercase hex sorts like its numeric value, so each slot
+    # takes the min over the 8-hex-char windows and parses ONE winner per
+    # (doc, slot) — not one conv per shingle (16×|shingles| string-parses
+    # saved; values identical by monotonicity of conv on fixed-width hex).
+    mins = ", ".join(
+        "cast(conv(array_min(transform(_digests, ds -> "
+        f"substring(element_at(ds, {k // 4 + 1}), {8 * (k % 4) + 1}, 8))), 16, 10) as bigint)"
+        for k in range(num_hashes)
+    )
+    sig = sets.select(F.col(id_col), F.expr(slots).alias("_digests")).select(
+        F.col(id_col), F.expr(f"array({mins})").alias("sig")
     )
     cands = lsh_candidate_pairs(
         sig,
@@ -619,44 +591,57 @@ def cluster_canonical(
     Docs with no near-dup pair keep themselves as canonical; a NULL id
     pairs with nothing and stays NULL.
 
-    The pairs become a distinct, symmetric edge set whose count picks one
-    of two ways to the same component minima:
+    The pairs become one-way edges ``(least, greatest)``, distinct, with
+    self-loops and NULL endpoints dropped (``least``/``greatest`` skip a
+    NULL, so such a pair folds to ``(a, a)`` and fails ``src < dst``; the
+    final coalesce gives those nodes themselves).  Each one-way edge is two
+    directed edges, so a graph under ``_EDGES_PER_PARTITION`` directed
+    edges has at most ``cap = (_EDGES_PER_PARTITION - 1) // 2`` of them.
+    One bounded Arrow collect of at most ``cap + 1`` one-way edges picks
+    one of two ways to the same component minima:
 
-    - **Driver** (under ``_EDGES_PER_PARTITION`` edges — the common case: a
-      few-% dup rate gives a kilobyte-to-megabyte graph): one Arrow
-      collect of the edges, :func:`component_minimum`, and the labels
-      shipped back with ``createDataFrame`` typed like the ids.  The edge
-      count and one collect, whatever the graph's diameter;
-      ``max_iterations`` does not apply, the fixpoint is always reached.
-      No Python worker starts.
-    - **Loop** (larger graphs, which no longer fit one partition):
-      iterative min-label propagation WITH pointer jumping over
+    - **Driver** (the collect did not overflow: fewer than
+      ``_EDGES_PER_PARTITION`` directed edges — the common case, a few-%
+      dup rate gives a kilobyte-to-megabyte graph):
+      :func:`component_minimum` over the collected edges, and the labels
+      shipped back with ``createDataFrame`` typed like the ids.  One
+      collect whatever the graph's diameter, and nothing is checkpointed
+      or persisted; ``max_iterations`` does not apply, the fixpoint is
+      always reached.  No Python worker starts.
+    - **Loop** (the collect overflowed, so the graph no longer fits one
+      partition): the symmetric edge set is checkpointed and counted, and
+      iterative min-label propagation WITH pointer jumping runs over
       ``edges.count() // _EDGES_PER_PARTITION + 1`` partitions (capped at
-      the session's parallelism).  Every node starts labelled with itself;
-      each step every node takes the min label among itself and its
-      neighbors, then follows its label one hop (label ← label(label)),
-      so rounds are O(log diameter) instead of O(diameter) (measured 22
-      rounds → 6 on the sf0.1 semantic-dedup graph), at most
-      ``max_iterations`` steps.  The jump only ever replaces a label with
-      a smaller same-component label, so the fixpoint is the component
-      minimum.  ``localCheckpoint`` truncates lineage each round; the
-      convergence check is a cheap ``limit(1).count`` over the previous
-      label carried THROUGH the round's aggregate.
+      the session's parallelism).  The edge pipeline runs again for the
+      checkpoint, once, on top of the overflowing collect.  Every node
+      starts labelled with itself; each step every node takes the min
+      label among itself and its neighbors, then follows its label one
+      hop (label ← label(label)), so rounds are O(log diameter) instead of
+      O(diameter) (measured 22 rounds → 6 on the sf0.1 semantic-dedup
+      graph), at most ``max_iterations`` steps.  The jump only ever
+      replaces a label with a smaller same-component label, so the
+      fixpoint is the component minimum.  ``localCheckpoint`` truncates
+      lineage each round; the convergence check is a cheap
+      ``limit(1).count`` over the previous label carried THROUGH the
+      round's aggregate.
     """
-    fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    edges = (
-        fwd.unionByName(
-            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    one_way = (
+        pairs.select(
+            F.least("id_a", "id_b").alias("src"), F.greatest("id_a", "id_b").alias("dst")
         )
+        .where(F.col("src") < F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    # the count materializes the edge checkpoint, which either path reads
-    n_edges = edges.count()
-    if n_edges < _EDGES_PER_PARTITION:
-        labels = _driver_labels(edges)
+    cap = (_EDGES_PER_PARTITION - 1) // 2
+    collected = one_way.limit(cap + 1).toArrow()
+    if collected.num_rows <= cap:
+        labels = _driver_labels(one_way, collected)
     else:
-        labels = _propagated_labels(edges, n_edges, max_iterations)
+        edges = one_way.unionByName(
+            one_way.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).localCheckpoint(eager=False)
+        # the count materializes the edge checkpoint the loop reads
+        labels = _propagated_labels(edges, edges.count(), max_iterations)
     return (
         df.select(F.col(id_col).alias("node"))
         .join(labels.select("node", "label"), "node", "left")
@@ -667,25 +652,21 @@ def cluster_canonical(
     )
 
 
-def _driver_labels(edges: DataFrame) -> DataFrame:
+def _driver_labels(one_way: DataFrame, collected) -> DataFrame:
     """(node, label) of :func:`cluster_canonical`'s graph, solved on the
-    driver.  ``src < dst`` keeps one direction of each edge and drops
-    self-loops and NULL endpoints (a comparison with NULL is never true):
-    the loop moves no label through either, and the final coalesce gives
-    such nodes themselves.  ``toArrow`` and an Arrow-table
-    ``createDataFrame`` move the data in Arrow batches whatever the
-    session's Arrow setting — the pandas and row fallbacks would collect
-    row by row, and a local-rows ``createDataFrame`` runs a Python worker
-    to re-pickle them."""
+    driver from ``collected``, the Arrow table of every one-way edge of
+    ``one_way``.  ``toArrow`` and an Arrow-table ``createDataFrame`` move
+    the data in Arrow batches whatever the session's Arrow setting — the
+    pandas and row fallbacks would collect row by row, and a local-rows
+    ``createDataFrame`` runs a Python worker to re-pickle them."""
     import pyarrow as pa
     from pyspark.sql.types import StructType
 
-    one_way = edges.where(F.col("src") < F.col("dst")).toArrow()
     canon = component_minimum(
-        zip(one_way.column("src").to_pylist(), one_way.column("dst").to_pylist())
+        zip(collected.column("src").to_pylist(), collected.column("dst").to_pylist())
     )
-    id_type = edges.schema["src"].dataType
-    return edges.sparkSession.createDataFrame(
+    id_type = one_way.schema["src"].dataType
+    return one_way.sparkSession.createDataFrame(
         pa.table({"node": list(canon), "label": list(canon.values())}),
         StructType().add("node", id_type).add("label", id_type),
     )

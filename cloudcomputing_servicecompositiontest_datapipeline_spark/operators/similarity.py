@@ -1321,7 +1321,9 @@ def random_projection(
     the projected vector is bit-identical on any engine and partition
     order -- DuckDB can recompute the projection exactly.  Literal sign
     rows need a STATIC input width (array expressions can't be sized from
-    a runtime column), so it is taken as ``in_dim``."""
+    a runtime column), so it is taken as ``in_dim``; a non-NULL embedding
+    of any other width fails the query (a short zip would otherwise fold
+    every component to NULL), and a NULL embedding projects as before."""
     import hashlib
 
     inv = 1.0 / float(out_dim) ** 0.5
@@ -1338,9 +1340,18 @@ def random_projection(
     comps = [
         (_dot_dec(F.col("embedding"), sign_row(i)).cast("double") * inv) for i in range(out_dim)
     ]
+    width = F.size("embedding")
     return ensure_parallelism(emb).select(
         F.col("vec_id"),
-        F.array(*comps).alias("projected"),
+        F.when(
+            F.col("embedding").isNotNull() & (width != in_dim),
+            F.raise_error(
+                F.concat(F.lit(f"random_projection: in_dim is {in_dim}, embedding width is "),
+                         width.cast("string"))
+            ),
+        )
+        .otherwise(F.array(*comps))
+        .alias("projected"),
     )
 
 

@@ -938,34 +938,31 @@ def winnow_fingerprints(
         F.col(id_col),
         F.split(normalized_text(F.col(text_col)), " ").alias("_tk"),
     )
-    n_grams = F.greatest(F.size("_tk") - (k - 1), F.lit(0))
-    gram_hashes = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_grams, F.lit(1))),
-        lambda i: F.conv(
-            F.substring(F.md5(F.array_join(F.slice(F.col("_tk"), i, k), " ")), 1, 8),
-            16,
-            10,
-        ).cast("long"),
+    # Each lambda family is ONE SQL-expression text: the same expression
+    # tree as the Column API builds, in one py4j round trip per projection
+    # instead of one per ``functions.*`` call.
+    n_grams = f"greatest(size(_tk) - {k - 1}, 0)"
+    gram_hashes = (
+        f"transform(sequence(1, greatest({n_grams}, 1)), i -> cast(conv(substring("
+        f"md5(array_join(slice(_tk, i, {k}), ' ')), 1, 8), 16, 10) as bigint))"
     )
     hashed = toks.select(
         F.col(id_col),
-        n_grams.alias("n_grams"),
-        F.when(n_grams >= 1, gram_hashes)
-        .otherwise(F.array().cast("array<bigint>"))
-        .alias("_h"),
+        F.expr(n_grams).alias("n_grams"),
+        F.expr(
+            f"CASE WHEN {n_grams} >= 1 THEN {gram_hashes} ELSE cast(array() as array<bigint>) END"
+        ).alias("_h"),
     )
-    n_windows = F.greatest(F.size("_h") - (window - 1), F.lit(0))
-    winnowed = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_windows, F.lit(1))),
-        lambda i: F.array_min(F.slice(F.col("_h"), i, window)),
+    n_windows = f"greatest(size(_h) - {window - 1}, 0)"
+    winnowed = (
+        f"transform(sequence(1, greatest({n_windows}, 1)), "
+        f"i -> array_min(slice(_h, i, {window})))"
     )
     staged = hashed.select(
         F.col(id_col),
         "n_grams",
-        F.array_sort(
-            F.array_distinct(
-                F.when(n_windows >= 1, winnowed).otherwise(F.col("_h"))
-            )
+        F.expr(
+            f"array_sort(array_distinct(CASE WHEN {n_windows} >= 1 THEN {winnowed} ELSE _h END))"
         ).alias("fingerprints"),
     )
     # stage_barrier on the OUTPUT column, not just select staging: the
@@ -1030,16 +1027,9 @@ def winnow_candidates(
     # ids are distinct within a bucket (fingerprint sets are per-doc
     # distinct) and sorted ascending, so j > i already means id_b > id_a
     pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("_ids"),
-                    lambda a, i: F.transform(
-                        F.slice(F.col("_ids"), i + 2, F.size("_ids")),
-                        lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-                    ),
-                )
-            )
+        F.expr(
+            "explode(flatten(transform(_ids, (a, i) -> transform("
+            "slice(_ids, i + 2, size(_ids)), b -> struct(a AS id_a, b AS id_b)))))"
         ).alias("_p")
     )
     return (
@@ -1147,6 +1137,23 @@ def bm25_topk(
     )
 
 
+def _gram_digests(k: int) -> F.Column:
+    """The distinct ``k``-token gram digests of the token column ``_tk``
+    (empty under ``k`` tokens), for :func:`winnow_verify` and
+    :func:`winnow_containment`.  16-byte BINARY digests, not 32-char hex
+    strings: the verify joins shuffle one gram array per candidate-pair
+    side, so key bytes halve the dominant exchange (guide §2.3; the r10
+    binary-digest class).  unhex is injective, so intersect/union/
+    containment SIZES — the only thing the output reads — are unchanged.
+    One SQL text, one py4j round trip (see winnow_fingerprints)."""
+    n_grams = f"greatest(size(_tk) - {k - 1}, 0)"
+    return F.expr(
+        f"CASE WHEN {n_grams} >= 1 THEN array_distinct(transform(sequence(1, greatest({n_grams}, 1)), "
+        f"i -> unhex(md5(array_join(slice(_tk, i, {k}), ' '))))) "
+        "ELSE cast(array() as array<binary>) END"
+    )
+
+
 def winnow_verify(
     df: DataFrame,
     text_col: str,
@@ -1174,22 +1181,7 @@ def winnow_verify(
         F.col(id_col).alias("_gid"),
         F.split(normalized_text(F.col(text_col)), " ").alias("_tk"),
     )
-    n_grams = F.greatest(F.size("_tk") - (k - 1), F.lit(0))
-    # 16-byte BINARY digests, not 32-char hex strings: the verify joins
-    # shuffle one gram array per candidate-pair side, so key bytes halve
-    # the dominant exchange (guide §2.3; the r10 binary-digest class).
-    # unhex is injective, so intersect/union/containment SIZES — the only
-    # thing the output reads — are unchanged.
-    grams = F.when(
-        n_grams >= 1,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(n_grams, F.lit(1))),
-                lambda i: F.unhex(F.md5(F.array_join(F.slice(F.col("_tk"), i, k), " "))),
-            )
-        ),
-    ).otherwise(F.array().cast("array<binary>"))
-    gsets = toks.select("_gid", grams.alias("_grams"))
+    gsets = toks.select("_gid", _gram_digests(k).alias("_grams"))
     j = (
         candidates.join(
             gsets.select(F.col("_gid").alias("id_a"), F.col("_grams").alias("_ga")),
@@ -1618,22 +1610,7 @@ def winnow_containment(
         F.col(id_col).alias("_gid"),
         F.split(normalized_text(F.col(text_col)), " ").alias("_tk"),
     )
-    n_grams = F.greatest(F.size("_tk") - (k - 1), F.lit(0))
-    # 16-byte BINARY digests, not 32-char hex strings: the verify joins
-    # shuffle one gram array per candidate-pair side, so key bytes halve
-    # the dominant exchange (guide §2.3; the r10 binary-digest class).
-    # unhex is injective, so intersect/union/containment SIZES — the only
-    # thing the output reads — are unchanged.
-    grams = F.when(
-        n_grams >= 1,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(n_grams, F.lit(1))),
-                lambda i: F.unhex(F.md5(F.array_join(F.slice(F.col("_tk"), i, k), " "))),
-            )
-        ),
-    ).otherwise(F.array().cast("array<binary>"))
-    gsets = toks.select("_gid", grams.alias("_grams"))
+    gsets = toks.select("_gid", _gram_digests(k).alias("_grams"))
     j = candidates.join(
         gsets.select(F.col("_gid").alias("id_a"), F.col("_grams").alias("_ga")), "id_a"
     ).join(

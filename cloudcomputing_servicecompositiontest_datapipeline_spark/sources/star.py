@@ -78,6 +78,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(field.name, F.col(field.name).cast(TimestampType()))
     if memo is not None:
         memo[key] = df
+        # also under its logical plan's hash, so that ensure_parallelism can
+        # find the scan below a narrow frame (see _num_partitions)
+        memo[df._jdf.logicalPlan().hashCode()] = df
     return df
 
 
@@ -95,15 +98,41 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     over the same embeddings scan).  Returning the SAME repartitioned
     child for every branch also guarantees the branches' exchange
     subtrees canonicalize identically, so AQE's exchange reuse executes
-    the scan+shuffle once instead of per branch.  Values are unaffected —
-    round-robin placement never changes row content."""
+    the scan+shuffle once instead of per branch.  A fresh filter or select
+    over a memoized :func:`table` scan misses that memo, so its partition
+    count is read off the scan instead (:func:`_num_partitions`).  Values
+    are unaffected — round-robin placement never changes row content."""
     cached = getattr(df, "_sg_ensure_parallelism", None)
     if cached is not None:
         return cached
     target = df.sparkSession.sparkContext.defaultParallelism
-    out = df.repartition(target) if df.rdd.getNumPartitions() < target else df
+    out = df.repartition(target) if _num_partitions(df) < target else df
     df._sg_ensure_parallelism = out
     return out
+
+
+def _num_partitions(df: DataFrame) -> int:
+    """``df.rdd.getNumPartitions()``, taken from the memoized :func:`table`
+    scan when ``df`` is that scan or a chain of filters and projections
+    over it: those keep the scan's partitions (a filter could prune files
+    only of a partitioned table, and the fixture tables are single
+    unpartitioned parquet files), so each scan is probed once per session, not each fresh
+    frame over it once per build.  Walking the chain costs a few py4j round
+    trips against the ~50 ms probe."""
+    memo = getattr(df.sparkSession, "_sg_table_memo", None)
+    if memo:
+        node = df._jdf.logicalPlan()
+        while True:
+            scan = memo.get(node.hashCode())
+            if scan is not None and node.equals(scan._jdf.logicalPlan()):
+                n = getattr(scan, "_sg_num_partitions", None)
+                if n is None:
+                    n = scan._sg_num_partitions = scan.rdd.getNumPartitions()
+                return n
+            if node.nodeName() not in ("Filter", "Project"):
+                break
+            node = node.child()
+    return df.rdd.getNumPartitions()
 
 
 def stage_barrier(df: DataFrame, *cols: str) -> DataFrame:

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import time
 from collections import Counter
 from pathlib import Path
 
@@ -48,3 +49,24 @@ def canonical_both_paths(monkeypatch):
         return driver
 
     return run
+
+
+@pytest.fixture
+def settled_jobs(spark):
+    """A function returning the ids of every job the session has submitted.
+    The status store is fed by the async listener bus, so it polls until
+    the job-id set stops moving: a late-landing event cannot leak into the
+    next snapshot's diff."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def snapshot() -> set[int]:
+        prev = set(tracker.getJobIdsForGroup() or [])
+        for _ in range(30):
+            time.sleep(0.1)
+            cur = set(tracker.getJobIdsForGroup() or [])
+            if cur == prev:
+                return cur
+            prev = cur
+        return prev
+
+    return snapshot

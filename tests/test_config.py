@@ -92,19 +92,34 @@ def test_package_zip_is_one_file_per_version(tmp_path, monkeypatch):
 # ------------------------------------ session memos and scratch placement
 
 
-def test_ensure_parallelism_memoizes_per_input(spark, sf_dir):
+def test_ensure_parallelism_memoizes_per_input(spark, sf_dir, monkeypatch):
     """Repeated calls on the same input object must return the SAME child
     (one planning probe, canonically-equal exchange subtrees for reuse),
-    and the memo must not leak across distinct inputs."""
+    and the memo must not leak across distinct inputs.  A fresh narrow
+    frame over the memoized scan reads the scan's partition count: no
+    ``df.rdd`` probe, and the same repartition decision as the probe."""
     from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
 
     df = star.table(spark, sf_dir, "embeddings")
     out1 = ensure_parallelism(df)
     out2 = ensure_parallelism(df)
     assert out1 is out2
-    other = df.filter(F.col("vec_id") < 5)
+    probes = []
+    rdd = type(df).rdd  # a functools.cached_property
+    monkeypatch.setattr(
+        type(df), "rdd", property(lambda self: probes.append(self) or rdd.func(self))
+    )
+    other = df.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
     out3 = ensure_parallelism(other)
     assert out3 is not out1
+    assert probes == []
+    # a frame over something other than a memoized scan still probes
+    local = spark.range(3)
+    ensure_parallelism(local)
+    assert probes == [local]
+    monkeypatch.undo()
+    target = spark.sparkContext.defaultParallelism
+    assert (out3 is not other) == (other.rdd.getNumPartitions() < target)
     # values unchanged by the round-robin spread
     assert out1.count() == df.count()
 

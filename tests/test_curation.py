@@ -608,6 +608,20 @@ def test_jl_distortion_excludes_identical_vector_pairs(spark):
     assert 0.0 <= r.frac_in_band <= 1.0
 
 
+def test_jl_projection_rejects_width_mismatch(spark):
+    """A non-NULL embedding whose width is not ``in_dim`` fails the query
+    instead of folding every component to NULL (which the eval read as
+    ``n_pairs`` 0); a NULL embedding still projects to NULL components."""
+    rows = [(0, [1.0, 2.0, 3.0, 4.0]), (1, [4.0, 3.0, 2.0, 1.0])]
+    emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    with pytest.raises(Exception, match="in_dim is 64, embedding width is 4"):
+        sim.random_projection(emb, out_dim=4).collect()
+    with pytest.raises(Exception, match="in_dim is 64, embedding width is 4"):
+        sim.projection_distortion_eval(emb, out_dim=4, n_pairs_side=4).collect()
+    null = spark.createDataFrame([(0, None)], "vec_id LONG, embedding ARRAY<DOUBLE>")
+    assert sim.random_projection(null, out_dim=4).first().projected == [None] * 4
+
+
 def test_jl_projection_deterministic_and_seeded(spark, sf_dir):
     from cloudcomputing_servicecompositiontest_datapipeline_spark.sources import star
 
@@ -891,13 +905,11 @@ def test_no_exact_percentile_aggregate_in_quantile_plans(spark):
     assert _exact_percentiles_over_unreduced(ok) == []
 
 
-def test_quantile_map_broadcast_gate(spark):
+def test_quantile_map_broadcast_gate(spark, settled_jobs):
     """The rank join-back strategy defers to AQE's runtime size measurement
     (r10): a tiny rank table converts to a broadcast join at runtime, a
     continuous all-distinct corpus stays a shuffle join (the OOM escape),
     and no driver-side distinct-count probe job runs at plan-build time."""
-    import time
-
     from cloudcomputing_servicecompositiontest_datapipeline_spark.functions.guards import (
         finite_d,
     )
@@ -906,21 +918,6 @@ def test_quantile_map_broadcast_gate(spark):
     new = spark.createDataFrame(
         [(100 + i, float(i % 25)) for i in range(40)], "id LONG, v DOUBLE"
     )
-    tracker = spark.sparkContext.statusTracker()
-
-    def settled_jobs() -> set[int]:
-        # the status store is fed by the async listener bus: poll until the
-        # job-id set stops moving so a late-landing event cannot leak into
-        # the next snapshot's diff
-        prev = set(tracker.getJobIdsForGroup() or [])
-        for _ in range(30):
-            time.sleep(0.1)
-            cur = set(tracker.getJobIdsForGroup() or [])
-            if cur == prev:
-                return cur
-            prev = cur
-        return prev
-
     # building the plan must launch no MORE jobs than the ref-side curve
     # collect alone: the former distinct-count probe (.first()) cost a
     # whole extra action + corpus pass per execution (r10)

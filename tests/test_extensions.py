@@ -36,6 +36,20 @@ def docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text", "lang"])
 
 
+def test_normalized_text_sql_matches_column_form(spark):
+    """The SQL-text normalization that the MinHash shingles are built from
+    is :func:`normalized_text`: the same lower/trim/whitespace collapse,
+    with the regex escape surviving the SQL string literal."""
+    rows = [("  Tab\tNew\nLine   Spaces ",), ("back\\slash s+",), (None,)]
+    df = spark.createDataFrame(rows, "t STRING")
+    got = df.select(
+        dd.normalized_text(F.col("t")).alias("col"),
+        F.expr(dd.normalized_text_sql("t")).alias("sql"),
+    ).collect()
+    assert [r.col for r in got] == [r.sql for r in got]
+    assert got[0].sql == "tab new line spaces"
+
+
 def test_exact_dedup_groups_exact_copies(docs):
     out = {r.keep_id: r.n_copies for r in dd.exact_dedup(docs, "text", "doc_id").collect()}
     assert out[0] == 2  # docs 0 and 2 collapse, lowest id kept
@@ -345,7 +359,7 @@ def test_cluster_canonical_empty_pair_set(spark, canonical_both_paths):
     out = canonical_both_paths(docs, pairs, "doc_id")
     assert sorted(tuple(r) for r in out) == [(1, 1), (2, 2)]
     edges = spark.createDataFrame([], "src LONG, dst LONG")
-    assert dd._driver_labels(edges).collect() == []
+    assert dd._driver_labels(edges, edges.toArrow()).collect() == []
     assert dd._propagated_labels(edges, 0, 25).collect() == []
 
 
@@ -1023,6 +1037,30 @@ def test_semantic_dedup_clusters_plan_runs_no_python_worker(spark, sf_dir):
     assert df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
+
+
+def test_winnow_clusters_driver_path_leaves_no_checkpoint(spark, sf_dir, settled_jobs):
+    """A small duplicate graph comes to the driver in one bounded Arrow
+    collect: building and executing dedup_winnow_clusters persists no RDD
+    (the former lazy ``localCheckpoint`` of the edges left a block behind)
+    and its build submits fewer jobs than the checkpoint + count + collect
+    path did (10 at sf0.001)."""
+    from cloudcomputing_servicecompositiontest_datapipeline_spark.plans import registry
+
+    registry.load_all()
+    build = registry.QUERIES["dedup_winnow_clusters"]
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    build(spark, sf_dir)  # warm: table memo and scan probe
+    before = persisted()
+    j0 = settled_jobs()
+    df = build(spark, sf_dir)
+    build_jobs = len(settled_jobs() - j0)
+    assert len(df.collect()) == 500
+    assert persisted() - before == set()
+    assert build_jobs <= 9, build_jobs
 
 
 def test_leakage_safe_split_keeps_clusters_together(spark, sf_dir):

@@ -459,3 +459,41 @@ def test_collect_site_audit_is_clean_and_detects_unallowlisted(tmp_path):
     )
     n_flagged, lines = _collect_site_audit(tmp_path)
     assert n_flagged == 1 and any("bad() .collect()" in l for l in lines)
+
+
+#: py4j commands one warm build of each curation query may send at sf0.001
+#: (measured 311, 702 and 384, plus about 25% headroom).  Each
+#: ``functions.*`` call is at least one round trip, so a generated
+#: expression family built through the Column API shows up here as
+#: hundreds of commands (``dedup_minhash_lsh`` sent 1509 that way).
+BUILD_COMMAND_CEILING = {
+    "dedup_minhash_lsh": 400,
+    "dedup_winnow_clusters": 880,
+    "similarity_bruteforce_topk": 480,
+}
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_COMMAND_CEILING))
+def test_curation_builds_stay_under_round_trip_ceiling(spark, name):
+    """Building a curation query sends a bounded number of py4j commands.
+    The builds run warm (table and conf memos filled), and the gateway's
+    garbage-collection deletes (``m``/``d``), which depend on when Python
+    collects, are not counted.  Builds only; nothing is executed except
+    the eager work the build itself does."""
+    fn = em.queries()[name]
+    fn(spark, SF)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        fn(spark, SF)
+    finally:
+        del client.send_command
+    assert len(sent) <= BUILD_COMMAND_CEILING[name], len(sent)

@@ -119,6 +119,7 @@ def main() -> int:
         if ONLY and name not in ONLY:
             continue
         t0 = time.time()
+        spark.sparkContext.setJobDescription(f"q:{name}")
         try:
             sdf = fn(spark, SF_DIR).toPandas()
         except Exception as e:
