@@ -160,7 +160,13 @@ def stage_barrier(df: DataFrame, *cols: str) -> DataFrame:
     (``shuffle`` here is the array-permute function, not an exchange), costs
     one single-element array wrap per row, and stays fully distributed at any
     scale.  Output values are bit-identical to the input, so oracle hashes
-    are unaffected."""
+    are unaffected.
+
+    The shuffle's seed is fixed (``lit(0)``): with one element every seed
+    gives the same array, and the expression stays nondeterministic, so the
+    fence holds.  Unseeded, the analyzer drew a fresh random seed per build
+    and wrote it into the generated code; compiled classes are cached by
+    source text, so every build of a fenced query compiled new classes."""
     fenced = set(cols) if cols else set(df.columns)
     unknown = fenced - set(df.columns)
     if unknown:
@@ -169,7 +175,7 @@ def stage_barrier(df: DataFrame, *cols: str) -> DataFrame:
         raise ValueError(f"stage_barrier: no such column(s) {sorted(unknown)}")
     return df.select(
         *[
-            F.element_at(F.shuffle(F.array(F.col(c))), 1).alias(c)
+            F.element_at(F.shuffle(F.array(F.col(c)), F.lit(0)), 1).alias(c)
             if c in fenced
             else F.col(c)
             for c in df.columns

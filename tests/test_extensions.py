@@ -3,6 +3,8 @@ ranking sanity, multimodal plumbing."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -531,6 +533,14 @@ def test_stage_barrier_identity_and_fence(spark):
     filt = staged.filter(F.col("v") > 0)
     plan = filt._jdf.queryExecution().optimizedPlan().toString()
     assert "shuffle(" in plan
+    # the seed is fixed, so every build gives the same generated code and
+    # reuses its compiled classes; only the aliases' expression ids differ
+    again = stage_barrier(df.select("id", (F.col("id") * 2).alias("v")), "v")
+    plans = [
+        re.sub(r"#\d+", "#", x._jdf.queryExecution().optimizedPlan().toString())
+        for x in (staged, again)
+    ]
+    assert plans[0] == plans[1] and "shuffle(" in plans[0]
     # a typo'd column must raise, not silently return an unfenced plan
     with pytest.raises(ValueError, match="no such column"):
         stage_barrier(df, "arrr")
